@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .kg import _materialize
+from .kg import _materialize, fixpoint
 
 
 def degrees(triples: DataFrame) -> DataFrame:
@@ -73,8 +73,8 @@ def pagerank(
 
     Fixed iteration count (not convergence detection) keeps the result a
     pure function of the input — the property the DuckDB oracle needs —
-    and avoids the driver-blocking convergence checksums that cap the CC
-    fixpoint's scaling (kg.connected_components discussion).
+    and avoids the driver-blocking per-round convergence certificate of
+    the kg.fixpoint loops.
 
     Plan shape per iteration: one co-partitioned join (edge⋈rank, both
     hash-partitioned on src) + one groupBy(dst) shuffle. Lineage is cut
@@ -156,6 +156,22 @@ def cooccurring_pairs(
     )
 
 
+def _undirected(edges: DataFrame, eager: bool = True) -> DataFrame:
+    """(a, b) with a < b: the deduplicated undirected form of a (src, dst)
+    edge set, self-loops dropped, cut by :func:`kg._materialize` so the
+    upstream edge plan runs once however often the result is read."""
+    return _materialize(
+        edges.select("src", "dst")
+        .filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
+        )
+        .distinct(),
+        eager=eager,
+    )
+
+
 def _oriented_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Degree-oriented form of an undirected edge set: (deg, oriented).
 
@@ -178,15 +194,7 @@ def _oriented_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     (an RDD cut here degraded the downstream joins to sort-merge —
     measured 20.6 s vs 6.4 s warm on the sf0.01 co-occurrence graph).
     """
-    und = _materialize(
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
+    und = _undirected(edges)
     sym = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg")).select(
         F.col("a").alias("node"), "deg"
@@ -413,15 +421,7 @@ def neighbor_jaccard(
     by many centers (a large profile — just a count), but never explodes
     a join. No adjacency list is ever collected.
     """
-    und = _materialize(
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
+    und = _undirected(edges)
     sym = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).union(
         und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
     )
@@ -471,28 +471,16 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     surviving node's in-core degree. The standard distributed peel:
     drop all nodes under degree k, re-count, repeat to fixpoint.
 
-    Each round is ONE degree groupBy + two semi-joins on node keys (no
-    adjacency collection anywhere); the per-round lineage cut /
-    convergence checksum follows the connected_components protocol.
-    Round count is bounded by the peel depth: dozens on real web/KG
-    graphs (degeneracy ordering collapses fast), but THETA(n/2) on the
-    adversarial path graph at k=2 — the max_iter guard raises rather
-    than silently returning a non-core, since a partial peel OVERSTATES
-    the core.
+    Each round is two degree windows over the symmetrized edges (no
+    adjacency collection anywhere), driven by :func:`kg.fixpoint` with
+    the (a, b) edge keys as the convergence certificate. Round count is
+    bounded by the peel depth: dozens on real web/KG graphs (degeneracy
+    ordering collapses fast), but THETA(n/2) on the adversarial path
+    graph at k=2 — the max_iter guard raises rather than silently
+    returning a non-core, since a partial peel OVERSTATES the core.
     """
-    und = _materialize(
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
-    cur = und
-    prev_sum = None
-    converged = False
-    for _ in range(max_iter):
+
+    def peel(cur: DataFrame) -> DataFrame:
         # two-window peel round (round 8): symmetrize, attach each
         # endpoint's degree via a window count (every edge appears in
         # both directions, so partitionBy(a) counts deg(a) and
@@ -500,34 +488,25 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
         # edges whose BOTH endpoints survive — identical to the old
         # degree-groupBy + two semi-joins, minus one exchange and the
         # node-sized join sides.
+        cur = cur.select("a", "b")
         sym = cur.union(
             cur.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
         d = sym.withColumn(
             "deg_a", F.count(F.lit(1)).over(Window.partitionBy("a"))
         ).withColumn("deg_b", F.count(F.lit(1)).over(Window.partitionBy("b")))
-        # the round state CARRIES the endpoint degrees: at the fixpoint
-        # (no edge dropped) they are by definition the degrees of the
-        # final core, so the old post-loop re-count (symmetrize +
-        # groupBy over the converged edges) is redundant — the answer
-        # reads straight off the last checkpointed round (round 8)
-        nxt = d.filter(
+        return d.filter(
             (F.col("deg_a") >= k)
             & (F.col("deg_b") >= k)
             & (F.col("a") < F.col("b"))
         ).select("a", "b", "deg_a", "deg_b")
-        nxt = nxt.localCheckpoint(eager=False)
-        checksum = _edge_checksum_ab(nxt)
-        if checksum == prev_sum:
-            converged = True
-            cur = nxt
-            break
-        prev_sum = checksum
-        cur = nxt.select("a", "b")
-    if not converged:
-        raise ValueError(
-            f"k-core peel did not converge in {max_iter} rounds"
-        )
+
+    # the round state CARRIES the endpoint degrees: at the fixpoint (no
+    # edge dropped) they are by definition the degrees of the final core,
+    # so the answer reads straight off the last materialized round
+    cur = fixpoint(
+        peel, _undirected(edges), ("a", "b"), max_iter, "k-core peel"
+    )
     return (
         cur.select(F.col("a").alias("node"), F.col("deg_a").alias("deg"))
         .union(
@@ -611,34 +590,18 @@ def truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     with the degree-oriented wedge machinery (:func:`_edge_support` —
     O(m^1.5) wedge rows regardless of hubs, one explode credits each
     triangle to its three edges), drop edges under k−2, repeat to
-    fixpoint. Per-round lineage cut + convergence checksum follow the
-    connected_components protocol; like the kcore guard, ``max_iter``
-    exhaustion raises rather than overstating the truss (a partial peel
-    keeps edges whose support has not yet drained). Support state is
-    edge-sized; no adjacency list is ever collected.
+    fixpoint under :func:`kg.fixpoint` with the (a, b) edge keys as the
+    certificate; like the kcore guard, ``max_iter`` exhaustion raises
+    rather than overstating the truss (a partial peel keeps edges whose
+    support has not yet drained). Support state is edge-sized; no
+    adjacency list is ever collected.
     """
-    und = _materialize(
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
-    cur = und
-    prev_sum = None
-    converged = False
-    for _ in range(max_iter):
-        sup = _edge_support(cur.select("a", "b"))
-        # the round state CARRIES each surviving edge's support: at the
-        # fixpoint (no edge dropped) the support computed this round IS
-        # the support in the final truss, so the old post-loop
-        # _edge_support(cur) — a full extra wedge-enumeration pass over
-        # the converged graph — is redundant (round 8)
-        nxt = (
-            cur.select("a", "b")
-            .join(
+
+    def peel(cur: DataFrame) -> DataFrame:
+        cur = cur.select("a", "b")
+        sup = _edge_support(cur)
+        return (
+            cur.join(
                 sup,
                 on=[F.col("a") == F.col("ea"), F.col("b") == F.col("eb")],
                 how="left",
@@ -650,16 +613,13 @@ def truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
             )
             .filter(F.col("support") >= k - 2)
         )
-        nxt = nxt.localCheckpoint(eager=False)
-        checksum = _edge_checksum_ab(nxt)
-        if checksum == prev_sum:
-            converged = True
-            cur = nxt
-            break
-        prev_sum = checksum
-        cur = nxt
-    if not converged:
-        raise ValueError(f"k-truss peel did not converge in {max_iter} rounds")
+
+    # the round state CARRIES each surviving edge's support: at the
+    # fixpoint (no edge dropped) the support computed in the last round
+    # IS the support in the final truss — no post-loop wedge pass
+    cur = fixpoint(
+        peel, _undirected(edges), ("a", "b"), max_iter, "k-truss peel"
+    )
     return cur.select(
         F.col("a").alias("node_a"),
         F.col("b").alias("node_b"),
@@ -748,16 +708,7 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     cut per round (lazy localCheckpoint) so the plan stays O(1) deep.
     The edge table is hash-partitioned once and reused every round.
     """
-    sym = _materialize(
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct(),
-        eager=False,
-    )
+    sym = _undirected(edges, eager=False)
     adj = _materialize(
         sym.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
         .union(sym.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
@@ -786,21 +737,6 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     return labels.select(F.col("id").alias("node"), "label")
 
 
-def _edge_checksum_ab(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(
-                F.pmod(F.xxhash64("a", "b"), F.lit(1_000_000_007)).cast(
-                    "decimal(38,0)"
-                )
-            ),
-            F.lit(0),
-        ).alias("h"),
-    ).collect()[0]
-    return row["n"], row["h"]
-
-
 def graph_summary(edges: DataFrame, round_digits: int = 6) -> DataFrame:
     """One row (n_nodes, n_edges, max_deg, avg_deg, density): the graph
     census a KG build emits as run telemetry (the number a curator reads
@@ -815,16 +751,7 @@ def graph_summary(edges: DataFrame, round_digits: int = 6) -> DataFrame:
     2m/n and density = 2m/(n*(n-1)) are emitted rounded; fixed operand
     order mirrors the DuckDB oracle.
     """
-    und = _materialize(
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct(),
-        eager=False,
-    )
+    und = _undirected(edges, eager=False)
     sym = und.select(F.col("a").alias("node")).union(
         und.select(F.col("b").alias("node"))
     )

@@ -23,24 +23,26 @@ schema.go:129-144 — this layer canonicalizes and materializes triples):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from collections.abc import Callable, Sequence
 
-# diagnostic: star rounds executed by the last connected_components call
-# (read by tools/kg_tail_probe.py; never consulted by the operators)
-LAST_CC_ROUNDS: int | None = None
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import functions as F
 
 
 def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Materialize a shared subplan in a deployment-appropriate way.
+    """Materialize a shared subplan in a deployment-appropriate way — the
+    one place the reliable-vs-local checkpoint choice is made.
 
-    ``eager=True`` (the CC fixpoint rounds, where LINEAGE CUTS are the
-    point — unbounded iteration lineage otherwise): with a reliable
-    checkpoint dir configured (sc.setCheckpointDir — see session.get_spark's
-    SPARK_CHECKPOINT_DIR), use ``.checkpoint()`` so an executor loss mid-CC
-    recomputes from fault-tolerant storage (VERDICT r1 "What's wrong" #4);
-    persist-then-unpersist around it avoids the documented
-    recompute-to-write caveat. Without one (local[*] benches), fall back to
+    ``eager=True`` (every :func:`fixpoint` round and the loop inputs, where
+    LINEAGE CUTS are the point — unbounded iteration lineage otherwise):
+    with a reliable checkpoint dir configured (sc.setCheckpointDir — see
+    session.get_spark's SPARK_CHECKPOINT_DIR), use ``.checkpoint()`` so an
+    executor loss mid-fixpoint recomputes from fault-tolerant storage
+    (VERDICT r1 "What's wrong" #4). It needs no persist around it: on
+    Spark 4.1 the eager Dataset checkpoint computes its plan once and
+    writes it in the same job (probed with a counting UDF: one call per
+    row), so the RDD-level recompute-to-write caveat does not apply.
+    Without a checkpoint dir (local[*] benches), fall back to
     ``localCheckpoint``.
 
     ``eager=False`` (reuse-only sites: the banded self-join input, the
@@ -53,21 +55,56 @@ def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     RDD-level: no CacheManager entry, no plan substitution, blocks
     reclaimed when the RDD reference drops. The trade: lineage truncation,
     so an executor loss during the single consuming query fails that query
-    (re-run; the checkpoint/resume layer makes re-runs cheap) — the CC
-    fixpoint, where lineage cuts must survive executor loss, stays on the
-    reliable eager path below.
+    (re-run; the checkpoint/resume layer makes re-runs cheap) — the
+    fixpoint rounds, where lineage cuts must survive executor loss, stay on
+    the reliable eager path below.
     """
-    sc = df.sparkSession.sparkContext
     if not eager:
         return df.localCheckpoint(eager=False)
-    if sc.getCheckpointDir() is not None:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        out = df.checkpoint(eager=True)
-        df.unpersist()
-        return out
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def fixpoint(
+    step: Callable[[DataFrame], DataFrame],
+    state: DataFrame,
+    keys: Sequence[str],
+    max_iter: int,
+    what: str,
+) -> DataFrame:
+    """Iterate ``state = step(state)`` until a round leaves it unchanged.
+
+    The one convergence protocol of the iterative graph operators
+    (connected components, k-core, k-truss). Each round's output carries
+    an :class:`~pyspark.sql.Observation` of its certificate — the row count
+    and the sum of ``pmod(xxhash64(keys), 1e9+7)`` over the ``keys``
+    columns only, so carried payload columns (degrees, supports) never
+    decide convergence — and is cut by the eager :func:`_materialize`,
+    whose one action both stores the round's blocks and fills the
+    observation: no separate checksum job, no SinglePartition exchange.
+    The loop stops at the first round whose certificate equals the
+    previous round's and returns that round's materialized state. A state
+    still changing after ``max_iter`` rounds raises ``ValueError`` instead
+    of returning a partial result (a cut-short peel overstates a core, a
+    cut-short star alternation splits components).
+    """
+    h = F.pmod(F.xxhash64(*keys), F.lit(1_000_000_007)).cast("decimal(38,0)")
+    prev = None
+    for _ in range(max_iter):
+        obs = Observation()
+        state = _materialize(
+            step(state).observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.sum(h), F.lit(0)).alias("h"),
+            )
+        )
+        cert = obs.get
+        if cert == prev:
+            return state
+        prev = cert
+    raise ValueError(f"{what} did not converge in {max_iter} rounds")
 
 
 def normalize_surface(col):
@@ -233,7 +270,7 @@ def lsh_candidate_pairs(
     # the banding map (trigrams + num_hashes hash passes per mention) is the
     # CPU-heaviest narrow stage of the KG tail; the mentions frame arrives
     # AQE-coalesced to a handful of partitions (it's small in BYTES), which
-    # caps this stage's parallelism — round-6 edges_probe measured the map
+    # caps this stage's parallelism — a round-6 stage probe measured the map
     # running as 12 tasks on 16 cores (aggregate task time ~5x the stage
     # wall available to it). Fan it out first; on a 100 TB input the scan
     # provides the width and this is a no-op.
@@ -409,88 +446,28 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return both.filter(F.col("src") != F.col("dst")).distinct()
 
 
-def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(
-                F.pmod(F.xxhash64("src", "dst"), F.lit(1_000_000_007)).cast(
-                    "decimal(38,0)"
-                )
-            ),
-            F.lit(0),
-        ).alias("h"),
-    ).collect()[0]
-    return row["n"], row["h"]
-
-
-def connected_components(
-    edges: DataFrame, max_iter: int = 25, steps_per_round: int = 1
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """(id, component): component = min node id in the component.
 
     Input edges: (src, dst). Isolated nodes don't appear; callers union
-    them back with component = own id.
+    them back with component = own id. One large-star + small-star
+    alternation per :func:`fixpoint` round; the alternation is idempotent
+    at the fixpoint, so an unchanged edge set ends the loop. (Refuted
+    alternatives — hash-to-min, a degree-1 pre-peel, two alternations per
+    round — are measured in BASELINE.md, CC_PEEL_AB.json and
+    OPTIMIZATION_r08.md.)
     """
     # Materialize the input once: the edge lineage is typically expensive
     # (an LSH self-join), and it is consumed by the iteration seed AND the
     # node-set below — without this it would be recomputed per consumer.
     base = _materialize(edges.select("src", "dst"))
-    cur = base.filter(F.col("src") != F.col("dst")).distinct()
-    # Per-round job count is the KG tail's latency budget (VERDICT r3 "Next
-    # round" #7: ~40 short stages of fixed latency dominate the m10 e2e
-    # efficiency). With a reliable checkpoint dir (real deployments) each
-    # round stays 2 jobs: an eager fault-tolerant checkpoint, then the
-    # convergence checksum — an executor loss mid-fixpoint recomputes from
-    # storage. Without one (local benches), the round is ONE job: a lazy
-    # localCheckpoint whose materializing action IS the checksum aggregate,
-    # halving per-round job latency with identical results.
-    reliable = (
-        edges.sparkSession.sparkContext.getCheckpointDir() is not None
+    cur = fixpoint(
+        lambda e: _small_star(_large_star(e)),
+        base.filter(F.col("src") != F.col("dst")).distinct(),
+        ("src", "dst"),
+        max_iter,
+        "connected components",
     )
-    # steps_per_round: star alternations per materialize+checksum. The
-    # round-4 hypothesis was that 2 steps/round would halve the driver-
-    # blocking fixed cost per round; the round-5 A/B on the m10 8.65M-edge
-    # graph (tools/cc_ab_m10.py, warm runs) REFUTED it: steps=1 beats
-    # steps=2 at both 4 cores (18.5 s vs 22.4 s) and 16 cores (14.5 s vs
-    # 16.2 s) — the checksum job is cheap next to the extra scheduling of
-    # the longer fused plan, and convergence at rounds=4 means steps=2
-    # wastes half an alternation's shuffles in the final confirm round
-    # (6 rounds executed vs 4). Default is therefore 1; the alternating
-    # algorithm is idempotent at the fixpoint, so any steps_per_round
-    # still detects convergence exactly.
-    global LAST_CC_ROUNDS
-    prev_sum = None
-    rounds = 0
-    for _ in range((max_iter + steps_per_round - 1) // steps_per_round):
-        nxt = cur
-        for _s in range(steps_per_round):
-            nxt = _small_star(_large_star(nxt))
-            # leaf-ify BETWEEN the chained alternations (lazy — no job of
-            # its own; the round's checksum job computes and caches it).
-            # Without this cut the second alternation's plan embeds the
-            # first's subplan at every self-reference (_small_star reads
-            # its input 3x, _large_star 2x) and the round re-executes
-            # those shuffles instead of reusing them — measured 2.4x KG
-            # wall blowup at m10 (282 s vs 116 s @4 cores) when the
-            # double-step first shipped without the cut. In reliable-
-            # checkpoint deployments the cut narrows fault tolerance for
-            # the intra-round window only: an executor loss mid-round
-            # fails that job and the stage-checkpoint layer re-runs from
-            # the last durable round — the round boundary itself stays on
-            # the reliable eager path below.
-            if _s < steps_per_round - 1:
-                nxt = nxt.localCheckpoint(eager=False)
-        rounds += steps_per_round
-        if reliable:
-            cur = _materialize(nxt)
-        else:
-            cur = nxt.localCheckpoint(eager=False)
-        checksum = _edge_checksum(cur)
-        if checksum == prev_sum:
-            break
-        prev_sum = checksum
-    LAST_CC_ROUNDS = rounds
 
     # final edges are (node -> root) stars; roots map to themselves; nodes
     # come from the unfiltered base so self-loop-only nodes keep their id
@@ -501,195 +478,6 @@ def connected_components(
     return nodes.join(
         parent, nodes.id == parent.src, "left"
     ).select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
-    )
-
-
-def connected_components_hashmin(
-    edges: DataFrame, max_iter: int = 25
-) -> DataFrame:
-    """(id, component) via hash-to-min — the VERDICT-r5 A/B candidate.
-
-    Hash-to-min (Rastogi et al. 2013, "Finding Connected Components in
-    Map-Reduce in Logarithmic Rounds"): every node keeps a known-cluster
-    set C(v) (seeded with N(v) ∪ {v}); per round each v sends
-    min C(v) to every member of C(v) and sends C(v) to min C(v). The
-    fixpoint is C(min)=component, C(v)={min} elsewhere; it arrives in
-    O(log d) rounds — typically FEWER, FATTER rounds than the alternating
-    large-star/small-star in :func:`connected_components`.
-
-    Relational form (same discipline as the star variant — groupBy-min +
-    join, no collect_list): the state is an edge set (src, dst) meaning
-    "dst ∈ C(src)", each round is one groupBy + one join + one distinct,
-    and the per-round lineage cut / convergence checksum protocol is
-    identical to connected_components (lazy localCheckpoint whose
-    materializing action is the checksum aggregate on local runs, eager
-    reliable checkpoint when a checkpoint dir is configured).
-
-    SCALE HAZARD (why this is NOT the default): at the fixpoint the min
-    node of each component holds the ENTIRE component in its cluster set,
-    so the send-C(v)-to-min step hashes O(|component|) rows to ONE key —
-    a structural hot key for giant components, exactly the blowup the
-    alternating-star form avoids (its per-node state never exceeds the
-    node's degree). Use only where the component-size distribution is
-    known-bounded; the A/B harness is tools/cc_ab_hashmin.py.
-    """
-    base = _materialize(edges.select("src", "dst"))
-    sym = _symmetrize(base.filter(F.col("src") != F.col("dst"))).distinct()
-    nodes = base.select(F.col("src").alias("id")).union(
-        base.select(F.col("dst").alias("id"))
-    ).distinct()
-    # seed: C(v) = N(v) ∪ {v}
-    cur = sym.union(
-        nodes.select(F.col("id").alias("src"), F.col("id").alias("dst"))
-    )
-    reliable = (
-        edges.sparkSession.sparkContext.getCheckpointDir() is not None
-    )
-    global LAST_CC_ROUNDS
-    prev_sum = None
-    rounds = 0
-    for _ in range(max_iter):
-        mins = cur.groupBy("src").agg(F.min("dst").alias("m"))
-        joined = cur.join(mins, "src")
-        # min C(v) -> every u ∈ C(v);  C(v) -> min C(v)
-        nxt = (
-            joined.select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .union(
-                joined.select(F.col("m").alias("src"), F.col("dst").alias("dst"))
-            )
-            .distinct()
-        )
-        rounds += 1
-        if reliable:
-            cur = _materialize(nxt)
-        else:
-            cur = nxt.localCheckpoint(eager=False)
-        checksum = _edge_checksum(cur)
-        if checksum == prev_sum:
-            break
-        prev_sum = checksum
-    LAST_CC_ROUNDS = rounds
-
-    parent = cur.groupBy("src").agg(F.min("dst").alias("component"))
-    return nodes.join(
-        parent, nodes.id == parent.src, "left"
-    ).select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
-    )
-
-
-def connected_components_peel1(
-    edges: DataFrame, max_iter: int = 25
-) -> DataFrame:
-    """(id, component) with a one-round degree-1 pre-peel — the
-    VERDICT-r6 #5 A/B candidate.
-
-    Rationale: on mention graphs most nodes are leaves (the round-6
-    stage audit: CC round 1 carries 8.65M → 89k edges at m10), and a
-    degree-1 node can never change any other node's component label —
-    so peel them relationally BEFORE the star fixpoint, run the
-    standard alternating CC on the (much smaller) 2-core-ish remainder,
-    then re-attach:
-
-    - pendant edge (leaf—anchor): leaf inherits the anchor's label
-      (anchor's own id when the anchor lost all its core edges — a star
-      hub);
-    - leaf—leaf edge: an isolated 2-node component, label min(a, b);
-    - a final member-min relabel restores the exact "component = min
-      node id" contract (the peel may remove the true min — e.g. a
-      leaf with the smallest id in its component), two node-sized
-      shuffles.
-
-    Every step is a semi/anti join or groupBy on node keys — no
-    adjacency collection. The A/B harness is tools/cc_ab_peel.py; like
-    connected_components_hashmin this stays in-tree either way so the
-    measurement is reproducible.
-
-    A/B RESULT (round 7, CC_PEEL_AB.json): REFUTED on the m10 8.65M-edge
-    mention graph at 16 cores — peel1 31.98 s vs baseline 18.36 s
-    (0.57x), assignments identical. The peel's own cost (degree groupBy
-    over the full edge set + four semi/anti joins + the member-min
-    relabel's two shuffles) exceeds the star round it displaces: the
-    alternating-star first round already collapses 8.65M → 89k edges in
-    ONE groupBy+join pass, so there is no fat to cut. The default stays
-    connected_components.
-    """
-    base = _materialize(edges.select("src", "dst"))
-    und = _materialize(
-        base.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
-    sym = und.select(F.col("a").alias("node")).union(
-        und.select(F.col("b").alias("node"))
-    )
-    leaves = _materialize(
-        sym.groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .filter(F.col("deg") == 1)
-        .select("node"),
-        eager=False,
-    )
-    la = leaves.withColumnRenamed("node", "a")
-    lb = leaves.withColumnRenamed("node", "b")
-    core = und.join(la, "a", "left_anti").join(lb, "b", "left_anti")
-    pend_a = (
-        und.join(la, "a", "left_semi")
-        .join(lb, "b", "left_anti")
-        .select(F.col("a").alias("leaf"), F.col("b").alias("anchor"))
-    )
-    pend_b = (
-        und.join(la, "a", "left_anti")
-        .join(lb, "b", "left_semi")
-        .select(F.col("b").alias("leaf"), F.col("a").alias("anchor"))
-    )
-    pairs = und.join(la, "a", "left_semi").join(lb, "b", "left_semi")
-
-    comp_core = _materialize(
-        connected_components(
-            core.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-            max_iter=max_iter,
-        ),
-        eager=False,
-    )
-    pend = pend_a.union(pend_b)
-    pend_lab = pend.join(
-        comp_core, pend.anchor == comp_core.id, "left"
-    ).select(
-        F.col("leaf").alias("id"),
-        F.coalesce("component", F.col("anchor")).alias("component"),
-    )
-    pair_lab = pairs.select(
-        F.col("a").alias("id"), F.col("a").alias("component")
-    ).union(
-        pairs.select(F.col("b").alias("id"), F.col("a").alias("component"))
-    )
-    # anchors that lost ALL their edges to the peel (star hubs) are in
-    # no core component — they must still appear as members of their own
-    # label or the member-min relabel below would relabel their leaves
-    # without them
-    iso_anchors = (
-        pend.select(F.col("anchor").alias("id"))
-        .distinct()
-        .join(comp_core, "id", "left_anti")
-        .select("id", F.col("id").alias("component"))
-    )
-    assigned = comp_core.union(pend_lab).union(pair_lab).union(iso_anchors)
-    # member-min relabel: the peel may have removed the component's true
-    # min node, and the contract (and every downstream canonicalizer)
-    # needs component = min member id exactly
-    roots = assigned.groupBy("component").agg(F.min("id").alias("root"))
-    relabeled = assigned.join(roots, "component").select(
-        "id", F.col("root").alias("component")
-    )
-    nodes = base.select(F.col("src").alias("id")).union(
-        base.select(F.col("dst").alias("id"))
-    ).distinct()
-    return nodes.join(relabeled, "id", "left").select(
         "id", F.coalesce("component", F.col("id")).alias("component")
     )
 

@@ -161,9 +161,11 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # Reliable checkpoint dir (HDFS/S3 path on a cluster): flips the KG
-    # layer's lineage cuts from localCheckpoint (executor-storage, not
-    # fault-tolerant) to .checkpoint() — see spark/kg.py _materialize.
+    # Reliable checkpoint dir (HDFS/S3 path on a cluster): flips the eager
+    # lineage cuts — every kg.fixpoint round of connected components,
+    # k-core and k-truss — from localCheckpoint (executor-storage, not
+    # fault-tolerant) to .checkpoint(); spark/kg.py _materialize is the
+    # only place that choice is made.
     ckpt_dir = os.environ.get("SPARK_CHECKPOINT_DIR")
     if ckpt_dir and spark.sparkContext.getCheckpointDir() is None:
         spark.sparkContext.setCheckpointDir(ckpt_dir)

@@ -56,60 +56,56 @@ def test_connected_components_chain_and_star(spark):
     assert len(comp) == 31
 
 
-def test_connected_components_hashmin_equivalence(spark):
-    # hash-to-min must assign the identical (id -> min-node) labeling as
-    # the alternating-star default on chains, stars, random graphs, and
-    # isolated self-loops (the A/B candidate of tools/cc_ab_hashmin.py)
+def test_connected_components_matches_union_find(spark):
+    # component = min node id, checked against the oracle's union-by-min
+    # union-find on chains, stars, a leaf-leaf pair, a cycle with tails
+    # and random graphs; self-loop-only nodes keep their own id
     import random
 
-    rng = random.Random(7)
-    cases = [
-        [(i, i + 1) for i in range(30)],                     # chain
-        [(0, i) for i in range(1, 12)] + [(50, 50)],          # star + loner
-        [(rng.randrange(60), rng.randrange(60)) for _ in range(90)],
-        [(rng.randrange(200), rng.randrange(200)) for _ in range(120)],
-    ]
-    for raw in cases:
-        edges = spark.createDataFrame(raw, ["src", "dst"])
-        star = {
-            r["id"]: r["component"]
-            for r in kg.connected_components(edges).collect()
-        }
-        hm = {
-            r["id"]: r["component"]
-            for r in kg.connected_components_hashmin(edges).collect()
-        }
-        assert hm == star
+    from ner_backend_spark.oracle.pyoracle import _UnionFind
 
-
-def test_connected_components_peel1_equivalence(spark):
-    # the degree-1 pre-peel variant (VERDICT r6 #5 A/B candidate) must
-    # assign the identical (id -> min-member) labeling on the peel's
-    # adversarial shapes: pendant chains (peel removes the true-min
-    # leaf), stars (anchor loses every edge), leaf-leaf pairs, isolated
-    # self-loops, and random graphs
-    import random
-
-    rng = random.Random(13)
+    r7, r13 = random.Random(7), random.Random(13)
     cases = [
         [(i, i + 1) for i in range(30)],                      # chain
+        [(0, i) for i in range(1, 12)] + [(50, 50)],          # star + loner
         [(5, i) for i in range(6, 18)] + [(50, 50)],          # star + loner
         [(1, 2)],                                             # single pair
         [(9, 3), (3, 4), (4, 5), (5, 3), (7, 8)],             # cycle + tails
-        [(rng.randrange(60), rng.randrange(60)) for _ in range(90)],
-        [(rng.randrange(300), rng.randrange(300)) for _ in range(150)],
+        [(r7.randrange(60), r7.randrange(60)) for _ in range(90)],
+        [(r7.randrange(200), r7.randrange(200)) for _ in range(120)],
+        [(r13.randrange(60), r13.randrange(60)) for _ in range(90)],
+        [(r13.randrange(300), r13.randrange(300)) for _ in range(150)],
     ]
     for raw in cases:
-        edges = spark.createDataFrame(raw, ["src", "dst"])
-        star = {
+        uf = _UnionFind()
+        for a, b in raw:
+            uf.union(a, b)
+        want = {n: uf.find(n) for e in raw for n in e}
+        edges = spark.createDataFrame(raw, "src long, dst long")
+        got = {
             r["id"]: r["component"]
             for r in kg.connected_components(edges).collect()
         }
-        peeled = {
-            r["id"]: r["component"]
-            for r in kg.connected_components_peel1(edges).collect()
-        }
-        assert peeled == star, raw
+        assert got == want, raw
+
+
+@pytest.mark.parametrize("op", ["components", "kcore", "truss"])
+def test_fixpoint_max_iter_exhaustion_raises(spark, op):
+    # every fixpoint needs >= 2 rounds (the second confirms the first),
+    # so max_iter=1 must raise instead of returning a partial result
+    from ner_backend_spark.spark import graph
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)] + [(0, 2), (1, 3)],
+        "src long, dst long",
+    )
+    run = {
+        "components": lambda: kg.connected_components(edges, max_iter=1),
+        "kcore": lambda: graph.kcore(edges, k=2, max_iter=1),
+        "truss": lambda: graph.truss(edges, k=3, max_iter=1),
+    }[op]
+    with pytest.raises(ValueError, match="did not converge in 1 rounds"):
+        run()
 
 
 def test_lsh_blocking_proposes_similar_pairs(spark, entities):

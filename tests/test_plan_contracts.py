@@ -9,7 +9,7 @@ pushdown/broadcast/single-scan for the TPC-H and curation queries.
 
 from pyspark.sql import functions as F
 
-from ner_backend_spark.spark import graph
+from ner_backend_spark.spark import graph, kg
 from ner_backend_spark.spark.asof import asof_join
 from ner_backend_spark.spark.quantiles import group_quantiles
 
@@ -241,20 +241,26 @@ def test_ppr_per_iteration_plan_is_constant(spark):
 
 
 def test_truss_plan_checkpoint_rooted(spark):
-    """The k-truss peel cuts lineage on the undirected edge set and per
-    round: the returned plan must be rooted at checkpointed RDDs — the
-    upstream edge plan (the full KG pipeline in q_kg_truss) appears
-    ZERO times, and no round's wedge machinery re-plans into the final
-    frame (the q_kg_clustering re-execution bug class)."""
+    """The kg.fixpoint loops (k-truss, k-core, connected components) cut
+    lineage on their input and per round: each returned plan must be
+    rooted at checkpointed RDDs — the upstream edge plan (the full KG
+    pipeline in q_kg_truss) appears ZERO times, and no round's
+    machinery re-plans into the final frame (the q_kg_clustering
+    re-execution bug class)."""
     edges = spark.range(400).select(
         (F.col("id") % 23).alias("src"), ((F.col("id") * 7) % 23).alias("dst")
     )
-    plan = _plan(graph.truss(edges, k=3))
-    assert plan.count("Range (") == 0, plan
-    # final emit: the support groupBy + its join against the converged
-    # edge RDD — bounded exchanges, never a nested loop
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    for out in (
+        graph.truss(edges, k=3),
+        graph.kcore(edges, k=2),
+        kg.connected_components(edges),
+    ):
+        plan = _plan(out)
+        assert plan.count("Range (") == 0, plan
+        # final emit: bounded exchanges over the converged edge RDD,
+        # never a nested loop
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_source_mix_single_corpus_scan(spark):
