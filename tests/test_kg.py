@@ -56,26 +56,11 @@ def test_connected_components_chain_and_star(spark):
     assert len(comp) == 31
 
 
-def test_connected_components_matches_union_find(spark):
+def _assert_components_match_union_find(spark, cases):
     # component = min node id, checked against the oracle's union-by-min
-    # union-find on chains, stars, a leaf-leaf pair, a cycle with tails
-    # and random graphs; self-loop-only nodes keep their own id
-    import random
-
+    # union-find; self-loop-only nodes keep their own id
     from ner_backend_spark.oracle.pyoracle import _UnionFind
 
-    r7, r13 = random.Random(7), random.Random(13)
-    cases = [
-        [(i, i + 1) for i in range(30)],                      # chain
-        [(0, i) for i in range(1, 12)] + [(50, 50)],          # star + loner
-        [(5, i) for i in range(6, 18)] + [(50, 50)],          # star + loner
-        [(1, 2)],                                             # single pair
-        [(9, 3), (3, 4), (4, 5), (5, 3), (7, 8)],             # cycle + tails
-        [(r7.randrange(60), r7.randrange(60)) for _ in range(90)],
-        [(r7.randrange(200), r7.randrange(200)) for _ in range(120)],
-        [(r13.randrange(60), r13.randrange(60)) for _ in range(90)],
-        [(r13.randrange(300), r13.randrange(300)) for _ in range(150)],
-    ]
     for raw in cases:
         uf = _UnionFind()
         for a, b in raw:
@@ -87,6 +72,37 @@ def test_connected_components_matches_union_find(spark):
             for r in kg.connected_components(edges).collect()
         }
         assert got == want, raw
+
+
+def test_connected_components_hashmin_equivalence(spark):
+    # the cases that once compared the hash-to-min variant: chains, a
+    # star with an isolated self-loop, and random graphs
+    import random
+
+    rng = random.Random(7)
+    _assert_components_match_union_find(spark, [
+        [(i, i + 1) for i in range(30)],                     # chain
+        [(0, i) for i in range(1, 12)] + [(50, 50)],          # star + loner
+        [(rng.randrange(60), rng.randrange(60)) for _ in range(90)],
+        [(rng.randrange(200), rng.randrange(200)) for _ in range(120)],
+    ])
+
+
+def test_connected_components_peel1_equivalence(spark):
+    # the degree-1 peel's adversarial shapes: pendant chains (a peel
+    # would remove the true-min leaf), stars (the anchor loses every
+    # edge), leaf-leaf pairs, isolated self-loops, and random graphs
+    import random
+
+    rng = random.Random(13)
+    _assert_components_match_union_find(spark, [
+        [(i, i + 1) for i in range(30)],                      # chain
+        [(5, i) for i in range(6, 18)] + [(50, 50)],          # star + loner
+        [(1, 2)],                                             # single pair
+        [(9, 3), (3, 4), (4, 5), (5, 3), (7, 8)],             # cycle + tails
+        [(rng.randrange(60), rng.randrange(60)) for _ in range(90)],
+        [(rng.randrange(300), rng.randrange(300)) for _ in range(150)],
+    ])
 
 
 @pytest.mark.parametrize("op", ["components", "kcore", "truss"])
