@@ -721,7 +721,7 @@ def _kg_state(sf_dir: str):
         for mid, tris in tri.items()
     }
 
-    # band buckets keyed (band, band_hash, label) — same_label_only=True
+    # band buckets keyed (band, band_hash, label), as lsh_candidate_pairs
     buckets: dict[tuple[int, int, str], list[int]] = defaultdict(list)
     for mid, s in sig.items():
         label = mentions[mid][0]

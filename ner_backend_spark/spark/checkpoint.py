@@ -1,4 +1,20 @@
-"""Partition-grained checkpointing: resumable jobs with lineage + metrics.
+"""The commit/resume protocol of every checkpointed runner, and the
+partition-grained report runner built on it.
+
+Three runners resume a killed job without redoing finished work: the
+report (this module, per url-hash bucket), the KG stages
+(checkpoint_kg.py, per stage) and the incremental KG (streaming/
+kg_update.py, per micro-batch). This module decides for all three how
+
+- prior state is found: :func:`path_exists` probes the Hadoop FileSystem
+  instead of catching a failed read, which Spark's ObservationManager
+  listener re-plans and logs as an ERROR stack once any ``Observation``
+  has run in the session;
+- a resume is refused: :func:`check_lineage` compares every recorded
+  lineage with the current parameters;
+- counters are taken: :func:`write_observed` counts the rows a write
+  commits on the write itself, with no re-read (the report's per-bucket
+  counters stay one groupBy: an ``Observation`` gives only totals).
 
 Reference semantics being reproduced (SURVEY §2.10 M4/M6): the worker
 restores from the `inference_tasks` status table on restart — already
@@ -27,9 +43,9 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Iterable
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -120,10 +136,80 @@ def clear_stop(base_path: str, spark: SparkSession | None = None) -> None:
 
 
 def stop_requested(base_path: str, spark: SparkSession | None = None) -> bool:
-    fs, hpath = _fs_and_path(f"{base_path}/{STOP_FLAG}", spark)
-    if fs is None:
-        return os.path.exists(os.path.join(base_path, STOP_FLAG))
-    return fs.exists(hpath)
+    return path_exists(f"{base_path}/{STOP_FLAG}", spark)
+
+
+def path_exists(path: str, spark: SparkSession | None = None) -> bool:
+    """Whether ``path`` exists: how every runner tells a fresh run from a
+    resume. Only a missing path means "start from scratch" — a storage
+    error raises instead of silently reprocessing everything and appending
+    duplicate COMPLETED rows."""
+    fs, hpath = _fs_and_path(path, spark)
+    return os.path.exists(path) if fs is None else fs.exists(hpath)
+
+
+def completed_rows(
+    spark: SparkSession, path: str, schema: StructType
+) -> list[Row]:
+    """The COMPLETED rows of the checkpoint table at ``path``, none on a
+    fresh run."""
+    if not path_exists(path, spark):
+        return []
+    return (
+        spark.read.schema(schema)
+        .parquet(path)
+        .filter(F.col("status") == STATUS_COMPLETED)
+        .collect()
+    )
+
+
+# what the lineage keys mean, for the refusal message
+_LINEAGE_NAMES = {
+    "config_model": "report config",
+    "config_fp": "report config",
+    "n_buckets": "bucket count",
+    "input_fp": "input dataset",
+    "alias_fp": "alias dictionary",
+}
+
+
+def check_lineage(lineages: Iterable[str], params: dict, where: str) -> None:
+    """Refuse to resume onto state written under other parameters.
+
+    Skipping finished work computed under one set of parameters while
+    computing the rest under another would graft two runs into one output
+    with no error. Every recorded lineage that is a JSON object must agree
+    with ``params`` on every key both have, else ``ValueError``; a key only
+    one side has is ignored (a lineage written before the key existed stays
+    resumable) and non-JSON lineage (tables older than lineage) is skipped.
+    """
+    for text in lineages:
+        try:
+            recorded = json.loads(text)
+        except (TypeError, ValueError):
+            continue
+        if not isinstance(recorded, dict):
+            continue
+        for key, ours in params.items():
+            if key in recorded and recorded[key] != ours:
+                raise ValueError(
+                    f"resume refused: {where} was written with a different "
+                    f"{_LINEAGE_NAMES.get(key, key)} ({key}={recorded[key]!r}, "
+                    f"this run has {ours!r}); use a new path, delete the old "
+                    "outputs, or rerun with the original parameters"
+                )
+
+
+def write_observed(df: DataFrame, path: str, *metrics: Column) -> dict:
+    """Overwrite ``path`` with ``df`` and return ``metrics`` (aggregate
+    columns; default the row count ``n``) over the rows written. The
+    metrics are an ``Observation`` on the write itself: one job, where a
+    re-read count would be a second one."""
+    obs = Observation()
+    df.observe(obs, *(metrics or [F.count(F.lit(1)).alias("n")])).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return obs.get
 
 
 def config_fingerprint(config: ReportConfig) -> str:
@@ -153,23 +239,12 @@ def with_partition_id(df: DataFrame, n_buckets: int) -> DataFrame:
 
 
 def completed_partitions(spark: SparkSession, base_path: str) -> set[int]:
-    path = f"{base_path}/checkpoints"
-    try:
-        rows = (
-            spark.read.schema(CHECKPOINT_SCHEMA)
-            .parquet(path)
-            .filter(F.col("status") == STATUS_COMPLETED)
-            .select("partition_id")
-            .distinct()
-            .collect()
+    return {
+        r["partition_id"]
+        for r in completed_rows(
+            spark, f"{base_path}/checkpoints", CHECKPOINT_SCHEMA
         )
-    except AnalysisException:
-        # no checkpoint table yet (fresh run). ONLY path-not-found maps to
-        # "start from scratch" — a transient storage error must propagate,
-        # not silently reprocess every bucket and double-append COMPLETED
-        # rows (round-3 review finding; checkpoint_kg narrows identically)
-        return set()
-    return {r["partition_id"] for r in rows}
+    }
 
 
 def read_checkpoints(spark: SparkSession, base_path: str) -> DataFrame:
@@ -221,18 +296,20 @@ class CheckpointedReportRunner:
         self, pages: DataFrame, fail_after_commits: int | None = None
     ) -> dict:
         run_id = str(uuid.uuid4())
-        self._validate_resume_compatibility()
-        done = completed_partitions(self.spark, self.base_path)
-        todo = [p for p in range(self.n_buckets) if p not in done]
-        lineage = json.dumps(
-            {
-                "run_id": run_id,
-                "config_model": self.config.model_type,
-                "config_fp": config_fingerprint(self.config),
-                "n_buckets": self.n_buckets,
-                "source": "pages",
-            }
+        params = {
+            "config_model": self.config.model_type,
+            "config_fp": config_fingerprint(self.config),
+            "n_buckets": self.n_buckets,
+            "source": "pages",
+        }
+        # one read serves both the lineage check and the done set
+        prior = completed_rows(
+            self.spark, f"{self.base_path}/checkpoints", CHECKPOINT_SCHEMA
         )
+        check_lineage((r["lineage"] for r in prior), params, self.base_path)
+        done = {r["partition_id"] for r in prior}
+        todo = [p for p in range(self.n_buckets) if p not in done]
+        lineage = json.dumps({"run_id": run_id, **params})
 
         pages_p = with_partition_id(pages, self.n_buckets)
 
@@ -289,43 +366,6 @@ class CheckpointedReportRunner:
             "skipped_buckets": sorted(done),
             "stopped": stopped,
         }
-
-    def _validate_resume_compatibility(self) -> None:
-        """Refuse to resume onto checkpoints written under a DIFFERENT
-        config or bucket count: skipping old COMPLETED buckets while
-        processing the rest with new parameters would graft two configs'
-        outputs into one table with no error (round-3 review finding —
-        CheckpointedKgRunner already refuses the same hybrid)."""
-        try:
-            prior = (
-                read_checkpoints(self.spark, self.base_path)
-                .filter(F.col("status") == STATUS_COMPLETED)
-                .select("lineage")
-                .limit(1)
-                .collect()
-            )
-        except AnalysisException:
-            return  # fresh run
-        if not prior:
-            return
-        try:
-            meta = json.loads(prior[0]["lineage"])
-        except (ValueError, TypeError):
-            return  # pre-fingerprint checkpoint table: can't validate
-        fp = meta.get("config_fp")
-        if fp is not None and fp != config_fingerprint(self.config):
-            raise ValueError(
-                "resume refused: existing checkpoints were written under a "
-                f"different report config (theirs {fp}, ours "
-                f"{config_fingerprint(self.config)}); use a new base_path "
-                "or delete the old outputs"
-            )
-        n = meta.get("n_buckets")
-        if n is not None and int(n) != self.n_buckets:
-            raise ValueError(
-                f"resume refused: bucket count changed ({n} -> "
-                f"{self.n_buckets}); partition ids are not comparable"
-            )
 
     def _run_group(
         self, pages_p: DataFrame, group: list[int], run_id: str,
@@ -395,9 +435,7 @@ class CheckpointedReportRunner:
 
     def _finalize(self) -> None:
         ents_path = f"{self.base_path}/entities"
-        fs, hpath = _fs_and_path(ents_path, self.spark)
-        exists = fs.exists(hpath) if fs is not None else os.path.exists(ents_path)
-        if not exists:
+        if not path_exists(ents_path, self.spark):
             return
         entities = self.spark.read.parquet(ents_path)
         custom = {tag for tag, _ in self.config.custom_tags}

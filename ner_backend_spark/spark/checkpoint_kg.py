@@ -32,6 +32,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .checkpoint import (
+    STATUS_COMPLETED,
+    check_lineage,
+    completed_rows,
+    write_observed,
+)
 from .kg import (
     alias_candidates,
     canonical_map,
@@ -55,29 +61,15 @@ KG_CHECKPOINT_SCHEMA = StructType(
     ]
 )
 
-STATUS_COMPLETED = "COMPLETED"
 
-
-def _read_checkpoint_rows(spark: SparkSession, base_path: str):
-    from pyspark.errors import AnalysisException
-
-    try:
-        return (
-            spark.read.schema(KG_CHECKPOINT_SCHEMA)
-            .parquet(f"{base_path}/kg_checkpoints")
-            .filter(F.col("status") == STATUS_COMPLETED)
-            .collect()
-        )
-    except AnalysisException:
-        # first run: the checkpoint table doesn't exist yet. Any OTHER
-        # error (storage hiccup etc.) must propagate — silently treating it
-        # as "nothing completed" would recompute everything and append
-        # duplicate COMPLETED rows.
-        return []
+def _completed_rows(spark: SparkSession, base_path: str):
+    return completed_rows(
+        spark, f"{base_path}/kg_checkpoints", KG_CHECKPOINT_SCHEMA
+    )
 
 
 def completed_stages(spark: SparkSession, base_path: str) -> set[str]:
-    return {r["stage"] for r in _read_checkpoint_rows(spark, base_path)}
+    return {r["stage"] for r in _completed_rows(spark, base_path)}
 
 
 class CheckpointedKgRunner:
@@ -113,8 +105,7 @@ class CheckpointedKgRunner:
     def _commit(
         self, stage: str, df: DataFrame, run_id: str, t0: float, lineage: str
     ) -> None:
-        df.write.mode("overwrite").parquet(self._path(stage))
-        n = self.spark.read.parquet(self._path(stage)).count()
+        n = write_observed(df, self._path(stage))["n"]
         self.spark.createDataFrame(
             [(stage, STATUS_COMPLETED, run_id, float(t0), time.time(), int(n), lineage)],
             KG_CHECKPOINT_SCHEMA,
@@ -158,7 +149,7 @@ class CheckpointedKgRunner:
         fail_after_stages: int | None = None,
     ) -> dict:
         run_id = str(uuid.uuid4())
-        prior = _read_checkpoint_rows(self.spark, self.base_path)
+        prior = _completed_rows(self.spark, self.base_path)
         done = {r["stage"] for r in prior}
         # entities feeds the fingerprint, the mentions stage and the triples
         # stage — persist so a lazy upstream (the NER tagger) runs once
@@ -166,19 +157,9 @@ class CheckpointedKgRunner:
         # Resume safety: refuse to graft new-parameter stages onto outputs
         # computed under different parameters OR a different input dataset —
         # either would be a silent cross-run hybrid presented as a clean run.
-        # Compare only keys present in BOTH (a lineage written before a new
-        # key existed must stay resumable, not be unconditionally refused).
         params = self._lineage_params()
         params["input_fp"] = self._input_fingerprint(entities)
-        for r in prior:
-            recorded = json.loads(r["lineage"])
-            shared = {k: recorded[k] for k in params if k in recorded}
-            if shared and shared != {k: params[k] for k in shared}:
-                raise ValueError(
-                    f"checkpoint at {self.base_path} was written with "
-                    f"{shared}, current run uses {params}; clear "
-                    f"{self.base_path}/kg_checkpoints (and kg/) or match them"
-                )
+        check_lineage((r["lineage"] for r in prior), params, self.base_path)
         lineage = json.dumps({"run_id": run_id, **params})
         ran: list[str] = []
 

@@ -160,7 +160,6 @@ def band_signatures(
     mentions: DataFrame,
     num_hashes: int = 15,
     bands: int = 5,
-    carry_trigrams: bool = False,
 ) -> DataFrame:
     """(mention_id, label, band, band_hash): the LSH banding of each mention.
 
@@ -169,19 +168,11 @@ def band_signatures(
     depends only on its own surface, which is what makes the banding table
     APPEND-ONLY under incremental construction (streaming/kg_update.py):
     new mentions' bands join against stored bands without recomputing them.
-
-    ``carry_trigrams=True`` keeps the trigram array on each banded row so
-    the bucket self-join can score pairs INLINE (fused path, see
-    :func:`lsh_candidate_pairs` ``score_threshold``) — heavier banding
-    shuffle rows in exchange for never shuffling the candidate-pair set
-    through id-joins.
     """
     rows_per_band = num_hashes // bands
-    extra = ["trigrams"] if carry_trigrams else []
     sig = with_trigrams(mentions).select(
         "mention_id",
         "label",
-        *extra,
         F.array(
             *[
                 F.array_min(
@@ -196,7 +187,6 @@ def band_signatures(
     return sig.select(
         "mention_id",
         "label",
-        *extra,
         F.posexplode(
             F.array(
                 *[
@@ -214,17 +204,15 @@ def lsh_candidate_pairs(
     mentions: DataFrame,
     num_hashes: int = 15,
     bands: int = 5,
-    same_label_only: bool = True,
     max_bucket_size: int | None = None,
     chunk_threshold: int = 256,
     chunk_groups: int = 32,
-    score_threshold: float | None = None,
 ) -> DataFrame:
-    """(id_a, id_b) mention pairs sharing >=1 MinHash band bucket.
+    """(id_a, id_b) same-label mention pairs sharing >=1 MinHash band bucket.
 
     Signatures are built with built-in functions only:
     sig[i] = array_min(transform(trigrams, t -> hash(t, i))). Band hash =
-    hash(slice(sig, ...)). Shuffle key is (band, band_hash[, label]).
+    hash(slice(sig, ...)). Shuffle key is (band, band_hash, label).
 
     Default banding 5 bands x 3 rows: collision probability ≈ 97% at
     Jaccard 0.8 (the linking regime), ≈ 13% at 0.3 — selective enough that
@@ -248,24 +236,6 @@ def lsh_candidate_pairs(
     it are dropped entirely — at web scale million-member buckets are
     template strings, not linkable entities, and even chunked enumeration
     of 10^12 pairs is work that should not happen.
-
-    ``score_threshold`` (the FUSED path, default off): carry each banded
-    row's trigram array through the banding shuffle and score the exact
-    trigram Jaccard INLINE in the bucket self-join, returning only pairs
-    with score >= threshold. Same final pair set as
-    ``score_links(lsh_candidate_pairs(...), mentions, t)`` — Jaccard is a
-    pure function of the pair, so scoring per bucket collision before the
-    distinct() equals scoring once after it — and the plan drops the
-    candidate-pair distinct's full width plus the two id-joins that fetch
-    trigram arrays. MEASURED VERDICT (round-6 A/B, m10 8.65M-edge graph,
-    3 warm reps per level): the fusion LOSES — 42.3 s @4 cores / 62.0 s
-    @16 fused vs 42.4 s / 21.0 s unfused. Jaccard runs per bucket
-    collision (~30M) instead of per distinct pair (~8.65M), the banding
-    shuffle carries trigram-widened rows, and the wide-row SMJ anti-
-    scales under a shared fixed-size heap. Kept as an option because the
-    trade flips when bands*|trigrams| is small relative to the collision
-    multiplicity (near-unique buckets), but :func:`mention_edges` does
-    NOT use it.
     """
     # the banding map (trigrams + num_hashes hash passes per mention) is the
     # CPU-heaviest narrow stage of the KG tail; the mentions frame arrives
@@ -276,20 +246,12 @@ def lsh_candidate_pairs(
     # provides the width and this is a no-op.
     from .session import ensure_parallelism
 
-    banded = band_signatures(
-        ensure_parallelism(mentions), num_hashes, bands,
-        carry_trigrams=score_threshold is not None,
-    )
-    # bucket granularity must match the join key: with same_label_only the
-    # self-join groups on (band, band_hash, label), so occupancy is counted
-    # per label too — otherwise a mixed-label bucket could be dropped even
-    # though each actual join group is small
-    bucket_cols = (
-        ["band", "band_hash", "label"]
-        if same_label_only
-        else ["band", "band_hash"]
-    )
-    # bucket occupancy as a WINDOW count, not groupBy-count + join back:
+    banded = band_signatures(ensure_parallelism(mentions), num_hashes, bands)
+    # bucket granularity must match the join key: the self-join groups on
+    # (band, band_hash, label), so occupancy is counted per label too —
+    # otherwise a mixed-label bucket could be dropped even though each
+    # actual join group is small.
+    # Bucket occupancy is a WINDOW count, not groupBy-count + join back:
     # the join form evaluates the banding projection (trigrams + the
     # num_hashes hash passes — the CPU-heaviest narrow stage of the KG
     # tail) TWICE, once under the aggregate and once as the probe side,
@@ -297,7 +259,7 @@ def lsh_candidate_pairs(
     # _bucket_size with ONE exchange over a single banding pass
     # (round-8 A/B: identical pair sets, 0.47 s -> 0.35 s warm at sf0.1;
     # at 100 TB it halves the banding map work outright)
-    wb = Window.partitionBy(*bucket_cols)
+    wb = Window.partitionBy("band", "band_hash", "label")
     banded = banded.withColumn("_bucket_size", F.count(F.lit(1)).over(wb))
     if max_bucket_size is not None:
         banded = banded.filter(F.col("_bucket_size") <= max_bucket_size)
@@ -305,26 +267,19 @@ def lsh_candidate_pairs(
     # so signatures/bucket sizes compute once (shared-subplan re-execution)
     banded = _materialize(banded, eager=False)
 
-    eq = [
-        (F.col("l.band") == F.col("r.band")),
-        (F.col("l.band_hash") == F.col("r.band_hash")),
-    ]
-
-    def _jaccard_ok(left_tri, right_tri):
-        # exact trigram Jaccard, the identical expression score_links uses
-        return (
-            F.size(F.array_intersect(left_tri, right_tri))
-            / F.size(F.array_union(left_tri, right_tri))
-        ) >= F.lit(float(score_threshold))
+    same_band = (F.col("l.band") == F.col("r.band")) & (
+        F.col("l.band_hash") == F.col("r.band_hash")
+    )
+    same_label = F.col("l.label") == F.col("r.label")
 
     # cheap path: whole bucket in one join group
     small = banded.filter(F.col("_bucket_size") <= chunk_threshold)
     l, r = small.alias("l"), small.alias("r")
-    cond = eq[0] & eq[1] & (F.col("l.mention_id") < F.col("r.mention_id"))
-    if same_label_only:
-        cond = cond & (F.col("l.label") == F.col("r.label"))
-    if score_threshold is not None:
-        cond = cond & _jaccard_ok(F.col("l.trigrams"), F.col("r.trigrams"))
+    cond = (
+        same_band
+        & (F.col("l.mention_id") < F.col("r.mention_id"))
+        & same_label
+    )
     pairs_small = l.join(r, cond).select(
         F.col("l.mention_id").alias("id_a"),
         F.col("r.mention_id").alias("id_b"),
@@ -343,18 +298,14 @@ def lsh_candidate_pairs(
     )
     br = big.withColumn("_g", g).alias("r")
     bcond = (
-        eq[0]
-        & eq[1]
+        same_band
         & (F.col("l._rg") == F.col("r._g"))
         & (
             (F.col("l._lg") < F.col("r._g"))
             | (F.col("l.mention_id") < F.col("r.mention_id"))
         )
+        & same_label
     )
-    if same_label_only:
-        bcond = bcond & (F.col("l.label") == F.col("r.label"))
-    if score_threshold is not None:
-        bcond = bcond & _jaccard_ok(F.col("l.trigrams"), F.col("r.trigrams"))
     pairs_big = bl.join(br, bcond).select(
         F.least("l.mention_id", "r.mention_id").alias("id_a"),
         F.greatest("l.mention_id", "r.mention_id").alias("id_b"),
@@ -568,7 +519,7 @@ def mention_edges(
     callers that only consume the edges (the stage-checkpointed runner
     re-derives alias hits at its canonical stage from on-disk mentions).
     """
-    # candidates-then-score, NOT the fused score_threshold path: the
+    # candidates-then-score, NOT scoring inside the bucket self-join: the
     # round-6 A/B on the m10 8.65M-edge graph (3 warm reps/level,
     # /tmp entities_240000_m10) REFUTED the fusion — fused 42.3 s @4
     # cores / 62.0 s @16 vs unfused 42.4 s / 21.0 s. Scoring once per

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..spark.checkpoint import check_lineage, write_observed
 from ..spark.kg import (
     alias_candidates,
     band_signatures,
@@ -106,13 +107,7 @@ class IncrementalKg:
         path = f"{self.base}/params.json"
         if os.path.exists(path):
             with open(path) as f:
-                stored = json.load(f)
-            if stored != params:
-                raise ValueError(
-                    "IncrementalKg state at %s was built with different "
-                    "parameters: stored=%s, requested=%s — use a fresh "
-                    "base_dir or the original parameters" % (self.base, stored, params)
-                )
+                check_lineage([f.read()], params, self.base)
         else:
             with open(path, "w") as f:
                 json.dump(params, f)
@@ -168,9 +163,9 @@ class IncrementalKg:
         # table and silently drop the mentions forever)
         known = self.mentions(exclude_batch=batch_id).select("mention_id")
         new_m = extract_mentions(entities).join(known, "mention_id", "left_anti")
-        new_m.write.mode("overwrite").parquet(
-            f"{self.base}/mentions/batch={batch_id}"
-        )
+        n_new_mentions = write_observed(
+            new_m, f"{self.base}/mentions/batch={batch_id}"
+        )["n"]
         # re-read: cuts lineage to the (possibly streaming-sourced) input and
         # guarantees bands are computed over exactly what was committed
         new_m = self.spark.read.parquet(
@@ -230,21 +225,19 @@ class IncrementalKg:
         )
         assign = incremental_components(seed, edges)
         staging = f"{self.base}/_assign_staging_v{batch_id}"
-        assign.write.mode("overwrite").parquet(staging)
+        # counted as written, never driver-side running counters; every
+        # star-forest root points at itself, so roots count the components
+        counts = write_observed(
+            assign,
+            staging,
+            F.count(F.lit(1)).alias("n_nodes"),
+            F.count_if(F.col("id") == F.col("component")).alias("n_components"),
+        )
         # counter metrics BEFORE the assign_v{batch} commit marker lands:
         # redelivery early-returns on that marker, so anything written after
         # it is outside the idempotency window — a crash in between would
         # lose the batch's metrics forever (round-3 review finding).
-        # Recomputed from written state, never driver-side running counters.
-        committed = self.spark.read.parquet(staging)
-        metrics = {
-            "batch_id": batch_id,
-            "n_new_mentions": self.spark.read.parquet(
-                f"{self.base}/mentions/batch={batch_id}"
-            ).count(),
-            "n_nodes": committed.count(),
-            "n_components": committed.select("component").distinct().count(),
-        }
+        metrics = {"batch_id": batch_id, "n_new_mentions": n_new_mentions, **counts}
         with open(f"{self.base}/metrics_v{batch_id}.json", "w") as f:
             json.dump(metrics, f)
         # the rename is the commit point: marker appears only after both the

@@ -163,6 +163,54 @@ def test_kg_kill_and_resume_skips_completed_stages(spark, tmp_path):
     metrics = kg_stage_metrics(spark, base)
     assert set(metrics) == {"mentions", "edges", "components", "canonical", "triples"}
     assert all(m["n_rows"] > 0 for m in metrics.values())
+    # counted on the write, yet exactly what each stage committed
+    for stage, m in metrics.items():
+        assert m["n_rows"] == spark.read.parquet(f"{base}/kg/{stage}").count()
+
+
+def test_fresh_runs_log_no_errors(spark, pages, tmp_path):
+    """A fresh run finds no prior state without logging an ERROR. Once an
+    Observation has run in the session (any fixpoint does), Spark's
+    ObservationManager listener re-plans every failed query and logs its
+    exception, so a fresh run must not be detected by a failed read."""
+    from ner_backend_spark.spark import kg
+    from ner_backend_spark.spark.checkpoint_kg import CheckpointedKgRunner
+
+    kg.connected_components(
+        spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    ).collect()
+
+    log4j = spark._jvm.org.apache.logging.log4j
+    ctx = log4j.LogManager.getContext(False)
+    config = ctx.getConfiguration()
+    writer = spark._jvm.java.io.StringWriter()
+    layout = (
+        log4j.core.layout.PatternLayout.newBuilder()
+        .withPattern("%p %c %m%n")
+        .build()
+    )
+    appender = log4j.core.appender.WriterAppender.createAppender(
+        layout, None, writer, "fresh-run-errors", False, True
+    )
+    appender.start()
+    config.addAppender(appender)
+    config.getRootLogger().addAppender(appender, log4j.Level.ERROR, None)
+    ctx.updateLoggers()
+    try:
+        CheckpointedReportRunner(
+            spark, CONFIG, str(tmp_path / "report"), n_buckets=2,
+            buckets_per_commit=2,
+        ).run(pages)
+        CheckpointedKgRunner(spark, str(tmp_path / "kg")).run(
+            _kg_entities(spark)
+        )
+        # listener errors are logged from the listener bus thread
+        spark._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        config.getRootLogger().removeAppender("fresh-run-errors")
+        ctx.updateLoggers()
+        appender.stop()
+    assert writer.toString() == ""
 
 
 def test_kg_checkpointed_matches_direct_build(spark, tmp_path):

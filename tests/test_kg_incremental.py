@@ -150,6 +150,10 @@ def test_batch_metrics_written(spark, tmp_path, alias_df):
     assert m["n_new_mentions"] == 8
     assert m["n_nodes"] >= 8  # mentions + alias virtual nodes
     assert 0 < m["n_components"] < m["n_nodes"]
+    # counted on the write, yet exactly what was committed
+    assign = inc.assignment()
+    assert m["n_nodes"] == assign.count()
+    assert m["n_components"] == assign.select("component").distinct().count()
 
 
 def test_crash_redelivery_does_not_lose_mentions(spark, tmp_path, alias_df):

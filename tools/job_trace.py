@@ -20,6 +20,8 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def main() -> None:
+    if len(sys.argv) < 2:
+        sys.exit(f"usage: {sys.argv[0]} <query name> [reps]")
     name = sys.argv[1]
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     log_dir = "/tmp/spark-events-trace"
@@ -76,22 +78,19 @@ def main() -> None:
                 with open(path) as f:
                     yield from f
 
-    if True:
-        for line in _lines():
-            ev = json.loads(line)
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                desc = ev.get("Properties", {}).get(
-                    "spark.job.description", ""
-                )
-                jobs[ev["Job ID"]] = {
-                    "desc": desc,
-                    "start": ev["Submission Time"],
-                    "n_stages": len(ev.get("Stage Infos", [])),
-                }
-            elif e == "SparkListenerJobEnd":
-                if ev["Job ID"] in jobs:
-                    jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
+    for line in _lines():
+        ev = json.loads(line)
+        e = ev.get("Event")
+        if e == "SparkListenerJobStart":
+            desc = ev.get("Properties", {}).get("spark.job.description", "")
+            jobs[ev["Job ID"]] = {
+                "desc": desc,
+                "start": ev["Submission Time"],
+                "n_stages": len(ev.get("Stage Infos", [])),
+            }
+        elif e == "SparkListenerJobEnd":
+            if ev["Job ID"] in jobs:
+                jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
     sel = sorted(
         (j for j in jobs.values() if j["desc"] == last_rep),
         key=lambda j: j["start"],
@@ -104,16 +103,26 @@ def main() -> None:
     tot_run = tot_gap = 0
     print(f"{len(sel)} jobs in {last_rep}:")
     for j in sel:
-        dur = j.get("end", j["start"]) - j["start"]
-        gap = (j["start"] - prev_end) if prev_end else 0
-        prev_end = j.get("end", j["start"])
-        tot_run += dur
-        tot_gap += max(gap, 0)
+        # overlapping jobs would give negative gaps
+        gap = max(j["start"] - prev_end, 0) if prev_end else 0
+        tot_gap += gap
+        if "end" in j:
+            dur = j["end"] - j["start"]
+            tot_run += dur
+            prev_end = j["end"]
+            dur_s = f"{dur/1000:6.3f}s"
+        else:  # no JobEnd in the log: unknown, not zero
+            prev_end = j["start"]
+            dur_s = "  NO END"
         print(
-            f"  +{(j['start']-t_origin)/1000:7.3f}s dur={dur/1000:6.3f}s "
+            f"  +{(j['start']-t_origin)/1000:7.3f}s dur={dur_s} "
             f"gap={gap/1000:6.3f}s stages={j['n_stages']}"
         )
-    print(f"sum job dur={tot_run/1000:.3f}s  sum gaps={tot_gap/1000:.3f}s")
+    no_end = sum("end" not in j for j in sel)
+    print(
+        f"sum job dur={tot_run/1000:.3f}s  sum gaps={tot_gap/1000:.3f}s"
+        + (f"  ({no_end} jobs with no JobEnd left out of dur)" if no_end else "")
+    )
 
 
 if __name__ == "__main__":
