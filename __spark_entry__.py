@@ -40,7 +40,19 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     measured at sf0.1), which a catalog table pays once — the same
     metadata cost guide-§6 file-listing caches and manifest formats
     exist to avoid. The memo holds only the immutable DataFrame
-    definition; every action on it still scans parquet from disk."""
+    definition; every action on it still scans parquet from disk.
+
+    Two rules follow from the memo:
+
+    - Repeated calls for one table return the SAME DataFrame object, with
+      the same attribute ids. A query that self-joins a relation must
+      ``.alias()`` each side (or derive one side with new column names)
+      before the join; otherwise Spark sees a same-object self-join and
+      reports ambiguous columns or folds the condition to always-true.
+    - The file listing and schema are pinned at first use, so the parquet
+      under ``sf_dir`` must stay immutable for the session: regenerating
+      it mid-session leaves the memo reading stale listings. Start a new
+      session (or use a new ``sf_dir``) after rewriting data."""
     try:
         cache = spark._graft_relations  # type: ignore[attr-defined]
     except AttributeError:

@@ -14,7 +14,8 @@ kg_update.py, per micro-batch). This module decides for all three how
   lineage with the current parameters;
 - counters are taken: :func:`write_observed` counts the rows a write
   commits on the write itself, with no re-read (the report's per-bucket
-  counters stay one groupBy: an ``Observation`` gives only totals).
+  counters stay one groupBy: an ``Observation`` gives only totals);
+- a commit row lands: :func:`append_rows` appends it from an Arrow table.
 
 Reference semantics being reproduced (SURVEY §2.10 M4/M6): the worker
 restores from the `inference_tasks` status table on restart — already
@@ -212,6 +213,21 @@ def write_observed(df: DataFrame, path: str, *metrics: Column) -> dict:
     return obs.get
 
 
+def append_rows(
+    spark: SparkSession, path: str, schema: StructType, rows: list[tuple]
+) -> None:
+    """Append ``rows`` (tuples in ``schema`` order) to the parquet table at
+    ``path`` in one job. The rows reach the JVM as one Arrow table, not a
+    pickled Python RDD, so the write starts no Python worker (an 8-row
+    append measured 0.53-0.78 s that way and 0.24-0.27 s from Arrow,
+    local[4] on a 4-vCPU host); the written columns, types and
+    nullability are ``schema``'s either way."""
+    import pyarrow as pa
+
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows])
+    spark.createDataFrame(table, schema).write.mode("append").parquet(path)
+
+
 def config_fingerprint(config: ReportConfig) -> str:
     """Deterministic digest of every semantic field of a ReportConfig —
     process-independent (no Python hash()), used to refuse cross-config
@@ -345,9 +361,10 @@ class CheckpointedReportRunner:
                      0, 0, 0, json.dumps({"error": err, "run_id": run_id}))
                     for p in group
                 ]
-                self.spark.createDataFrame(
-                    rows, CHECKPOINT_SCHEMA
-                ).write.mode("append").parquet(f"{self.base_path}/checkpoints")
+                append_rows(
+                    self.spark, f"{self.base_path}/checkpoints",
+                    CHECKPOINT_SCHEMA, rows,
+                )
                 continue
 
             commits += 1
@@ -429,9 +446,10 @@ class CheckpointedReportRunner:
             )
             for p in group
         ]
-        self.spark.createDataFrame(
-            ckpt_rows, CHECKPOINT_SCHEMA
-        ).write.mode("append").parquet(f"{self.base_path}/checkpoints")
+        append_rows(
+            self.spark, f"{self.base_path}/checkpoints", CHECKPOINT_SCHEMA,
+            ckpt_rows,
+        )
 
     def _finalize(self) -> None:
         ents_path = f"{self.base_path}/entities"

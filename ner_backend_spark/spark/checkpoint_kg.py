@@ -34,6 +34,7 @@ from pyspark.sql.types import (
 
 from .checkpoint import (
     STATUS_COMPLETED,
+    append_rows,
     check_lineage,
     completed_rows,
     write_observed,
@@ -48,6 +49,15 @@ from .kg import (
 )
 
 KG_STAGES = ["mentions", "edges", "components", "canonical", "triples"]
+
+# each stage table's columns in the order its stage writes them: a read
+# with a declared schema plans without a schema-inference job
+_STAGE_SCHEMAS = {
+    "mentions": "label string, text string, norm string, mention_id long",
+    "edges": "src long, dst long",
+    "components": "id long, component long",
+    "canonical": "label string, text string, canonical string",
+}
 
 KG_CHECKPOINT_SCHEMA = StructType(
     [
@@ -100,16 +110,21 @@ class CheckpointedKgRunner:
         return f"{self.base_path}/kg/{stage}"
 
     def _read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(stage))
+        return self.spark.read.schema(_STAGE_SCHEMAS[stage]).parquet(
+            self._path(stage)
+        )
 
     def _commit(
         self, stage: str, df: DataFrame, run_id: str, t0: float, lineage: str
     ) -> None:
         n = write_observed(df, self._path(stage))["n"]
-        self.spark.createDataFrame(
-            [(stage, STATUS_COMPLETED, run_id, float(t0), time.time(), int(n), lineage)],
+        append_rows(
+            self.spark,
+            f"{self.base_path}/kg_checkpoints",
             KG_CHECKPOINT_SCHEMA,
-        ).write.mode("append").parquet(f"{self.base_path}/kg_checkpoints")
+            [(stage, STATUS_COMPLETED, run_id, float(t0), time.time(),
+              int(n), lineage)],
+        )
 
     def _lineage_params(self) -> dict:
         return {

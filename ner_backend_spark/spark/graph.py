@@ -471,49 +471,50 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     surviving node's in-core degree. The standard distributed peel:
     drop all nodes under degree k, re-count, repeat to fixpoint.
 
-    Each round is two degree windows over the symmetrized edges (no
-    adjacency collection anywhere), driven by :func:`kg.fixpoint` with
-    the (a, b) edge keys as the convergence certificate. Round count is
-    bounded by the peel depth: dozens on real web/KG graphs (degeneracy
-    ordering collapses fast), but THETA(n/2) on the adversarial path
-    graph at k=2 — the max_iter guard raises rather than silently
+    Each round is two degree windows over the symmetric edge state (no
+    adjacency collection anywhere), driven by :func:`kg.fixpoint`. Round
+    count is bounded by the peel depth: dozens on real web/KG graphs
+    (degeneracy ordering collapses fast), but THETA(n/2) on the adversarial
+    path graph at k=2 — the max_iter guard raises rather than silently
     returning a non-core, since a partial peel OVERSTATES the core.
+
+    No confirm round: the window over ``a`` also counts how many of a
+    node's neighbours survive the round (``core_deg``). When every
+    survivor keeps ``core_deg >= k``, the survivors are closed under the
+    peel, so they are the k-core and ``core_deg`` is each node's in-core
+    degree; that round's ``settled`` observation ends the loop. A graph
+    whose peel drops nothing, or everything, settles in its first round.
     """
 
     def peel(cur: DataFrame) -> DataFrame:
-        # two-window peel round (round 8): symmetrize, attach each
-        # endpoint's degree via a window count (every edge appears in
-        # both directions, so partitionBy(a) counts deg(a) and
-        # partitionBy(b) counts deg(b)), keep the a<b direction of the
-        # edges whose BOTH endpoints survive — identical to the old
-        # degree-groupBy + two semi-joins, minus one exchange and the
-        # node-sized join sides.
-        cur = cur.select("a", "b")
-        sym = cur.union(
-            cur.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        # the state holds each edge in both directions, so partitionBy(b)
+        # counts deg(b) and partitionBy(a) counts deg(a); the deg_b window
+        # runs first so the a window can also sum the surviving neighbours
+        # — both a-aggregates share one exchange
+        wa = Window.partitionBy("a")
+        d = cur.select("a", "b").withColumn(
+            "deg_b", F.count(F.lit(1)).over(Window.partitionBy("b"))
         )
-        d = sym.withColumn(
-            "deg_a", F.count(F.lit(1)).over(Window.partitionBy("a"))
-        ).withColumn("deg_b", F.count(F.lit(1)).over(Window.partitionBy("b")))
-        return d.filter(
-            (F.col("deg_a") >= k)
-            & (F.col("deg_b") >= k)
-            & (F.col("a") < F.col("b"))
-        ).select("a", "b", "deg_a", "deg_b")
+        d = d.withColumn("deg_a", F.count(F.lit(1)).over(wa)).withColumn(
+            "core_deg", F.sum((F.col("deg_b") >= k).cast("long")).over(wa)
+        )
+        return d.filter((F.col("deg_a") >= k) & (F.col("deg_b") >= k)).select(
+            "a", "b", "core_deg"
+        )
 
-    # the round state CARRIES the endpoint degrees: at the fixpoint (no
-    # edge dropped) they are by definition the degrees of the final core,
-    # so the answer reads straight off the last materialized round
+    und = _undirected(edges)
     cur = fixpoint(
-        peel, _undirected(edges), ("a", "b"), max_iter, "k-core peel"
+        peel,
+        und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b"))),
+        ("a", "b"),
+        max_iter,
+        "k-core peel",
+        settled=F.min("core_deg") >= k,
     )
-    return (
-        cur.select(F.col("a").alias("node"), F.col("deg_a").alias("deg"))
-        .union(
-            cur.select(F.col("b").alias("node"), F.col("deg_b").alias("deg"))
-        )
-        .distinct()
-    )
+    # every survivor is an ``a`` of its own rows, all carrying its core_deg
+    return cur.select(
+        F.col("a").alias("node"), F.col("core_deg").alias("deg")
+    ).distinct()
 
 
 def _edge_support(cur: DataFrame) -> DataFrame:

@@ -55,8 +55,12 @@ from ..spark.kg import (
     score_links,
 )
 
+# the state tables' columns in the order they are written: every read
+# declares its schema, so none pays a footer-reading schema-inference job;
+# the partitioned tables still gain their ``batch`` column from the paths
 _MENTION_SCHEMA = "mention_id long, label string, text string, norm string"
 _ASSIGN_SCHEMA = "id long, component long"
+_BAND_SCHEMA = "mention_id long, label string, band int, band_hash int"
 
 
 class IncrementalKg:
@@ -121,7 +125,7 @@ class IncrementalKg:
         if any(
             d.startswith("batch=") for d in _ls(path)
         ):
-            df = self.spark.read.parquet(path)
+            df = self.spark.read.schema(schema).parquet(path)
             if exclude_batch is not None:
                 df = df.filter(F.col("batch") != exclude_batch)
             return df.drop("batch")
@@ -144,7 +148,9 @@ class IncrementalKg:
         v = self._latest_assign_version()
         if v is None:
             return self.spark.createDataFrame([], _ASSIGN_SCHEMA)
-        return self.spark.read.parquet(f"{self.base}/assign_v{v}")
+        return self.spark.read.schema(_ASSIGN_SCHEMA).parquet(
+            f"{self.base}/assign_v{v}"
+        )
 
     # -- the per-batch update ------------------------------------------------
 
@@ -168,16 +174,14 @@ class IncrementalKg:
         )["n"]
         # re-read: cuts lineage to the (possibly streaming-sourced) input and
         # guarantees bands are computed over exactly what was committed
-        new_m = self.spark.read.parquet(
+        new_m = self.spark.read.schema(_MENTION_SCHEMA).parquet(
             f"{self.base}/mentions/batch={batch_id}"
         )
         band_signatures(new_m, self.num_hashes, self.bands).write.mode(
             "overwrite"
         ).parquet(f"{self.base}/bands/batch={batch_id}")
 
-        all_bands = self._read_or_empty(
-            "bands", "mention_id long, label string, band int, band_hash int"
-        )
+        all_bands = self._read_or_empty("bands", _BAND_SCHEMA)
         if self.max_bucket_size is not None:
             sizes = all_bands.groupBy("band", "band_hash", "label").agg(
                 F.count(F.lit(1)).alias("_n")
@@ -186,7 +190,7 @@ class IncrementalKg:
                 sizes.filter(F.col("_n") <= self.max_bucket_size),
                 ["band", "band_hash", "label"],
             ).drop("_n")
-        new_bands = self.spark.read.parquet(
+        new_bands = self.spark.read.schema(_BAND_SCHEMA).parquet(
             f"{self.base}/bands/batch={batch_id}"
         )
         l, r = new_bands.alias("l"), all_bands.alias("r")

@@ -213,6 +213,44 @@ def test_fresh_runs_log_no_errors(spark, pages, tmp_path):
     assert writer.toString() == ""
 
 
+def test_state_reads_launch_no_jobs(spark, tmp_path):
+    # every stored table is read with its declared schema: building the
+    # DataFrame lists the files but starts no schema-inference job
+    from ner_backend_spark.spark.checkpoint_kg import CheckpointedKgRunner
+    from ner_backend_spark.streaming.kg_update import IncrementalKg
+
+    ents = _kg_entities(spark)
+    runner = CheckpointedKgRunner(spark, str(tmp_path / "kg"))
+    runner.run(ents)
+    inc = IncrementalKg(spark, str(tmp_path / "inc"))
+    inc.process_batch(ents, 0)
+
+    sc = spark.sparkContext
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    sc.setJobGroup("state-reads", "state-reads")
+    try:
+        reads = {
+            f"{tmp_path}/inc/mentions": inc.mentions(),
+            f"{tmp_path}/inc/assign_v0": inc.assignment(),
+            **{
+                runner._path(stage): runner._read(stage)
+                for stage in ("mentions", "edges", "components", "canonical")
+            },
+        }
+        empty = inc.mentions(exclude_batch=0)
+        spark._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sc.statusTracker().getJobIdsForGroup("state-reads")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    # the declared schemas read what schema inference reads, in its order
+    for path, df in reads.items():
+        inferred = spark.read.parquet(path).drop("batch")
+        assert df.columns == inferred.columns, path
+        assert sorted(df.collect()) == sorted(inferred.collect()), path
+    assert empty.count() == 0
+
+
 def test_kg_checkpointed_matches_direct_build(spark, tmp_path):
     from ner_backend_spark.spark.checkpoint_kg import CheckpointedKgRunner
     from ner_backend_spark.spark.kg import build_triples

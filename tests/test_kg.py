@@ -107,8 +107,9 @@ def test_connected_components_peel1_equivalence(spark):
 
 @pytest.mark.parametrize("op", ["components", "kcore", "truss"])
 def test_fixpoint_max_iter_exhaustion_raises(spark, op):
-    # every fixpoint needs >= 2 rounds (the second confirms the first),
-    # so max_iter=1 must raise instead of returning a partial result
+    # the chain with two chords needs many rounds under every operator
+    # (a k-core peel drops one end node per round), so max_iter=1 must
+    # raise instead of returning a partial result
     from ner_backend_spark.spark import graph
 
     edges = spark.createDataFrame(
@@ -122,6 +123,22 @@ def test_fixpoint_max_iter_exhaustion_raises(spark, op):
     }[op]
     with pytest.raises(ValueError, match="did not converge in 1 rounds"):
         run()
+
+
+def test_kcore_settles_in_one_round(spark):
+    # the first peel drops the pendant edge and every survivor keeps
+    # degree 2 among the survivors, so that round is the answer: no
+    # second round has to confirm it
+    from ner_backend_spark.spark import graph
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4)], "src long, dst long"
+    )
+    got = {
+        r["node"]: r["deg"]
+        for r in graph.kcore(edges, k=2, max_iter=1).collect()
+    }
+    assert got == {1: 2, 2: 2, 3: 2}
 
 
 def test_lsh_blocking_proposes_similar_pairs(spark, entities):

@@ -263,6 +263,27 @@ def test_truss_plan_checkpoint_rooted(spark):
         assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_incremental_components_plans_new_edges_once(spark, tmp_path):
+    """The assignment incremental_components returns is read off the CC
+    input cut and the converged stars: the new-edge plan (in a KG refresh,
+    the band self-join and Jaccard scoring) runs once, inside that cut,
+    and is never planned again to collect node ids."""
+    path = str(tmp_path / "new_edges")
+    spark.createDataFrame(
+        [(2, 3), (7, 8), (8, 9)], "src long, dst long"
+    ).write.parquet(path)
+    new_edges = spark.read.parquet(path)
+    assign = spark.createDataFrame(
+        [(1, 1), (2, 1), (3, 3), (5, 5)], "id long, component long"
+    )
+    out = kg.incremental_components(assign, new_edges)
+    plan = _plan(out)
+    assert "Scan parquet" not in plan, plan
+    assert {(r["id"], r["component"]) for r in out.collect()} == {
+        (1, 1), (2, 1), (3, 1), (5, 5), (7, 7), (8, 7), (9, 7),
+    }
+
+
 def test_source_mix_single_corpus_scan(spark):
     """source_mix must scan the corpus exactly ONCE: the per-source
     aggregate is lineage-cut, so the final plan is checkpoint-rooted
