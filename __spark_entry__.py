@@ -1506,11 +1506,12 @@ def _q_kg_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k=3 truss of the entity co-occurrence graph (every surviving edge
     closes >= 1 triangle within the truss) with per-edge in-truss
     support — the edge-cohesion complement of q_kg_kcore (degree can be
-    inflated by a star; triangle support cannot). Iterative peel, one
-    degree-oriented wedge support count per round, CC-style lineage
-    cuts + convergence checksum; max_iter raises rather than overstating
-    the truss. Oracle: the same peel in pure Python over the
-    materialized triples table."""
+    inflated by a star; triangle support cannot). The triangles are
+    enumerated once with degree-oriented wedges; each peel round then
+    counts edge support over the surviving triangle rows with two
+    windows, under CC-style lineage cuts + convergence checksum;
+    max_iter raises rather than overstating the truss. Oracle: the same
+    peel in pure Python over the materialized triples table."""
     from ner_backend_spark.spark.graph import truss
 
     pairs = _q_kg_cooccurrence(spark, sf_dir)

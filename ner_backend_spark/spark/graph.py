@@ -24,6 +24,13 @@ Scale notes (100 TB / 10^12-document corpus -> ~10^10-node graph):
   objects) bounds the self-join blowup at K(K-1)/2 pairs per page —
   the same structural bound the KG blocking stage uses (KG_MAX_BUCKET):
   hub pages contribute a fixed number of pairs, not a quadratic one.
+  ``pmi_pairs`` and ``neighbor_jaccard`` pair up through the same capped
+  self-join (:func:`_capped_pairs`).
+- ``triangle_count``, ``clustering_coefficient``, ``truss``: one triangle
+  enumeration (:func:`_triangles`) — degree-oriented wedges, O(m^1.5)
+  rows whatever the hub degree, closed against the cut edge set. The
+  truss peel runs on the triangle rows themselves: two windows per
+  round, no join and no re-orientation.
 """
 
 from __future__ import annotations
@@ -81,23 +88,43 @@ def pagerank(
     each iteration with a lazy localCheckpoint so the plan stays O(1)
     deep instead of O(iters).
     """
+
+    def start(nodes: DataFrame):
+        n = nodes.count()
+        if n == 0:
+            return None
+        return F.lit(1.0 / n), F.lit((1.0 - damping) / n)
+
+    return _power_iteration(edges, iters, damping, start)
+
+
+def _power_iteration(edges: DataFrame, iters: int, damping: float, start):
+    """(node, rank) after ``iters`` power iterations of
+    ``rank'(v) = teleport + d * sum_{u->v} rank(u) / outdeg(u)`` — the
+    shared loop of :func:`pagerank` and :func:`personalized_pagerank`.
+
+    ``start(nodes)`` gets the (id,) node frame and returns the column
+    pair (initial rank, teleport term), or None when there is nothing to
+    rank: then every node (none, for an empty edge set) gets rank 0.0
+    instead of a division by zero. The edge table is hash-partitioned on
+    src and cut once; (src, dst, outdeg) is built once and reused every
+    iteration, and each iteration's rank is cut lazily last.
+    """
     e = _materialize(
         edges.select("src", "dst").repartition("src"), eager=False
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # (src, dst, outdeg): built once, reused every iteration
     ed = _materialize(e.join(deg, "src"), eager=False)
     nodes = _materialize(
         e.select(F.col("src").alias("id")).distinct(), eager=False
     )
-    n = nodes.count()
-    if n == 0:
-        # empty (or fully filtered) edge set: no nodes, no 1/n — return
-        # the empty frame with the output schema instead of raising
+    terms = start(nodes)
+    if terms is None:
         return nodes.select(
             F.col("id").alias("node"), F.lit(0.0).alias("rank")
         )
-    rank = nodes.withColumn("rank", F.lit(1.0 / n))
+    init, teleport = terms
+    rank = nodes.select("id", init.alias("rank"))
     for _ in range(iters):
         contrib = (
             ed.join(rank, ed.src == rank.id)
@@ -111,12 +138,49 @@ def pagerank(
         rank = nodes.join(contrib, "id", "left").select(
             "id",
             (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0))
+                teleport + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0))
             ).alias("rank"),
         )
         rank = _materialize(rank, eager=False)
     return rank.select(F.col("id").alias("node"), "rank")
+
+
+def _capped_pairs(
+    rows: DataFrame, key: str, item: str, cap: int, cut: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """(capped, pairs): the capped pair self-join of :func:`cooccurring_pairs`,
+    :func:`pmi_pairs` and :func:`neighbor_jaccard`.
+
+    ``capped`` = (key, item) keeping each key's ``cap`` smallest items — a
+    deterministic choice, since ``rows`` are distinct (key, item) pairs;
+    ``cut`` puts it behind a lazy :func:`kg._materialize` for callers that
+    read it again. ``pairs`` = (u, v, n): every item pair u < v listed
+    under a common key, with the number of such keys. The self-join is an
+    equi-join on the key with the inequality as a residual, so it emits
+    at most cap·(cap−1)/2 rows per key however large the key's group.
+    """
+    w = Window.partitionBy(key).orderBy(item)
+    capped = (
+        rows.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= cap)
+        .select(key, item)
+    )
+    if cut:
+        capped = _materialize(capped, eager=False)
+    x, y = capped.alias("x"), capped.alias("y")
+    pairs = (
+        x.join(
+            y,
+            on=[
+                F.col(f"x.{key}") == F.col(f"y.{key}"),
+                F.col(f"x.{item}") < F.col(f"y.{item}"),
+            ],
+        )
+        .select(F.col(f"x.{item}").alias("u"), F.col(f"y.{item}").alias("v"))
+        .groupBy("u", "v")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    return capped, pairs
 
 
 def cooccurring_pairs(
@@ -132,28 +196,8 @@ def cooccurring_pairs(
     subj with at most K(K-1)/2 output pairs per page.
     """
     objs = triples.select("subj", "obj").distinct()
-    w = Window.partitionBy("subj").orderBy("obj")
-    capped = (
-        objs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_per_subj)
-        .select("subj", "obj")
-    )
-    a = capped.alias("a")
-    b = capped.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.subj") == F.col("b.subj"),
-                F.col("a.obj") < F.col("b.obj"),
-            ],
-        )
-        .select(
-            F.col("a.obj").alias("obj_a"), F.col("b.obj").alias("obj_b")
-        )
-        .groupBy("obj_a", "obj_b")
-        .agg(F.count(F.lit(1)).alias("n_subj"))
-    )
+    _, pairs = _capped_pairs(objs, "subj", "obj", max_per_subj)
+    return pairs.toDF("obj_a", "obj_b", "n_subj")
 
 
 def _undirected(edges: DataFrame, eager: bool = True) -> DataFrame:
@@ -172,29 +216,27 @@ def _undirected(edges: DataFrame, eager: bool = True) -> DataFrame:
     )
 
 
-def _oriented_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Degree-oriented form of an undirected edge set: (deg, oriented).
+def _oriented_edges(und: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Degree-oriented form of a cut undirected (a, b) edge set
+    (:func:`_undirected`): (deg, oriented) — the only orientation code.
 
-    ``deg`` = (node, deg) over the deduplicated undirected edges;
-    ``oriented`` = (lo, hi) with every edge pointing from its
-    lower-(degree, id) endpoint, bounding every node's oriented
-    out-degree by O(sqrt(m)).
+    ``deg`` = (node, deg); ``oriented`` = (lo, hi) with every edge
+    pointing from its lower-(degree, id) endpoint, bounding every node's
+    oriented out-degree by O(sqrt(m)).
 
-    ``und`` is MATERIALIZED EAGERLY (the kcore pattern, kg._materialize):
-    one job computes the upstream edge plan — the full
-    mentions→LSH→CC→triples KG pipeline in q_kg_clustering — exactly
-    once, and every downstream reference (degree count, orientation
-    join, both wedge sides, the closing-edge join) reads the cut RDD.
-    Without the cut Spark re-executed that upstream once per reference
-    (VERDICT r6 "What's wrong" #1: 62 s vs 5.6 s for the sibling kcore).
-    ``deg``/``oriented`` are deliberately NOT RDD-materialized: they are
-    cheap plans over the cut ``und`` whose repeated subtrees Spark
-    deduplicates via exchange reuse, and keeping them as logical plans
-    preserves the size statistics AQE needs to broadcast the small sides
-    (an RDD cut here degraded the downstream joins to sort-merge —
-    measured 20.6 s vs 6.4 s warm on the sf0.01 co-occurrence graph).
+    ``und`` must already be cut (eagerly, :func:`kg._materialize`): every
+    reference below — degree count, both windows, the wedge sides and the
+    closing join in :func:`_triangles` — then reads the cut RDD, and the
+    upstream edge plan (the full mentions→LSH→CC→triples KG pipeline in
+    q_kg_clustering) runs once (VERDICT r6 "What's wrong" #1: 62 s vs
+    5.6 s for the sibling kcore, which cut). ``deg``/``oriented`` are
+    deliberately NOT RDD-materialized: they are cheap plans over the cut
+    ``und`` whose repeated subtrees Spark deduplicates via exchange
+    reuse, and keeping them as logical plans preserves the size
+    statistics AQE needs to broadcast the small sides (an RDD cut here
+    degraded the downstream joins to sort-merge — measured 20.6 s vs
+    6.4 s warm on the sf0.01 co-occurrence graph).
     """
-    und = _undirected(edges)
     sym = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg")).select(
         F.col("a").alias("node"), "deg"
@@ -221,42 +263,48 @@ def _oriented_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     return deg, oriented
 
 
-def triangle_count(edges: DataFrame) -> DataFrame:
-    """One row (n_triangles,): triangle count of an undirected graph
-    given as a symmetric (src, dst) edge set.
+def _triangles(und: DataFrame) -> DataFrame:
+    """(lo, u, v): every triangle of a cut undirected (a, b) edge set
+    (:func:`_undirected`) exactly once, with u < v — the one triangle
+    enumeration behind :func:`triangle_count`,
+    :func:`clustering_coefficient` and :func:`truss`.
 
-    Degree-oriented wedge counting (the MapReduce-classic Cohen/Suri-
+    Degree-oriented wedge enumeration (the MapReduce-classic Cohen/Suri-
     Vassilvitskii shape): orient every edge from its lower-(degree, id)
-    endpoint to the higher one, build wedges by self-joining the
-    oriented list on the source, and close each wedge with a semi-join
-    back against the oriented edges. Orientation bounds every node's
-    out-degree by O(sqrt(m)), so the wedge join emits O(m^1.5) rows
-    worst-case INDEPENDENT of hub degree — a straight id-orientation
-    would emit deg(hub)^2 wedges for a celebrity entity, the classic
-    skew blowup. Each triangle is counted exactly once (its unique
-    degree-orientation has one source of out-degree 2).
-
-    Every step is a join/groupBy on node keys — no adjacency lists are
-    collected anywhere. The shared und/deg/oriented frames are
-    materialized in :func:`_oriented_edges` so the upstream edge plan
-    executes exactly once.
+    endpoint (:func:`_oriented_edges`), build wedges by self-joining the
+    oriented list on the source ``lo``, and close each wedge (u, v)
+    against ``und`` itself, which holds every edge once as a < b — in
+    whichever direction the closing edge is oriented. Orientation bounds
+    every node's out-degree by O(sqrt(m)), so the wedge join emits
+    O(m^1.5) rows worst-case INDEPENDENT of hub degree — a straight
+    id-orientation would emit deg(hub)^2 wedges for a celebrity entity,
+    the classic skew blowup. Each triangle appears once: its unique
+    degree-orientation has one corner, ``lo``, of out-degree 2 into the
+    other two. Every step is a join on node keys — no adjacency lists are
+    collected anywhere.
     """
-    _, oriented = _oriented_edges(edges)
-    x = oriented.alias("x")
-    y = oriented.alias("y")
+    _, oriented = _oriented_edges(und)
+    x, y = oriented.alias("x"), oriented.alias("y")
     wedges = x.join(
         y,
         on=[F.col("x.lo") == F.col("y.lo"), F.col("x.hi") < F.col("y.hi")],
-    ).select(F.col("x.hi").alias("u"), F.col("y.hi").alias("v"))
-    # close the wedge: (u, v) present as an oriented edge in EITHER
-    # orientation (the closing edge's own degree orientation is
-    # independent of the wedge's)
-    closing = oriented.select(
-        F.least("lo", "hi").alias("u"), F.greatest("lo", "hi").alias("v")
-    ).distinct()
-    tri = wedges.select(
-        F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-    ).join(closing, ["u", "v"], "left_semi")
+    ).select(
+        F.col("x.lo").alias("lo"),
+        F.col("x.hi").alias("u"),
+        F.col("y.hi").alias("v"),
+    )
+    return wedges.join(
+        und.select(F.col("a").alias("u"), F.col("b").alias("v")), ["u", "v"]
+    )
+
+
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """One row (n_triangles,): triangle count of an undirected graph
+    given as a symmetric (src, dst) edge set — the row count of
+    :func:`_triangles` over the cut undirected edges, so the upstream
+    edge plan executes exactly once.
+    """
+    tri = _triangles(_undirected(edges))
     return tri.agg(F.count(F.lit(1)).alias("n_triangles"))
 
 
@@ -268,38 +316,19 @@ def clustering_coefficient(
     that completes the degrees/PageRank/triangles consumption family
     (lcc = 2·tri(v) / (deg(v)·(deg(v)−1)), 0 when deg < 2).
 
-    Same degree-oriented wedge machinery as :func:`triangle_count` —
-    every node's oriented out-degree is O(sqrt(m)), so the wedge join
-    is O(m^1.5) independent of hub degree — but the wedge keeps its
-    center vertex so each closed triangle can be credited to all three
-    corners: one extra 3-row explode per triangle plus one groupBy,
-    both triangle-sized, not edge-sized. The shared und/deg/oriented
-    frames are materialized in :func:`_oriented_edges` so the upstream
-    edge plan executes exactly once.
+    Each triangle of :func:`_triangles` (O(m^1.5) wedge rows independent
+    of hub degree) is credited to all three corners: one 3-row explode
+    per triangle plus one groupBy, both triangle-sized, not edge-sized.
+    The undirected edges are cut once, so the upstream edge plan
+    executes exactly once.
     """
-    deg, oriented = _oriented_edges(edges)
-    x = oriented.alias("x")
-    y = oriented.alias("y")
-    # wedge = (center, u, v) with u < v by id; the center is the unique
-    # triangle corner with oriented out-degree 2 into the other two, so
-    # each triangle closes exactly once
-    wedges = x.join(
-        y,
-        on=[F.col("x.lo") == F.col("y.lo"), F.col("x.hi") < F.col("y.hi")],
-    ).select(
-        F.col("x.lo").alias("center"),
-        F.col("x.hi").alias("u"),
-        F.col("y.hi").alias("v"),
-    )
-    closing = oriented.select(
-        F.least("lo", "hi").alias("u"), F.greatest("lo", "hi").alias("v")
-    ).distinct()
-    tri = wedges.join(closing, ["u", "v"], "inner")
+    und = _undirected(edges)
+    deg, _ = _oriented_edges(und)
     # one pass over the triangle set: explode the three corners instead
     # of a 3-branch union, which would re-execute the wedge join per
-    # branch (the residual multiplicity after the _oriented_edges cut)
-    corners = tri.select(
-        F.explode(F.array("center", "u", "v")).alias("node")
+    # branch
+    corners = _triangles(und).select(
+        F.explode(F.array("lo", "u", "v")).alias("node")
     )
     ntri = corners.groupBy("node").agg(F.count(F.lit(1)).alias("n_tri"))
     out = deg.join(ntri, "node", "left")
@@ -342,26 +371,8 @@ def pmi_pairs(
     oracle, rounded to ``round_digits``.
     """
     objs = triples.select("subj", "obj").distinct()
-    w = Window.partitionBy("subj").orderBy("obj")
-    capped = _materialize(
-        objs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_per_subj)
-        .select("subj", "obj"),
-        eager=False,
-    )
-    a, b = capped.alias("a"), capped.alias("b")
-    pairs = (
-        a.join(
-            b,
-            on=[
-                F.col("a.subj") == F.col("b.subj"),
-                F.col("a.obj") < F.col("b.obj"),
-            ],
-        )
-        .select(F.col("a.obj").alias("obj_a"), F.col("b.obj").alias("obj_b"))
-        .groupBy("obj_a", "obj_b")
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-    )
+    capped, pairs = _capped_pairs(objs, "subj", "obj", max_per_subj, cut=True)
+    pairs = pairs.toDF("obj_a", "obj_b", "n_ab")
     marg = capped.groupBy("obj").agg(F.count(F.lit(1)).alias("n"))
     npages = capped.agg(
         F.countDistinct("subj").cast("double").alias("np")
@@ -425,27 +436,9 @@ def neighbor_jaccard(
     sym = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).union(
         und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
     )
-    w = Window.partitionBy("node").orderBy("nbr")
-    capped = _materialize(
-        sym.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= max_per_node)
-        .select("node", "nbr"),
-        eager=False,
-    )
-    x = capped.alias("x")
-    y = capped.alias("y")
-    pairs = (
-        x.join(
-            y,
-            on=[
-                F.col("x.node") == F.col("y.node"),
-                F.col("x.nbr") < F.col("y.nbr"),
-            ],
-        )
-        .select(F.col("x.nbr").alias("u"), F.col("y.nbr").alias("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .filter(F.col("n_common") >= min_common)
+    capped, pairs = _capped_pairs(sym, "node", "nbr", max_per_node, cut=True)
+    pairs = pairs.toDF("u", "v", "n_common").filter(
+        F.col("n_common") >= min_common
     )
     rdeg = capped.groupBy("nbr").agg(F.count(F.lit(1)).alias("rd"))
     ra = rdeg.select(F.col("nbr").alias("u"), F.col("rd").alias("rd_a"))
@@ -517,48 +510,51 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     ).distinct()
 
 
-def _edge_support(cur: DataFrame) -> DataFrame:
-    """(ea, eb, support): per-edge triangle count over an undirected,
-    deduplicated (a, b) a<b edge set — the k-truss round primitive.
+def truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
+    """(node_a, node_b, support): the k-truss of an undirected (src, dst)
+    edge set — the maximal subgraph in which every EDGE closes at least
+    k−2 triangles — with each surviving edge's in-truss support.
 
-    Degree-oriented wedge enumeration (the triangle_count machinery,
-    recomputed per peel round because orientation degrees change as
-    edges drop): every node's oriented out-degree is O(sqrt(m)), so the
-    wedge join emits O(m^1.5) rows independent of hub degree. Each
-    triangle found exactly once, then credited to ALL THREE of its edges
-    via one explode (never a 3-branch re-join); support is one
-    map-side-combined groupBy on edge keys. Only edges in >= 1 triangle
-    appear — callers coalesce the rest to 0.
+    The edge-cohesion complement of :func:`kcore` (node degree can be
+    inflated by a star; triangle support cannot — a k-truss is always
+    inside the (k−1)-core but prunes much harder), the standard
+    community-core primitive over co-occurrence graphs (Cohen 2008,
+    "Trusses: cohesive subgraphs for social network analysis").
+
+    The triangles are enumerated ONCE (:func:`_triangles`, O(m^1.5)
+    wedge rows regardless of hubs) and each is exploded into its three
+    edges: the :func:`kg.fixpoint` state is these (lo, u, v, ea, eb)
+    rows. An edge's support is the number of surviving triangles on it,
+    and a triangle survives while all three of its edges keep support
+    >= k−2 — so a peel round is two windows and a filter: count over
+    (ea, eb), then min of that count over (lo, u, v). No join and no
+    re-orientation per round; peeling triangles rather than edges loses
+    nothing, since the triangles of the surviving edges are exactly the
+    triangles whose three edges all survive. Like the kcore guard,
+    ``max_iter`` exhaustion raises rather than overstating the truss.
+
+    At the fixpoint every edge's row count is its in-truss support. The
+    result keeps each undirected edge whose support (0 when it is in no
+    surviving triangle) is >= k−2, so k <= 2 returns every edge. No
+    adjacency list is ever collected.
     """
-    # two-window orientation — same rewrite as _oriented_edges (round
-    # 8): each edge of sym carries deg(first endpoint) from a window
-    # over a and deg(second endpoint) from a window over b; one
-    # direction survives the lower-(deg, id) filter. Two exchanges per
-    # round instead of the degree groupBy + two edge⋈degree joins.
-    sym = cur.union(cur.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    d = sym.withColumn(
-        "deg_a", F.count(F.lit(1)).over(Window.partitionBy("a"))
-    ).withColumn("deg_b", F.count(F.lit(1)).over(Window.partitionBy("b")))
-    lower_first = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = d.filter(lower_first).select(
-        F.col("a").alias("lo"), F.col("b").alias("hi")
-    )
-    x = oriented.alias("x")
-    y = oriented.alias("y")
-    wedges = x.join(
-        y,
-        on=[F.col("x.lo") == F.col("y.lo"), F.col("x.hi") < F.col("y.hi")],
-    ).select(
-        F.col("x.lo").alias("lo"),
-        F.col("x.hi").alias("u"),
-        F.col("y.hi").alias("v"),
-    )
-    tris = wedges.join(
-        cur.select(F.col("a").alias("u"), F.col("b").alias("v")), ["u", "v"]
-    )
-    edges3 = tris.select(
+
+    def peel(cur: DataFrame) -> DataFrame:
+        rows = cur.select("lo", "u", "v", "ea", "eb")
+        support = F.count(F.lit(1)).over(Window.partitionBy("ea", "eb"))
+        weakest = F.min("support").over(Window.partitionBy("lo", "u", "v"))
+        return (
+            rows.withColumn("support", support)
+            .withColumn("weakest", weakest)
+            .filter(F.col("weakest") >= k - 2)
+            .select(*rows.columns)
+        )
+
+    und = _undirected(edges)
+    rows = _triangles(und).select(
+        "lo",
+        "u",
+        "v",
         F.explode(
             F.array(
                 F.struct(
@@ -571,60 +567,25 @@ def _edge_support(cur: DataFrame) -> DataFrame:
                 ),
                 F.struct(F.col("u").alias("ea"), F.col("v").alias("eb")),
             )
-        ).alias("e")
-    ).select("e.ea", "e.eb")
-    return edges3.groupBy("ea", "eb").agg(F.count(F.lit(1)).alias("support"))
-
-
-def truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
-    """(node_a, node_b, support): the k-truss of an undirected (src, dst)
-    edge set — the maximal subgraph in which every EDGE closes at least
-    k−2 triangles — with each surviving edge's in-truss support.
-
-    The edge-cohesion complement of :func:`kcore` (node degree can be
-    inflated by a star; triangle support cannot — a k-truss is always
-    inside the (k−1)-core but prunes much harder), the standard
-    community-core primitive over co-occurrence graphs (Cohen 2008,
-    "Trusses: cohesive subgraphs for social network analysis").
-
-    The distributed peel: per round, count each edge's triangle support
-    with the degree-oriented wedge machinery (:func:`_edge_support` —
-    O(m^1.5) wedge rows regardless of hubs, one explode credits each
-    triangle to its three edges), drop edges under k−2, repeat to
-    fixpoint under :func:`kg.fixpoint` with the (a, b) edge keys as the
-    certificate; like the kcore guard, ``max_iter`` exhaustion raises
-    rather than overstating the truss (a partial peel keeps edges whose
-    support has not yet drained). Support state is edge-sized; no
-    adjacency list is ever collected.
-    """
-
-    def peel(cur: DataFrame) -> DataFrame:
-        cur = cur.select("a", "b")
-        sup = _edge_support(cur)
-        return (
-            cur.join(
-                sup,
-                on=[F.col("a") == F.col("ea"), F.col("b") == F.col("eb")],
-                how="left",
-            )
-            .select(
-                "a",
-                "b",
-                F.coalesce(F.col("support"), F.lit(0)).alias("support"),
-            )
-            .filter(F.col("support") >= k - 2)
-        )
-
-    # the round state CARRIES each surviving edge's support: at the
-    # fixpoint (no edge dropped) the support computed in the last round
-    # IS the support in the final truss — no post-loop wedge pass
+        ).alias("e"),
+    ).select("lo", "u", "v", "e.ea", "e.eb")
     cur = fixpoint(
-        peel, _undirected(edges), ("a", "b"), max_iter, "k-truss peel"
+        peel, rows, ("lo", "u", "v", "ea", "eb"), max_iter, "k-truss peel"
     )
-    return cur.select(
-        F.col("a").alias("node_a"),
-        F.col("b").alias("node_b"),
-        "support",
+    sup = cur.groupBy("ea", "eb").agg(F.count(F.lit(1)).alias("support"))
+    support = F.coalesce(F.col("support"), F.lit(0))
+    return (
+        und.join(
+            sup,
+            on=[F.col("a") == F.col("ea"), F.col("b") == F.col("eb")],
+            how="left",
+        )
+        .select(
+            F.col("a").alias("node_a"),
+            F.col("b").alias("node_b"),
+            support.alias("support"),
+        )
+        .filter(F.col("support") >= k - 2)
     )
 
 
@@ -644,49 +605,24 @@ def personalized_pagerank(
     restart locality around the seeds) vs global pagerank importance.
     Seeds are the ``n_seeds`` smallest node ids — a deterministic,
     SQL-expressible choice (the q_lsh_ann lowest-ids convention); the
-    seed collect is bookkeeping-sized (n_seeds rows). Same plan shape as
-    :func:`pagerank`: edges hash-partitioned once and reused, one
-    co-partitioned join + one groupBy(dst) shuffle per iteration, rank
-    state node-sized, per-iteration lineage cuts. Fixed iteration count
-    keeps the result a pure function of the input (the oracle property).
+    seed collect is bookkeeping-sized (n_seeds rows). Same loop as
+    :func:`pagerank` (:func:`_power_iteration`): edges hash-partitioned
+    once and reused, one co-partitioned join + one groupBy(dst) shuffle
+    per iteration, rank state node-sized, per-iteration lineage cuts.
+    Fixed iteration count keeps the result a pure function of the input
+    (the oracle property).
     """
-    e = _materialize(
-        edges.select("src", "dst").repartition("src"), eager=False
-    )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ed = _materialize(e.join(deg, "src"), eager=False)
-    nodes = _materialize(
-        e.select(F.col("src").alias("id")).distinct(), eager=False
-    )
-    seed_rows = nodes.orderBy("id").limit(n_seeds).collect()
-    if not seed_rows:
-        return nodes.select(
-            F.col("id").alias("node"), F.lit(0.0).alias("rank")
-        )
-    seeds = [r["id"] for r in seed_rows]
-    tele = F.when(F.col("id").isin(seeds), F.lit(1.0 / len(seeds))).otherwise(
-        F.lit(0.0)
-    )
-    rank = nodes.select("id", tele.alias("rank"))
-    for _ in range(iters):
-        contrib = (
-            ed.join(rank, ed.src == rank.id)
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("rank") / F.col("outdeg")).alias("w"),
-            )
-            .groupBy("id")
-            .agg(F.sum("w").alias("c"))
-        )
-        rank = nodes.join(contrib, "id", "left").select(
-            "id",
-            (
-                F.lit(1.0 - damping) * tele
-                + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0))
-            ).alias("rank"),
-        )
-        rank = _materialize(rank, eager=False)
-    return rank.select(F.col("id").alias("node"), "rank")
+
+    def start(nodes: DataFrame):
+        seeds = [r["id"] for r in nodes.orderBy("id").limit(n_seeds).collect()]
+        if not seeds:
+            return None
+        tele = F.when(
+            F.col("id").isin(seeds), F.lit(1.0 / len(seeds))
+        ).otherwise(F.lit(0.0))
+        return tele, F.lit(1.0 - damping) * tele
+
+    return _power_iteration(edges, iters, damping, start)
 
 
 def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:

@@ -510,13 +510,16 @@ def test_truss_matches_pure_python(spark):
     raw = {(rng.randrange(30), rng.randrange(30)) for _ in range(120)}
     und = sorted({(min(a, b), max(a, b)) for a, b in raw if a != b})
     df = spark.createDataFrame(und, "src long, dst long")
-    for k in (3, 4):
+    for k in (2, 3, 4):
         want = _py_truss(und, k)
         got = {
             (r["node_a"], r["node_b"]): r["support"]
             for r in truss(df, k=k).collect()
         }
         assert got == want, k
+
+    empty = spark.createDataFrame([], "src long, dst long")
+    assert [truss(empty, k=k).count() for k in (2, 3)] == [0, 0]
 
 
 def test_ppr_matches_dense_numpy(spark):

@@ -55,7 +55,7 @@ def test_wedge_ops_hub_safe_bounds(spark):
     # reproduce the operator's own orientation to measure the join-sizing
     # quantities (deg/oriented are exactly what clustering_coefficient
     # and triangle_count consume)
-    deg, oriented = graph._oriented_edges(edges)
+    deg, oriented = graph._oriented_edges(graph._undirected(edges))
     m = oriented.count()
     out_deg = oriented.groupBy("lo").agg(F.count(F.lit(1)).alias("od"))
     stats = out_deg.agg(
@@ -92,10 +92,11 @@ def test_wedge_ops_hub_safe_bounds(spark):
 
 
 def test_truss_hub_safe_wall(spark):
-    """k-truss on the same hub graph: every peel round reuses the
-    degree-oriented wedge machinery, so the same O(m^1.5) bound must
-    hold per round and the peel must converge in few rounds at a
-    CI-tolerable wall (an O(deg_hub^2) regression runs for hours).
+    """k-truss on the same hub graph: the triangles come from the one
+    degree-oriented wedge enumeration, so the same O(m^1.5) bound holds
+    for the rows every peel round reads, and the peel must converge in
+    few rounds at a CI-tolerable wall (an O(deg_hub^2) regression runs
+    for hours).
     k=3 keeps the dense low-id region, so the assertion also covers a
     non-empty converged result with the support invariant."""
     import time

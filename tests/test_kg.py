@@ -107,8 +107,9 @@ def test_connected_components_peel1_equivalence(spark):
 
 @pytest.mark.parametrize("op", ["components", "kcore", "truss"])
 def test_fixpoint_max_iter_exhaustion_raises(spark, op):
-    # the chain with two chords needs many rounds under every operator
-    # (a k-core peel drops one end node per round), so max_iter=1 must
+    # the chain with two chords needs more than one round under every
+    # operator (a k-core peel drops one end node per round; the truss
+    # peel needs a second round to confirm its first), so max_iter=1 must
     # raise instead of returning a partial result
     from ner_backend_spark.spark import graph
 

@@ -263,6 +263,33 @@ def test_truss_plan_checkpoint_rooted(spark):
         assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_truss_round_plans_no_join(spark):
+    """The k-truss triangles are enumerated once, before the peel: the
+    fixpoint state is the triangle rows, so every round after the first
+    is two windows — support per edge, then its minimum per triangle —
+    with no join (no re-orientation, no wedge join, no edge⋈support
+    join) and at most two exchanges."""
+    edges = spark.range(400).select(
+        (F.col("id") % 23).alias("src"), ((F.col("id") * 7) % 23).alias("dst")
+    )
+    plans = []
+    orig = kg._materialize
+
+    def spy(df, eager=True):
+        plans.append(_plan(df))
+        return orig(df, eager=eager)
+
+    kg._materialize = spy
+    try:
+        graph.truss(edges, k=3).collect()
+    finally:
+        kg._materialize = orig
+    assert len(plans) >= 2, plans
+    for p in plans[1:]:
+        assert p.count("Join") == 0, p
+        assert p.count("Exchange") <= 2, p
+
+
 def test_incremental_components_plans_new_edges_once(spark, tmp_path):
     """The assignment incremental_components returns is read off the CC
     input cut and the converged stars: the new-edge plan (in a KG refresh,
