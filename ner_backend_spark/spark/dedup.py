@@ -973,8 +973,9 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> Da
 
     cluster_id is the smallest doc_id in the connected component of the
     pair graph (the same alternating-star fixpoint the KG canonicalizer
-    runs — O(log n) rounds, per-round lineage cuts, never a driver-side
-    graph); is_kept marks the canonical survivor. Only docs appearing in
+    runs — O(log n) rounds; a pair graph under the fixpoint size gate
+    runs them on the driver, a larger one distributed with per-round
+    lineage cuts); is_kept marks the canonical survivor. Only docs appearing in
     at least one pair are emitted — every other doc is trivially its own
     kept singleton, and at 100 TB the pair graph is orders of magnitude
     smaller than the corpus, which is exactly why the closure runs on it

@@ -31,10 +31,17 @@ Scale notes (100 TB / 10^12-document corpus -> ~10^10-node graph):
   rows whatever the hub degree, closed against the cut edge set. The
   truss peel runs on the triangle rows themselves: two windows per
   round, no join and no re-orientation.
+- ``kcore``, ``truss``: the peel is a :func:`kg.fixpoint`. A state under
+  its size gate (``kg._LOCAL_ROWS`` rows) is collected once and peeled in
+  pandas on the driver, because a small graph's rounds are bound by
+  per-job overhead; above the gate the distributed rounds run, so their
+  cost and memory stay on the executors at any graph size.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -477,6 +484,10 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     peel, so they are the k-core and ``core_deg`` is each node's in-core
     degree; that round's ``settled`` observation ends the loop. A graph
     whose peel drops nothing, or everything, settles in its first round.
+
+    A symmetric edge state under the :func:`kg.fixpoint` size gate peels
+    in pandas on the driver instead (``peel_local``: the same two degree
+    counts, ``core_deg`` and ``settled``), with no Spark job per round.
     """
 
     def peel(cur: DataFrame) -> DataFrame:
@@ -495,6 +506,17 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
             "a", "b", "core_deg"
         )
 
+    def peel_local(cur: pd.DataFrame) -> tuple[pd.DataFrame, bool]:
+        a, b = cur["a"].to_numpy(), cur["b"].to_numpy()
+        codes = pd.factorize(np.concatenate([a, b]))[0]
+        ca, cb = codes[: len(a)], codes[len(a) :]
+        deg_b = np.bincount(cb)[cb]
+        deg_a = np.bincount(ca)[ca]
+        core_deg = np.bincount(ca, weights=deg_b >= k).astype(np.int64)[ca]
+        keep = (deg_a >= k) & (deg_b >= k)
+        out = pd.DataFrame({"a": a[keep], "b": b[keep], "core_deg": core_deg[keep]})
+        return out, bool(out.empty or out["core_deg"].min() >= k)
+
     und = _undirected(edges)
     cur = fixpoint(
         peel,
@@ -503,6 +525,7 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
         max_iter,
         "k-core peel",
         settled=F.min("core_deg") >= k,
+        local=peel_local,
     )
     # every survivor is an ``a`` of its own rows, all carrying its core_deg
     return cur.select(
@@ -533,10 +556,15 @@ def truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     triangles whose three edges all survive. Like the kcore guard,
     ``max_iter`` exhaustion raises rather than overstating the truss.
 
-    At the fixpoint every edge's row count is its in-truss support. The
-    result keeps each undirected edge whose support (0 when it is in no
-    surviving triangle) is >= k−2, so k <= 2 returns every edge. No
-    adjacency list is ever collected.
+    Triangle rows under the :func:`kg.fixpoint` size gate peel in pandas
+    on the driver (``peel_local``: the same support count and per-triangle
+    minimum), with no Spark job per round; the enumeration stays in Spark.
+
+    At the fixpoint every edge's row count is its in-truss support. For
+    k >= 3 those counts are the result: every edge of a surviving row
+    has support >= k−2, every other edge support 0 < k−2. For k <= 2 the
+    result is every undirected edge, joined to its support (0 when it is
+    in no surviving triangle). No adjacency list is ever collected.
     """
 
     def peel(cur: DataFrame) -> DataFrame:
@@ -569,10 +597,30 @@ def truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
             )
         ).alias("e"),
     ).select("lo", "u", "v", "e.ea", "e.eb")
+
+    def peel_local(cur: pd.DataFrame) -> tuple[pd.DataFrame, bool]:
+        rows = cur[["lo", "u", "v", "ea", "eb"]]
+        support = rows.groupby(["ea", "eb"])["lo"].transform("size")
+        weakest = support.groupby([rows["lo"], rows["u"], rows["v"]]).transform(
+            "min"
+        )
+        return rows[weakest >= k - 2], False
+
     cur = fixpoint(
-        peel, rows, ("lo", "u", "v", "ea", "eb"), max_iter, "k-truss peel"
+        peel,
+        rows,
+        ("lo", "u", "v", "ea", "eb"),
+        max_iter,
+        "k-truss peel",
+        local=peel_local,
     )
     sup = cur.groupBy("ea", "eb").agg(F.count(F.lit(1)).alias("support"))
+    if k >= 3:
+        # every surviving row's edges already have support >= k-2 >= 1,
+        # and every other edge has support 0 < k-2
+        return sup.select(
+            F.col("ea").alias("node_a"), F.col("eb").alias("node_b"), "support"
+        )
     support = F.coalesce(F.col("support"), F.lit(0))
     return (
         und.join(

@@ -11,9 +11,12 @@ schema.go:129-144 — this layer canonicalizes and materializes triples):
                            JVM-side; band-bucket self-join proposes pairs
                            (never all-pairs)
     -> link scoring        exact trigram Jaccard on proposed pairs
-    -> connected components alternating large-star / small-star (aggregate
-                           form: groupBy-min + join, no collect_list, so no
-                           high-degree-node blowup; O(log n) rounds)
+    -> connected components alternating large-star / small-star (window-min
+                           form, no collect_list, so no high-degree-node
+                           blowup; O(log n) rounds); an edge set under the
+                           fixpoint size gate runs the same rounds in
+                           pandas on the driver (one collect, no per-round
+                           jobs)
     -> canonicalization    per component: alias canonical id if any member
                            hit the dictionary, else the lexicographically
                            smallest surface
@@ -25,8 +28,18 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+
+# Input states of fewer rows than this finish their :func:`fixpoint` on
+# the driver. Set below the measured crossover of the two paths (k-core
+# at ~2*10^6 state rows, CC above 10^6, on seeded random graphs at
+# local[4]; table in CHANGES.md) and far under spark.driver.maxResultSize:
+# a 5-column long state this size is ~10 MB of Arrow.
+_LOCAL_ROWS = 250_000
 
 
 def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -73,6 +86,7 @@ def fixpoint(
     max_iter: int,
     what: str,
     settled: Column | None = None,
+    local: Callable[[pd.DataFrame], tuple[pd.DataFrame, bool]] | None = None,
 ) -> DataFrame:
     """Iterate ``state = step(state)`` until a round leaves it unchanged.
 
@@ -97,7 +111,24 @@ def fixpoint(
     A state still changing after ``max_iter`` rounds raises ``ValueError``
     instead of returning a partial result (a cut-short peel overstates a
     core, a cut-short star alternation splits components).
+
+    ``local``, when given, is the same round over a pandas frame of the
+    state, returning the next state and whether it is settled. The input
+    state is then cut once with a row-count observation, and a state of
+    fewer than ``_LOCAL_ROWS`` rows is collected and iterated on the
+    driver (:func:`_local_fixpoint`) with the same stop rules and the
+    same ``max_iter`` error; larger states run the distributed rounds
+    from that cut. Small graphs are bound by per-job overhead, not data:
+    a distributed round costs several Spark jobs, a local one none. The
+    driver, not one ``mapInPandas`` task, runs it because a worker raise
+    would surface as a ``PythonException`` rather than the
+    ``ValueError``, and a cold Python worker start costs seconds.
     """
+    if local is not None:
+        obs = Observation()
+        state = _materialize(state.observe(obs, F.count(F.lit(1)).alias("n")))
+        if obs.get["n"] < _LOCAL_ROWS:
+            return _local_fixpoint(step, state, keys, max_iter, what, local)
     h = F.pmod(F.xxhash64(*keys), F.lit(1_000_000_007)).cast("decimal(38,0)")
     metrics = [
         F.count(F.lit(1)).alias("n"),
@@ -113,6 +144,32 @@ def fixpoint(
         if cert.pop("settled", False) or cert == prev:
             return state
         prev = cert
+    raise ValueError(f"{what} did not converge in {max_iter} rounds")
+
+
+def _local_fixpoint(step, state, keys, max_iter, what, local) -> DataFrame:
+    """:func:`fixpoint` on the driver: iterate ``local`` over the
+    collected state until a round is settled or its key rows equal the
+    previous round's, and return the result as a DataFrame of the
+    Spark step's schema. Its root is driver data, so it needs no cut."""
+    schema = step(state).schema
+    pdf = state.toArrow().to_pandas()
+    keys = list(keys)
+    prev = None
+    for _ in range(max_iter):
+        pdf, done = local(pdf)
+        cur = pdf[keys]
+        if done or (
+            prev is not None
+            and len(cur) == len(prev)
+            and cur.sort_values(keys, ignore_index=True).equals(
+                prev.sort_values(keys, ignore_index=True)
+            )
+        ):
+            return state.sparkSession.createDataFrame(
+                pa.Table.from_pandas(pdf, preserve_index=False), schema=schema
+            )
+        prev = cur
     raise ValueError(f"{what} did not converge in {max_iter} rounds")
 
 
@@ -422,6 +479,28 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return both.filter(F.col("src") != F.col("dst")).distinct()
 
 
+def _stars_local(edges: pd.DataFrame) -> tuple[pd.DataFrame, bool]:
+    """``_small_star(_large_star(edges))`` over a pandas frame, step for
+    step: the driver round of :func:`connected_components`."""
+    # large star: per-src min over the symmetrized edges, emitted (dst, m)
+    # for every dst above its src
+    src = np.concatenate([edges["src"].to_numpy(), edges["dst"].to_numpy()])
+    dst = np.concatenate([edges["dst"].to_numpy(), edges["src"].to_numpy()])
+    sym = pd.DataFrame({"src": src, "dst": dst})
+    m = np.minimum(sym.groupby("src")["dst"].transform("min").to_numpy(), src)
+    up = dst > src
+    # small star: the oriented distinct, per-src min, then both stars
+    o = pd.DataFrame(
+        {"src": np.maximum(dst[up], m[up]), "dst": np.minimum(dst[up], m[up])}
+    ).drop_duplicates()
+    m = o.groupby("src")["dst"].transform("min").to_numpy()
+    both = pd.DataFrame({
+        "src": np.concatenate([o["dst"].to_numpy(), o["src"].to_numpy()]),
+        "dst": np.concatenate([m, m]),
+    })
+    return both[both["src"] != both["dst"]].drop_duplicates(), False
+
+
 def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """(id, component): component = min node id in the component.
 
@@ -429,21 +508,30 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     whose only edge is a self-loop keeps its own id (so callers pass
     isolated nodes as self-loops). One large-star + small-star
     alternation per :func:`fixpoint` round; the alternation is idempotent
-    at the fixpoint, so an unchanged edge set ends the loop. (Refuted
-    alternatives — hash-to-min, a degree-1 pre-peel, two alternations per
-    round — are measured in BASELINE.md, CC_PEEL_AB.json and
-    OPTIMIZATION_r08.md.)
+    at the fixpoint, so an unchanged edge set ends the loop. An edge set
+    under the fixpoint's size gate runs the same alternation in pandas
+    on the driver (:func:`_stars_local`), round for round: the deploy
+    KG's similarity graph (~40k edges, 5 rounds) then costs one collect
+    instead of ~4 Spark jobs per round, with ``max_iter`` and its
+    ``ValueError`` unchanged. Larger graphs keep the distributed rounds.
+    (Refuted alternatives — hash-to-min, a degree-1 pre-peel, two
+    alternations per round — are measured in BASELINE.md,
+    CC_PEEL_AB.json and OPTIMIZATION_r08.md.)
     """
     # Materialize the input once: the edge lineage is typically expensive
     # (an LSH self-join), and it is consumed by the iteration seed AND the
     # node-set below — without this it would be recomputed per consumer.
     base = _materialize(edges.select("src", "dst"))
+    # no distinct on the seed: duplicate edges change neither the large
+    # star's per-src min nor the small star's leading distinct, so every
+    # round's output is the same set, one shuffle cheaper
     cur = fixpoint(
         lambda e: _small_star(_large_star(e)),
-        base.filter(F.col("src") != F.col("dst")).distinct(),
+        base.filter(F.col("src") != F.col("dst")),
         ("src", "dst"),
         max_iter,
         "connected components",
+        local=_stars_local,
     )
 
     # final edges are (node -> root) stars; roots map to themselves; nodes

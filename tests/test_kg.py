@@ -36,24 +36,26 @@ def aliases(spark):
     return spark.createDataFrame(ALIASES, ["surface", "canonical_id"])
 
 
-def test_connected_components_basic(spark):
+def test_connected_components_basic(spark, fixpoint_paths):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 20)], ["src", "dst"]
     )
-    comp = {r["id"]: r["component"] for r in kg.connected_components(edges).collect()}
-    assert comp[1] == comp[2] == comp[3] == 1
-    assert comp[10] == comp[11] == 10
-    assert comp[20] == 20
+    for _ in fixpoint_paths:
+        comp = {r["id"]: r["component"] for r in kg.connected_components(edges).collect()}
+        assert comp[1] == comp[2] == comp[3] == 1
+        assert comp[10] == comp[11] == 10
+        assert comp[20] == 20
 
 
-def test_connected_components_chain_and_star(spark):
+def test_connected_components_chain_and_star(spark, fixpoint_paths):
     # long chain exercises multi-round convergence
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], ["src", "dst"]
     )
-    comp = {r["id"]: r["component"] for r in kg.connected_components(edges).collect()}
-    assert set(comp.values()) == {0}
-    assert len(comp) == 31
+    for _ in fixpoint_paths:
+        comp = {r["id"]: r["component"] for r in kg.connected_components(edges).collect()}
+        assert set(comp.values()) == {0}
+        assert len(comp) == 31
 
 
 def _assert_components_match_union_find(spark, cases):
@@ -74,59 +76,91 @@ def _assert_components_match_union_find(spark, cases):
         assert got == want, raw
 
 
-def test_connected_components_hashmin_equivalence(spark):
+def test_connected_components_hashmin_equivalence(spark, fixpoint_paths):
     # the cases that once compared the hash-to-min variant: chains, a
     # star with an isolated self-loop, and random graphs
     import random
 
     rng = random.Random(7)
-    _assert_components_match_union_find(spark, [
+    cases = [
         [(i, i + 1) for i in range(30)],                     # chain
         [(0, i) for i in range(1, 12)] + [(50, 50)],          # star + loner
         [(rng.randrange(60), rng.randrange(60)) for _ in range(90)],
         [(rng.randrange(200), rng.randrange(200)) for _ in range(120)],
-    ])
+    ]
+    for _ in fixpoint_paths:
+        _assert_components_match_union_find(spark, cases)
 
 
-def test_connected_components_peel1_equivalence(spark):
+def test_connected_components_peel1_equivalence(spark, fixpoint_paths):
     # the degree-1 peel's adversarial shapes: pendant chains (a peel
     # would remove the true-min leaf), stars (the anchor loses every
     # edge), leaf-leaf pairs, isolated self-loops, and random graphs
     import random
 
     rng = random.Random(13)
-    _assert_components_match_union_find(spark, [
+    cases = [
         [(i, i + 1) for i in range(30)],                      # chain
         [(5, i) for i in range(6, 18)] + [(50, 50)],          # star + loner
         [(1, 2)],                                             # single pair
         [(9, 3), (3, 4), (4, 5), (5, 3), (7, 8)],             # cycle + tails
         [(rng.randrange(60), rng.randrange(60)) for _ in range(90)],
         [(rng.randrange(300), rng.randrange(300)) for _ in range(150)],
-    ])
+    ]
+    for _ in fixpoint_paths:
+        _assert_components_match_union_find(spark, cases)
 
 
-@pytest.mark.parametrize("op", ["components", "kcore", "truss"])
-def test_fixpoint_max_iter_exhaustion_raises(spark, op):
-    # the chain with two chords needs more than one round under every
-    # operator (a k-core peel drops one end node per round; the truss
-    # peel needs a second round to confirm its first), so max_iter=1 must
-    # raise instead of returning a partial result
+def _chorded_chain_op(spark, op, **kw):
+    # the chain with two chords under one of the three fixpoint operators
     from ner_backend_spark.spark import graph
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(30)] + [(0, 2), (1, 3)],
         "src long, dst long",
     )
-    run = {
-        "components": lambda: kg.connected_components(edges, max_iter=1),
-        "kcore": lambda: graph.kcore(edges, k=2, max_iter=1),
-        "truss": lambda: graph.truss(edges, k=3, max_iter=1),
+    return {
+        "components": lambda: kg.connected_components(edges, **kw),
+        "kcore": lambda: graph.kcore(edges, k=2, **kw),
+        "truss": lambda: graph.truss(edges, k=3, **kw),
     }[op]
-    with pytest.raises(ValueError, match="did not converge in 1 rounds"):
-        run()
 
 
-def test_kcore_settles_in_one_round(spark):
+@pytest.mark.parametrize("op", ["components", "kcore", "truss"])
+def test_fixpoint_max_iter_exhaustion_raises(spark, op, fixpoint_paths):
+    # the chain with two chords needs more than one round under every
+    # operator (a k-core peel drops one end node per round; the truss
+    # peel needs a second round to confirm its first), so max_iter=1 must
+    # raise instead of returning a partial result — on the driver too
+    run = _chorded_chain_op(spark, op, max_iter=1)
+    for _ in fixpoint_paths:
+        with pytest.raises(ValueError, match="did not converge in 1 rounds"):
+            run()
+
+
+# Spark jobs per operator on the chorded chain below the size gate
+# (local[4], AQE on): its input cuts, the state collect and the
+# post-processing, however many rounds it takes. The distributed rounds
+# took 30 (CC), 85 (k-core, one end node peeled per round) and 17 (truss).
+SMALL_FIXPOINT_JOBS = {"components": 7, "kcore": 6, "truss": 11}
+
+
+@pytest.mark.parametrize("op", ["components", "kcore", "truss"])
+def test_small_fixpoint_finishes_on_driver(spark, op):
+    run = _chorded_chain_op(spark, op)
+    sc = spark.sparkContext
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    sc.setJobGroup(f"small-{op}", f"small-{op}")
+    try:
+        rows = run().collect()
+        jobs = sc.statusTracker().getJobIdsForGroup(f"small-{op}")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(jobs) <= SMALL_FIXPOINT_JOBS[op], (op, len(jobs))
+
+
+def test_kcore_settles_in_one_round(spark, fixpoint_paths):
     # the first peel drops the pendant edge and every survivor keeps
     # degree 2 among the survivors, so that round is the answer: no
     # second round has to confirm it
@@ -135,11 +169,12 @@ def test_kcore_settles_in_one_round(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4)], "src long, dst long"
     )
-    got = {
-        r["node"]: r["deg"]
-        for r in graph.kcore(edges, k=2, max_iter=1).collect()
-    }
-    assert got == {1: 2, 2: 2, 3: 2}
+    for _ in fixpoint_paths:
+        got = {
+            r["node"]: r["deg"]
+            for r in graph.kcore(edges, k=2, max_iter=1).collect()
+        }
+        assert got == {1: 2, 2: 2, 3: 2}
 
 
 def test_lsh_blocking_proposes_similar_pairs(spark, entities):

@@ -43,20 +43,21 @@ def _assign(df):
     return {r["id"]: r["component"] for r in df.collect()}
 
 
-def test_incremental_components_merges_and_singletons(spark):
-    e1 = spark.createDataFrame([(10, 20), (30, 40)], "src long, dst long")
-    a1 = kg.connected_components(e1)
-    # singleton 99 tracked in the assignment but touching no edge
-    a1 = a1.union(spark.createDataFrame([(99, 99)], "id long, component long"))
+def test_incremental_components_merges_and_singletons(spark, fixpoint_paths):
+    for _ in fixpoint_paths:
+        e1 = spark.createDataFrame([(10, 20), (30, 40)], "src long, dst long")
+        a1 = kg.connected_components(e1)
+        # singleton 99 tracked in the assignment but touching no edge
+        a1 = a1.union(spark.createDataFrame([(99, 99)], "id long, component long"))
 
-    # new edge merges the two clusters; 99 stays put
-    delta = spark.createDataFrame([(20, 30)], "src long, dst long")
-    got = _assign(kg.incremental_components(a1, delta))
-    full = kg.connected_components(
-        spark.createDataFrame([(10, 20), (30, 40), (20, 30)], "src long, dst long")
-    )
-    want = _assign(full) | {99: 99}
-    assert got == want
+        # new edge merges the two clusters; 99 stays put
+        delta = spark.createDataFrame([(20, 30)], "src long, dst long")
+        got = _assign(kg.incremental_components(a1, delta))
+        full = kg.connected_components(
+            spark.createDataFrame([(10, 20), (30, 40), (20, 30)], "src long, dst long")
+        )
+        want = _assign(full) | {99: 99}
+        assert got == want
 
 
 def test_incremental_kg_equals_batch(spark, tmp_path, alias_df):

@@ -240,54 +240,74 @@ def test_ppr_per_iteration_plan_is_constant(spark):
     assert _plan(pr).count("Exchange") == 0
 
 
-def test_truss_plan_checkpoint_rooted(spark):
+def _triangle_graph(spark):
+    """The circulant graph C23(1, 2): edges (i, i+1) and (i, i+2) mod 23.
+    Every (i, i+1) edge closes 2 triangles and every (i, i+2) edge 1, so
+    truss(k=3) keeps all 46 edges."""
+    return spark.range(46).select(
+        (F.col("id") % 23).alias("src"),
+        ((F.col("id") % 23 + 1 + F.floor(F.col("id") / 23)) % 23)
+        .cast("long")
+        .alias("dst"),
+    )
+
+
+def test_truss_plan_checkpoint_rooted(spark, fixpoint_paths):
     """The kg.fixpoint loops (k-truss, k-core, connected components) cut
     lineage on their input and per round: each returned plan must be
-    rooted at checkpointed RDDs — the upstream edge plan (the full KG
-    pipeline in q_kg_truss) appears ZERO times, and no round's
-    machinery re-plans into the final frame (the q_kg_clustering
-    re-execution bug class)."""
+    rooted at checkpointed RDDs or driver data — the upstream edge plan
+    (the full KG pipeline in q_kg_truss) appears ZERO times, and no
+    round's machinery re-plans into the final frame (the q_kg_clustering
+    re-execution bug class). The second graph has triangles, so rows
+    flow through the truss peel."""
     edges = spark.range(400).select(
         (F.col("id") % 23).alias("src"), ((F.col("id") * 7) % 23).alias("dst")
     )
-    for out in (
-        graph.truss(edges, k=3),
-        graph.kcore(edges, k=2),
-        kg.connected_components(edges),
-    ):
-        plan = _plan(out)
-        assert plan.count("Range (") == 0, plan
-        # final emit: bounded exchanges over the converged edge RDD,
-        # never a nested loop
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
+    tri = _triangle_graph(spark)
+    for _ in fixpoint_paths:
+        for out in (
+            graph.truss(edges, k=3),
+            graph.kcore(edges, k=2),
+            kg.connected_components(edges),
+            graph.truss(tri, k=3),
+        ):
+            plan = _plan(out)
+            assert plan.count("Range (") == 0, plan
+            # final emit: bounded exchanges over the converged edge RDD,
+            # never a nested loop
+            assert "CartesianProduct" not in plan
+            assert "BroadcastNestedLoopJoin" not in plan
+        assert graph.truss(tri, k=3).count() == 46
 
 
-def test_truss_round_plans_no_join(spark):
+def test_truss_round_plans_no_join(spark, monkeypatch):
     """The k-truss triangles are enumerated once, before the peel: the
-    fixpoint state is the triangle rows, so every round after the first
-    is two windows — support per edge, then its minimum per triangle —
-    with no join (no re-orientation, no wedge join, no edge⋈support
-    join) and at most two exchanges."""
+    fixpoint state is the triangle rows, so every distributed round (the
+    size gate at 0) is two windows — support per edge, then its minimum
+    per triangle — with no join (no re-orientation, no wedge join, no
+    edge⋈support join) and at most two exchanges. The first plan cut is
+    the fixpoint's input, the triangle enumeration itself."""
+    monkeypatch.setattr(kg, "_LOCAL_ROWS", 0)
     edges = spark.range(400).select(
         (F.col("id") % 23).alias("src"), ((F.col("id") * 7) % 23).alias("dst")
     )
-    plans = []
-    orig = kg._materialize
+    for g, n_truss in ((edges, 0), (_triangle_graph(spark), 46)):
+        plans = []
+        orig = kg._materialize
 
-    def spy(df, eager=True):
-        plans.append(_plan(df))
-        return orig(df, eager=eager)
+        def spy(df, eager=True):
+            plans.append(_plan(df))
+            return orig(df, eager=eager)
 
-    kg._materialize = spy
-    try:
-        graph.truss(edges, k=3).collect()
-    finally:
-        kg._materialize = orig
-    assert len(plans) >= 2, plans
-    for p in plans[1:]:
-        assert p.count("Join") == 0, p
-        assert p.count("Exchange") <= 2, p
+        kg._materialize = spy
+        try:
+            assert len(graph.truss(g, k=3).collect()) == n_truss
+        finally:
+            kg._materialize = orig
+        assert len(plans) >= 2, plans
+        for p in plans[1:]:
+            assert p.count("Join") == 0, p
+            assert p.count("Exchange") <= 2, p
 
 
 def test_incremental_components_plans_new_edges_once(spark, tmp_path):

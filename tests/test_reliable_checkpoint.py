@@ -20,6 +20,7 @@ SCRIPT = textwrap.dedent(
     import os, sys
     sys.path.insert(0, {repo!r})
     from ner_backend_spark.spark.session import get_spark
+    from ner_backend_spark.spark import kg
     from ner_backend_spark.spark.kg import connected_components
     from ner_backend_spark.spark.graph import kcore, truss
 
@@ -52,20 +53,24 @@ SCRIPT = textwrap.dedent(
          (10, 11), (11, 12), (12, 13), (13, 10), (10, 12)],
         "src long, dst long",
     )
-    before = ckpt_files()
-    core = kcore(g, k=2)
-    got = {{r["node"]: r["deg"] for r in core.collect()}}
-    assert got == {{1: 2, 2: 2, 3: 2, 10: 3, 11: 2, 12: 3, 13: 2}}, got
-    assert ckpt_files() - before, "kcore wrote no checkpoint files"
+    # on both fixpoint paths: the driver finish below the size gate,
+    # then the distributed rounds with the gate at 0
+    for gate in (kg._LOCAL_ROWS, 0):
+        kg._LOCAL_ROWS = gate
+        before = ckpt_files()
+        core = kcore(g, k=2)
+        got = {{r["node"]: r["deg"] for r in core.collect()}}
+        assert got == {{1: 2, 2: 2, 3: 2, 10: 3, 11: 2, 12: 3, 13: 2}}, got
+        assert ckpt_files() - before, "kcore wrote no checkpoint files"
 
-    before = ckpt_files()
-    tr = truss(g, k=3)
-    got = {{(r["node_a"], r["node_b"]): r["support"] for r in tr.collect()}}
-    assert got == {{
-        (1, 2): 1, (1, 3): 1, (2, 3): 1,
-        (10, 11): 1, (11, 12): 1, (12, 13): 1, (10, 13): 1, (10, 12): 2,
-    }}, got
-    assert ckpt_files() - before, "truss wrote no checkpoint files"
+        before = ckpt_files()
+        tr = truss(g, k=3)
+        got = {{(r["node_a"], r["node_b"]): r["support"] for r in tr.collect()}}
+        assert got == {{
+            (1, 2): 1, (1, 3): 1, (2, 3): 1,
+            (10, 11): 1, (11, 12): 1, (12, 13): 1, (10, 13): 1, (10, 12): 2,
+        }}, got
+        assert ckpt_files() - before, "truss wrote no checkpoint files"
     print("RELIABLE_OK", len(ckpt_files()))
     spark.stop()
     """
