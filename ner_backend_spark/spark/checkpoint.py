@@ -396,9 +396,7 @@ class CheckpointedReportRunner:
         out = run_report(subset.select("url", "text"), self.config)
 
         # one pass over the group: cache report_rows for the three sinks
-        rows = out.report_rows.withColumn(
-            "partition_id", F.pmod(F.xxhash64("url"), F.lit(self.n_buckets))
-        ).persist()
+        rows = with_partition_id(out.report_rows, self.n_buckets).persist()
 
         entities = rows.select(
             "url", "partition_id", F.explode("entities").alias("e")

@@ -41,6 +41,11 @@ from pyspark.sql import functions as F
 # a 5-column long state this size is ~10 MB of Arrow.
 _LOCAL_ROWS = 250_000
 
+# LSH band buckets above this many members take lsh_candidate_pairs'
+# chunked self-join, split into this many chunk groups
+_CHUNK_THRESHOLD = 256
+_CHUNK_GROUPS = 32
+
 
 def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize a shared subplan in a deployment-appropriate way — the
@@ -271,8 +276,6 @@ def lsh_candidate_pairs(
     num_hashes: int = 15,
     bands: int = 5,
     max_bucket_size: int | None = None,
-    chunk_threshold: int = 256,
-    chunk_groups: int = 32,
 ) -> DataFrame:
     """(id_a, id_b) same-label mention pairs sharing >=1 MinHash band bucket.
 
@@ -290,8 +293,8 @@ def lsh_candidate_pairs(
     granularity) — template surfaces (shared email domains, URL prefixes)
     produce m in the thousands, serializing the stage (measured: one
     7,044-member bucket = 24.8M pairs in one task, KG 4→16-core efficiency
-    0.44). Buckets larger than ``chunk_threshold`` therefore go through a
-    CHUNKED self-join: members hash into ``chunk_groups`` chunks; the left
+    0.44). Buckets larger than ``_CHUNK_THRESHOLD`` therefore go through a
+    CHUNKED self-join: members hash into ``_CHUNK_GROUPS`` chunks; the left
     side replicates each row to every chunk >= its own, so join group
     (bucket, g) holds the m/G right rows of chunk g against the left rows
     of chunks <= g — the m^2 work spreads over G groups (max m^2/G per
@@ -339,7 +342,7 @@ def lsh_candidate_pairs(
     same_label = F.col("l.label") == F.col("r.label")
 
     # cheap path: whole bucket in one join group
-    small = banded.filter(F.col("_bucket_size") <= chunk_threshold)
+    small = banded.filter(F.col("_bucket_size") <= _CHUNK_THRESHOLD)
     l, r = small.alias("l"), small.alias("r")
     cond = (
         same_band
@@ -352,13 +355,13 @@ def lsh_candidate_pairs(
     )
 
     # chunked path: join key gains a chunk id, splitting the hot bucket
-    big = banded.filter(F.col("_bucket_size") > chunk_threshold)
-    g = F.pmod(F.xxhash64("mention_id"), F.lit(chunk_groups))
+    big = banded.filter(F.col("_bucket_size") > _CHUNK_THRESHOLD)
+    g = F.pmod(F.xxhash64("mention_id"), F.lit(_CHUNK_GROUPS))
     bl = (
         big.withColumn("_lg", g)
         .withColumn(
             "_rg",
-            F.explode(F.sequence(F.col("_lg"), F.lit(chunk_groups - 1))),
+            F.explode(F.sequence(F.col("_lg"), F.lit(_CHUNK_GROUPS - 1))),
         )
         .alias("l")
     )
@@ -534,16 +537,16 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         local=_stars_local,
     )
 
-    # final edges are (node -> root) stars; roots map to themselves; nodes
-    # come from the unfiltered base so self-loop-only nodes keep their id
-    nodes = base.select(F.col("src").alias("id")).union(
-        base.select(F.col("dst").alias("id"))
-    ).distinct()
-    parent = cur.groupBy("src").agg(F.min("dst").alias("component"))
-    return nodes.join(
-        parent, nodes.id == parent.src, "left"
-    ).select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
+    # final edges are (node -> root) stars and a root is its component's
+    # smallest id, so one min per id over {itself, its root} is the
+    # component; every node of the unfiltered base enters as (id, id), so
+    # self-loop-only nodes keep their id
+    return (
+        base.select(F.col("src").alias("id"), F.col("src").alias("component"))
+        .union(base.select(F.col("dst").alias("id"), F.col("dst").alias("component")))
+        .union(cur.select(F.col("src").alias("id"), F.col("dst").alias("component")))
+        .groupBy("id")
+        .agg(F.min("component").alias("component"))
     )
 
 
@@ -665,11 +668,16 @@ def mention_edges(
         # 12.2 s -> 3.1 s (the duplicated upstream pass), warm ~0.3 s
         # saved (one job boundary).
         hits = _materialize(hits, eager=False)
-    alias_edges = hits.select(
+    return sim_edges.union(alias_edges(hits)), hits
+
+
+def alias_edges(hits: DataFrame) -> DataFrame:
+    """(src, dst) edges from each alias hit ``(mention_id, canonical_id)``
+    to its dictionary entry's virtual node."""
+    return hits.select(
         F.col("mention_id").alias("src"),
         F.xxhash64(F.concat(F.lit("alias:"), "canonical_id")).alias("dst"),
     )
-    return sim_edges.union(alias_edges), hits
 
 
 def mention_components(

@@ -48,6 +48,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..spark.checkpoint import check_lineage, write_observed
 from ..spark.kg import (
     alias_candidates,
+    alias_edges,
     band_signatures,
     canonical_map,
     extract_mentions,
@@ -213,13 +214,9 @@ class IncrementalKg:
             F.col("id_a").alias("src"), F.col("id_b").alias("dst")
         )
         if self.alias_df is not None:
-            alias_edges = alias_candidates(new_m, self.alias_df).select(
-                F.col("mention_id").alias("src"),
-                F.xxhash64(
-                    F.concat(F.lit("alias:"), "canonical_id")
-                ).alias("dst"),
+            edges = edges.unionByName(
+                alias_edges(alias_candidates(new_m, self.alias_df))
             )
-            edges = edges.unionByName(alias_edges)
 
         seed = self.assignment().unionByName(
             new_m.select(

@@ -142,7 +142,7 @@ def test_fixpoint_max_iter_exhaustion_raises(spark, op, fixpoint_paths):
 # (local[4], AQE on): its input cuts, the state collect and the
 # post-processing, however many rounds it takes. The distributed rounds
 # took 30 (CC), 85 (k-core, one end node peeled per round) and 17 (truss).
-SMALL_FIXPOINT_JOBS = {"components": 7, "kcore": 6, "truss": 11}
+SMALL_FIXPOINT_JOBS = {"components": 5, "kcore": 6, "truss": 11}
 
 
 @pytest.mark.parametrize("op", ["components", "kcore", "truss"])
@@ -259,7 +259,7 @@ def test_lsh_bucket_cap_counts_per_label(spark):
     assert kg.lsh_candidate_pairs(mentions, max_bucket_size=3).count() == 0
 
 
-def test_chunked_pair_generation_equals_plain(spark):
+def test_chunked_pair_generation_equals_plain(spark, monkeypatch):
     """Hot-bucket chunked self-join proposes EXACTLY the plain join's pairs."""
     rows = (
         # template surfaces -> one giant trigram-similar bucket
@@ -271,13 +271,15 @@ def test_chunked_pair_generation_equals_plain(spark):
     ents = spark.createDataFrame(rows, "url string, label string, text string")
     mentions = kg.extract_mentions(ents)
 
-    def pairset(**kw):
+    def pairset(threshold, groups=kg._CHUNK_GROUPS):
+        monkeypatch.setattr(kg, "_CHUNK_THRESHOLD", threshold)
+        monkeypatch.setattr(kg, "_CHUNK_GROUPS", groups)
         return {
             (r["id_a"], r["id_b"])
-            for r in kg.lsh_candidate_pairs(mentions, **kw).collect()
+            for r in kg.lsh_candidate_pairs(mentions).collect()
         }
 
-    plain = pairset(chunk_threshold=10**9)
-    chunked = pairset(chunk_threshold=16, chunk_groups=4)
+    plain = pairset(10**9)
+    chunked = pairset(16, 4)
     assert chunked == plain
     assert len(plain) > 1000  # the template bucket really is quadratic
