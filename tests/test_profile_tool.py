@@ -1,4 +1,4 @@
-"""tools/profile.py end to end: interleaved reps, the median rep's wall
+"""tools/query_profile.py end to end: interleaved reps, the median rep's wall
 charged to driver gaps and job time, and the UDF-profiled pass. Runs in a
 subprocess because the tool starts its own session with the event log on.
 """
@@ -14,8 +14,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def test_profile_tool_reconciles_walls():
     env = dict(os.environ, SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001")
     names = ["q01_pricing_summary", "q_kg_kcore"]
+    tool = os.path.join(REPO, "tools", "query_profile.py")
     out = subprocess.run(
-        [sys.executable, os.path.join(REPO, "tools", "profile.py"), ",".join(names), "2"],
+        [sys.executable, tool, ",".join(names), "2"],
         env=env,
         cwd=REPO,
         capture_output=True,

@@ -1,34 +1,26 @@
 """Profile ``__spark_entry__.queries()`` entries in one Spark session.
 
-    python tools/profile.py [name,name,...] [reps]
+    python tools/query_profile.py [name,name,...] [reps]
 
 Run from the repository root. Names default to ``bench.BENCH_QUERIES``,
-reps to 3; the input is ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) and the cores are ``get_spark``'s default
-(``$SPARK_GRAFT_CPUS``, else every core). After warming the Python
-workers, the reps are interleaved: rep 1 of every query, then rep 2, and
-so on, each (query, rep) forced into the ``noop`` sink inside one
-``perfbench/spans.py`` span. One more untimed pass per query runs under
-Spark's UDF profiler, apart from the timed reps because the profiler
-slows what it measures. After the session stops, the event log is
-charged to the spans.
+reps to 3, the input to ``$SPARK_GRAFT_SF_DIR`` (else sf0.1) and the
+cores to ``get_spark``'s. After the Python workers warm up, rep 1 of
+every query runs, then rep 2, and so on, each forced into the ``noop``
+sink in its own ``perfbench/spans.py`` span. One more pass per query runs
+under the UDF profiler, untimed because the profiler slows what it
+measures. The stopped session's event log is then charged to the spans.
 
-The last stdout line is one JSON object: ``{"stamp": {...}, "queries":
-{name: {...}}}``. Per query it holds every rep's wall (``walls``), their
-``min`` and ``median`` (the lower median for an even rep count: the wall
-of one rep, the median rep) and ERROR lines per rep (``error_lines``).
-For the median rep it holds the event-log totals of its own jobs
-(``jobs``, ``stages``, ``tasks``, ``executor_run_s``, ``executor_cpu_s``,
-``shuffle_read_bytes``, ``shuffle_write_bytes``), ``driver_gap_s`` (wall
-with no job running), ``busy_s`` (the union of its job intervals, not
-clipped to the span, so ``wall - driver_gap_s - busy_s`` is job time
-outside the span) and ``job_intervals`` (seconds from the span start).
-``udf_self_s`` is the profiled pass's Python UDF self time, the sum of
-the pstats ``total_tt``; ``udf_pass_s`` is that pass's wall. Python-kernel
-time is UDF self time only: the Arrow serialization share is not split
-out of it, nor estimated. The stamp carries the cores, ``nproc``, the
-loadavg before and after, the git commit, the SF dir and every ERROR line
-of the run (``error_lines``, startup and profiled pass included).
+The last stdout line is one JSON object, ``{"stamp", "queries"}``. The
+stamp has cores, ``nproc``, loadavg before and after, the git commit, the
+SF dir and the run's ERROR lines. Per query: ``walls``, ``min``,
+``median`` (the lower median, so one rep's wall) and ``error_lines`` per
+rep; for the median rep, its jobs' event-log totals, ``driver_gap_s``
+(wall with no job running), ``busy_s`` (the union of its job intervals,
+unclipped, so ``wall - driver_gap_s - busy_s`` is job time outside the
+span) and ``job_intervals`` (from the span start); from the profiled
+pass, ``udf_pass_s`` and ``udf_self_s``, the pstats ``total_tt`` sum.
+Python-kernel time is UDF self time only: its Arrow serialization share
+is neither split out nor estimated.
 """
 
 from __future__ import annotations
@@ -41,20 +33,13 @@ import shutil
 import subprocess
 import sys
 import tempfile
-import uuid
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# the script's own directory leaves the path: this file's name would
-# shadow the standard library's ``profile``, which ``cProfile`` imports
-sys.path[0:1] = [ROOT, os.path.join(ROOT, "perfbench")]
+sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 
 import bench  # noqa: E402
 from spans import (  # noqa: E402
-    StderrCapture,
-    Tracer,
-    attribute_event_log,
-    driver_gap_seconds,
-    read_event_log,
+    StderrCapture, Tracer, attribute_event_log, driver_gap_seconds, read_event_log,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -97,7 +82,7 @@ def profile(names: list[str], reps: int, work: str, capture: StderrCapture) -> d
     })
     spark.sparkContext.setLogLevel("ERROR")
     stamp["cores"] = spark.sparkContext.defaultParallelism
-    tracer = Tracer(uuid.uuid4().hex[:12], True, capture)
+    tracer = Tracer("profile", True, capture)
     tracer.spark = spark
     qs = entry.queries()
     try:
