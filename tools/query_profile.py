@@ -42,8 +42,6 @@ from spans import (  # noqa: E402
     StderrCapture, Tracer, attribute_event_log, driver_gap_seconds, read_event_log,
 )
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def _busy_seconds(intervals) -> float:
     total, end = 0.0, float("-inf")
@@ -68,7 +66,7 @@ def profile(names: list[str], reps: int, work: str, capture: StderrCapture) -> d
     from ner_backend_spark.spark.session import get_spark
 
     stamp = {
-        "sf_dir": SF_DIR, "reps": reps, "nproc": os.cpu_count(),
+        "sf_dir": bench.SF_DIR, "reps": reps, "nproc": os.cpu_count(),
         "loadavg_before": os.getloadavg(),
         "git_commit": subprocess.run(
             ["git", "rev-parse", "HEAD"], cwd=ROOT, capture_output=True, text=True
@@ -92,13 +90,13 @@ def profile(names: list[str], reps: int, work: str, capture: StderrCapture) -> d
         for _ in range(reps):
             for name in names:
                 with tracer.span(name) as sp:
-                    bench.force(qs[name](spark, SF_DIR))
+                    bench.force(qs[name](spark, bench.SF_DIR))
                 timed[name].append(sp)
         udf = {}
         spark.conf.set("spark.sql.pyspark.udf.profiler", "perf")
         for name in names:
             with tracer.span(f"{name}:udf") as sp:
-                bench.force(qs[name](spark, SF_DIR))
+                bench.force(qs[name](spark, bench.SF_DIR))
             udf[name] = {"udf_self_s": round(_udf_self_seconds(spark, work), 3),
                          "udf_pass_s": round(sp.seconds, 3)}
     finally:
