@@ -220,8 +220,8 @@ def distributed_row(
     # entity cardinality grows with corpus size (each surface
     # repeats on ~120 pages on average), like real web data.
     # surface_scale multiplies distinct-surface cardinality at
-    # a fixed page count (bench_scaling's mention-scale knob:
-    # more distinct mentions -> more rows per CC round)
+    # a fixed page count (more distinct mentions -> more rows
+    # per CC round)
     if rng.random() < 0.5:
         uid = i % (max(2000, n // 120) * surface_scale)
         name = _EMAIL_NAMES[uid % len(_EMAIL_NAMES)]

@@ -157,6 +157,33 @@ class CheckpointedKgRunner:
         ).collect()[0]
         return f"{row['n']}:{row['h']}"
 
+    def _edges(self) -> DataFrame:
+        # the SAME edge construction build_triples runs — reimplementing the
+        # sim-edge + alias-virtual-node union here let the two paths drift
+        # (round-3 review finding)
+        edges, _hits = mention_edges(
+            self._read("mentions"),
+            self.alias_df,
+            self.threshold,
+            self.num_hashes,
+            self.bands,
+            self.max_bucket_size,
+            # only the edges are committed here; the canonical stage
+            # re-derives alias hits from the on-disk mentions table, so
+            # eagerly materializing hits would be pure thrown-away work
+            materialize_hits=False,
+        )
+        return edges
+
+    def _canonical(self) -> DataFrame:
+        mentions = self._read("mentions")
+        hits = (
+            alias_candidates(mentions, self.alias_df)
+            if self.alias_df is not None
+            else None
+        )
+        return canonical_map(mentions, self._read("components"), hits)
+
     def run(
         self,
         entities: DataFrame,
@@ -169,78 +196,42 @@ class CheckpointedKgRunner:
         # entities feeds the fingerprint, the mentions stage and the triples
         # stage — persist so a lazy upstream (the NER tagger) runs once
         entities = entities.persist()
-        # Resume safety: refuse to graft new-parameter stages onto outputs
-        # computed under different parameters OR a different input dataset —
-        # either would be a silent cross-run hybrid presented as a clean run.
-        params = self._lineage_params()
-        params["input_fp"] = self._input_fingerprint(entities)
-        check_lineage((r["lineage"] for r in prior), params, self.base_path)
-        lineage = json.dumps({"run_id": run_id, **params})
         ran: list[str] = []
-
-        def maybe_fail() -> None:
-            if fail_after_stages is not None and len(ran) >= fail_after_stages:
-                raise RuntimeError(
-                    f"injected failure after stages {ran} (run {run_id})"
-                )
-
-        if "mentions" not in done:
-            t0 = time.time()
-            self._commit("mentions", extract_mentions(entities), run_id, t0, lineage)
-            ran.append("mentions")
-            maybe_fail()
-
-        if "edges" not in done:
-            t0 = time.time()
-            mentions = self._read("mentions")
-            # the SAME edge construction build_triples runs — reimplementing
-            # the sim-edge + alias-virtual-node union here let the two paths
-            # drift (round-3 review finding)
-            edges, _hits = mention_edges(
-                mentions,
-                self.alias_df,
-                self.threshold,
-                self.num_hashes,
-                self.bands,
-                self.max_bucket_size,
-                # only the edges are committed here; the canonical stage
-                # re-derives alias hits from the on-disk mentions table, so
-                # eagerly materializing hits would be pure thrown-away work
-                materialize_hits=False,
-            )
-            self._commit("edges", edges, run_id, t0, lineage)
-            ran.append("edges")
-            maybe_fail()
-
-        if "components" not in done:
-            t0 = time.time()
-            comp = connected_components(self._read("edges"))
-            self._commit("components", comp, run_id, t0, lineage)
-            ran.append("components")
-            maybe_fail()
-
-        if "canonical" not in done:
-            t0 = time.time()
-            mentions = self._read("mentions")
-            hits = (
-                alias_candidates(mentions, self.alias_df)
-                if self.alias_df is not None
-                else None
-            )
-            canon = canonical_map(mentions, self._read("components"), hits)
-            self._commit("canonical", canon, run_id, t0, lineage)
-            ran.append("canonical")
-            maybe_fail()
-
-        if "triples" not in done:
-            t0 = time.time()
-            triples = triples_from_canonical(
-                entities, self._read("canonical"), object_groups
-            )
-            self._commit("triples", triples, run_id, t0, lineage)
-            ran.append("triples")
-
-        entities.unpersist()
+        try:
+            # Resume safety: refuse to graft new-parameter stages onto
+            # outputs computed under different parameters OR a different
+            # input dataset — either would be a silent cross-run hybrid
+            # presented as a clean run.
+            params = self._lineage_params()
+            params["input_fp"] = self._input_fingerprint(entities)
+            check_lineage((r["lineage"] for r in prior), params, self.base_path)
+            lineage = json.dumps({"run_id": run_id, **params})
+            builders = {
+                "mentions": lambda: extract_mentions(entities),
+                "edges": self._edges,
+                "components": lambda: connected_components(self._read("edges")),
+                "canonical": self._canonical,
+                "triples": lambda: triples_from_canonical(
+                    entities, self._read("canonical"), object_groups
+                ),
+            }
+            for stage in KG_STAGES:
+                if stage in done:
+                    continue
+                # t0 before the builder: a stage's time includes its reads
+                t0 = time.time()
+                self._commit(stage, builders[stage](), run_id, t0, lineage)
+                ran.append(stage)
+                if (
+                    fail_after_stages is not None
+                    and len(ran) >= fail_after_stages
+                    and stage != KG_STAGES[-1]
+                ):
+                    raise RuntimeError(
+                        f"injected failure after stages {ran} (run {run_id})"
+                    )
+        finally:
+            entities.unpersist()
         return {"run_id": run_id, "stages_run": ran, "stages_skipped": sorted(done)}
 
 

@@ -136,20 +136,14 @@ def get_spark(
     cores: int | str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    master_url: str | None = None,
 ) -> SparkSession:
-    """``master_url`` (or env ``SPARK_GRAFT_MASTER``): connect to a real
-    cluster manager (standalone/YARN/K8s) instead of local[cores] — the
-    deployment path the north star targets (`spark-submit --py-files` onto
-    multi-executor clusters). Executor sizing then comes from
-    ``spark.executor.cores`` / ``spark.executor.memory`` in ``extra_conf``
-    (or the cluster's defaults), and ``cores`` is ignored; executors
-    resolve this package via ``spark.executorEnv.PYTHONPATH`` (set to the
-    repo root by the cluster harness) or a shipped ``--py-files`` zip."""
-    master_url = master_url or os.environ.get("SPARK_GRAFT_MASTER")
+    """A ``local[cores]`` session with the engine's conf; ``cores`` defaults
+    to ``SPARK_GRAFT_CPUS``, else every core. Cluster deploys do not come
+    through here: ``spark-submit`` owns the master, and the deploy entry
+    (tools/submit_pipeline.py) builds its session from ``engine_conf``."""
     cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
-        SparkSession.builder.master(master_url or f"local[{cores}]")
+        SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

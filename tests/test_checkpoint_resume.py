@@ -168,6 +168,20 @@ def test_kg_kill_and_resume_skips_completed_stages(spark, tmp_path):
         assert m["n_rows"] == spark.read.parquet(f"{base}/kg/{stage}").count()
 
 
+def test_kg_failed_run_unpersists_entities(spark, tmp_path):
+    """A run that fails mid-way still releases the entities it persisted,
+    so the caller's frame does not stay cached for the rest of the
+    session."""
+    from ner_backend_spark.spark.checkpoint_kg import CheckpointedKgRunner
+
+    ents = _kg_entities(spark).localCheckpoint()
+    runner = CheckpointedKgRunner(spark, str(tmp_path / "kgfail"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        runner.run(ents, fail_after_stages=2)
+    assert ents.is_cached is False
+    assert not ents.storageLevel.useMemory
+
+
 def test_fresh_runs_log_no_errors(spark, pages, tmp_path):
     """A fresh run finds no prior state without logging an ERROR. Once an
     Observation has run in the session (any fixpoint does), Spark's
