@@ -82,13 +82,14 @@ def _alive_workers() -> list[dict]:
 
 def _daemon(args: list[str], log: str, env: dict | None = None):
     os.makedirs(f"{BASE}/logs", exist_ok=True)
-    return subprocess.Popen(
-        [_spark_class(), *args],
-        stdout=open(f"{BASE}/logs/{log}.log", "w"),
-        stderr=subprocess.STDOUT,
-        env=env,
-        start_new_session=True,
-    )
+    with open(f"{BASE}/logs/{log}.log", "w") as out:
+        return subprocess.Popen(
+            [_spark_class(), *args],
+            stdout=out,
+            stderr=subprocess.STDOUT,
+            env=env,
+            start_new_session=True,
+        )
 
 
 def _terminate(procs: list[subprocess.Popen]) -> None:
