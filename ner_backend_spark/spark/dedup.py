@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
+from .kg import _jaccard
+
 _MERSENNE = (1 << 61) - 1
 _HASH_RANGE = 1 << 32
 
@@ -712,7 +714,8 @@ def token_jaccard(
 ) -> DataFrame:
     """Exact unigram-set Jaccard for given (id_a, id_b) pairs — JVM-side.
 
-    array_intersect/array_union on pre-tokenized arrays; used to verify LSH
+    array_intersect on pre-tokenized distinct arrays (the union size is
+    |A| + |B| − |A ∩ B|, :func:`kg._jaccard`); used to verify LSH
     candidates without Python.
     """
     toks = docs.select(
@@ -727,10 +730,7 @@ def token_jaccard(
         .select(
             "id_a",
             "id_b",
-            (
-                F.size(F.array_intersect("toks_a", "toks_b"))
-                / F.size(F.array_union("toks_a", "toks_b"))
-            ).alias("jaccard"),
+            _jaccard("toks_a", "toks_b").alias("jaccard"),
         )
     )
 
@@ -973,13 +973,13 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> Da
 
     cluster_id is the smallest doc_id in the connected component of the
     pair graph (the same alternating-star fixpoint the KG canonicalizer
-    runs — O(log n) rounds; a pair graph under the fixpoint size gate
-    runs them on the driver, a larger one distributed with per-round
-    lineage cuts); is_kept marks the canonical survivor. Only docs appearing in
-    at least one pair are emitted — every other doc is trivially its own
-    kept singleton, and at 100 TB the pair graph is orders of magnitude
-    smaller than the corpus, which is exactly why the closure runs on it
-    rather than on the corpus.
+    runs — O(log n) rounds; a pair graph under the input size gate of
+    kg._cut_input runs them on the driver, a larger one distributed with
+    per-round lineage cuts); is_kept marks the canonical survivor. Only
+    docs appearing in at least one pair are emitted — every other doc is
+    trivially its own kept singleton, and at 100 TB the pair graph is
+    orders of magnitude smaller than the corpus, which is exactly why the
+    closure runs on it rather than on the corpus.
     """
     from pyspark.sql import Window
 

@@ -31,11 +31,12 @@ Scale notes (100 TB / 10^12-document corpus -> ~10^10-node graph):
   rows whatever the hub degree, closed against the cut edge set. The
   truss peel runs on the triangle rows themselves: two windows per
   round, no join and no re-orientation.
-- ``kcore``, ``truss``: the peel is a :func:`kg.fixpoint`. A state under
-  its size gate (``kg._LOCAL_ROWS`` rows) is collected once and peeled in
-  pandas on the driver, because a small graph's rounds are bound by
-  per-job overhead; above the gate the distributed rounds run, so their
-  cost and memory stay on the executors at any graph size.
+- ``kcore``, ``truss``: the peel is a :func:`kg.fixpoint`. An input
+  under its size gate (``kg._LOCAL_ROWS`` edge rows) is cut and collected
+  once, and the whole operator runs in pandas on the driver, because a
+  small graph's jobs are bound by per-job overhead; above the gate the
+  distributed rounds run from that cut, so their cost and memory stay on
+  the executors at any graph size.
 """
 
 from __future__ import annotations
@@ -45,7 +46,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .kg import _materialize, fixpoint
+from .kg import (
+    _cut_input, _driver_frame, _materialize, _node_codes, fixpoint, pandas_fixpoint,
+)
 
 
 def degrees(triples: DataFrame) -> DataFrame:
@@ -465,6 +468,18 @@ def neighbor_jaccard(
     )
 
 
+def _undirected_local(edges: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(a, b, nodes): :func:`_undirected` of a collected edge frame, in
+    the order-preserving node codes of :func:`kg._node_codes`."""
+    src, dst, nodes = _node_codes(edges)
+    keep = src != dst
+    und = np.unique(
+        np.stack([np.minimum(src, dst)[keep], np.maximum(src, dst)[keep]], axis=1),
+        axis=0,
+    )
+    return und[:, 0], und[:, 1], nodes
+
+
 def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     """(node, deg): the k-core of an undirected (src, dst) edge set —
     the maximal subgraph where every node keeps degree >= k — with each
@@ -485,10 +500,15 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     degree; that round's ``settled`` observation ends the loop. A graph
     whose peel drops nothing, or everything, settles in its first round.
 
-    A symmetric edge state under the :func:`kg.fixpoint` size gate peels
-    in pandas on the driver instead (``peel_local``: the same two degree
-    counts, ``core_deg`` and ``settled``), with no Spark job per round.
+    An input under the size gate of :func:`kg._cut_input` runs whole on
+    the driver (:func:`_kcore_local`): the undirected and symmetric edge
+    sets, the same peel rounds under :func:`kg.pandas_fixpoint` and the
+    (node, deg) rows, with no Spark job between the input collect and
+    the result.
     """
+    cut, small = _cut_input(edges)
+    if small is not None:
+        return _kcore_local(cut, small, k, max_iter)
 
     def peel(cur: DataFrame) -> DataFrame:
         # the state holds each edge in both directions, so partitionBy(b)
@@ -506,18 +526,7 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
             "a", "b", "core_deg"
         )
 
-    def peel_local(cur: pd.DataFrame) -> tuple[pd.DataFrame, bool]:
-        a, b = cur["a"].to_numpy(), cur["b"].to_numpy()
-        codes = pd.factorize(np.concatenate([a, b]))[0]
-        ca, cb = codes[: len(a)], codes[len(a) :]
-        deg_b = np.bincount(cb)[cb]
-        deg_a = np.bincount(ca)[ca]
-        core_deg = np.bincount(ca, weights=deg_b >= k).astype(np.int64)[ca]
-        keep = (deg_a >= k) & (deg_b >= k)
-        out = pd.DataFrame({"a": a[keep], "b": b[keep], "core_deg": core_deg[keep]})
-        return out, bool(out.empty or out["core_deg"].min() >= k)
-
-    und = _undirected(edges)
+    und = _undirected(cut)
     cur = fixpoint(
         peel,
         und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b"))),
@@ -525,12 +534,38 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
         max_iter,
         "k-core peel",
         settled=F.min("core_deg") >= k,
-        local=peel_local,
     )
     # every survivor is an ``a`` of its own rows, all carrying its core_deg
     return cur.select(
         F.col("a").alias("node"), F.col("core_deg").alias("deg")
     ).distinct()
+
+
+def _kcore_local(
+    cut: DataFrame, edges: pd.DataFrame, k: int, max_iter: int
+) -> DataFrame:
+    """:func:`kcore` of a collected edge frame on the driver: the same
+    degree counts, ``core_deg`` and ``settled`` per round, over node
+    codes."""
+    a, b, nodes = _undirected_local(edges)
+    n = len(nodes)
+
+    def peel(cur: pd.DataFrame) -> tuple[pd.DataFrame, bool]:
+        ca, cb = cur["a"].to_numpy(), cur["b"].to_numpy()
+        deg = np.bincount(ca, minlength=n)  # symmetric: deg(b) counts alike
+        deg_b = deg[cb]
+        core_deg = np.bincount(ca, weights=deg_b >= k, minlength=n).astype(np.int64)
+        keep = (deg[ca] >= k) & (deg_b >= k)
+        out = pd.DataFrame(
+            {"a": ca[keep], "b": cb[keep], "core_deg": core_deg[ca][keep]}
+        )
+        return out, bool(out.empty or out["core_deg"].min() >= k)
+
+    sym = pd.DataFrame({"a": np.concatenate([a, b]), "b": np.concatenate([b, a])})
+    cur = pandas_fixpoint(peel, sym, ("a", "b"), max_iter, "k-core peel")
+    node, first = np.unique(cur["a"].to_numpy(), return_index=True)
+    deg = cur["core_deg"].to_numpy()[first]
+    return _driver_frame(cut, {"node": nodes[node], "deg": deg}, counts=("deg",))
 
 
 def truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
@@ -544,28 +579,35 @@ def truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     community-core primitive over co-occurrence graphs (Cohen 2008,
     "Trusses: cohesive subgraphs for social network analysis").
 
-    The triangles are enumerated ONCE (:func:`_triangles`, O(m^1.5)
-    wedge rows regardless of hubs) and each is exploded into its three
-    edges: the :func:`kg.fixpoint` state is these (lo, u, v, ea, eb)
-    rows. An edge's support is the number of surviving triangles on it,
-    and a triangle survives while all three of its edges keep support
-    >= k−2 — so a peel round is two windows and a filter: count over
-    (ea, eb), then min of that count over (lo, u, v). No join and no
-    re-orientation per round; peeling triangles rather than edges loses
-    nothing, since the triangles of the surviving edges are exactly the
-    triangles whose three edges all survive. Like the kcore guard,
+    The triangles are enumerated ONCE (:func:`_triangles`, O(m^1.5) wedge
+    rows regardless of hubs) and each is exploded into its three edges:
+    the :func:`kg.fixpoint` state is these (lo, u, v, ea, eb) rows, cut
+    before the first round. An edge's support is the number of surviving
+    triangles on it, and a triangle survives while all three of its edges
+    keep support >= k−2 — so a peel round is two windows and a filter:
+    count over (ea, eb), then min of that count over (lo, u, v). No join
+    and no re-orientation per round; peeling triangles rather than edges
+    loses nothing, since the triangles of the surviving edges are exactly
+    the triangles whose three edges all survive. Like the kcore guard,
     ``max_iter`` exhaustion raises rather than overstating the truss.
-
-    Triangle rows under the :func:`kg.fixpoint` size gate peel in pandas
-    on the driver (``peel_local``: the same support count and per-triangle
-    minimum), with no Spark job per round; the enumeration stays in Spark.
 
     At the fixpoint every edge's row count is its in-truss support. For
     k >= 3 those counts are the result: every edge of a surviving row
     has support >= k−2, every other edge support 0 < k−2. For k <= 2 the
     result is every undirected edge, joined to its support (0 when it is
     in no surviving triangle). No adjacency list is ever collected.
+
+    An input under the size gate of :func:`kg._cut_input` runs whole on
+    the driver (:func:`_truss_local`): the undirected edges, the same
+    degree-oriented triangle enumeration, the peel and the support, for
+    both ``k`` branches. Its state is one row per triangle, so it grows
+    with the triangle count, which the gate on edges does not bound:
+    O(m^1.5) worst case. In the capped co-occurrence graph a page adds
+    at most a 20-clique, 1,140 triangles on 190 edges.
     """
+    cut, small = _cut_input(edges)
+    if small is not None:
+        return _truss_local(cut, small, k, max_iter)
 
     def peel(cur: DataFrame) -> DataFrame:
         rows = cur.select("lo", "u", "v", "ea", "eb")
@@ -578,7 +620,7 @@ def truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
             .select(*rows.columns)
         )
 
-    und = _undirected(edges)
+    und = _undirected(cut)
     rows = _triangles(und).select(
         "lo",
         "u",
@@ -597,22 +639,12 @@ def truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
             )
         ).alias("e"),
     ).select("lo", "u", "v", "e.ea", "e.eb")
-
-    def peel_local(cur: pd.DataFrame) -> tuple[pd.DataFrame, bool]:
-        rows = cur[["lo", "u", "v", "ea", "eb"]]
-        support = rows.groupby(["ea", "eb"])["lo"].transform("size")
-        weakest = support.groupby([rows["lo"], rows["u"], rows["v"]]).transform(
-            "min"
-        )
-        return rows[weakest >= k - 2], False
-
     cur = fixpoint(
         peel,
-        rows,
+        _materialize(rows),
         ("lo", "u", "v", "ea", "eb"),
         max_iter,
         "k-truss peel",
-        local=peel_local,
     )
     sup = cur.groupBy("ea", "eb").agg(F.count(F.lit(1)).alias("support"))
     if k >= 3:
@@ -634,6 +666,58 @@ def truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
             support.alias("support"),
         )
         .filter(F.col("support") >= k - 2)
+    )
+
+
+def _truss_local(
+    cut: DataFrame, edges: pd.DataFrame, k: int, max_iter: int
+) -> DataFrame:
+    """:func:`truss` of a collected edge frame on the driver, over node
+    codes. The orientation and wedge closing are :func:`_triangles`'s;
+    the state is one (e1, e2, e3) row of edge indexes per surviving
+    triangle. A triangle's rows in the Spark state are its three edges,
+    and a round keeps or drops all three together, so both states stop
+    in the same round."""
+    a, b, nodes = _undirected_local(edges)
+    n, m = len(nodes), len(a)
+    deg = np.bincount(a, minlength=n) + np.bincount(b, minlength=n)
+    # a < b, so a is the lower-(degree, id) endpoint unless its degree is
+    # higher
+    a_first = deg[a] <= deg[b]
+    o = pd.DataFrame({"lo": np.where(a_first, a, b), "hi": np.where(a_first, b, a)})
+    w = o.merge(o, on="lo")
+    w = w[w["hi_x"] < w["hi_y"]]
+    # edge index of (x, y), x < y: a sorted (a, b) list searched on a*n+b
+    key = a * n + b
+
+    def edge(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+        return np.searchsorted(key, x * n + y)
+
+    lo, u, v = w["lo"].to_numpy(), w["hi_x"].to_numpy(), w["hi_y"].to_numpy()
+    closing = edge(u, v)
+    closed = (closing < m) & (key[np.minimum(closing, m - 1)] == u * n + v)
+    lo, u, v = lo[closed], u[closed], v[closed]
+    tri = pd.DataFrame({
+        "e1": edge(np.minimum(lo, u), np.maximum(lo, u)),
+        "e2": edge(np.minimum(lo, v), np.maximum(lo, v)),
+        "e3": closing[closed],
+    })
+
+    def support(t: pd.DataFrame) -> np.ndarray:
+        return np.bincount(t.to_numpy().ravel(), minlength=m)
+
+    def peel(t: pd.DataFrame) -> tuple[pd.DataFrame, bool]:
+        return t[support(t)[t.to_numpy()].min(axis=1) >= k - 2], False
+
+    tri = pandas_fixpoint(peel, tri, ("e1", "e2", "e3"), max_iter, "k-truss peel")
+    s = support(tri)
+    # k >= 3 keeps the edges of surviving triangles (support >= 1), k <= 2
+    # every edge
+    keep = s >= k - 2
+    return _driver_frame(
+        cut,
+        {"node_a": nodes[a[keep]], "node_b": nodes[b[keep]], "support": s[keep]},
+        counts=("support",),
     )
 
 

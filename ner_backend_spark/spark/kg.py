@@ -14,9 +14,8 @@ schema.go:129-144 — this layer canonicalizes and materializes triples):
     -> connected components alternating large-star / small-star (window-min
                            form, no collect_list, so no high-degree-node
                            blowup; O(log n) rounds); an edge set under the
-                           fixpoint size gate runs the same rounds in
-                           pandas on the driver (one collect, no per-round
-                           jobs)
+                           input size gate runs the same rounds in pandas
+                           on the driver (one collect, no per-round jobs)
     -> canonicalization    per component: alias canonical id if any member
                            hit the dictionary, else the lexicographically
                            smallest surface
@@ -33,12 +32,15 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
-# Input states of fewer rows than this finish their :func:`fixpoint` on
-# the driver. Set below the measured crossover of the two paths (k-core
-# at ~2*10^6 state rows, CC above 10^6, on seeded random graphs at
-# local[4]; table in CHANGES.md) and far under spark.driver.maxResultSize:
-# a 5-column long state this size is ~10 MB of Arrow.
+# Edge inputs of fewer rows than this run their whole graph operator in
+# pandas on the driver (:func:`_cut_input`). Set below the measured
+# crossover of the two paths (k-core at ~2*10^6 state rows, CC above
+# 10^6, on seeded random graphs at local[4]; table in CHANGES.md): a
+# k-core state is at most twice its input, a CC state at most its input.
+# A two-column long input this size is ~4 MB of Arrow, far under
+# spark.driver.maxResultSize.
 _LOCAL_ROWS = 250_000
 
 # LSH band buckets above this many members take lsh_candidate_pairs'
@@ -76,6 +78,14 @@ def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     (re-run; the checkpoint/resume layer makes re-runs cheap) — the
     fixpoint rounds, where lineage cuts must survive executor loss, stay on
     the reliable eager path below.
+
+    "Lazy" defers only the plan's last stage. Building the RDD of an
+    adaptive (AQE) plan materializes its query stages, so over a plan
+    with an exchange the call itself runs every shuffle map stage (and
+    every broadcast) as a job; the first consuming job then runs the
+    final stage and stores the blocks. Probed on Spark 4.1 at local[4]:
+    the lazy cut of a groupBy ran one job at the call and the consuming
+    count two; a broadcast join's lazy cut ran its broadcast at the call.
     """
     if not eager:
         return df.localCheckpoint(eager=False)
@@ -91,11 +101,10 @@ def fixpoint(
     max_iter: int,
     what: str,
     settled: Column | None = None,
-    local: Callable[[pd.DataFrame], tuple[pd.DataFrame, bool]] | None = None,
 ) -> DataFrame:
     """Iterate ``state = step(state)`` until a round leaves it unchanged.
 
-    The one convergence protocol of the iterative graph operators
+    The one convergence protocol of the distributed graph operators
     (connected components, k-core, k-truss). Each round's output carries
     an :class:`~pyspark.sql.Observation` of its certificate — the row count
     and the sum of ``pmod(xxhash64(keys), 1e9+7)`` over the ``keys``
@@ -116,24 +125,8 @@ def fixpoint(
     A state still changing after ``max_iter`` rounds raises ``ValueError``
     instead of returning a partial result (a cut-short peel overstates a
     core, a cut-short star alternation splits components).
-
-    ``local``, when given, is the same round over a pandas frame of the
-    state, returning the next state and whether it is settled. The input
-    state is then cut once with a row-count observation, and a state of
-    fewer than ``_LOCAL_ROWS`` rows is collected and iterated on the
-    driver (:func:`_local_fixpoint`) with the same stop rules and the
-    same ``max_iter`` error; larger states run the distributed rounds
-    from that cut. Small graphs are bound by per-job overhead, not data:
-    a distributed round costs several Spark jobs, a local one none. The
-    driver, not one ``mapInPandas`` task, runs it because a worker raise
-    would surface as a ``PythonException`` rather than the
-    ``ValueError``, and a cold Python worker start costs seconds.
+    :func:`pandas_fixpoint` is the same loop over a pandas state.
     """
-    if local is not None:
-        obs = Observation()
-        state = _materialize(state.observe(obs, F.count(F.lit(1)).alias("n")))
-        if obs.get["n"] < _LOCAL_ROWS:
-            return _local_fixpoint(step, state, keys, max_iter, what, local)
     h = F.pmod(F.xxhash64(*keys), F.lit(1_000_000_007)).cast("decimal(38,0)")
     metrics = [
         F.count(F.lit(1)).alias("n"),
@@ -152,30 +145,89 @@ def fixpoint(
     raise ValueError(f"{what} did not converge in {max_iter} rounds")
 
 
-def _local_fixpoint(step, state, keys, max_iter, what, local) -> DataFrame:
-    """:func:`fixpoint` on the driver: iterate ``local`` over the
-    collected state until a round is settled or its key rows equal the
-    previous round's, and return the result as a DataFrame of the
-    Spark step's schema. Its root is driver data, so it needs no cut."""
-    schema = step(state).schema
-    pdf = state.toArrow().to_pandas()
+def pandas_fixpoint(
+    step: Callable[[pd.DataFrame], tuple[pd.DataFrame, bool]],
+    state: pd.DataFrame,
+    keys: Sequence[str],
+    max_iter: int,
+    what: str,
+) -> pd.DataFrame:
+    """:func:`fixpoint` on the driver: ``step`` returns the next state and
+    whether it is settled. The loop stops at the first settled round or
+    the first whose ``keys`` rows equal the previous round's, and raises
+    the same ``ValueError`` after ``max_iter`` rounds, so both paths take
+    the same number of rounds and fail alike."""
     keys = list(keys)
     prev = None
     for _ in range(max_iter):
-        pdf, done = local(pdf)
-        cur = pdf[keys]
-        if done or (
-            prev is not None
-            and len(cur) == len(prev)
-            and cur.sort_values(keys, ignore_index=True).equals(
-                prev.sort_values(keys, ignore_index=True)
-            )
-        ):
-            return state.sparkSession.createDataFrame(
-                pa.Table.from_pandas(pdf, preserve_index=False), schema=schema
-            )
+        state, done = step(state)
+        cur = state[keys].sort_values(keys, ignore_index=True)
+        if done or (prev is not None and cur.equals(prev)):
+            return state
         prev = cur
     raise ValueError(f"{what} did not converge in {max_iter} rounds")
+
+
+def _cut_input(edges: DataFrame) -> tuple[DataFrame, pd.DataFrame | None]:
+    """Cut a graph operator's (src, dst) input once, by the eager
+    :func:`_materialize`, with a row-count ``Observation`` filled by the
+    same job. Returns the cut and, when it has fewer than ``_LOCAL_ROWS``
+    rows and no null id, its rows collected as pandas (one more job);
+    otherwise None, and the operator runs its distributed rounds from
+    the cut. The gate is read at call time.
+
+    Small graphs are bound by per-job overhead, not data: a distributed
+    operator costs several Spark jobs per round, the driver path two
+    before its result. The driver, not one ``mapInPandas`` task, runs it because a
+    worker raise would surface as a ``PythonException`` rather than the
+    ``max_iter`` ``ValueError``, and a cold Python worker start costs
+    seconds. An input with a null id takes the distributed path, whose
+    null handling the pandas operators do not repeat.
+    """
+    obs = Observation()
+    nulls = F.col("src").isNull() | F.col("dst").isNull()
+    cut = _materialize(
+        edges.select("src", "dst").observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(nulls, 1)).alias("nulls"),
+        )
+    )
+    got = obs.get
+    if got["n"] >= _LOCAL_ROWS or got["nulls"]:
+        return cut, None
+    return cut, cut.toArrow().to_pandas()
+
+
+def _node_codes(edges: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(src, dst, nodes): int64 codes of a pandas edge frame's ids, in id
+    order (a sorted factorize), so the pandas operators group and compare
+    integers whatever the id type; ``nodes[code]`` is the id back. Python
+    orders str by code point and Spark orders UTF-8 bytes, the same
+    order."""
+    n = len(edges)
+    codes, nodes = pd.factorize(
+        np.concatenate([edges["src"].to_numpy(), edges["dst"].to_numpy()]),
+        sort=True,
+    )
+    return codes[:n].astype(np.int64), codes[n:].astype(np.int64), nodes
+
+
+def _driver_frame(
+    cut: DataFrame, columns: dict[str, np.ndarray], counts: Sequence[str] = ()
+) -> DataFrame:
+    """The pandas result of a graph operator as a DataFrame of its Spark
+    path's schema: ``counts`` columns are long, the others take the input
+    cut's node type (the type ``least(src, dst)`` resolves to). One
+    partition, as the Spark path's small aggregates come out of AQE: a
+    local relation scans as up to one partition per core, and a caller
+    writing it (the refresh's assignment state) wrote that many files."""
+    node = cut.select(F.least("src", "dst")).schema[0].dataType
+    schema = StructType(
+        [StructField(c, LongType() if c in counts else node) for c in columns]
+    )
+    table = pa.Table.from_pandas(pd.DataFrame(columns), preserve_index=False)
+    return cut.sparkSession.createDataFrame(table, schema=schema).coalesce(1)
 
 
 def normalize_surface(col):
@@ -383,10 +435,21 @@ def lsh_candidate_pairs(
     return pairs_small.unionByName(pairs_big).distinct()
 
 
+def _jaccard(a: str, b: str) -> Column:
+    """|A ∩ B| / |A ∪ B| of two DISTINCT arrays, the union size taken as
+    |A| + |B| − |A ∩ B| instead of from an ``array_union``."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter / (F.size(a) + F.size(b) - inter)
+
+
 def score_links(
     pairs: DataFrame, mentions: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
-    """(id_a, id_b, score): exact trigram Jaccard on candidate pairs only."""
+    """(id_a, id_b, score): exact trigram Jaccard on candidate pairs only.
+
+    Trigram arrays are distinct (:func:`_trigrams`), so the union size is
+    ``|A| + |B| − |A ∩ B|``: the same double without building the union
+    array."""
     tri = with_trigrams(mentions).select("mention_id", "trigrams")
     a = tri.select(
         F.col("mention_id").alias("id_a"), F.col("trigrams").alias("tri_a")
@@ -400,10 +463,7 @@ def score_links(
         .select(
             "id_a",
             "id_b",
-            (
-                F.size(F.array_intersect("tri_a", "tri_b"))
-                / F.size(F.array_union("tri_a", "tri_b"))
-            ).alias("score"),
+            _jaccard("tri_a", "tri_b").alias("score"),
         )
         .filter(F.col("score") >= threshold)
     )
@@ -484,7 +544,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 def _stars_local(edges: pd.DataFrame) -> tuple[pd.DataFrame, bool]:
     """``_small_star(_large_star(edges))`` over a pandas frame, step for
-    step: the driver round of :func:`connected_components`."""
+    step: a round of :func:`_components_local`."""
     # large star: per-src min over the symmetrized edges, emitted (dst, m)
     # for every dst above its src
     src = np.concatenate([edges["src"].to_numpy(), edges["dst"].to_numpy()])
@@ -504,6 +564,27 @@ def _stars_local(edges: pd.DataFrame) -> tuple[pd.DataFrame, bool]:
     return both[both["src"] != both["dst"]].drop_duplicates(), False
 
 
+def _components_local(cut: DataFrame, edges: pd.DataFrame, max_iter: int) -> DataFrame:
+    """:func:`connected_components` of a collected edge frame on the
+    driver, step for step: the same star rounds under
+    :func:`pandas_fixpoint`, then the same per-id min over every node of
+    the input and the converged stars."""
+    src, dst, nodes = _node_codes(edges)
+    keep = src != dst
+    stars = pandas_fixpoint(
+        _stars_local,
+        pd.DataFrame({"src": src[keep], "dst": dst[keep]}),
+        ("src", "dst"),
+        max_iter,
+        "connected components",
+    )
+    # every code is a node of the input; each star lowers its src's
+    # component to its root
+    comp = np.arange(len(nodes), dtype=np.int64)
+    np.minimum.at(comp, stars["src"].to_numpy(), stars["dst"].to_numpy())
+    return _driver_frame(cut, {"id": nodes, "component": nodes[comp]})
+
+
 def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """(id, component): component = min node id in the component.
 
@@ -511,20 +592,22 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     whose only edge is a self-loop keeps its own id (so callers pass
     isolated nodes as self-loops). One large-star + small-star
     alternation per :func:`fixpoint` round; the alternation is idempotent
-    at the fixpoint, so an unchanged edge set ends the loop. An edge set
-    under the fixpoint's size gate runs the same alternation in pandas
-    on the driver (:func:`_stars_local`), round for round: the deploy
-    KG's similarity graph (~40k edges, 5 rounds) then costs one collect
-    instead of ~4 Spark jobs per round, with ``max_iter`` and its
-    ``ValueError`` unchanged. Larger graphs keep the distributed rounds.
-    (Refuted alternatives — hash-to-min, a degree-1 pre-peel, two
-    alternations per round — are measured in BASELINE.md,
-    CC_PEEL_AB.json and OPTIMIZATION_r08.md.)
+    at the fixpoint, so an unchanged edge set ends the loop. An input
+    under the size gate of :func:`_cut_input` runs whole on the driver
+    (:func:`_components_local`), round for round: the deploy KG's
+    similarity graph (~40k edges, 5 rounds) then costs the input cut and
+    one collect instead of ~4 Spark jobs per round plus the final min,
+    with ``max_iter`` and its ``ValueError`` unchanged. Larger graphs
+    keep the distributed rounds. (Refuted alternatives — hash-to-min, a
+    degree-1 pre-peel, two alternations per round — are measured in
+    BASELINE.md, CC_PEEL_AB.json and OPTIMIZATION_r08.md.)
     """
-    # Materialize the input once: the edge lineage is typically expensive
-    # (an LSH self-join), and it is consumed by the iteration seed AND the
+    # Cut the input once: the edge lineage is typically expensive (an LSH
+    # self-join), and it is consumed by the iteration seed AND the
     # node-set below — without this it would be recomputed per consumer.
-    base = _materialize(edges.select("src", "dst"))
+    base, small = _cut_input(edges)
+    if small is not None:
+        return _components_local(base, small, max_iter)
     # no distinct on the seed: duplicate edges change neither the large
     # star's per-src min nor the small star's leading distinct, so every
     # round's output is the same set, one shuffle cheaper
@@ -534,7 +617,6 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         ("src", "dst"),
         max_iter,
         "connected components",
-        local=_stars_local,
     )
 
     # final edges are (node -> root) stars and a root is its component's
@@ -663,7 +745,9 @@ def mention_edges(
         # base materialization repeated most of it. Lazily cut, the hits
         # blocks materialize inside the first consuming job (the CC base
         # eager checkpoint, which computes the mentions blocks anyway)
-        # and canonical_map's comp_alias branch still reuses them.
+        # and canonical_map's comp_alias branch still reuses them. The
+        # call itself still runs one small job: building the adaptive
+        # plan's RDD broadcasts the alias dictionary (see _materialize).
         # A/B on q_kg_triples: identical triples, first-run wall
         # 12.2 s -> 3.1 s (the duplicated upstream pass), warm ~0.3 s
         # saved (one job boundary).

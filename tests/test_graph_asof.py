@@ -348,11 +348,19 @@ def test_kcore_matches_bruteforce(spark, fixpoint_paths):
             deg[b] = deg.get(b, 0) + 1
         return deg
 
+    # and a random graph on unpadded string ids, whose string order is not
+    # their number order ("n10" < "n9")
+    import random
+
+    rng = random.Random(29)
+    rand = [(f"n{rng.randrange(25)}", f"n{rng.randrange(25)}") for _ in range(70)]
+    rdf = spark.createDataFrame(rand, "src string, dst string")
     for _ in fixpoint_paths:
-        for k in (2, 3):
-            want = peel(edges, k)
-            got = {r["node"]: r["deg"] for r in kcore(df, k=k).collect()}
-            assert got == want, (k, got, want)
+        for g, gdf in ((edges, df), (rand, rdf)):
+            for k in (2, 3):
+                want = peel(g, k)
+                got = {r["node"]: r["deg"] for r in kcore(gdf, k=k).collect()}
+                assert got == want, (k, got, want)
     # k=3: pendant, triangle and bridge all peel away; the clique stays
     assert set(peel(edges, 3)) == {"c0", "c1", "c2", "c3"}
 
@@ -512,15 +520,22 @@ def test_truss_matches_pure_python(spark, fixpoint_paths):
     raw = {(rng.randrange(30), rng.randrange(30)) for _ in range(120)}
     und = sorted({(min(a, b), max(a, b)) for a, b in raw if a != b})
     df = spark.createDataFrame(und, "src long, dst long")
+    # the same graph on unpadded string ids, whose order differs ("n10" <
+    # "n9"), given in both directions
+    sund = sorted({tuple(sorted((f"n{a}", f"n{b}"))) for a, b in und})
+    sdf = spark.createDataFrame(
+        [(f"n{b}", f"n{a}") for a, b in und], "src string, dst string"
+    )
     empty = spark.createDataFrame([], "src long, dst long")
     for _ in fixpoint_paths:
-        for k in (2, 3, 4):
-            want = _py_truss(und, k)
-            got = {
-                (r["node_a"], r["node_b"]): r["support"]
-                for r in truss(df, k=k).collect()
-            }
-            assert got == want, k
+        for g, gdf in ((und, df), (sund, sdf)):
+            for k in (2, 3, 4):
+                want = _py_truss(g, k)
+                got = {
+                    (r["node_a"], r["node_b"]): r["support"]
+                    for r in truss(gdf, k=k).collect()
+                }
+                assert got == want, k
 
         assert [truss(empty, k=k).count() for k in (2, 3)] == [0, 0]
 

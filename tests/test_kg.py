@@ -58,9 +58,11 @@ def test_connected_components_chain_and_star(spark, fixpoint_paths):
         assert len(comp) == 31
 
 
-def _assert_components_match_union_find(spark, cases):
+def _assert_components_match_union_find(spark, cases, path):
     # component = min node id, checked against the oracle's union-by-min
-    # union-find; self-loop-only nodes keep their own id
+    # union-find; self-loop-only nodes keep their own id. Ids keep their
+    # type, and only the driver path (``path`` of fixpoint_paths) returns
+    # driver data.
     from ner_backend_spark.oracle.pyoracle import _UnionFind
 
     for raw in cases:
@@ -68,12 +70,14 @@ def _assert_components_match_union_find(spark, cases):
         for a, b in raw:
             uf.union(a, b)
         want = {n: uf.find(n) for e in raw for n in e}
-        edges = spark.createDataFrame(raw, "src long, dst long")
-        got = {
-            r["id"]: r["component"]
-            for r in kg.connected_components(edges).collect()
-        }
+        t = "string" if isinstance(raw[0][0], str) else "bigint"
+        edges = spark.createDataFrame(raw, f"src {t}, dst {t}")
+        out = kg.connected_components(edges)
+        assert out.schema.simpleString() == f"struct<id:{t},component:{t}>"
+        got = {r["id"]: r["component"] for r in out.collect()}
         assert got == want, raw
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("LocalTableScan" in plan) == (path == "local"), (path, plan)
 
 
 def test_connected_components_hashmin_equivalence(spark, fixpoint_paths):
@@ -87,9 +91,13 @@ def test_connected_components_hashmin_equivalence(spark, fixpoint_paths):
         [(0, i) for i in range(1, 12)] + [(50, 50)],          # star + loner
         [(rng.randrange(60), rng.randrange(60)) for _ in range(90)],
         [(rng.randrange(200), rng.randrange(200)) for _ in range(120)],
+        # unpadded string ids, whose order is not their number order
+        # ("n10" < "n9")
+        [(f"n{rng.randrange(40)}", f"n{rng.randrange(40)}") for _ in range(45)]
+        + [("n9", "n10"), ("solo", "solo")],
     ]
-    for _ in fixpoint_paths:
-        _assert_components_match_union_find(spark, cases)
+    for path in fixpoint_paths:
+        _assert_components_match_union_find(spark, cases, path)
 
 
 def test_connected_components_peel1_equivalence(spark, fixpoint_paths):
@@ -107,8 +115,8 @@ def test_connected_components_peel1_equivalence(spark, fixpoint_paths):
         [(rng.randrange(60), rng.randrange(60)) for _ in range(90)],
         [(rng.randrange(300), rng.randrange(300)) for _ in range(150)],
     ]
-    for _ in fixpoint_paths:
-        _assert_components_match_union_find(spark, cases)
+    for path in fixpoint_paths:
+        _assert_components_match_union_find(spark, cases, path)
 
 
 def _chorded_chain_op(spark, op, **kw):
@@ -139,10 +147,11 @@ def test_fixpoint_max_iter_exhaustion_raises(spark, op, fixpoint_paths):
 
 
 # Spark jobs per operator on the chorded chain below the size gate
-# (local[4], AQE on): its input cuts, the state collect and the
-# post-processing, however many rounds it takes. The distributed rounds
-# took 30 (CC), 85 (k-core, one end node peeled per round) and 17 (truss).
-SMALL_FIXPOINT_JOBS = {"components": 5, "kcore": 6, "truss": 11}
+# (local[4], AQE on): the input cut, its collect and the one-partition
+# scan of the driver-built result, however many rounds it takes. With the
+# gate at 0 the distributed rounds took 27 (CC), 86 (k-core, one end node
+# peeled per round) and 17 (truss).
+SMALL_FIXPOINT_JOBS = {"components": 3, "kcore": 3, "truss": 3}
 
 
 @pytest.mark.parametrize("op", ["components", "kcore", "truss"])

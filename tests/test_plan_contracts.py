@@ -286,7 +286,8 @@ def test_truss_round_plans_no_join(spark, monkeypatch):
     size gate at 0) is two windows — support per edge, then its minimum
     per triangle — with no join (no re-orientation, no wedge join, no
     edge⋈support join) and at most two exchanges. The first plan cut is
-    the fixpoint's input, the triangle enumeration itself."""
+    the operator's input; the triangle enumeration's cut goes through
+    graph.py's own import of _materialize, which the spy does not see."""
     monkeypatch.setattr(kg, "_LOCAL_ROWS", 0)
     edges = spark.range(400).select(
         (F.col("id") % 23).alias("src"), ((F.col("id") * 7) % 23).alias("dst")

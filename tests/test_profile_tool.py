@@ -32,4 +32,12 @@ def test_profile_tool_reconciles_walls():
         assert q["jobs"] >= 1, name
         wall = q["median"]
         assert abs(wall - (q["driver_gap_s"] + q["busy_s"])) <= 0.1 * wall, (name, q)
+        parts = [
+            q["gap_outside_sql_s"], q["gap_to_first_job_s"], q["gap_between_jobs_s"]
+        ]
+        assert min(parts) >= 0, (name, q)
+        assert abs(sum(parts) - q["driver_gap_s"]) <= 0.1 * q["driver_gap_s"], (name, q)
+        # both queries run SQL executions with jobs: some of the gap is
+        # inside them
+        assert q["gap_to_first_job_s"] + q["gap_between_jobs_s"] > 0, (name, q)
         assert "udf_self_s" in q and "error_lines" in q, name

@@ -168,3 +168,47 @@ def test_write_outputs_runs_model_pass_once(spark, tmp_path):
     write_outputs(out, str(tmp_path / "report"), n_buckets=4)
     n_calls = len(glob.glob(f"{calls_dir}/*"))
     assert n_calls == 40, f"model ran {n_calls} times for 40 docs"
+
+
+def test_python_task_cost_flat_in_partition_count(spark):
+    """Python tasks pay no per-task re-read of the zips on sys.path. The
+    worker calls importlib.invalidate_caches() once per task; before
+    CPython 3.13 that re-read 16 zip directories a task, until importing
+    ner_backend_spark made unchanged archives skip it. On a 4-vCPU host,
+    local[4], best of 3 each: 64 partitions of an identity mapInPandas
+    cost 1.0 s more than 4 with the skip and 4.4 s more without."""
+    import sys
+    import time
+
+    def identity(batches):
+        import zipimport
+
+        import ner_backend_spark  # noqa: F401
+
+        wrapper = zipimport.zipimporter.invalidate_caches
+        installed = wrapper.__module__ == "ner_backend_spark"
+        for pdf in batches:
+            yield pdf.assign(installed=installed)
+
+    def best_wall(n: int) -> float:
+        df = spark.range(0, 5000, 1, n).mapInPandas(
+            identity, "id long, installed boolean"
+        )
+        walls = []
+        for _ in range(3):
+            t = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            walls.append(time.perf_counter() - t)
+        return min(walls)
+
+    installed = {
+        r["installed"]
+        for r in spark.range(0, 64, 1, 8)
+        .mapInPandas(identity, "id long, installed boolean")
+        .select("installed")
+        .distinct()
+        .collect()
+    }
+    assert installed == {sys.version_info < (3, 13)}
+    t4, t64 = best_wall(4), best_wall(64)
+    assert t64 - t4 < 2.25, (t4, t64)

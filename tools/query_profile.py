@@ -19,6 +19,14 @@ rep; for the median rep, its jobs' event-log totals, ``driver_gap_s``
 unclipped, so ``wall - driver_gap_s - busy_s`` is job time outside the
 span) and ``job_intervals`` (from the span start); from the profiled
 pass, ``udf_pass_s`` and ``udf_self_s``, the pstats ``total_tt`` sum.
+
+``driver_gap_s`` is split three ways from the SQL execution events of
+the same event log, an execution counted with its nested ones (same root
+id): ``gap_outside_sql_s``, no execution open (driver Python, analysis);
+``gap_to_first_job_s``, an execution open but none of its jobs started
+yet (optimization, physical planning); ``gap_between_jobs_s``, after an
+open execution's first job (AQE re-planning, stage submission, result
+handling). The three sum to ``driver_gap_s``.
 Python-kernel time is UDF self time only: its Arrow serialization share
 is neither split out nor estimated.
 """
@@ -49,6 +57,63 @@ def _busy_seconds(intervals) -> float:
         total += max(e - max(s, end), 0.0)
         end = max(end, e)
     return total
+
+
+def _sql_executions(log_dir: str) -> tuple[dict, dict]:
+    """(executions, first_job): each root SQL execution's [start, end]
+    seconds, and the submission time of its first job, from the same event
+    log files ``read_event_log`` reads."""
+    root, spans, first = {}, {}, {}
+    for path in sorted(glob.glob(os.path.join(log_dir, "**", "*"), recursive=True)):
+        if not os.path.basename(path).startswith(("events", "local-")):
+            continue
+        with open(path) as f:
+            for line in f:
+                ev = json.loads(line)
+                kind = ev.get("Event", "")
+                if kind.endswith("SparkListenerSQLExecutionStart"):
+                    x = ev["executionId"]
+                    root[x] = ev.get("rootExecutionId", x)
+                    spans.setdefault(root[x], [ev["time"] / 1e3, float("inf")])
+                elif kind.endswith("SparkListenerSQLExecutionEnd"):
+                    x = ev["executionId"]
+                    if root.get(x) == x:
+                        spans[x][1] = ev["time"] / 1e3
+                elif kind == "SparkListenerJobStart":
+                    x = (ev.get("Properties") or {}).get("spark.sql.execution.id")
+                    if x is not None and int(x) in root:
+                        r = root[int(x)]
+                        t = ev["Submission Time"] / 1e3
+                        first[r] = min(first.get(r, t), t)
+    return spans, first
+
+
+def _gap_split(sp, intervals, executions: dict, first_job: dict) -> dict:
+    """``driver_gap_s`` of ``sp`` (its wall with none of ``intervals``
+    running) split by the SQL executions open at each instant."""
+    lo, hi = sp.start, sp.end
+    open_x = {x: (s, e) for x, (s, e) in executions.items() if s < hi and e > lo}
+    cuts = {lo, hi}
+    for s, e in [*intervals, *open_x.values()]:
+        cuts.update(t for t in (s, e) if lo < t < hi)
+    cuts.update(t for x, t in first_job.items() if x in open_x and lo < t < hi)
+    parts = dict.fromkeys(
+        ("gap_outside_sql_s", "gap_to_first_job_s", "gap_between_jobs_s"), 0.0
+    )
+    cuts = sorted(cuts)
+    for a, b in zip(cuts, cuts[1:]):
+        t = (a + b) / 2
+        if any(s <= t < e for s, e in intervals):
+            continue
+        inside = [x for x, (s, e) in open_x.items() if s <= t < e]
+        if not inside:
+            key = "gap_outside_sql_s"
+        elif any(first_job.get(x, hi) <= t for x in inside):
+            key = "gap_between_jobs_s"
+        else:
+            key = "gap_to_first_job_s"
+        parts[key] += b - a
+    return parts
 
 
 def _udf_self_seconds(spark, work: str) -> float:
@@ -105,6 +170,7 @@ def profile(names: list[str], reps: int, work: str, capture: StderrCapture) -> d
     capture.new_error_lines()
     stamp["error_lines"] = capture.total
     attribute_event_log(tracer, read_event_log(f"{work}/events"))
+    executions, first_job = _sql_executions(f"{work}/events")
 
     out = {}
     for name, sps in timed.items():
@@ -119,6 +185,10 @@ def profile(names: list[str], reps: int, work: str, capture: StderrCapture) -> d
             **{k: round(v, 3) for k, v in med.engine.items() if k != "job_intervals"},
             "busy_s": round(_busy_seconds(ivs), 3),
             "driver_gap_s": round(driver_gap_seconds(tracer, med), 3),
+            **{
+                k: round(v, 3)
+                for k, v in _gap_split(med, ivs, executions, first_job).items()
+            },
             "job_intervals": [
                 [round(s - med.start, 3), round(e - med.start, 3)] for s, e in ivs
             ],
