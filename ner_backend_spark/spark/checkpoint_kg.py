@@ -34,6 +34,7 @@ from pyspark.sql.types import (
 
 from .checkpoint import (
     STATUS_COMPLETED,
+    alias_fingerprint,
     append_rows,
     check_lineage,
     completed_rows,
@@ -94,16 +95,12 @@ class CheckpointedKgRunner:
         base_path: str,
         alias_df: DataFrame | None = None,
         threshold: float = 0.5,
-        num_hashes: int = 15,
-        bands: int = 5,
         max_bucket_size: int | None = None,
     ):
         self.spark = spark
         self.base_path = base_path
         self.alias_df = alias_df
         self.threshold = threshold
-        self.num_hashes = num_hashes
-        self.bands = bands
         self.max_bucket_size = max_bucket_size
 
     def _path(self, stage: str) -> str:
@@ -129,9 +126,11 @@ class CheckpointedKgRunner:
     def _lineage_params(self) -> dict:
         return {
             "threshold": self.threshold,
-            "num_hashes": self.num_hashes,
-            "bands": self.bands,
+            # has_alias stays beside alias_fp so state written before
+            # alias_fp was recorded still refuses a dictionary added or
+            # removed on resume
             "has_alias": self.alias_df is not None,
+            "alias_fp": alias_fingerprint(self.alias_df),
             "max_bucket_size": self.max_bucket_size,
         }
 
@@ -165,12 +164,11 @@ class CheckpointedKgRunner:
             self._read("mentions"),
             self.alias_df,
             self.threshold,
-            self.num_hashes,
-            self.bands,
             self.max_bucket_size,
             # only the edges are committed here; the canonical stage
             # re-derives alias hits from the on-disk mentions table, so
-            # eagerly materializing hits would be pure thrown-away work
+            # the hits cut would only cost the alias broadcast job its
+            # call runs
             materialize_hits=False,
         )
         return edges

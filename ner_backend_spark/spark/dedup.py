@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
-from .kg import _jaccard
+from .kg import _jaccard, bucket_pairs
 
 _MERSENNE = (1 << 61) - 1
 _HASH_RANGE = 1 << 32
@@ -467,23 +467,17 @@ def winnow_near_duplicates(
 ) -> DataFrame:
     """(id_a, id_b, n_shared): doc pairs sharing >= min_shared fingerprints.
 
-    The inverted-index formulation: fingerprints are the join key, so the
-    shuffle moves (fp, id) postings, never document pairs. ``max_postings``
-    drops stop-fingerprints (an fp shared by m docs emits O(m^2) pairs in
-    one join group — boilerplate shared by everything, standard winnowing
-    practice to discard), the same skew rule as the KG bucket cap.
+    The inverted-index formulation: each fingerprint is a bucket of
+    :func:`kg.bucket_pairs`, so the shuffle moves (fp, id) postings, never
+    document pairs, and ``n_shared`` counts the pair's rows, one per
+    shared fingerprint. ``max_postings`` is its cap: it drops
+    stop-fingerprints (an fp shared by m docs emits O(m^2) pairs —
+    boilerplate shared by everything, standard winnowing practice to
+    discard).
     """
     fps = winnow_fingerprints(df, id_col, text_col, k, window)
-    sizes = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("_postings"))
-    fps = (
-        fps.join(sizes.filter(F.col("_postings") <= max_postings), "fp")
-        .drop("_postings")
-    )
-    a = fps.select(F.col("fp"), F.col(id_col).alias("id_a"))
-    b = fps.select(F.col("fp"), F.col(id_col).alias("id_b"))
     return (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(fps, ["fp"], id_col, max_postings)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
@@ -593,11 +587,12 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Distinct (id_a < id_b) pairs sharing >=1 LSH band bucket.
 
-    Scale shape: explode to bands (bands x |docs| rows), shuffle once on
-    (band, band_hash), self-join within buckets. Giant buckets (degenerate
-    content) are the skew risk: one bucket's O(m^2) pair output is a single
-    task. ``max_bucket_size`` drops buckets above the cap (boilerplate
-    documents, not meaningful near-dup candidates at web scale).
+    Scale shape: explode to bands (bands x |docs| rows), then the
+    (band, band_hash) buckets are paired by :func:`kg.bucket_pairs`, which
+    splits a hot bucket's O(m^2) pairs over many tasks.
+    ``max_bucket_size`` is its cap: buckets above it (boilerplate
+    documents, not meaningful near-dup candidates at web scale) are
+    dropped.
     """
     banded = signatures.select(
         "id",
@@ -614,36 +609,9 @@ def lsh_candidate_pairs(
             )
         ).alias("band", "band_hash"),
     )
-    if max_bucket_size is not None:
-        # Cap as a broadcast ANTI-join against only the OVERSIZED keys:
-        # bucket sizes come from a partial-aggregating groupBy (distinct
-        # keys shuffle, never rows), the oversized set is tiny by
-        # construction (<= rows/cap keys, and degenerate buckets are the
-        # pathology, not the norm), and the banded rows themselves never
-        # take an extra shuffle for the cap. If a corpus really produced
-        # millions of oversized buckets, raise the cap or pre-filter the
-        # boilerplate rather than broadcasting that set.
-        oversized = (
-            banded.groupBy("band", "band_hash")
-            .agg(F.count(F.lit(1)).alias("_bucket_size"))
-            .filter(F.col("_bucket_size") > max_bucket_size)
-            .drop("_bucket_size")
-        )
-        banded = banded.join(
-            F.broadcast(oversized), ["band", "band_hash"], "left_anti"
-        )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
+    return bucket_pairs(
+        banded, ["band", "band_hash"], "id", max_bucket_size
+    ).distinct()
 
 
 def estimated_jaccard(signatures: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -686,20 +654,20 @@ def near_duplicates_minhash(
 
     ``max_bucket_size`` (threaded to :func:`lsh_candidate_pairs`) drops
     degenerate band buckets — empty/boilerplate content collapsing into one
-    bucket would otherwise emit O(m^2) pairs in a single task (VERDICT r2
-    "What's wrong" #1; same skew rule as KG_MAX_BUCKET).
+    bucket is not a near-dup signal (VERDICT r2 "What's wrong" #1; the
+    same cap as KG_MAX_BUCKET, :func:`kg.drop_oversized`).
     """
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
     # localCheckpoint (not persist) so the one-pass signature computation is
     # reused by both the banding join and the verification join without
     # leaving a persisted RDD behind after the query completes. eager=True:
-    # with a lazy checkpoint, the bucket-cap's broadcast-exchange job
-    # materializes it mid-flight and truncates lineage while the consuming
-    # job's earlier stages are still reporting — every late task-completion
-    # event then logs "attempted to access non-existent accumulator"
-    # (hundreds of DAGScheduler ERROR lines per run, the round-3 bench-tail
-    # trace). Eager materialization completes as its own job before any
-    # consumer plans against it; measured timing is identical.
+    # with a lazy checkpoint, a broadcast-exchange job of the bucket
+    # self-join materializes it mid-flight and truncates lineage while the
+    # consuming job's earlier stages are still reporting — every late
+    # task-completion event then logs "attempted to access non-existent
+    # accumulator" (hundreds of DAGScheduler ERROR lines per run, the
+    # round-3 bench-tail trace). Eager materialization completes as its own
+    # job before any consumer plans against it; measured timing is identical.
     sigs = sigs.localCheckpoint(eager=True)
     pairs = lsh_candidate_pairs(
         sigs, bands, num_hashes // bands, max_bucket_size=max_bucket_size
@@ -903,58 +871,33 @@ def simhash_near_duplicates(
     """(id_a, id_b, hamming) pairs with Hamming distance <= max_hamming.
 
     Blocking via :func:`simhash_blocking` permuted-block tables: any pair
-    within the radius shares at least one full table key, so the bucket
-    join finds all of them without an all-pairs comparison, with table keys
-    wide enough (~25 bits at r=3) that buckets stay small at web scale.
-    ``max_bucket_size`` drops buckets above the cap — degenerate/boilerplate
-    fingerprints whose O(m^2) pair output would serialize into one task
-    (same skew rule as the KG and winnowing caps).
+    within the radius shares at least one full table key, so the
+    (table, key) buckets paired by :func:`kg.bucket_pairs` hold all of
+    them without an all-pairs comparison, with table keys wide enough
+    (~25 bits at r=3) that buckets stay small at web scale.
+    ``max_bucket_size`` is its cap: it drops degenerate/boilerplate
+    fingerprint buckets, whose pairs are not near-dup evidence.
     """
     sigs = simhash_signatures(df, id_col, text_col)
-    # one kernel pass: the plan references sigs up to 4x (size agg, anti
-    # left, and both self-join sides) — (id, simhash) is 16 bytes/doc.
+    # one kernel pass: the table keys and the fingerprints joined back onto
+    # the distinct pairs both read sigs — (id, simhash) is 16 bytes/doc.
     # eager=True for the same reason as near_duplicates_minhash: a lazy
-    # checkpoint materialized by the cap's broadcast job truncates lineage
+    # checkpoint materialized by a broadcast job truncates lineage
     # mid-flight and floods the log with non-existent-accumulator ERRORs.
     sigs = sigs.localCheckpoint(eager=True)
     tables = simhash_blocking(max_hamming, n_blocks)
     keyed = sigs.select(
         "id",
-        "simhash",
         F.posexplode(
             F.array(*[_table_key_expr(blocks) for blocks in tables])
         ).alias("table_idx", "key"),
     )
-    if max_bucket_size is not None:
-        # same broadcast-anti-join-of-oversized-keys cap as
-        # lsh_candidate_pairs (see the rationale there)
-        oversized = (
-            keyed.groupBy("table_idx", "key")
-            .agg(F.count(F.lit(1)).alias("_bucket_size"))
-            .filter(F.col("_bucket_size") > max_bucket_size)
-            .drop("_bucket_size")
-        )
-        keyed = keyed.join(
-            F.broadcast(oversized), ["table_idx", "key"], "left_anti"
-        )
-    left = keyed.alias("l")
-    right = keyed.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.table_idx") == F.col("r.table_idx"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.col("l.simhash").alias("sim_a"),
-            F.col("r.simhash").alias("sim_b"),
-        )
-        .distinct()
-    )
-    return cand.select(
+    pairs = bucket_pairs(
+        keyed, ["table_idx", "key"], "id", max_bucket_size
+    ).distinct()
+    sim_a = sigs.select(F.col("id").alias("id_a"), F.col("simhash").alias("sim_a"))
+    sim_b = sigs.select(F.col("id").alias("id_b"), F.col("simhash").alias("sim_b"))
+    return pairs.join(sim_a, "id_a").join(sim_b, "id_b").select(
         "id_a",
         "id_b",
         F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))

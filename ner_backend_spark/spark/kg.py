@@ -8,8 +8,9 @@ schema.go:129-144 — this layer canonicalizes and materializes triples):
     -> alias candidates    broadcast alias-dictionary join (exact on the
                            normalized surface) — map-side, no shuffle
     -> LSH blocking        char-trigram MinHash signatures computed entirely
-                           JVM-side; band-bucket self-join proposes pairs
-                           (never all-pairs)
+                           JVM-side; the bucket self-join (bucket_pairs,
+                           shared with every near-duplicate operator)
+                           proposes pairs (never all-pairs)
     -> link scoring        exact trigram Jaccard on proposed pairs
     -> connected components alternating large-star / small-star (window-min
                            form, no collect_list, so no high-degree-node
@@ -43,10 +44,19 @@ from pyspark.sql.types import LongType, StructField, StructType
 # spark.driver.maxResultSize.
 _LOCAL_ROWS = 250_000
 
-# LSH band buckets above this many members take lsh_candidate_pairs'
-# chunked self-join, split into this many chunk groups
+# Buckets above this many members take bucket_pairs' chunked self-join,
+# split into this many chunk groups; read at call time
 _CHUNK_THRESHOLD = 256
 _CHUNK_GROUPS = 32
+
+# The LSH banding of every KG mention (band_signatures), read at call
+# time; the oracle's _KG_NUM_HASHES and _KG_BANDS mirror it. 5 bands x 3
+# rows collide ~97% of the time at Jaccard 0.8 (the linking regime) and
+# ~13% at 0.3 — selective enough that dissimilar-surface pairs don't
+# flood the downstream exact-Jaccard verification (2 rows/band collides
+# 43% of the time at J=0.3).
+_NUM_HASHES = 15
+_BANDS = 5
 
 
 def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -65,7 +75,7 @@ def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     Without a checkpoint dir (local[*] benches), fall back to
     ``localCheckpoint``.
 
-    ``eager=False`` (reuse-only sites: the banded self-join input, the
+    ``eager=False`` (reuse-only sites: the mentions, the alias hits, the
     entities frame consumed twice): ``localCheckpoint`` — NOT ``persist``,
     whose entry in the SQL CacheManager is held strongly and is never
     reclaimed by the ContextCleaner (verified: the entry survives del +
@@ -279,20 +289,17 @@ def alias_candidates(mentions: DataFrame, alias_df: DataFrame) -> DataFrame:
     )
 
 
-def band_signatures(
-    mentions: DataFrame,
-    num_hashes: int = 15,
-    bands: int = 5,
-) -> DataFrame:
+def band_signatures(mentions: DataFrame) -> DataFrame:
     """(mention_id, label, band, band_hash): the LSH banding of each mention.
 
-    sig[i] = array_min(transform(trigrams, t -> hash(t, i))); band_hash =
-    hash(slice(sig, ...)). Pure column expressions — a mention's banding
+    sig[i] = array_min(transform(trigrams, t -> hash(t, i))) for
+    ``_NUM_HASHES`` seeds; band_hash = hash(slice(sig, ...)) for ``_BANDS``
+    bands. Pure column expressions — a mention's banding
     depends only on its own surface, which is what makes the banding table
     APPEND-ONLY under incremental construction (streaming/kg_update.py):
     new mentions' bands join against stored bands without recomputing them.
     """
-    rows_per_band = num_hashes // bands
+    rows_per_band = _NUM_HASHES // _BANDS
     sig = with_trigrams(mentions).select(
         "mention_id",
         "label",
@@ -303,7 +310,7 @@ def band_signatures(
                         f"transform(trigrams, t -> hash(t, {i}))"
                     )
                 )
-                for i in range(num_hashes)
+                for i in range(_NUM_HASHES)
             ]
         ).alias("signature"),
     )
@@ -316,7 +323,7 @@ def band_signatures(
                     F.hash(
                         F.slice("signature", b * rows_per_band + 1, rows_per_band)
                     )
-                    for b in range(bands)
+                    for b in range(_BANDS)
                 ]
             )
         ).alias("band", "band_hash"),
@@ -324,21 +331,74 @@ def band_signatures(
 
 
 def lsh_candidate_pairs(
-    mentions: DataFrame,
-    num_hashes: int = 15,
-    bands: int = 5,
-    max_bucket_size: int | None = None,
+    mentions: DataFrame, max_bucket_size: int | None = None
 ) -> DataFrame:
     """(id_a, id_b) same-label mention pairs sharing >=1 MinHash band bucket.
 
-    Signatures are built with built-in functions only:
-    sig[i] = array_min(transform(trigrams, t -> hash(t, i))). Band hash =
-    hash(slice(sig, ...)). Shuffle key is (band, band_hash, label).
+    The buckets are :func:`band_signatures`' (band, band_hash) per label,
+    paired by :func:`bucket_pairs`: a mixed-label bucket is one bucket per
+    label, so its occupancy and its cap count each label apart.
+    ``max_bucket_size`` is the SEMANTIC guard: at web scale million-member
+    buckets are template strings, not linkable entities, and even chunked
+    enumeration of 10^12 pairs is work that should not happen.
+    """
+    # the banding map (trigrams + _NUM_HASHES hash passes per mention) is
+    # the CPU-heaviest narrow stage of the KG tail; the mentions frame
+    # arrives AQE-coalesced to a handful of partitions (it's small in
+    # BYTES), which caps this stage's parallelism — a round-6 stage probe
+    # measured the map running as 12 tasks on 16 cores (aggregate task
+    # time ~5x the stage wall available to it). Fan it out first; on a
+    # 100 TB input the scan provides the width and this is a no-op.
+    from .session import ensure_parallelism
 
-    Default banding 5 bands x 3 rows: collision probability ≈ 97% at
-    Jaccard 0.8 (the linking regime), ≈ 13% at 0.3 — selective enough that
-    dissimilar-surface pairs don't flood the downstream exact-Jaccard
-    verification (2 rows/band collides 43% of the time at J=0.3).
+    banded = band_signatures(ensure_parallelism(mentions))
+    return bucket_pairs(
+        banded, ("band", "band_hash", "label"), "mention_id", max_bucket_size
+    ).distinct()
+
+
+def _bucket_sizes(rows: DataFrame, keys: Sequence[str]) -> DataFrame:
+    return rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
+
+
+def _keys_over(sizes: DataFrame, keys: Sequence[str], n: int) -> DataFrame:
+    """The keys of the buckets in ``sizes`` holding more than ``n`` rows,
+    marked for a broadcast join."""
+    return F.broadcast(sizes.filter(F.col("_n") > n).select(*keys))
+
+
+def drop_oversized(
+    rows: DataFrame, keys: Sequence[str], cap: int | None
+) -> DataFrame:
+    """``rows`` without the buckets (rows with equal ``keys``) of more
+    than ``cap`` rows; every row when ``cap`` is None.
+
+    The one bucket cap of the KG, dedup and similarity operators. Bucket
+    sizes come from a partial-aggregating groupBy, so distinct keys
+    shuffle, never rows; the oversized keys (at most rows/cap of them,
+    and degenerate buckets are the pathology, not the norm) are dropped
+    by a broadcast left-anti join, so the rows take no extra shuffle for
+    the cap. A corpus with millions of oversized buckets should raise the
+    cap or pre-filter its boilerplate rather than broadcast that set.
+    """
+    if cap is None:
+        return rows
+    return rows.join(
+        _keys_over(_bucket_sizes(rows, keys), keys, cap), list(keys), "left_anti"
+    )
+
+
+def bucket_pairs(
+    rows: DataFrame,
+    keys: Sequence[str],
+    id_col: str,
+    cap: int | None = None,
+) -> DataFrame:
+    """(id_a, id_b), ``id_a < id_b``, once for every bucket the two rows
+    share: the one bucket self-join of the KG blocking and every
+    near-duplicate operator. A bucket is the rows with equal ``keys``, and
+    an id appears at most once per bucket. Callers ``distinct()`` the
+    pairs, or count them (winnowing's shared fingerprints).
 
     Skew: a bucket of size m emits O(m^2) pairs, and a plain self-join
     generates ALL of them inside one task (join keys can't split below key
@@ -351,88 +411,58 @@ def lsh_candidate_pairs(
     (bucket, g) holds the m/G right rows of chunk g against the left rows
     of chunks <= g — the m^2 work spreads over G groups (max m^2/G per
     task) at a shuffle-replication cost of G/2 per hot row only. Exact same
-    candidate set as the plain join; small buckets keep the cheap path.
+    pairs as the plain join; small buckets keep the cheap path.
 
-    ``max_bucket_size`` remains the optional SEMANTIC guard: buckets above
-    it are dropped entirely — at web scale million-member buckets are
-    template strings, not linkable entities, and even chunked enumeration
-    of 10^12 pairs is work that should not happen.
+    One groupBy on ``keys`` sizes the buckets for both the ``cap``
+    (:func:`drop_oversized`) and the routing: the hot keys, like the
+    oversized ones, are a tiny set that is broadcast, so neither decision
+    shuffles rows (the cap's plan and the routing's plan share the
+    groupBy's exchange). The rows are cut EAGERLY first: every branch and
+    both broadcast jobs read them, and a lazy cut that a broadcast job
+    materializes mid-query truncates lineage while the consuming job's
+    earlier stages are still reporting — every late task-completion event
+    then logs "attempted to access non-existent accumulator" (hundreds of
+    DAGScheduler ERROR lines per run, the round-3 bench-tail trace).
     """
-    # the banding map (trigrams + num_hashes hash passes per mention) is the
-    # CPU-heaviest narrow stage of the KG tail; the mentions frame arrives
-    # AQE-coalesced to a handful of partitions (it's small in BYTES), which
-    # caps this stage's parallelism — a round-6 stage probe measured the map
-    # running as 12 tasks on 16 cores (aggregate task time ~5x the stage
-    # wall available to it). Fan it out first; on a 100 TB input the scan
-    # provides the width and this is a no-op.
-    from .session import ensure_parallelism
+    keys = list(keys)
+    cut = _materialize(rows.select(*keys, F.col(id_col).alias("_id")))
+    rows = drop_oversized(cut, keys, cap)
+    hot = _keys_over(_bucket_sizes(cut, keys), keys, _CHUNK_THRESHOLD)
 
-    banded = band_signatures(ensure_parallelism(mentions), num_hashes, bands)
-    # bucket granularity must match the join key: the self-join groups on
-    # (band, band_hash, label), so occupancy is counted per label too —
-    # otherwise a mixed-label bucket could be dropped even though each
-    # actual join group is small.
-    # Bucket occupancy is a WINDOW count, not groupBy-count + join back:
-    # the join form evaluates the banding projection (trigrams + the
-    # num_hashes hash passes — the CPU-heaviest narrow stage of the KG
-    # tail) TWICE, once under the aggregate and once as the probe side,
-    # and pays two exchanges; the window computes the identical
-    # _bucket_size with ONE exchange over a single banding pass
-    # (round-8 A/B: identical pair sets, 0.47 s -> 0.35 s warm at sf0.1;
-    # at 100 TB it halves the banding map work outright)
-    wb = Window.partitionBy("band", "band_hash", "label")
-    banded = banded.withColumn("_bucket_size", F.count(F.lit(1)).over(wb))
-    if max_bucket_size is not None:
-        banded = banded.filter(F.col("_bucket_size") <= max_bucket_size)
-    # consumed by BOTH the small and the chunked branch below: materialize
-    # so signatures/bucket sizes compute once (shared-subplan re-execution)
-    banded = _materialize(banded, eager=False)
-
-    same_band = (F.col("l.band") == F.col("r.band")) & (
-        F.col("l.band_hash") == F.col("r.band_hash")
-    )
-    same_label = F.col("l.label") == F.col("r.label")
+    same_bucket = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
 
     # cheap path: whole bucket in one join group
-    small = banded.filter(F.col("_bucket_size") <= _CHUNK_THRESHOLD)
-    l, r = small.alias("l"), small.alias("r")
-    cond = (
-        same_band
-        & (F.col("l.mention_id") < F.col("r.mention_id"))
-        & same_label
-    )
-    pairs_small = l.join(r, cond).select(
-        F.col("l.mention_id").alias("id_a"),
-        F.col("r.mention_id").alias("id_b"),
+    small = rows.join(hot, keys, "left_anti")
+    pairs = (
+        small.alias("l")
+        .join(small.alias("r"), [*same_bucket, F.col("l._id") < F.col("r._id")])
+        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
     )
 
     # chunked path: join key gains a chunk id, splitting the hot bucket
-    big = banded.filter(F.col("_bucket_size") > _CHUNK_THRESHOLD)
-    g = F.pmod(F.xxhash64("mention_id"), F.lit(_CHUNK_GROUPS))
-    bl = (
-        big.withColumn("_lg", g)
-        .withColumn(
-            "_rg",
-            F.explode(F.sequence(F.col("_lg"), F.lit(_CHUNK_GROUPS - 1))),
+    big = rows.join(hot, keys, "left_semi")
+    g = F.pmod(F.xxhash64("_id"), F.lit(_CHUNK_GROUPS))
+    left = big.withColumn("_lg", g).withColumn(
+        "_rg", F.explode(F.sequence(F.col("_lg"), F.lit(_CHUNK_GROUPS - 1)))
+    )
+    right = big.withColumn("_g", g)
+    chunked = (
+        left.alias("l")
+        .join(
+            right.alias("r"),
+            [
+                *same_bucket,
+                F.col("l._rg") == F.col("r._g"),
+                (F.col("l._lg") < F.col("r._g"))
+                | (F.col("l._id") < F.col("r._id")),
+            ],
         )
-        .alias("l")
-    )
-    br = big.withColumn("_g", g).alias("r")
-    bcond = (
-        same_band
-        & (F.col("l._rg") == F.col("r._g"))
-        & (
-            (F.col("l._lg") < F.col("r._g"))
-            | (F.col("l.mention_id") < F.col("r.mention_id"))
+        .select(
+            F.least("l._id", "r._id").alias("id_a"),
+            F.greatest("l._id", "r._id").alias("id_b"),
         )
-        & same_label
     )
-    pairs_big = bl.join(br, bcond).select(
-        F.least("l.mention_id", "r.mention_id").alias("id_a"),
-        F.greatest("l.mention_id", "r.mention_id").alias("id_b"),
-    )
-
-    return pairs_small.unionByName(pairs_big).distinct()
+    return pairs.unionByName(chunked)
 
 
 def _jaccard(a: str, b: str) -> Column:
@@ -670,8 +700,6 @@ def canonicalize(
     entities: DataFrame,
     alias_df: DataFrame | None = None,
     threshold: float = 0.5,
-    num_hashes: int = 15,
-    bands: int = 5,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """(label, text, canonical): canonical surface/id per mention cluster.
@@ -689,9 +717,7 @@ def canonicalize(
     # its blocks, and the blocks are reclaimed when the RDD reference drops
     # (no CacheManager entry — see _materialize's docstring).
     mentions = _materialize(extract_mentions(entities), eager=False)
-    edges, hits = mention_edges(
-        mentions, alias_df, threshold, num_hashes, bands, max_bucket_size
-    )
+    edges, hits = mention_edges(mentions, alias_df, threshold, max_bucket_size)
     comp = connected_components(edges)
     return canonical_map(mentions, comp, hits)
 
@@ -700,8 +726,6 @@ def mention_edges(
     mentions: DataFrame,
     alias_df: DataFrame | None = None,
     threshold: float = 0.5,
-    num_hashes: int = 15,
-    bands: int = 5,
     max_bucket_size: int | None = None,
     materialize_hits: bool = True,
 ) -> tuple[DataFrame, DataFrame | None]:
@@ -712,9 +736,11 @@ def mention_edges(
     virtual node connects every mention matching the same dictionary entry
     without materializing the within-entry clique.
 
-    ``materialize_hits=False`` skips the eager hits materialization for
-    callers that only consume the edges (the stage-checkpointed runner
-    re-derives alias hits at its canonical stage from on-disk mentions).
+    ``materialize_hits=False`` leaves the hits uncut, for callers that only
+    consume the edges (the stage-checkpointed runner re-derives alias hits
+    at its canonical stage from on-disk mentions). The cut is lazy, so
+    what ``False`` saves is the one job the call runs: building the cut's
+    adaptive plan broadcasts the alias dictionary (:func:`_materialize`).
     """
     # candidates-then-score, NOT scoring inside the bucket self-join: the
     # round-6 A/B on the m10 8.65M-edge graph (3 warm reps/level,
@@ -726,9 +752,7 @@ def mention_edges(
     # also quadruples the banding shuffle bytes and anti-scales under
     # the shared fixed-size heap). The id-joins the fusion was meant to
     # remove turn out to be the cheap part.
-    pairs = lsh_candidate_pairs(
-        mentions, num_hashes, bands, max_bucket_size=max_bucket_size
-    )
+    pairs = lsh_candidate_pairs(mentions, max_bucket_size)
     sim_edges = score_links(pairs, mentions, threshold).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
@@ -768,16 +792,12 @@ def mention_components(
     mentions: DataFrame,
     alias_df: DataFrame | None = None,
     threshold: float = 0.5,
-    num_hashes: int = 15,
-    bands: int = 5,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """(id, component) for every mention (component = min node id in its
     cluster; isolated mentions map to themselves). The directly-queryable
     form of the clustering that canonicalize consumes."""
-    edges, _ = mention_edges(
-        mentions, alias_df, threshold, num_hashes, bands, max_bucket_size
-    )
+    edges, _ = mention_edges(mentions, alias_df, threshold, max_bucket_size)
     comp = connected_components(edges)
     return (
         mentions.join(comp, mentions.mention_id == comp.id, "left")

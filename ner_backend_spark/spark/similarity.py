@@ -28,6 +28,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .kg import bucket_pairs, drop_oversized
+
 
 def _cosine(col_a, col_b):
     dot = F.aggregate(
@@ -359,8 +361,10 @@ def embedding_near_duplicates(
 
     method='exact' scores every (a<b) pair — the oracle path, quadratic, only
     for verification at small SF. method='lsh' is the scale path: candidates
-    must share a random-hyperplane bucket in >=1 of `tables` hash tables, so
-    the shuffle key is (table, bucket) and no cross-join ever materializes.
+    must share a random-hyperplane bucket in >=1 of `tables` hash tables:
+    the (table, bucket) buckets are paired by :func:`kg.bucket_pairs`, so
+    no cross-join ever materializes and a hot bucket's pairs spread over
+    many tasks.
     """
     # norm precomputed once per row below the pair join (_norm docstring)
     vecs = embeddings.select(
@@ -385,18 +389,7 @@ def embedding_near_duplicates(
         buckets = lsh_bucket_ids(
             vecs, dim, "id", "vec", n_planes, tables, seed
         )
-        cand = (
-            buckets.alias("l")
-            .join(
-                buckets.alias("r"),
-                ["table", "bucket"],
-            )
-            .filter(F.col("l.id") < F.col("r.id"))
-            .select(
-                F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b")
-            )
-            .distinct()
-        )
+        cand = bucket_pairs(buckets, ["table", "bucket"], "id").distinct()
         a = vecs.select(
             F.col("id").alias("id_a"),
             F.col("vec").alias("vec_a"),
@@ -582,10 +575,9 @@ def semantic_dedup(
     paper's regime n_centroids scales with the corpus (they use 50k
     clusters for LAION), keeping clusters small; as a structural
     backstop, clusters larger than ``max_cluster_size`` are exempted
-    from pruning via a broadcast anti-join on the (tiny) over-cap cid
-    list — the same semantic-cap pattern as the MinHash/KG bucket caps
-    (`spark/dedup.py` minhash `max_bucket_size`, `spark/kg.py`
-    KG_MAX_BUCKET), so worst-case within-cluster pair work is bounded
+    from pruning by :func:`kg.drop_oversized`, the bucket cap of the
+    MinHash/SimHash/KG blocking (a broadcast anti-join on the tiny
+    over-cap cid list), so worst-case within-cluster pair work is bounded
     by max_cluster_size**2 per cluster regardless of data skew.
     """
     cents = (
@@ -609,9 +601,7 @@ def semantic_dedup(
         F.col(vec_col).cast("array<double>").alias("vec"),
     ).join(assign, "id")
 
-    sizes = vecs.groupBy("cid").agg(F.count(F.lit(1)).alias("_n"))
-    over_cap = sizes.filter(F.col("_n") > max_cluster_size).select("cid")
-    prunable = vecs.join(F.broadcast(over_cap), "cid", "left_anti")
+    prunable = drop_oversized(vecs, ["cid"], max_cluster_size)
 
     # norms precomputed once per row below the join (_norm's docstring):
     # the within-cluster pair predicate then folds each pair once (dot),

@@ -14,6 +14,12 @@ fixtures' Zipf domains model this). Three mitigations, composable:
 * ``salted_join_hot_keys`` salts ONLY detected hot keys (broadcasting the
   small hot-key set) and replicates the dimension side per salt, leaving
   the non-skewed majority untouched.
+
+The bucket self-join of the KG blocking and every near-duplicate operator
+(``kg.bucket_pairs``) handles its own skew the same way: one groupBy
+sizes the buckets, the tiny sets of over-cap and hot keys are broadcast,
+over-cap buckets are dropped (``kg.drop_oversized``) and a hot bucket's
+O(m^2) pairs are split over chunk groups instead of one task.
 """
 
 from __future__ import annotations

@@ -45,12 +45,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..spark.checkpoint import check_lineage, write_observed
+from ..spark.checkpoint import alias_fingerprint, check_lineage, write_observed
 from ..spark.kg import (
     alias_candidates,
     alias_edges,
     band_signatures,
     canonical_map,
+    drop_oversized,
     extract_mentions,
     incremental_components,
     score_links,
@@ -73,16 +74,12 @@ class IncrementalKg:
         base_dir: str,
         alias_df: DataFrame | None = None,
         threshold: float = 0.5,
-        num_hashes: int = 15,
-        bands: int = 5,
         max_bucket_size: int | None = None,
     ):
         self.spark = spark
         self.base = base_dir.rstrip("/")
         self.alias_df = alias_df
         self.threshold = threshold
-        self.num_hashes = num_hashes
-        self.bands = bands
         self.max_bucket_size = max_bucket_size
         os.makedirs(self.base, exist_ok=True)
         self._check_lineage()
@@ -90,24 +87,15 @@ class IncrementalKg:
     def _check_lineage(self) -> None:
         """Pin tuning params (and the alias dictionary) to the state dir.
 
-        Resuming with different LSH/banding/threshold parameters would mix
-        bands computed under one scheme with bands under another — a silent
-        hybrid, the failure class checkpoint_kg guards against. Refuse it.
+        Resuming with a different threshold, bucket cap or dictionary would
+        mix edges computed under one setting with edges under another — a
+        silent hybrid, the failure class checkpoint_kg guards against.
+        Refuse it.
         """
-        alias_fp = None
-        if self.alias_df is not None:
-            import hashlib
-
-            rows = sorted(tuple(r) for r in self.alias_df.collect())
-            alias_fp = hashlib.md5(
-                json.dumps(rows, sort_keys=True).encode()
-            ).hexdigest()
         params = {
             "threshold": self.threshold,
-            "num_hashes": self.num_hashes,
-            "bands": self.bands,
             "max_bucket_size": self.max_bucket_size,
-            "alias_fp": alias_fp,
+            "alias_fp": alias_fingerprint(self.alias_df),
         }
         path = f"{self.base}/params.json"
         if os.path.exists(path):
@@ -178,19 +166,18 @@ class IncrementalKg:
         new_m = self.spark.read.schema(_MENTION_SCHEMA).parquet(
             f"{self.base}/mentions/batch={batch_id}"
         )
-        band_signatures(new_m, self.num_hashes, self.bands).write.mode(
-            "overwrite"
-        ).parquet(f"{self.base}/bands/batch={batch_id}")
+        band_signatures(new_m).write.mode("overwrite").parquet(
+            f"{self.base}/bands/batch={batch_id}"
+        )
 
-        all_bands = self._read_or_empty("bands", _BAND_SCHEMA)
-        if self.max_bucket_size is not None:
-            sizes = all_bands.groupBy("band", "band_hash", "label").agg(
-                F.count(F.lit(1)).alias("_n")
-            )
-            all_bands = all_bands.join(
-                sizes.filter(F.col("_n") <= self.max_bucket_size),
-                ["band", "band_hash", "label"],
-            ).drop("_n")
+        # a join, not kg.bucket_pairs' self-join: the new side is small
+        # enough to broadcast, while a self-join would reshuffle every
+        # stored band on each batch
+        all_bands = drop_oversized(
+            self._read_or_empty("bands", _BAND_SCHEMA),
+            ["band", "band_hash", "label"],
+            self.max_bucket_size,
+        )
         new_bands = self.spark.read.schema(_BAND_SCHEMA).parquet(
             f"{self.base}/bands/batch={batch_id}"
         )

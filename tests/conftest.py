@@ -1,3 +1,5 @@
+import contextlib
+
 import pytest
 
 from ner_backend_spark.spark.session import get_spark
@@ -24,3 +26,39 @@ def fixpoint_paths(monkeypatch):
             yield path
 
     return paths()
+
+
+@pytest.fixture
+def log_errors(spark):
+    """``with log_errors() as writer:`` captures every ERROR line log4j
+    writes during the block into ``writer`` (a java StringWriter); the
+    block's end first waits for the listener bus, whose thread logs the
+    listener errors."""
+    log4j = spark._jvm.org.apache.logging.log4j
+
+    @contextlib.contextmanager
+    def capture():
+        ctx = log4j.LogManager.getContext(False)
+        config = ctx.getConfiguration()
+        writer = spark._jvm.java.io.StringWriter()
+        layout = (
+            log4j.core.layout.PatternLayout.newBuilder()
+            .withPattern("%p %c %m%n")
+            .build()
+        )
+        appender = log4j.core.appender.WriterAppender.createAppender(
+            layout, None, writer, "test-errors", False, True
+        )
+        appender.start()
+        config.addAppender(appender)
+        config.getRootLogger().addAppender(appender, log4j.Level.ERROR, None)
+        ctx.updateLoggers()
+        try:
+            yield writer
+            spark._jsc.sc().listenerBus().waitUntilEmpty()
+        finally:
+            config.getRootLogger().removeAppender("test-errors")
+            ctx.updateLoggers()
+            appender.stop()
+
+    return capture

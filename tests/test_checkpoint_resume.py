@@ -182,7 +182,7 @@ def test_kg_failed_run_unpersists_entities(spark, tmp_path):
     assert not ents.storageLevel.useMemory
 
 
-def test_fresh_runs_log_no_errors(spark, pages, tmp_path):
+def test_fresh_runs_log_no_errors(spark, pages, tmp_path, log_errors):
     """A fresh run finds no prior state without logging an ERROR. Once an
     Observation has run in the session (any fixpoint does), Spark's
     ObservationManager listener re-plans every failed query and logs its
@@ -194,23 +194,7 @@ def test_fresh_runs_log_no_errors(spark, pages, tmp_path):
         spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     ).collect()
 
-    log4j = spark._jvm.org.apache.logging.log4j
-    ctx = log4j.LogManager.getContext(False)
-    config = ctx.getConfiguration()
-    writer = spark._jvm.java.io.StringWriter()
-    layout = (
-        log4j.core.layout.PatternLayout.newBuilder()
-        .withPattern("%p %c %m%n")
-        .build()
-    )
-    appender = log4j.core.appender.WriterAppender.createAppender(
-        layout, None, writer, "fresh-run-errors", False, True
-    )
-    appender.start()
-    config.addAppender(appender)
-    config.getRootLogger().addAppender(appender, log4j.Level.ERROR, None)
-    ctx.updateLoggers()
-    try:
+    with log_errors() as writer:
         CheckpointedReportRunner(
             spark, CONFIG, str(tmp_path / "report"), n_buckets=2,
             buckets_per_commit=2,
@@ -218,12 +202,6 @@ def test_fresh_runs_log_no_errors(spark, pages, tmp_path):
         CheckpointedKgRunner(spark, str(tmp_path / "kg")).run(
             _kg_entities(spark)
         )
-        # listener errors are logged from the listener bus thread
-        spark._jsc.sc().listenerBus().waitUntilEmpty()
-    finally:
-        config.getRootLogger().removeAppender("fresh-run-errors")
-        ctx.updateLoggers()
-        appender.stop()
     assert writer.toString() == ""
 
 
@@ -300,6 +278,56 @@ def test_kg_resume_rejects_parameter_mismatch(spark, tmp_path):
     # matching parameters resume fine
     res = CheckpointedKgRunner(spark, base, threshold=0.5).run(ents)
     assert res["stages_skipped"] == ["mentions"]
+
+
+def test_kg_resume_rejects_alias_dictionary_change(spark, tmp_path):
+    """The edges stage commits one dictionary's virtual-node edges and the
+    canonical stage reads another's hits unless a resume pins the
+    dictionary itself, not only whether there is one."""
+    from ner_backend_spark.spark.checkpoint_kg import CheckpointedKgRunner
+
+    schema = "surface string, canonical_id string"
+    dict_a = spark.createDataFrame([("about", "ENT_ABOUT")], schema)
+    dict_b = spark.createDataFrame([("about", "ENT_OTHER")], schema)
+    base = str(tmp_path / "kgalias")
+    ents = _kg_entities(spark).localCheckpoint()
+    with pytest.raises(RuntimeError, match="injected failure"):
+        CheckpointedKgRunner(spark, base, alias_df=dict_a).run(
+            ents, fail_after_stages=2
+        )
+    with pytest.raises(ValueError, match="alias dictionary"):
+        CheckpointedKgRunner(spark, base, alias_df=dict_b).run(ents)
+    res = CheckpointedKgRunner(spark, base, alias_df=dict_a).run(ents)
+    assert res["stages_skipped"] == ["edges", "mentions"]
+
+
+def test_throughput_metrics_nothing_completed(spark, tmp_path):
+    """Every bucket FAILED (as CheckpointedReportRunner with every bucket
+    in fail_buckets leaves it): zero counters and rates, not a TypeError
+    on the missing wall clock."""
+    import time
+
+    from ner_backend_spark.spark.checkpoint import CHECKPOINT_SCHEMA
+
+    base = str(tmp_path / "report")
+    now = time.time()
+    rows = [
+        (p, "FAILED", "run-a", now, now + 1.0, 0, 0, 0, '{"error": "x"}')
+        for p in range(3)
+    ]
+    spark.createDataFrame(rows, CHECKPOINT_SCHEMA).coalesce(1).write.parquet(
+        f"{base}/checkpoints"
+    )
+    assert throughput_metrics(spark, base) == {
+        "wall_seconds": 0.0,
+        "n_docs": 0,
+        "n_entities": 0,
+        "n_tokens": 0,
+        "docs_per_sec": 0.0,
+        "tokens_per_sec": 0.0,
+        "n_succeeded_buckets": 0,
+        "n_failed_buckets": 3,
+    }
 
 
 def test_throughput_metrics_latest_attempt_wins(spark, tmp_path):

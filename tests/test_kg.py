@@ -1,6 +1,9 @@
 """KG layer tests: blocking, link scoring, connected components,
 canonicalization, triple materialization."""
 
+from collections import Counter
+from itertools import combinations
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -186,9 +189,11 @@ def test_kcore_settles_in_one_round(spark, fixpoint_paths):
         assert got == {1: 2, 2: 2, 3: 2}
 
 
-def test_lsh_blocking_proposes_similar_pairs(spark, entities):
+def test_lsh_blocking_proposes_similar_pairs(spark, entities, monkeypatch):
+    monkeypatch.setattr(kg, "_NUM_HASHES", 12)
+    monkeypatch.setattr(kg, "_BANDS", 6)
     mentions = kg.extract_mentions(entities)
-    pairs = kg.lsh_candidate_pairs(mentions, num_hashes=12, bands=6)
+    pairs = kg.lsh_candidate_pairs(mentions)
     scored = kg.score_links(pairs, mentions, threshold=0.35)
     # map ids back to surfaces
     m = {r["mention_id"]: r["text"] for r in mentions.collect()}
@@ -292,3 +297,71 @@ def test_chunked_pair_generation_equals_plain(spark, monkeypatch):
     chunked = pairset(16, 4)
     assert chunked == plain
     assert len(plain) > 1000  # the template bucket really is quadratic
+
+    # bucket_pairs itself: its pair MULTISET (one pair per shared bucket,
+    # which keeps winnowing's n_shared exact) equals a per-bucket
+    # enumeration, with one hot bucket taking the chunked path and one
+    # over the cap, for long ids and for string ids whose order is not
+    # their numbers' order
+    monkeypatch.setattr(kg, "_CHUNK_THRESHOLD", 16)
+    monkeypatch.setattr(kg, "_CHUNK_GROUPS", 4)
+    buckets = {
+        ("a", 0): range(40),  # hot: over the lowered threshold
+        ("a", 1): range(100, 160),  # over the cap of 50
+        ("b", 0): range(10),  # shares pairs with ("a", 0)
+        **{("c", i): range(i, i + 6) for i in range(5)},  # overlapping
+    }
+    for cast, id_type in ((int, "long"), (lambda i: f"n{i}", "string")):
+        df = spark.createDataFrame(
+            [(t, b, cast(i)) for (t, b), ids in buckets.items() for i in ids],
+            f"t string, b int, id {id_type}",
+        )
+        for cap in (None, 50):
+            want = Counter(
+                pair
+                for ids in buckets.values()
+                if cap is None or len(ids) <= cap
+                for pair in combinations(sorted(cast(i) for i in ids), 2)
+            )
+            got = Counter(
+                (r["id_a"], r["id_b"])
+                for r in kg.bucket_pairs(df, ["t", "b"], "id", cap).collect()
+            )
+            assert got == want, (id_type, cap)
+            assert max(want.values()) > 1
+
+
+def test_incremental_kg_bucket_cap_equals_batch(spark, tmp_path):
+    """A bucket over the cap from the first batch on is dropped by every
+    batch, so the capped incremental canonical map equals the capped
+    batch canonicalize."""
+    from ner_backend_spark.streaming.kg_update import IncrementalKg
+
+    # one norm, five spellings: every band bucket of "widget" holds all of
+    # them, over the cap of 3 already in batch 0
+    rows = [(f"w{i}", "TOOL", t) for i, t in enumerate(
+        ["widget", "Widget", "WIDGET", " widget", "widget "]
+    )] + [
+        ("u1", "ORG", "acme corp"),
+        ("u2", "ORG", "acme corp."),
+        ("u3", "ORG", "initech"),
+    ]
+    full = spark.createDataFrame(rows, "url string, label string, text string")
+    batch = {
+        (r["label"], r["text"]): r["canonical"]
+        for r in kg.canonicalize(full, threshold=0.4, max_bucket_size=3).collect()
+    }
+    inc = IncrementalKg(spark, str(tmp_path / "kg"), threshold=0.4, max_bucket_size=3)
+    first = ["w0", "w1", "w2", "w3", "u1"]
+    inc.process_batch(full.filter(F.col("url").isin(first)), 0)
+    inc.process_batch(full.filter(~F.col("url").isin(first)), 1)
+    got = {
+        (r["label"], r["text"]): r["canonical"]
+        for r in inc.canonical().collect()
+    }
+    assert got == batch
+    # the cap bit: no two spellings of the widget merged ...
+    widgets = [batch[("TOOL", t)] for _, label, t in rows if label == "TOOL"]
+    assert len(set(widgets)) == 5
+    # ... while the small acme bucket still linked across the batches
+    assert batch[("ORG", "acme corp")] == batch[("ORG", "acme corp.")]

@@ -197,6 +197,39 @@ def test_neardup_caps_broadcast_only_oversized_keys(spark):
         assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
+def test_capped_pair_generators_log_no_errors(spark, log_errors):
+    """The capped MinHash, capped SimHash, winnowing and capped KG
+    blocking each run once without an ERROR line: a lazy cut that a
+    broadcast job of the bucket self-join materializes mid-query logs
+    "attempted to access non-existent accumulator" for every late task
+    event."""
+    from ner_backend_spark.flagship import (
+        KG_MAX_BUCKET,
+        MINHASH,
+        SIMHASH,
+        WINNOW,
+        WINNOW_NEARDUP,
+    )
+    from ner_backend_spark.spark import dedup, kg
+
+    docs = spark.read.parquet(f"{SF001}/documents.parquet")
+    ents = docs.select(
+        F.col("doc_id").cast("string").alias("url"),
+        F.lit("WORD").alias("label"),
+        F.explode(F.split("text", " ")).alias("text"),
+    )
+    with log_errors() as writer:
+        dedup.near_duplicates_minhash(docs, "doc_id", "text", **MINHASH).count()
+        dedup.simhash_near_duplicates(docs, "doc_id", "text", **SIMHASH).count()
+        dedup.winnow_near_duplicates(
+            docs, "doc_id", "text", **WINNOW, **WINNOW_NEARDUP
+        ).count()
+        # the mentions cut lazily, as canonicalize cuts them
+        mentions = kg._materialize(kg.extract_mentions(ents), eager=False)
+        kg.lsh_candidate_pairs(mentions, KG_MAX_BUCKET).count()
+    assert writer.toString() == ""
+
+
 def test_curation_pipeline_single_corpus_scan(spark):
     """The full curation composite must scan the corpus ONCE: the
     decontamination flag folds into the base scan as a row-local
