@@ -353,7 +353,7 @@ def lsh_candidate_pairs(
 
     banded = band_signatures(ensure_parallelism(mentions))
     return bucket_pairs(
-        banded, ("band", "band_hash", "label"), "mention_id", max_bucket_size
+        banded, ["band", "band_hash", "label"], "mention_id", max_bucket_size
     ).distinct()
 
 
