@@ -409,38 +409,37 @@ class CheckpointedReportRunner:
             )
         out = run_report(subset.select("url", "text"), self.config)
 
-        # one pass over the group: cache report_rows for the three sinks
+        # one pass over the group: cache report_rows for the three sinks,
+        # released in the finally so a failed write leaves no CacheManager
+        # entry for the rest of the session
         rows = with_partition_id(out.report_rows, self.n_buckets).persist()
-
-        entities = rows.select(
-            "url", "partition_id", F.explode("entities").alias("e")
-        ).select("url", "partition_id", "e.*")
-        (
-            entities.write.mode("overwrite")
-            .partitionBy("partition_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(f"{self.base_path}/entities")
-        )
-        groups_df = rows.select(
-            "url", "partition_id", F.explode("groups").alias("group_name")
-        )
-        (
-            groups_df.write.mode("overwrite")
-            .partitionBy("partition_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(f"{self.base_path}/object_groups")
-        )
-
-        stats = (
-            rows.groupBy("partition_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.size("entities")).alias("n_entities"),
-                F.sum("total_tokens").alias("n_tokens"),
+        try:
+            tables = {
+                "entities": rows.select(
+                    "url", "partition_id", F.explode("entities").alias("e")
+                ).select("url", "partition_id", "e.*"),
+                "object_groups": rows.select(
+                    "url", "partition_id", F.explode("groups").alias("group_name")
+                ),
+            }
+            for table, df in tables.items():
+                (
+                    df.write.mode("overwrite")
+                    .partitionBy("partition_id")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .parquet(f"{self.base_path}/{table}")
+                )
+            stats = (
+                rows.groupBy("partition_id")
+                .agg(
+                    F.count(F.lit(1)).alias("n_docs"),
+                    F.sum(F.size("entities")).alias("n_entities"),
+                    F.sum("total_tokens").alias("n_tokens"),
+                )
+                .collect()
             )
-            .collect()
-        )
-        rows.unpersist()
+        finally:
+            rows.unpersist()
         by_pid = {r["partition_id"]: r for r in stats}
         t1 = time.time()
 

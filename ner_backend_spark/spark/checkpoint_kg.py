@@ -156,32 +156,6 @@ class CheckpointedKgRunner:
         ).collect()[0]
         return f"{row['n']}:{row['h']}"
 
-    def _edges(self) -> DataFrame:
-        # the SAME edge construction build_triples runs — reimplementing the
-        # sim-edge + alias-virtual-node union here let the two paths drift
-        # (round-3 review finding)
-        edges, _hits = mention_edges(
-            self._read("mentions"),
-            self.alias_df,
-            self.threshold,
-            self.max_bucket_size,
-            # only the edges are committed here; the canonical stage
-            # re-derives alias hits from the on-disk mentions table, so
-            # the hits cut would only cost the alias broadcast job its
-            # call runs
-            materialize_hits=False,
-        )
-        return edges
-
-    def _canonical(self) -> DataFrame:
-        mentions = self._read("mentions")
-        hits = (
-            alias_candidates(mentions, self.alias_df)
-            if self.alias_df is not None
-            else None
-        )
-        return canonical_map(mentions, self._read("components"), hits)
-
     def run(
         self,
         entities: DataFrame,
@@ -206,9 +180,18 @@ class CheckpointedKgRunner:
             lineage = json.dumps({"run_id": run_id, **params})
             builders = {
                 "mentions": lambda: extract_mentions(entities),
-                "edges": self._edges,
+                "edges": lambda: mention_edges(
+                    self._read("mentions"),
+                    alias_candidates(self._read("mentions"), self.alias_df),
+                    self.threshold,
+                    self.max_bucket_size,
+                ),
                 "components": lambda: connected_components(self._read("edges")),
-                "canonical": self._canonical,
+                "canonical": lambda: canonical_map(
+                    self._read("mentions"),
+                    self._read("components"),
+                    alias_candidates(self._read("mentions"), self.alias_df),
+                ),
                 "triples": lambda: triples_from_canonical(
                     entities, self._read("canonical"), object_groups
                 ),

@@ -761,28 +761,6 @@ def simhash_signatures(
     return narrow.mapInPandas(run, schema)
 
 
-def simhash_chunk_bounds(max_hamming: int) -> list[tuple[int, int]]:
-    """(bit_offset, width) per banding chunk for a given Hamming radius.
-
-    Pigeonhole: a pair differing in <= max_hamming bits must agree on at
-    least one of ``max_hamming + 1`` disjoint chunks, so recall is exhaustive
-    exactly when the chunk count exceeds the radius. Widths split 64 bits as
-    evenly as possible. (Kept as the degenerate single-block-per-table case
-    of :func:`simhash_blocking`; that is the general, scale-safe API.)
-    """
-    if not 0 <= max_hamming <= 31:
-        raise ValueError("max_hamming must be in [0, 31]")
-    n_chunks = max_hamming + 1
-    base, extra = divmod(64, n_chunks)
-    bounds = []
-    offset = 0
-    for i in range(n_chunks):
-        width = base + (1 if i < extra else 0)
-        bounds.append((offset, width))
-        offset += width
-    return bounds
-
-
 def _even_blocks(n_blocks: int) -> list[tuple[int, int]]:
     base, extra = divmod(64, n_blocks)
     out, offset = [], 0

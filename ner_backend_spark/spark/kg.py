@@ -273,13 +273,18 @@ def with_trigrams(mentions: DataFrame) -> DataFrame:
     return mentions.withColumn("trigrams", _trigrams("norm"))
 
 
-def alias_candidates(mentions: DataFrame, alias_df: DataFrame) -> DataFrame:
-    """(mention_id, canonical_id) via broadcast alias dictionary.
+def alias_candidates(
+    mentions: DataFrame, alias_df: DataFrame | None
+) -> DataFrame | None:
+    """(mention_id, canonical_id) via broadcast alias dictionary; None
+    without a dictionary, which every consumer of the hits takes as none.
 
     alias_df: (surface, canonical_id) — the small curated dictionary; its
     normalized surface joins map-side against mention norms (J-new in SURVEY
     §2.7: broadcast map-side join for candidate generation).
     """
+    if alias_df is None:
+        return None
     alias_norm = alias_df.select(
         normalize_surface(F.col("surface")).alias("norm"),
         F.col("canonical_id"),
@@ -709,38 +714,40 @@ def canonicalize(
     Canonical = the dictionary canonical_id if the cluster touched the
     dictionary, else the lexicographically smallest member surface.
     """
-    # Lazy localCheckpoint, not persist/unpersist: the old unpersist() ran
-    # at plan-BUILD time, so by execution nothing was cached and the
-    # mentions subplan (a distinct shuffle over entities) recomputed once
-    # per consumer (banding, both score_links sides, alias hits, labeled).
-    # The first consuming job materializes the checkpoint; the rest reuse
-    # its blocks, and the blocks are reclaimed when the RDD reference drops
-    # (no CacheManager entry — see _materialize's docstring).
+    # Two lazy localCheckpoints, not persist/unpersist (no CacheManager
+    # entry — see _materialize's docstring). The mentions (a distinct
+    # shuffle over entities) feed the banding, both score_links sides, the
+    # alias hits and canonical_map; the hits feed the alias edges and
+    # canonical_map. The first consuming job (the CC input cut) stores
+    # both cuts' blocks and the later consumers reuse them, so the
+    # mentions are computed once and the dictionary broadcast once; each
+    # call runs only its own exchange as a job (the distinct, the
+    # broadcast). An eager hits cut ran the mentions upstream in a job of
+    # its own (round-8 A/B on q_kg_triples: first-run 12.2 s -> 3.1 s).
     mentions = _materialize(extract_mentions(entities), eager=False)
-    edges, hits = mention_edges(mentions, alias_df, threshold, max_bucket_size)
-    comp = connected_components(edges)
+    hits = alias_candidates(mentions, alias_df)
+    if hits is not None:
+        hits = _materialize(hits, eager=False)
+    comp = connected_components(
+        mention_edges(mentions, hits, threshold, max_bucket_size)
+    )
     return canonical_map(mentions, comp, hits)
 
 
 def mention_edges(
     mentions: DataFrame,
-    alias_df: DataFrame | None = None,
+    hits: DataFrame | None = None,
     threshold: float = 0.5,
     max_bucket_size: int | None = None,
-    materialize_hits: bool = True,
-) -> tuple[DataFrame, DataFrame | None]:
-    """(edges, alias_hits): the similarity graph clusters are computed over.
+) -> DataFrame:
+    """(src, dst): the similarity graph clusters are computed over, the
+    LSH-blocked candidate pairs (:func:`lsh_candidate_pairs`) verified by
+    :func:`link_edges`.
 
-    edges = (LSH-blocked pairs passing exact-Jaccard ``threshold``) ∪
-    (mention -> virtual per-dictionary-entry node, for alias hits) — the
-    virtual node connects every mention matching the same dictionary entry
-    without materializing the within-entry clique.
-
-    ``materialize_hits=False`` leaves the hits uncut, for callers that only
-    consume the edges (the stage-checkpointed runner re-derives alias hits
-    at its canonical stage from on-disk mentions). The cut is lazy, so
-    what ``False`` saves is the one job the call runs: building the cut's
-    adaptive plan broadcasts the alias dictionary (:func:`_materialize`).
+    ``hits`` are the mentions' :func:`alias_candidates` (None without a
+    dictionary). The caller derives them, so a caller that reuses them
+    (:func:`canonicalize` hands the same cut to :func:`canonical_map`)
+    pays one alias broadcast.
     """
     # candidates-then-score, NOT scoring inside the bucket self-join: the
     # round-6 A/B on the m10 8.65M-edge graph (3 warm reps/level,
@@ -752,39 +759,34 @@ def mention_edges(
     # also quadruples the banding shuffle bytes and anti-scales under
     # the shared fixed-size heap). The id-joins the fusion was meant to
     # remove turn out to be the cheap part.
-    pairs = lsh_candidate_pairs(mentions, max_bucket_size)
-    sim_edges = score_links(pairs, mentions, threshold).select(
+    return link_edges(
+        lsh_candidate_pairs(mentions, max_bucket_size), mentions, hits, threshold
+    )
+
+
+def link_edges(
+    pairs: DataFrame,
+    mentions: DataFrame,
+    hits: DataFrame | None,
+    threshold: float,
+) -> DataFrame:
+    """(src, dst): the candidate ``pairs`` that pass :func:`score_links`
+    at ``threshold`` ∪ an edge from each alias hit ``(mention_id,
+    canonical_id)`` to its dictionary entry's virtual node, which connects
+    every mention matching the entry without materializing the
+    within-entry clique. The verify half of every KG edge set: the batch
+    build blocks its candidates with :func:`lsh_candidate_pairs`, the
+    incremental one against the stored bands (streaming/kg_update.py)."""
+    edges = score_links(pairs, mentions, threshold).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
-    if alias_df is None:
-        return sim_edges, None
-    # materialized: hits is consumed by the alias edges AND (lazily, in the
-    # returned plan) by canonical_map's comp_alias branch, which would
-    # otherwise re-derive mentions after the caller unpersists them
-    hits = alias_candidates(mentions, alias_df)
-    if materialize_hits:
-        # LAZY localCheckpoint (round-8): the eager form ran a dedicated
-        # job whose only purpose was to pre-compute the broadcast alias
-        # join — one full pass over the mentions upstream before the CC
-        # base materialization repeated most of it. Lazily cut, the hits
-        # blocks materialize inside the first consuming job (the CC base
-        # eager checkpoint, which computes the mentions blocks anyway)
-        # and canonical_map's comp_alias branch still reuses them. The
-        # call itself still runs one small job: building the adaptive
-        # plan's RDD broadcasts the alias dictionary (see _materialize).
-        # A/B on q_kg_triples: identical triples, first-run wall
-        # 12.2 s -> 3.1 s (the duplicated upstream pass), warm ~0.3 s
-        # saved (one job boundary).
-        hits = _materialize(hits, eager=False)
-    return sim_edges.union(alias_edges(hits)), hits
-
-
-def alias_edges(hits: DataFrame) -> DataFrame:
-    """(src, dst) edges from each alias hit ``(mention_id, canonical_id)``
-    to its dictionary entry's virtual node."""
-    return hits.select(
-        F.col("mention_id").alias("src"),
-        F.xxhash64(F.concat(F.lit("alias:"), "canonical_id")).alias("dst"),
+    if hits is None:
+        return edges
+    return edges.union(
+        hits.select(
+            F.col("mention_id").alias("src"),
+            F.xxhash64(F.concat(F.lit("alias:"), "canonical_id")).alias("dst"),
+        )
     )
 
 
@@ -797,63 +799,56 @@ def mention_components(
     """(id, component) for every mention (component = min node id in its
     cluster; isolated mentions map to themselves). The directly-queryable
     form of the clustering that canonicalize consumes."""
-    edges, _ = mention_edges(mentions, alias_df, threshold, max_bucket_size)
-    comp = connected_components(edges)
-    return (
-        mentions.join(comp, mentions.mention_id == comp.id, "left")
-        .select(
-            F.col("mention_id").alias("id"),
-            F.coalesce("component", F.col("mention_id")).alias("component"),
-        )
+    edges = mention_edges(
+        mentions, alias_candidates(mentions, alias_df), threshold, max_bucket_size
+    )
+    return with_components(mentions, connected_components(edges)).select(
+        F.col("mention_id").alias("id"), "component"
+    )
+
+
+def with_components(mentions: DataFrame, comp: DataFrame) -> DataFrame:
+    """``mentions`` with a ``component`` column from an (id, component)
+    ``comp``; a mention missing from ``comp`` is its own component. The
+    one mention⋈component join, shared by :func:`canonical_map`,
+    :func:`mention_components` and ``IncrementalKg.components``."""
+    return mentions.join(comp, mentions.mention_id == comp.id, "left").select(
+        *mentions.columns,
+        F.coalesce("component", F.col("mention_id")).alias("component"),
     )
 
 
 def canonical_map(
     mentions: DataFrame, comp: DataFrame, hits: DataFrame | None = None
 ) -> DataFrame:
-    """(label, text, canonical) from materialized mentions + components.
+    """(label, text, canonical) from mentions, their (id, component)
+    assignment and their alias ``hits`` (None without a dictionary).
 
-    Factored out of :func:`canonicalize` so the stage-checkpointed runner
-    (checkpoint_kg.py) can resume from on-disk mentions/components tables.
+    The canonical stage of all three KG drivers: :func:`canonicalize`
+    (mentions and hits cut lazily in the same query), the
+    stage-checkpointed runner (checkpoint_kg.py, from its on-disk
+    mentions and components tables) and ``IncrementalKg.canonical``
+    (streaming/kg_update.py, from its state tables).
     """
-    # `labeled` feeds three consumers (rep, comp_alias, the final join);
+    # `labeled` feeds three consumers (rep, the hits join, the final join);
     # materialize so the mention⋈component join runs once, not per
     # consumer. LAZY localCheckpoint (round-8): the eager form spent a
     # dedicated job boundary on it; lazily cut, the first consuming job
     # computes and caches the blocks and the other consumers reuse them —
     # A/B on q_kg_triples: identical triples, ~0.2 s warm / several
     # seconds first-run saved.
-    labeled = (
-        mentions.join(comp, mentions.mention_id == comp.id, "left")
-        .select(
-            "mention_id",
-            "label",
-            "text",
-            "norm",
-            F.coalesce("component", F.col("mention_id")).alias("component"),
-        )
-    )
-    labeled = _materialize(labeled, eager=False)
+    labeled = _materialize(with_components(mentions, comp), eager=False)
 
     # ONE aggregation pass picks both the representative surface (smallest
     # (norm, text) in the component) and the dictionary canonical id:
     # min(canonical_id) skips nulls, so left-joining hits before the groupBy
     # gives exactly the old separate comp_alias aggregate — fused to save a
     # shuffle and a join per query (VERDICT r3 "Next round" #7).
-    src = labeled
-    aggs = [F.min(F.struct("norm", "text")).alias("rep")]
+    src, canonical = labeled, F.min(F.struct("norm", "text"))["text"]
     if hits is not None:
         src = labeled.join(hits, "mention_id", "left")
-        aggs.append(F.min("canonical_id").alias("alias_canonical"))
-    agg = src.groupBy("component").agg(*aggs)
-    if hits is not None:
-        rep = agg.select(
-            "component",
-            F.coalesce("alias_canonical", F.col("rep.text")).alias("canonical"),
-        )
-    else:
-        rep = agg.select("component", F.col("rep.text").alias("canonical"))
-
+        canonical = F.coalesce(F.min("canonical_id"), canonical)
+    rep = src.groupBy("component").agg(canonical.alias("canonical"))
     return labeled.join(rep, "component").select("label", "text", "canonical")
 
 

@@ -34,7 +34,6 @@ from ..core.query import (
     SubstringFilter,
     parse_query,
 )
-
 _STRING_NODES = (SubstringFilter, StringEqFilter, StringLtFilter, StringGtFilter)
 
 
@@ -125,11 +124,18 @@ def group_membership(
     """(url, group_name) rows under the normative per-object semantics.
 
     One aggregation serves all groups; each group adds only a Column filter
-    + union branch (Catalyst collapses these into one pass over the frame).
+    + union branch. With several groups the frame is cut lazily
+    (:func:`kg._materialize`): column pruning gives each branch an
+    aggregate of its own columns only, so exchange reuse does not share
+    the aggregation, and a ``cache()`` would hold a CacheManager entry
+    for the rest of the session.
     """
+    from .kg import _materialize
+
     trees = {name: parse_query(q) for name, q in groups.items()}
     frame, preds = build_aggregate_frame(entities, list(trees.values()), urls)
-    frame = frame.cache() if len(trees) > 1 else frame
+    if len(trees) > 1:
+        frame = _materialize(frame, eager=False)
 
     parts = [
         frame.filter(_compile(tree, preds)).select(

@@ -31,29 +31,15 @@ from pyspark.sql.types import (
 from .kg import bucket_pairs, drop_oversized
 
 
-def _cosine(col_a, col_b):
-    dot = F.aggregate(
-        F.zip_with(col_a, col_b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm_a = F.sqrt(
-        F.aggregate(col_a, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-    norm_b = F.sqrt(
-        F.aggregate(col_b, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-    return dot / (norm_a * norm_b)
-
-
 def _norm(col):
-    """sqrt of the same sequential self-fold _cosine uses — precompute it
+    """sqrt of the sequential self-fold sum(v*v) of one vector. Computed
     ONCE PER ROW (below a join boundary, so CollapseProject cannot inline
-    it back into the per-pair expression) and the per-pair cosine drops
-    from three array folds to one. dot/(norm_a*norm_b) with these norms
-    is BIT-IDENTICAL to _cosine: same fold, same sqrt, same operand
-    order (round 8 — the pair-join sites were paying 2/3 of their lambda
-    evaluations recomputing row-constant norms per pair)."""
+    it back into the per-pair expression), so the per-pair cosine
+    _dot(a, b) / (_norm(a) * _norm(b)) costs one array fold instead of
+    three, bit-identical to folding all three per pair: same fold, same
+    sqrt, same operand order (round 8 — the pair-join sites were paying
+    2/3 of their lambda evaluations recomputing row-constant norms per
+    pair)."""
     return F.sqrt(F.aggregate(col, F.lit(0.0), lambda acc, v: acc + v * v))
 
 

@@ -423,36 +423,6 @@ def bloom_contains(
     )
 
 
-def bloom_oracle_sql(
-    table: str,
-    value_col: str,
-    key_select: str,
-    k: int = 4,
-    m_bits: int = 65536,
-) -> str:
-    """DuckDB SQL mirroring bloom_bits + bloom_contains for ``key_select``
-    (a subquery yielding one column named ``key``)."""
-    return f"""
-WITH idx AS (SELECT unnest(range({k})) AS i),
-bits AS (
-  SELECT DISTINCT
-         ('0x' || substr(md5(CAST({value_col} AS VARCHAR) || '#' || i), 1, 13))::BIGINT % {m_bits} AS bit
-  FROM {table} CROSS JOIN idx
-),
-keys AS ({key_select}),
-addressed AS (
-  SELECT kk.key,
-         ('0x' || substr(md5(CAST(kk.key AS VARCHAR) || '#' || ii.i), 1, 13))::BIGINT % {m_bits} AS bit
-  FROM keys kk CROSS JOIN idx ii
-)
-SELECT a.key,
-       CAST(sum(CASE WHEN b.bit IS NULL THEN 0 ELSE 1 END) AS INT) AS hits,
-       sum(CASE WHEN b.bit IS NULL THEN 0 ELSE 1 END) = {k} AS maybe_present
-FROM addressed a LEFT JOIN bits b USING (bit)
-GROUP BY a.key
-"""
-
-
 def hll_oracle_sql(
     table: str,
     group_cols: list[str],

@@ -48,13 +48,13 @@ from pyspark.sql.streaming import StreamingQuery
 from ..spark.checkpoint import alias_fingerprint, check_lineage, write_observed
 from ..spark.kg import (
     alias_candidates,
-    alias_edges,
     band_signatures,
     canonical_map,
     drop_oversized,
     extract_mentions,
     incremental_components,
-    score_links,
+    link_edges,
+    with_components,
 )
 
 # the state tables' columns in the order they are written: every read
@@ -196,14 +196,12 @@ class IncrementalKg:
             )
             .distinct()
         )
-        all_mentions = self.mentions()
-        edges = score_links(pairs, all_mentions, self.threshold).select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+        edges = link_edges(
+            pairs,
+            self.mentions(),
+            alias_candidates(new_m, self.alias_df),
+            self.threshold,
         )
-        if self.alias_df is not None:
-            edges = edges.unionByName(
-                alias_edges(alias_candidates(new_m, self.alias_df))
-            )
 
         seed = self.assignment().unionByName(
             new_m.select(
@@ -236,20 +234,16 @@ class IncrementalKg:
 
     def components(self) -> DataFrame:
         """(id, component) for mentions only (virtual alias nodes hidden)."""
-        m = self.mentions().select(F.col("mention_id").alias("id"))
-        return m.join(self.assignment(), "id", "left").select(
-            "id", F.coalesce("component", F.col("id")).alias("component")
+        return with_components(self.mentions(), self.assignment()).select(
+            F.col("mention_id").alias("id"), "component"
         )
 
     def canonical(self) -> DataFrame:
         """(label, text, canonical) over everything merged so far."""
         mentions = self.mentions()
-        hits = (
-            alias_candidates(mentions, self.alias_df)
-            if self.alias_df is not None
-            else None
+        return canonical_map(
+            mentions, self.assignment(), alias_candidates(mentions, self.alias_df)
         )
-        return canonical_map(mentions, self.assignment(), hits)
 
     # -- streaming attachment --------------------------------------------------
 

@@ -182,6 +182,34 @@ def test_kg_failed_run_unpersists_entities(spark, tmp_path):
     assert not ents.storageLevel.useMemory
 
 
+def test_failed_commit_unpersists_report_rows(spark, tmp_path, monkeypatch):
+    """A commit whose entities write raises records FAILED rows for its
+    buckets and still releases the report rows it persisted."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, path, *args, **kwargs):
+        if path.endswith("/entities"):
+            raise RuntimeError("injected write failure")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
+    base = str(tmp_path / "report")
+    res = CheckpointedReportRunner(
+        spark, CONFIG, base, n_buckets=4, buckets_per_commit=2
+    ).run(fixtures.pages_df(spark, n=40).select("url", "text"))
+    assert res["failed_buckets"] == [0, 1, 2, 3]
+    statuses = {
+        r["partition_id"]: r["status"]
+        for r in read_checkpoints(spark, base).collect()
+    }
+    assert statuses == {p: "FAILED" for p in range(4)}
+    assert cache.numCachedEntries() == cached
+
+
 def test_fresh_runs_log_no_errors(spark, pages, tmp_path, log_errors):
     """A fresh run finds no prior state without logging an ERROR. Once an
     Observation has run in the session (any fixpoint does), Spark's

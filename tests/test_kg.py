@@ -149,6 +149,19 @@ def test_fixpoint_max_iter_exhaustion_raises(spark, op, fixpoint_paths):
             run()
 
 
+def _jobs(spark, group, run):
+    """``run()``'s result and the number of Spark jobs it launched,
+    counted under a job group."""
+    sc = spark.sparkContext
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 # Spark jobs per operator on the chorded chain below the size gate
 # (local[4], AQE on): the input cut, its collect and the one-partition
 # scan of the driver-built result, however many rounds it takes. With the
@@ -160,16 +173,9 @@ SMALL_FIXPOINT_JOBS = {"components": 3, "kcore": 3, "truss": 3}
 @pytest.mark.parametrize("op", ["components", "kcore", "truss"])
 def test_small_fixpoint_finishes_on_driver(spark, op):
     run = _chorded_chain_op(spark, op)
-    sc = spark.sparkContext
-    spark._jsc.sc().listenerBus().waitUntilEmpty()
-    sc.setJobGroup(f"small-{op}", f"small-{op}")
-    try:
-        rows = run().collect()
-        jobs = sc.statusTracker().getJobIdsForGroup(f"small-{op}")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    rows, jobs = _jobs(spark, f"small-{op}", lambda: run().collect())
     assert rows
-    assert len(jobs) <= SMALL_FIXPOINT_JOBS[op], (op, len(jobs))
+    assert jobs <= SMALL_FIXPOINT_JOBS[op], (op, jobs)
 
 
 def test_kcore_settles_in_one_round(spark, fixpoint_paths):
@@ -220,6 +226,22 @@ def test_canonicalize_with_alias_dictionary(spark, entities, aliases):
     assert by_text["Amelia O'Connell"] == by_text["Amelia OConnell"]
     # singleton keeps itself
     assert by_text["brucelee@kungfu.cn"] == "brucelee@kungfu.cn"
+
+
+# Spark jobs of build_triples(entities, None, aliases) on this fixture
+# (local[4], AQE on), as measured. canonicalize derives the alias hits
+# once and cuts them lazily, so the alias edges and canonical_map share
+# one alias broadcast.
+KG_BUILD_ALIAS_JOBS = 24
+
+
+def test_build_triples_job_count_with_aliases(spark, entities, aliases):
+    rows, jobs = _jobs(
+        spark, "kg-build-alias",
+        lambda: kg.build_triples(entities, None, aliases).collect(),
+    )
+    assert rows
+    assert jobs <= KG_BUILD_ALIAS_JOBS, jobs
 
 
 def test_build_triples(spark, entities, aliases):

@@ -55,6 +55,8 @@ def test_group_membership_shared_aggregate(spark, entities):
         "g_xyz": 'label4 CONTAINS "xyz"',
         "g_label3_single": "COUNT(label3) = 1",
     }
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cached = cache.numCachedEntries()
     rows = qc.group_membership(entities, groups).collect()
     got = {(r["url"], r["group_name"]) for r in rows}
     want = set()
@@ -62,6 +64,8 @@ def test_group_membership_shared_aggregate(spark, entities):
         for obj in _core_group_eval(q, SEED_ROWS):
             want.add((obj, name))
     assert got == want
+    # the shared aggregate leaves no CacheManager entry behind
+    assert cache.numCachedEntries() == cached
 
 
 def test_url_universe_includes_zero_entity_objects(spark, entities):
