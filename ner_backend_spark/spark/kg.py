@@ -10,8 +10,11 @@ schema.go:129-144 — this layer canonicalizes and materializes triples):
     -> LSH blocking        char-trigram MinHash signatures computed entirely
                            JVM-side; the bucket self-join (bucket_pairs,
                            shared with every near-duplicate operator)
-                           proposes pairs (never all-pairs)
-    -> link scoring        exact trigram Jaccard on proposed pairs
+                           proposes pairs (never all-pairs); under the
+                           input size gate the driver collects the
+                           signatures and pairs the buckets in numpy
+    -> link scoring        exact trigram Jaccard on proposed pairs, in
+                           numpy on the driver under the same gate
     -> connected components alternating large-star / small-star (window-min
                            form, no collect_list, so no high-degree-node
                            blowup; O(log n) rounds); an edge set under the
@@ -41,7 +44,8 @@ from pyspark.sql.types import LongType, StructField, StructType
 # 10^6, on seeded random graphs at local[4]; table in CHANGES.md): a
 # k-core state is at most twice its input, a CC state at most its input.
 # A two-column long input this size is ~4 MB of Arrow, far under
-# spark.driver.maxResultSize.
+# spark.driver.maxResultSize. The same gate counts the mentions that
+# mention_edges blocks and scores on the driver (:func:`_local_links`).
 _LOCAL_ROWS = 250_000
 
 # Buckets above this many members take bucket_pairs' chunked self-join,
@@ -178,35 +182,46 @@ def pandas_fixpoint(
     raise ValueError(f"{what} did not converge in {max_iter} rounds")
 
 
-def _cut_input(edges: DataFrame) -> tuple[DataFrame, pd.DataFrame | None]:
-    """Cut a graph operator's (src, dst) input once, by the eager
-    :func:`_materialize`, with a row-count ``Observation`` filled by the
-    same job. Returns the cut and, when it has fewer than ``_LOCAL_ROWS``
-    rows and no null id, its rows collected as pandas (one more job);
-    otherwise None, and the operator runs its distributed rounds from
-    the cut. The gate is read at call time.
+def _cut_small(
+    rows: DataFrame, refuse: Column | None = None
+) -> tuple[DataFrame, pa.Table | None]:
+    """Cut ``rows`` once, by the eager :func:`_materialize`, with a
+    row-count ``Observation`` filled by the same job. Returns the cut and,
+    when it has fewer than ``_LOCAL_ROWS`` rows and no row where
+    ``refuse`` holds, its rows collected as Arrow (one more job);
+    otherwise None. The gate is read at call time.
 
-    Small graphs are bound by per-job overhead, not data: a distributed
-    operator costs several Spark jobs per round, the driver path two
-    before its result. The driver, not one ``mapInPandas`` task, runs it because a
-    worker raise would surface as a ``PythonException`` rather than the
-    ``max_iter`` ``ValueError``, and a cold Python worker start costs
-    seconds. An input with a null id takes the distributed path, whose
-    null handling the pandas operators do not repeat.
+    The size gate of every driver-side operator: small inputs are bound
+    by per-job overhead, not data. The driver, not one ``mapInPandas``
+    task, runs the pandas side because a worker raise would surface as a
+    ``PythonException`` rather than the operator's own error, and a cold
+    Python worker start costs seconds.
     """
     obs = Observation()
-    nulls = F.col("src").isNull() | F.col("dst").isNull()
-    cut = _materialize(
-        edges.select("src", "dst").observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(nulls, 1)).alias("nulls"),
-        )
-    )
+    metrics = [F.count(F.lit(1)).alias("n")]
+    if refuse is not None:
+        metrics.append(F.count(F.when(refuse, 1)).alias("refused"))
+    cut = _materialize(rows.observe(obs, *metrics))
     got = obs.get
-    if got["n"] >= _LOCAL_ROWS or got["nulls"]:
+    if got["n"] >= _LOCAL_ROWS or got.get("refused"):
         return cut, None
-    return cut, cut.toArrow().to_pandas()
+    return cut, cut.toArrow()
+
+
+def _cut_input(edges: DataFrame) -> tuple[DataFrame, pd.DataFrame | None]:
+    """:func:`_cut_small` of a graph operator's (src, dst) input: the cut
+    and, below the gate, its rows as pandas; otherwise None, and the
+    operator runs its distributed rounds from the cut.
+
+    A distributed operator costs several Spark jobs per round, the driver
+    path two before its result, and the driver path keeps ``max_iter``
+    and its ``ValueError``. An input with a null id takes the distributed
+    path, whose null handling the pandas operators do not repeat.
+    """
+    cut, small = _cut_small(
+        edges.select("src", "dst"), F.col("src").isNull() | F.col("dst").isNull()
+    )
+    return cut, None if small is None else small.to_pandas()
 
 
 def _node_codes(edges: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -294,20 +309,13 @@ def alias_candidates(
     )
 
 
-def band_signatures(mentions: DataFrame) -> DataFrame:
-    """(mention_id, label, band, band_hash): the LSH banding of each mention.
-
-    sig[i] = array_min(transform(trigrams, t -> hash(t, i))) for
-    ``_NUM_HASHES`` seeds; band_hash = hash(slice(sig, ...)) for ``_BANDS``
-    bands. Pure column expressions — a mention's banding
-    depends only on its own surface, which is what makes the banding table
-    APPEND-ONLY under incremental construction (streaming/kg_update.py):
-    new mentions' bands join against stored bands without recomputing them.
-    """
-    rows_per_band = _NUM_HASHES // _BANDS
-    sig = with_trigrams(mentions).select(
+def _signatures(mentions: DataFrame) -> DataFrame:
+    """(mention_id, label, trigrams, signature): the ``_NUM_HASHES``
+    MinHash signature of each mention's trigrams."""
+    return with_trigrams(mentions).select(
         "mention_id",
         "label",
+        "trigrams",
         F.array(
             *[
                 F.array_min(
@@ -319,19 +327,47 @@ def band_signatures(mentions: DataFrame) -> DataFrame:
             ]
         ).alias("signature"),
     )
-    return sig.select(
+
+
+def _band_hashes() -> Column:
+    """The ``_BANDS`` band hashes of a ``signature`` column, in band
+    order, as one array expression."""
+    rows_per_band = _NUM_HASHES // _BANDS
+    return F.array(
+        *[
+            F.hash(F.slice("signature", b * rows_per_band + 1, rows_per_band))
+            for b in range(_BANDS)
+        ]
+    )
+
+
+def band_signatures(mentions: DataFrame) -> DataFrame:
+    """(mention_id, label, band, band_hash): the LSH banding of each mention.
+
+    sig[i] = array_min(transform(trigrams, t -> hash(t, i))) for
+    ``_NUM_HASHES`` seeds; band_hash = hash(slice(sig, ...)) for ``_BANDS``
+    bands. Pure column expressions — a mention's banding
+    depends only on its own surface, which is what makes the banding table
+    APPEND-ONLY under incremental construction (streaming/kg_update.py):
+    new mentions' bands join against stored bands without recomputing them.
+    """
+    # the array is built inside the posexplode: exploding a column instead
+    # makes the optimizer infer a size(array) > 0 filter and push it under
+    # the mentions' distinct, where it computes every signature a second
+    # time per entity row
+    return _signatures(mentions).select(
         "mention_id",
         "label",
-        F.posexplode(
-            F.array(
-                *[
-                    F.hash(
-                        F.slice("signature", b * rows_per_band + 1, rows_per_band)
-                    )
-                    for b in range(_BANDS)
-                ]
-            )
-        ).alias("band", "band_hash"),
+        F.posexplode(_band_hashes()).alias("band", "band_hash"),
+    )
+
+
+def _banded(mentions: DataFrame) -> DataFrame:
+    """(mention_id, label, trigrams, bands): :func:`band_signatures` as one
+    row per mention, ``bands[b]`` the hash of band ``b``, with the
+    trigrams: the cut :func:`mention_edges` collects below its gate."""
+    return _signatures(mentions).select(
+        "mention_id", "label", "trigrams", _band_hashes().alias("bands")
     )
 
 
@@ -340,7 +376,9 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """(id_a, id_b) same-label mention pairs sharing >=1 MinHash band bucket.
 
-    The buckets are :func:`band_signatures`' (band, band_hash) per label,
+    The blocking of :func:`mention_edges` above its size gate (below it,
+    :func:`_local_links` pairs the same buckets on the driver). The
+    buckets are :func:`band_signatures`' (band, band_hash) per label,
     paired by :func:`bucket_pairs`: a mixed-label bucket is one bucket per
     label, so its occupancy and its cap count each label apart.
     ``max_bucket_size`` is the SEMANTIC guard: at web scale million-member
@@ -502,6 +540,74 @@ def score_links(
         )
         .filter(F.col("score") >= threshold)
     )
+
+
+def _local_links(
+    banded: pa.Table, threshold: float, cap: int | None
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """(src, dst) id arrays of :func:`score_links` over
+    :func:`lsh_candidate_pairs`, computed on the driver from a collected
+    :func:`_banded` cut: the same (band, band_hash, label) buckets, the
+    same cap as :func:`drop_oversized`, the distinct ``id_a < id_b``
+    pairs and the same float64 Jaccard. Spark computed every hash and
+    trigram; this only groups and compares them.
+
+    None, before any pair is built, when the buckets kept by the cap
+    propose ``_BANDS * _LOCAL_ROWS`` pairs or more: a distinct pair is
+    proposed at most once per band, so under that bound the distinct
+    pairs number fewer than ``_LOCAL_ROWS``.
+    """
+    n, bands = banded.num_rows, _BANDS
+    ids = banded.column("mention_id").to_numpy()
+    # one entry per (mention, band), keyed (label, band, band_hash); a
+    # null label (code -1) pairs with nothing, as in the Spark equi-join
+    labels = np.repeat(pd.factorize(banded.column("label").to_pandas())[0], bands)
+    hashes = banded.column("bands").combine_chunks().flatten().to_numpy()
+    key = (labels * bands + np.tile(np.arange(bands), n)) << 32 | (
+        hashes.astype(np.int64) & 0xFFFFFFFF
+    )
+    entry = np.repeat(np.arange(n), bands)[labels >= 0]
+    _, bucket, sizes = np.unique(
+        key[labels >= 0], return_inverse=True, return_counts=True
+    )
+    kept = sizes if cap is None else np.where(sizes > cap, 0, sizes)
+    if (kept * (kept - 1) // 2).sum() >= bands * _LOCAL_ROWS:
+        return None
+
+    # members grouped by bucket; each pairs with the ones after it
+    order = np.argsort(bucket, kind="stable")
+    members, bucket = entry[order], bucket[order]
+    rank = np.arange(len(order)) - (np.cumsum(sizes) - sizes)[bucket]
+    after = np.maximum(kept[bucket] - 1 - rank, 0)
+    left = np.repeat(np.arange(len(order)), after)
+    right = left + 1 + np.arange(len(left)) - np.repeat(np.cumsum(after) - after, after)
+    a, b = members[left], members[right]
+    lower = ids[a] < ids[b]
+    lo, hi = np.where(lower, a, b), np.where(lower, b, a)
+    pair = np.unique((lo * n + hi)[ids[a] != ids[b]])
+    lo, hi = pair // n, pair % n
+
+    # |A ∩ B|: each of hi's trigram codes looked up among lo's in a hash
+    # index of the keys row * vocabulary + code (trigrams are distinct per
+    # row, so the keys are unique and every hit is one shared trigram);
+    # pairs go in blocks so the per-trigram arrays stay small
+    tri = banded.column("trigrams").combine_chunks()
+    lens = tri.value_lengths().to_numpy().astype(np.int64)
+    codes = tri.flatten().dictionary_encode(null_encoding="encode")
+    vocab, codes = len(codes.dictionary), codes.indices.to_numpy()
+    table = pd.Index(np.repeat(np.arange(n), lens) * vocab + codes)
+    starts = np.cumsum(lens) - lens
+    inter = np.zeros(len(pair), dtype=np.int64)
+    step = 1 << 16
+    for s in range(0, len(pair), step):
+        blo, bhi = lo[s : s + step], hi[s : s + step]
+        ln = lens[bhi]
+        of = np.repeat(np.arange(len(bhi)), ln)
+        pos = np.repeat(starts[bhi] - (np.cumsum(ln) - ln), ln) + np.arange(len(of))
+        hit = table.get_indexer(blo[of] * vocab + codes[pos]) >= 0
+        inter[s : s + len(bhi)] = np.bincount(of, weights=hit, minlength=len(bhi))
+    keep = inter / (lens[lo] + lens[hi] - inter) >= threshold
+    return ids[lo[keep]], ids[hi[keep]]
 
 
 # ---------------------------------------------------------------------------
@@ -748,7 +854,24 @@ def mention_edges(
     dictionary). The caller derives them, so a caller that reuses them
     (:func:`canonicalize` hands the same cut to :func:`canonical_map`)
     pays one alias broadcast.
+
+    Size gate: the mentions are cut once by :func:`_cut_small` as
+    :func:`_banded` rows (id, label, trigrams, band hashes). Under
+    ``_LOCAL_ROWS`` mentions the driver collects the cut and
+    :func:`_local_links` blocks and scores it in numpy, unless its bucket
+    pairs reach its bound; the alias edges stay a Spark union. A small
+    KG's similarity edges then cost the cut and one collect instead of
+    the banding, bucket sizing, broadcast, self-join and scoring jobs.
+    Otherwise the Spark path below runs from the mentions, and the cut is
+    one map pass spent on the count.
     """
+    cut, banded = _cut_small(_banded(mentions))
+    links = None if banded is None else _local_links(banded, threshold, max_bucket_size)
+    if links is not None:
+        edges = cut.sparkSession.createDataFrame(
+            pa.table({"src": links[0], "dst": links[1]}), "src long, dst long"
+        )
+        return _with_alias_edges(edges.coalesce(1), hits)
     # candidates-then-score, NOT scoring inside the bucket self-join: the
     # round-6 A/B on the m10 8.65M-edge graph (3 warm reps/level,
     # /tmp entities_240000_m10) REFUTED the fusion — fused 42.3 s @4
@@ -780,6 +903,10 @@ def link_edges(
     edges = score_links(pairs, mentions, threshold).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
+    return _with_alias_edges(edges, hits)
+
+
+def _with_alias_edges(edges: DataFrame, hits: DataFrame | None) -> DataFrame:
     if hits is None:
         return edges
     return edges.union(

@@ -14,9 +14,10 @@ def spark():
 
 @pytest.fixture
 def fixpoint_paths(monkeypatch):
-    """Both kg.fixpoint paths for one test body, run as ``for _ in
-    fixpoint_paths:`` — first the driver finish below the size gate as
-    configured, then the distributed rounds with the gate at 0. A loop,
+    """Both paths of the kg size gate (``kg._LOCAL_ROWS``: the fixpoint
+    operators and ``kg.mention_edges``) for one test body, run as ``for _
+    in fixpoint_paths:`` — first the driver path below the gate as
+    configured, then the distributed path with the gate at 0. A loop,
     not a parametrization, so the tests keep their names."""
     from ner_backend_spark.spark import kg
 

@@ -31,7 +31,9 @@ ALIASES = [
 
 @pytest.fixture(scope="module")
 def entities(spark):
-    return spark.createDataFrame(ENTITIES, ["url", "label", "text"]).cache()
+    df = spark.createDataFrame(ENTITIES, ["url", "label", "text"]).cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -231,8 +233,9 @@ def test_canonicalize_with_alias_dictionary(spark, entities, aliases):
 # Spark jobs of build_triples(entities, None, aliases) on this fixture
 # (local[4], AQE on), as measured. canonicalize derives the alias hits
 # once and cuts them lazily, so the alias edges and canonical_map share
-# one alias broadcast.
-KG_BUILD_ALIAS_JOBS = 24
+# one alias broadcast; mention_edges blocks and scores the 8 mentions on
+# the driver.
+KG_BUILD_ALIAS_JOBS = 17
 
 
 def test_build_triples_job_count_with_aliases(spark, entities, aliases):
@@ -387,3 +390,134 @@ def test_incremental_kg_bucket_cap_equals_batch(spark, tmp_path):
     assert len(set(widgets)) == 5
     # ... while the small acme bucket still linked across the batches
     assert batch[("ORG", "acme corp")] == batch[("ORG", "acme corp.")]
+
+
+def _case_variants(word, k):
+    """``k`` distinct spellings of ``word`` that normalize alike (case
+    variants), so they share every band bucket."""
+    return [
+        "".join(c.upper() if i >> j & 1 else c for j, c in enumerate(word))
+        for i in range(k)
+    ]
+
+
+def _seeded_entities(spark):
+    # two labels of random edits of a few stems, so pairs score all over
+    # the threshold range, plus 8 spellings of one norm: a bucket of 8 in
+    # every band, over the cap of 5 and, lowered, the chunk threshold
+    import random
+
+    rng = random.Random(17)
+    stems = ["kowalski", "ostrowska", "brandenburg", "nakamura", "oconnell"]
+    rows = set()
+    for _ in range(120):
+        s = list(rng.choice(stems))
+        for _ in range(rng.randrange(3)):
+            s[rng.randrange(len(s))] = rng.choice("aeiouxyz")
+        rows.add((rng.choice(["NAME", "ORG"]), "".join(s)))
+    rows |= {("TOOL", t) for t in _case_variants("widget", 8)}
+    return spark.createDataFrame(
+        [(f"u{i}", label, text) for i, (label, text) in enumerate(sorted(rows))],
+        "url string, label string, text string",
+    )
+
+
+def _tie_threshold(mentions):
+    """A threshold some candidate pair scores exactly, so a path that
+    drops ties differs from one that keeps them."""
+    scores = sorted(
+        r["score"]
+        for r in kg.score_links(
+            kg.lsh_candidate_pairs(mentions), mentions, 0.0
+        ).collect()
+    )
+    assert 0 < scores[len(scores) // 2] < 1
+    return scores[len(scores) // 2]
+
+
+EDGE_CASES = [
+    "fixture", "fixture_aliases", "seeded", "seeded_capped", "chunked",
+    "multibyte", "shared_band", "empty",
+]
+
+
+@pytest.mark.parametrize("case", EDGE_CASES)
+def test_mention_edges_paths_agree(
+    spark, entities, aliases, case, monkeypatch, fixpoint_paths
+):
+    """The driver-side blocking and scoring below the size gate gives the
+    Spark path's edges: the same multiset, no duplicate, ``src long, dst
+    long``."""
+    hits, threshold, cap = None, 0.35, None
+    if case.startswith("fixture"):
+        mentions = kg.extract_mentions(entities)
+        if case == "fixture_aliases":
+            hits = kg.alias_candidates(mentions, aliases)
+    elif case.startswith("seeded") or case == "chunked":
+        mentions = kg.extract_mentions(_seeded_entities(spark))
+        threshold = _tie_threshold(mentions)
+        cap = 5 if case == "seeded_capped" else None
+        if case == "chunked":
+            monkeypatch.setattr(kg, "_CHUNK_THRESHOLD", 4)
+            monkeypatch.setattr(kg, "_CHUNK_GROUPS", 3)
+    else:
+        rows = {
+            "multibyte": [
+                ("NAME", t) for t in ["李小龍", "李小龙", "李小龍 (Bruce Lee)",
+                                      "Jürgen Müller", "Jurgen Muller",
+                                      "Борис Ельцин", "Борис Елцин"]
+            ],
+            # one norm under two labels: each (band, band_hash) bucket
+            # holds both labels, and only same-label pairs may come out
+            "shared_band": [
+                (label, t) for label in ("A", "B")
+                for t in _case_variants("acme corp", 3)
+            ],
+            "empty": [],
+        }[case]
+        mentions = kg.extract_mentions(
+            spark.createDataFrame(
+                [("u", label, t) for label, t in rows],
+                "url string, label string, text string",
+            )
+        )
+    got = {}
+    for path in fixpoint_paths:
+        out = kg.mention_edges(mentions, hits, threshold, cap)
+        assert out.schema.simpleString() == "struct<src:bigint,dst:bigint>"
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("LocalTableScan" in plan) == (path == "local"), (path, plan)
+        got[path] = Counter((r["src"], r["dst"]) for r in out.collect())
+    assert got["local"] == got["distributed"]
+    assert all(n == 1 for n in got["local"].values())
+    assert bool(got["local"]) == (case != "empty")
+    label = {r["mention_id"]: r["label"] for r in mentions.collect()}
+    assert all(label[a] == label[b] for a, b in got["local"] if b in label)
+    if case == "shared_band":
+        assert len(got["local"]) == 6  # 3 pairs per label
+    if case.startswith("seeded"):
+        # the 8 widget spellings pair up unless their buckets are capped
+        tools = sum(label[a] == "TOOL" for a, _ in got["local"])
+        assert tools == (0 if cap else 28)
+
+
+def test_mention_edges_pair_bound_takes_spark_path(spark):
+    """710 spellings of one norm: few mentions, but each of the 5 bands
+    proposes 710 * 709 / 2 pairs, 1,258,475 in all, over the bound of
+    ``_BANDS * _LOCAL_ROWS``, so the configured gate takes the Spark path
+    before building a pair."""
+    assert kg._BANDS * kg._LOCAL_ROWS == 1_250_000
+    mentions = kg.extract_mentions(
+        spark.createDataFrame(
+            [("u", "NAME", t) for t in _case_variants("jankowskis", 710)],
+            "url string, label string, text string",
+        )
+    )
+    out = kg.mention_edges(mentions)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" not in plan, plan
+    agg = out.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_distinct("src", "dst").alias("distinct"),
+    ).first()
+    assert agg["n"] == agg["distinct"] == 710 * 709 // 2

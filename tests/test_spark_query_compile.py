@@ -28,7 +28,9 @@ QUERIES = [
 
 @pytest.fixture(scope="module")
 def entities(spark):
-    return spark.createDataFrame(SEED_ROWS, ["url", "label", "text"]).cache()
+    df = spark.createDataFrame(SEED_ROWS, ["url", "label", "text"]).cache()
+    yield df
+    df.unpersist()
 
 
 def _core_group_eval(query, rows):
