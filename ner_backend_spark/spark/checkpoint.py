@@ -56,7 +56,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .pipeline import run_report
+from .pipeline import run_report, tag_counts
 from .tagger import ReportConfig
 
 CHECKPOINT_SCHEMA = StructType(
@@ -466,16 +466,8 @@ class CheckpointedReportRunner:
         ents_path = f"{self.base_path}/entities"
         if not path_exists(ents_path, self.spark):
             return
-        entities = self.spark.read.parquet(ents_path)
-        custom = {tag for tag, _ in self.config.custom_tags}
-        counts = entities.filter(F.col("label").isNotNull()).groupBy(
-            "label"
-        ).count()
-        counts.filter(
-            ~F.col("label").isin(list(custom)) if custom else F.lit(True)
-        ).withColumnRenamed("label", "tag").write.mode("overwrite").parquet(
-            f"{self.base_path}/report_tags"
-        )
+        report_tags = tag_counts(self.spark.read.parquet(ents_path), self.config)[0]
+        report_tags.write.mode("overwrite").parquet(f"{self.base_path}/report_tags")
 
 
 def task_rollup(spark: SparkSession, base_path: str) -> DataFrame:

@@ -20,7 +20,6 @@ are reproducible across runs, executors, and Python versions.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -29,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
 from .kg import _jaccard, bucket_pairs
+from .session import map_batches
 
 _MERSENNE = (1 << 61) - 1
 _HASH_RANGE = 1 << 32
@@ -404,31 +404,18 @@ def winnow_fingerprints(
     matters more than the constant factor.
     """
     if impl == "arrow":
-        from typing import Iterator
-
-        import pandas as pd
-
         id_type = df.schema[id_col].dataType.simpleString()
         out_schema = f"{id_col} {id_type}, fp long"
 
-        def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-            for pdf in batches:
-                ids, fps = [], []
-                for doc_id, text in zip(pdf[id_col].values, pdf[text_col].values):
-                    u = _winnow_fps_py(text, k, window)
-                    ids.extend([doc_id] * len(u))
-                    fps.append(u)
-                yield pd.DataFrame(
-                    {
-                        id_col: ids,
-                        "fp": np.concatenate(fps) if fps else np.array([], dtype=np.int64),
-                    }
-                )
+        def run(pdf: pd.DataFrame) -> pd.DataFrame:
+            ids, fps = [], []
+            for doc_id, text in zip(pdf[id_col].values, pdf[text_col].values):
+                u = _winnow_fps_py(text, k, window)
+                ids.extend([doc_id] * len(u))
+                fps.append(u)
+            return pd.DataFrame({id_col: ids, "fp": np.concatenate(fps)})
 
-        from .session import ensure_parallelism
-
-        narrow = ensure_parallelism(df.select(id_col, text_col))
-        return narrow.mapInPandas(run, out_schema)
+        return map_batches(df.select(id_col, text_col), run, out_schema)
     t = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"[ \t\n\f\r]+", " ")
     n_grams = F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))
     # TWO selects, deliberately: the window pass below references `hashes`
@@ -559,24 +546,20 @@ def minhash_signatures(
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, sigs = [], []
-            for i, text in zip(pdf[id_col].values, pdf[text_col].values):
-                h = _word_shingles(text or "", shingle_k)
-                # (a*h + b) mod p, vectorized over hashes x shingles
-                vals = minhash_matrix(h, a, b)
-                sig = vals.min(axis=1) % _HASH_RANGE
-                ids.append(i)
-                sigs.append(sig.astype(np.int64).tolist())
-            yield pd.DataFrame({"id": ids, "signature": sigs})
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids, sigs = [], []
+        for i, text in zip(pdf[id_col].values, pdf[text_col].values):
+            h = _word_shingles(text or "", shingle_k)
+            # (a*h + b) mod p, vectorized over hashes x shingles
+            vals = minhash_matrix(h, a, b)
+            sig = vals.min(axis=1) % _HASH_RANGE
+            ids.append(i)
+            sigs.append(sig.astype(np.int64).tolist())
+        return pd.DataFrame({"id": ids, "signature": sigs})
 
-    from .session import ensure_parallelism
-
-    narrow = ensure_parallelism(
-        df.select(F.col(id_col).cast("long").alias(id_col), text_col)
+    return map_batches(
+        df.select(F.col(id_col).cast("long").alias(id_col), text_col), run, schema
     )
-    return narrow.mapInPandas(run, schema)
 
 
 def lsh_candidate_pairs(
@@ -714,51 +697,47 @@ def simhash_signatures(
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = pdf[text_col].values
-            n_docs = len(texts)
-            doc_words = [(t or "").split() for t in texts]
-            all_words = [w for ws in doc_words for w in ws]
-            acc = np.zeros((n_docs, 64), dtype=np.int64)
-            if all_words:
-                doc_idx = np.repeat(
-                    np.arange(n_docs), [len(ws) for ws in doc_words]
-                )
-                uniq, inv = np.unique(
-                    np.asarray(all_words, dtype=object), return_inverse=True
-                )
-                # one blake2b per distinct word in the batch; bit k of the
-                # big-endian digest int = bit (k%8) of byte (7 - k//8), so
-                # reverse bytes + little-endian unpack yields k-order bits.
-                digests = b"".join(
-                    hashlib.blake2b(w.encode("utf-8"), digest_size=8).digest()
-                    for w in uniq
-                )
-                bits = np.unpackbits(
-                    np.frombuffer(digests, dtype=np.uint8).reshape(-1, 8)[
-                        :, ::-1
-                    ],
-                    axis=1,
-                    bitorder="little",
-                )
-                signed = (2 * bits.astype(np.int64)) - 1  # [U, 64] of ±1
-                np.add.at(acc, doc_idx, signed[inv])
-            weights = 1 << np.arange(64, dtype=np.uint64)
-            sims = ((acc > 0).astype(np.uint64) * weights).sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].values,
-                    "simhash": sims.astype(np.int64),  # wraps to signed i64
-                }
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        texts = pdf[text_col].values
+        n_docs = len(texts)
+        doc_words = [(t or "").split() for t in texts]
+        all_words = [w for ws in doc_words for w in ws]
+        acc = np.zeros((n_docs, 64), dtype=np.int64)
+        if all_words:
+            doc_idx = np.repeat(
+                np.arange(n_docs), [len(ws) for ws in doc_words]
             )
+            uniq, inv = np.unique(
+                np.asarray(all_words, dtype=object), return_inverse=True
+            )
+            # one blake2b per distinct word in the batch; bit k of the
+            # big-endian digest int = bit (k%8) of byte (7 - k//8), so
+            # reverse bytes + little-endian unpack yields k-order bits.
+            digests = b"".join(
+                hashlib.blake2b(w.encode("utf-8"), digest_size=8).digest()
+                for w in uniq
+            )
+            bits = np.unpackbits(
+                np.frombuffer(digests, dtype=np.uint8).reshape(-1, 8)[
+                    :, ::-1
+                ],
+                axis=1,
+                bitorder="little",
+            )
+            signed = (2 * bits.astype(np.int64)) - 1  # [U, 64] of ±1
+            np.add.at(acc, doc_idx, signed[inv])
+        weights = 1 << np.arange(64, dtype=np.uint64)
+        sims = ((acc > 0).astype(np.uint64) * weights).sum(axis=1)
+        return pd.DataFrame(
+            {
+                "id": pdf[id_col].values,
+                "simhash": sims.astype(np.int64),  # wraps to signed i64
+            }
+        )
 
-    from .session import ensure_parallelism
-
-    narrow = ensure_parallelism(
-        df.select(F.col(id_col).cast("long").alias(id_col), text_col)
+    return map_batches(
+        df.select(F.col(id_col).cast("long").alias(id_col), text_col), run, schema
     )
-    return narrow.mapInPandas(run, schema)
 
 
 def _even_blocks(n_blocks: int) -> list[tuple[int, int]]:

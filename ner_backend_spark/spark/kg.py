@@ -192,7 +192,7 @@ def _cut_small(
     otherwise None. The gate is read at call time.
 
     The size gate of every driver-side operator: small inputs are bound
-    by per-job overhead, not data. The driver, not one ``mapInPandas``
+    by per-job overhead, not data. The driver, not one Python-kernel
     task, runs the pandas side because a worker raise would surface as a
     ``PythonException`` rather than the operator's own error, and a cold
     Python worker start costs seconds.
@@ -365,38 +365,35 @@ def band_signatures(mentions: DataFrame) -> DataFrame:
 def _banded(mentions: DataFrame) -> DataFrame:
     """(mention_id, label, trigrams, bands): :func:`band_signatures` as one
     row per mention, ``bands[b]`` the hash of band ``b``, with the
-    trigrams: the cut :func:`mention_edges` collects below its gate."""
+    trigrams: the cut :func:`mention_edges` blocks and scores, collected
+    below its gate."""
     return _signatures(mentions).select(
         "mention_id", "label", "trigrams", _band_hashes().alias("bands")
     )
 
 
 def lsh_candidate_pairs(
-    mentions: DataFrame, max_bucket_size: int | None = None
+    banded: DataFrame, max_bucket_size: int | None = None
 ) -> DataFrame:
     """(id_a, id_b) same-label mention pairs sharing >=1 MinHash band bucket.
 
     The blocking of :func:`mention_edges` above its size gate (below it,
-    :func:`_local_links` pairs the same buckets on the driver). The
-    buckets are :func:`band_signatures`' (band, band_hash) per label,
-    paired by :func:`bucket_pairs`: a mixed-label bucket is one bucket per
-    label, so its occupancy and its cap count each label apart.
-    ``max_bucket_size`` is the SEMANTIC guard: at web scale million-member
-    buckets are template strings, not linkable entities, and even chunked
-    enumeration of 10^12 pairs is work that should not happen.
+    :func:`_local_links` pairs the same buckets on the driver), from the
+    :func:`_banded` rows it cut: each ``bands`` entry is one (band,
+    band_hash) bucket per label, paired by :func:`bucket_pairs`, so a
+    mixed-label bucket is one bucket per label and its occupancy and its
+    cap count each label apart. ``max_bucket_size`` is the SEMANTIC
+    guard: at web scale million-member buckets are template strings, not
+    linkable entities, and even chunked enumeration of 10^12 pairs is
+    work that should not happen.
     """
-    # the banding map (trigrams + _NUM_HASHES hash passes per mention) is
-    # the CPU-heaviest narrow stage of the KG tail; the mentions frame
-    # arrives AQE-coalesced to a handful of partitions (it's small in
-    # BYTES), which caps this stage's parallelism — a round-6 stage probe
-    # measured the map running as 12 tasks on 16 cores (aggregate task
-    # time ~5x the stage wall available to it). Fan it out first; on a
-    # 100 TB input the scan provides the width and this is a no-op.
-    from .session import ensure_parallelism
-
-    banded = band_signatures(ensure_parallelism(mentions))
+    # a posexplode of the stored column: over the cut no inferred
+    # size(bands) > 0 filter can reach the signatures (band_signatures)
+    rows = banded.select(
+        "mention_id", "label", F.posexplode("bands").alias("band", "band_hash")
+    )
     return bucket_pairs(
-        banded, ["band", "band_hash", "label"], "mention_id", max_bucket_size
+        rows, ["band", "band_hash", "label"], "mention_id", max_bucket_size
     ).distinct()
 
 
@@ -516,14 +513,16 @@ def _jaccard(a: str, b: str) -> Column:
 
 
 def score_links(
-    pairs: DataFrame, mentions: DataFrame, threshold: float = 0.5
+    pairs: DataFrame, rows: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
-    """(id_a, id_b, score): exact trigram Jaccard on candidate pairs only.
+    """(id_a, id_b, score): exact trigram Jaccard on candidate pairs only,
+    the trigrams read from ``rows`` (mention_id, trigrams, ...): the
+    :func:`_banded` cut, or :func:`with_trigrams` of the mentions.
 
     Trigram arrays are distinct (:func:`_trigrams`), so the union size is
     ``|A| + |B| − |A ∩ B|``: the same double without building the union
     array."""
-    tri = with_trigrams(mentions).select("mention_id", "trigrams")
+    tri = rows.select("mention_id", "trigrams")
     a = tri.select(
         F.col("mention_id").alias("id_a"), F.col("trigrams").alias("tri_a")
     )
@@ -862,8 +861,8 @@ def mention_edges(
     pairs reach its bound; the alias edges stay a Spark union. A small
     KG's similarity edges then cost the cut and one collect instead of
     the banding, bucket sizing, broadcast, self-join and scoring jobs.
-    Otherwise the Spark path below runs from the mentions, and the cut is
-    one map pass spent on the count.
+    Otherwise the Spark path below blocks and scores the cut, so the
+    signatures and trigrams are computed once on either path.
     """
     cut, banded = _cut_small(_banded(mentions))
     links = None if banded is None else _local_links(banded, threshold, max_bucket_size)
@@ -882,25 +881,24 @@ def mention_edges(
     # also quadruples the banding shuffle bytes and anti-scales under
     # the shared fixed-size heap). The id-joins the fusion was meant to
     # remove turn out to be the cheap part.
-    return link_edges(
-        lsh_candidate_pairs(mentions, max_bucket_size), mentions, hits, threshold
-    )
+    return link_edges(lsh_candidate_pairs(cut, max_bucket_size), cut, hits, threshold)
 
 
 def link_edges(
     pairs: DataFrame,
-    mentions: DataFrame,
+    rows: DataFrame,
     hits: DataFrame | None,
     threshold: float,
 ) -> DataFrame:
     """(src, dst): the candidate ``pairs`` that pass :func:`score_links`
-    at ``threshold`` ∪ an edge from each alias hit ``(mention_id,
-    canonical_id)`` to its dictionary entry's virtual node, which connects
-    every mention matching the entry without materializing the
-    within-entry clique. The verify half of every KG edge set: the batch
-    build blocks its candidates with :func:`lsh_candidate_pairs`, the
-    incremental one against the stored bands (streaming/kg_update.py)."""
-    edges = score_links(pairs, mentions, threshold).select(
+    over the trigrams of ``rows`` at ``threshold`` ∪ an edge from each
+    alias hit ``(mention_id, canonical_id)`` to its dictionary entry's
+    virtual node, which connects every mention matching the entry without
+    materializing the within-entry clique. The verify half of every KG
+    edge set: the batch build blocks its candidates with
+    :func:`lsh_candidate_pairs`, the incremental one against the stored
+    bands (streaming/kg_update.py)."""
+    edges = score_links(pairs, rows, threshold).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
     return _with_alias_edges(edges, hits)

@@ -3,8 +3,9 @@
 Design: media rides as an opaque ``binary`` column with a ``media_type``
 plus typed metadata (width/height/duration), exactly like ``html binary``
 in the pages table. Decode / feature-extract / resize / frame-sample run as
-Arrow-batched ``mapInPandas`` kernels so bytes move JVM->Python once per
-batch (never per row).
+Arrow-batched kernels through ``session.map_batches``, which fans a small
+input out to every core, so bytes move JVM->Python once per batch (never
+per row).
 
 Decode tiers: Pillow when importable (any format it knows), else the
 vendored pure-stdlib PNG codec (core/minipng.py) for the PNG subset, else
@@ -21,7 +22,6 @@ tier.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .session import map_batches
 
 try:  # pragma: no cover - codec not present in this container
     from PIL import Image  # noqa: F401
@@ -206,32 +208,28 @@ def extract_image_features(
     """
     codec = _HAS_PIL if use_codec is None else use_codec
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats, hashes = [], []
-            for data in pdf["media"].values:
-                vec = _real_features(data, dim) if codec else None
-                if vec is None or len(vec) != dim:
-                    if codec and fallback_acc is not None:
-                        fallback_acc.add(1)
-                    vec = _fake_features(data, dim)
-                feats.append(vec.tolist())
-                hashes.append(
-                    hashlib.md5(vec.astype(np.float32).tobytes()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"].values,
-                    "n_bytes": [len(d or b"") for d in pdf["media"].values],
-                    "features": feats,
-                    "feat_hash": hashes,
-                }
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        feats, hashes = [], []
+        for data in pdf["media"].values:
+            vec = _real_features(data, dim) if codec else None
+            if vec is None or len(vec) != dim:
+                if codec and fallback_acc is not None:
+                    fallback_acc.add(1)
+                vec = _fake_features(data, dim)
+            feats.append(vec.tolist())
+            hashes.append(
+                hashlib.md5(vec.astype(np.float32).tobytes()).hexdigest()
             )
+        return pd.DataFrame(
+            {
+                "url": pdf["url"].values,
+                "n_bytes": [len(d or b"") for d in pdf["media"].values],
+                "features": feats,
+                "feat_hash": hashes,
+            }
+        )
 
-    from .session import ensure_parallelism
-
-    narrow = ensure_parallelism(media.select("url", "media"))
-    return narrow.mapInPandas(run, IMAGE_FEATURES_SCHEMA)
+    return map_batches(media.select("url", "media"), run, IMAGE_FEATURES_SCHEMA)
 
 
 RESIZED_SCHEMA = StructType(
@@ -267,38 +265,37 @@ def resize_images(
     """
     codec = _HAS_PIL if use_codec is None else use_codec
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n_out = max(width * height // 8, 16)
-        for pdf in batches:
-            out = []
-            for data in pdf["media"].values:
-                if codec:
-                    real = _resize_real(data, width, height)
-                    if real is not None:
-                        out.append(real)
-                        continue
-                    if fallback_acc is not None:
-                        fallback_acc.add(1)
-                digest = hashlib.blake2b(
-                    (data or b"") + width.to_bytes(4, "big")
-                    + height.to_bytes(4, "big"),
-                    digest_size=32,
-                ).digest()
-                out.append((digest * (n_out // 32 + 1))[:n_out])
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"].values,
-                    "media": out,
-                    "media_type": pdf["media_type"].values,
-                    "width": [width] * len(pdf),
-                    "height": [height] * len(pdf),
-                }
-            )
+    n_out = max(width * height // 8, 16)
 
-    from .session import ensure_parallelism
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = []
+        for data in pdf["media"].values:
+            if codec:
+                real = _resize_real(data, width, height)
+                if real is not None:
+                    out.append(real)
+                    continue
+                if fallback_acc is not None:
+                    fallback_acc.add(1)
+            digest = hashlib.blake2b(
+                (data or b"") + width.to_bytes(4, "big")
+                + height.to_bytes(4, "big"),
+                digest_size=32,
+            ).digest()
+            out.append((digest * (n_out // 32 + 1))[:n_out])
+        return pd.DataFrame(
+            {
+                "url": pdf["url"].values,
+                "media": out,
+                "media_type": pdf["media_type"].values,
+                "width": [width] * len(pdf),
+                "height": [height] * len(pdf),
+            }
+        )
 
-    narrow = ensure_parallelism(media.select("url", "media", "media_type"))
-    return narrow.mapInPandas(run, RESIZED_SCHEMA)
+    return map_batches(
+        media.select("url", "media", "media_type"), run, RESIZED_SCHEMA
+    )
 
 
 AUDIO_FEATURES_SCHEMA = StructType(
@@ -394,59 +391,55 @@ def extract_audio_features(
     metadata columns NULL) and count in ``fallback_acc`` when provided.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in AUDIO_FEATURES_SCHEMA.fields}
-            for url, data in zip(pdf["url"].values, pdf["media"].values):
-                data = bytes(data or b"")
-                out["url"].append(url)
-                out["n_bytes"].append(len(data))
-                dec = _decode_wav(data)
-                if dec is not None:
-                    rate, x = dec
-                    out["sample_rate"].append(int(rate))
-                    out["n_samples"].append(len(x))
-                    out["duration_ms"].append(int(len(x) * 1000 / rate))
-                    if len(x):
-                        stride = max(len(x) // n_frames, 1)
-                        rms = [
-                            float(
-                                np.sqrt(
-                                    np.mean(
-                                        np.square(
-                                            x[i * stride : (i + 1) * stride]
-                                        )
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = {k.name: [] for k in AUDIO_FEATURES_SCHEMA.fields}
+        for url, data in zip(pdf["url"].values, pdf["media"].values):
+            data = bytes(data or b"")
+            out["url"].append(url)
+            out["n_bytes"].append(len(data))
+            dec = _decode_wav(data)
+            if dec is not None:
+                rate, x = dec
+                out["sample_rate"].append(int(rate))
+                out["n_samples"].append(len(x))
+                out["duration_ms"].append(int(len(x) * 1000 / rate))
+                if len(x):
+                    stride = max(len(x) // n_frames, 1)
+                    rms = [
+                        float(
+                            np.sqrt(
+                                np.mean(
+                                    np.square(
+                                        x[i * stride : (i + 1) * stride]
                                     )
                                 )
                             )
-                            if len(x[i * stride : (i + 1) * stride])
-                            else 0.0
-                            for i in range(n_frames)
-                        ]
-                    else:
-                        rms = [0.0] * n_frames
-                    out["rms_frames"].append(rms)
-                    out["decoded"].append("wav")
+                        )
+                        if len(x[i * stride : (i + 1) * stride])
+                        else 0.0
+                        for i in range(n_frames)
+                    ]
                 else:
-                    if fallback_acc is not None:
-                        fallback_acc.add(1)
-                    digest = hashlib.blake2b(data, digest_size=32).digest()
-                    rng = np.random.RandomState(
-                        int.from_bytes(digest[:4], "big")
-                    )
-                    out["sample_rate"].append(None)
-                    out["n_samples"].append(None)
-                    out["duration_ms"].append(None)
-                    out["rms_frames"].append(
-                        rng.rand(n_frames).astype(float).tolist()
-                    )
-                    out["decoded"].append("stub")
-            yield pd.DataFrame(out)
+                    rms = [0.0] * n_frames
+                out["rms_frames"].append(rms)
+                out["decoded"].append("wav")
+            else:
+                if fallback_acc is not None:
+                    fallback_acc.add(1)
+                digest = hashlib.blake2b(data, digest_size=32).digest()
+                rng = np.random.RandomState(
+                    int.from_bytes(digest[:4], "big")
+                )
+                out["sample_rate"].append(None)
+                out["n_samples"].append(None)
+                out["duration_ms"].append(None)
+                out["rms_frames"].append(
+                    rng.rand(n_frames).astype(float).tolist()
+                )
+                out["decoded"].append("stub")
+        return pd.DataFrame(out)
 
-    from .session import ensure_parallelism
-
-    narrow = ensure_parallelism(media.select("url", "media"))
-    return narrow.mapInPandas(run, AUDIO_FEATURES_SCHEMA)
+    return map_batches(media.select("url", "media"), run, AUDIO_FEATURES_SCHEMA)
 
 
 def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
@@ -456,19 +449,15 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     n_frames equal windows, preserving the fan-out shape (one input row ->
     n_frames output rows) that matters for partition sizing."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, idxs, frames = [], [], []
-            for url, data in zip(pdf["url"].values, pdf["media"].values):
-                data = data or b""
-                stride = max(len(data) // n_frames, 1)
-                for i in range(n_frames):
-                    urls.append(url)
-                    idxs.append(i)
-                    frames.append(data[i * stride : (i + 1) * stride])
-            yield pd.DataFrame({"url": urls, "frame_idx": idxs, "frame": frames})
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        urls, idxs, frames = [], [], []
+        for url, data in zip(pdf["url"].values, pdf["media"].values):
+            data = data or b""
+            stride = max(len(data) // n_frames, 1)
+            for i in range(n_frames):
+                urls.append(url)
+                idxs.append(i)
+                frames.append(data[i * stride : (i + 1) * stride])
+        return pd.DataFrame({"url": urls, "frame_idx": idxs, "frame": frames})
 
-    from .session import ensure_parallelism
-
-    narrow = ensure_parallelism(media.select("url", "media"))
-    return narrow.mapInPandas(run, FRAME_SCHEMA)
+    return map_batches(media.select("url", "media"), run, FRAME_SCHEMA)

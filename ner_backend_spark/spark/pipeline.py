@@ -65,11 +65,13 @@ class ReportOutput:
     config: ReportConfig | None = None  # lets sinks re-derive from rows
 
 
-def _derive_outputs(report_rows: DataFrame, config: ReportConfig) -> ReportOutput:
-    """All output tables as relational projections of report_rows."""
-    entities = explode_entities(report_rows)
-    object_groups = explode_groups(report_rows)
-
+def tag_counts(
+    entities: DataFrame, config: ReportConfig
+) -> tuple[DataFrame, DataFrame]:
+    """(report_tags, custom_tag_counts): the per-label entity counts as
+    (tag, count), split into the model labels and ``config``'s custom
+    regex labels. The one definition of the ``report_tags`` table, for
+    :func:`run_report` and the checkpointed runner's final rollup."""
     custom_labels = [tag for tag, _ in config.custom_tags]
     label_counts = entities.groupBy("label").agg(
         F.count(F.lit(1)).alias("count")
@@ -80,6 +82,14 @@ def _derive_outputs(report_rows: DataFrame, config: ReportConfig) -> ReportOutpu
     custom_tag_counts = label_counts.filter(
         F.col("label").isin(custom_labels) if custom_labels else F.lit(False)
     ).withColumnRenamed("label", "tag")
+    return report_tags, custom_tag_counts
+
+
+def _derive_outputs(report_rows: DataFrame, config: ReportConfig) -> ReportOutput:
+    """All output tables as relational projections of report_rows."""
+    entities = explode_entities(report_rows)
+    object_groups = explode_groups(report_rows)
+    report_tags, custom_tag_counts = tag_counts(entities, config)
 
     previews = None
     if config.build_previews:

@@ -7,13 +7,12 @@ session; here each document is its own session (fresh map per doc), which
 is the only parallelizable scoping — cross-document stable maps would be a
 global sequential assignment.
 
-Arrow-batched mapInPandas; the compiled model is cached per executor worker
-via the same mechanism as the tagger kernel.
+An Arrow-batched kernel through ``session.map_batches``, like the tagger;
+the compiled model is cached per executor worker by the tagger's
+``_compiled_state``.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -26,7 +25,7 @@ from pyspark.sql.types import (
 
 from ..core.postprocess import filter_entities
 from ..core.redact import TagMetadata, redact_spans
-from .session import ensure_parallelism
+from .session import map_batches
 from .tagger import ReportConfig, _compiled_state
 
 REDACTED_SCHEMA = StructType(
@@ -43,20 +42,18 @@ def redact_documents(
 ) -> DataFrame:
     """(url, redacted, n_redactions): per-document placeholder redaction."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model, _tags, _custom, _groups = _compiled_state(config)
-        for pdf in batches:
-            urls, outs, counts = [], [], []
-            for url, text in zip(pdf["url"].values, pdf["text"].values):
-                tb = (text or "").encode("utf-8")
-                ents = filter_entities(tb, model.predict(tb))
-                redacted, meta = redact_spans(tb, ents, TagMetadata())
-                urls.append(url)
-                outs.append(redacted)
-                counts.append(len(meta.tag_map))
-            yield pd.DataFrame(
-                {"url": urls, "redacted": outs, "n_redactions": counts}
-            )
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        model = _compiled_state(config)[0]
+        urls, outs, counts = [], [], []
+        for url, text in zip(pdf["url"].values, pdf["text"].values):
+            tb = (text or "").encode("utf-8")
+            ents = filter_entities(tb, model.predict(tb))
+            redacted, meta = redact_spans(tb, ents, TagMetadata())
+            urls.append(url)
+            outs.append(redacted)
+            counts.append(len(meta.tag_map))
+        return pd.DataFrame(
+            {"url": urls, "redacted": outs, "n_redactions": counts}
+        )
 
-    narrow = ensure_parallelism(docs.select("url", "text"))
-    return narrow.mapInPandas(run, REDACTED_SCHEMA)
+    return map_batches(docs.select("url", "text"), run, REDACTED_SCHEMA)

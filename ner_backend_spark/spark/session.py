@@ -55,6 +55,21 @@ def ensure_parallelism(df, min_partitions: int | None = None):
     return df
 
 
+def map_batches(df, kernel, schema):
+    """``df.mapInPandas`` with ``kernel(pdf) -> pandas.DataFrame`` applied
+    once per non-empty Arrow batch of ``df``, fanned out first by
+    :func:`ensure_parallelism`: the one entry point of every Arrow kernel.
+    Callers project ``df`` to the columns the kernel reads and keep their
+    own per-batch state in the kernel's closure."""
+
+    def run(batches):
+        for pdf in batches:
+            if len(pdf):
+                yield kernel(pdf)
+
+    return ensure_parallelism(df).mapInPandas(run, schema)
+
+
 def engine_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
     """The engine's session conf as a dict, for builders this module does
     not own — most importantly the ``spark-submit`` deployment entry

@@ -13,7 +13,6 @@
 
 from __future__ import annotations
 
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -29,6 +28,7 @@ from pyspark.sql.types import (
 )
 
 from .kg import bucket_pairs, drop_oversized
+from .session import map_batches
 
 
 def _norm(col):
@@ -131,35 +131,30 @@ def lsh_bucket_ids(
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["id"].values
-            bucket_rows = np.empty((len(pdf), tables), dtype=np.int64)
-            for r, vec in enumerate(pdf["vec"].values):
-                x = np.asarray(vec, dtype=np.float64)
-                bits = (planes @ x >= 0).astype(np.int64)
-                bucket_rows[r] = (
-                    bits.reshape(tables, n_planes) * powers
-                ).sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    "id": np.repeat(ids, tables),
-                    "table": np.tile(
-                        np.arange(tables, dtype=np.int32), len(pdf)
-                    ),
-                    "bucket": bucket_rows.reshape(-1).astype(np.int32),
-                }
-            )
-
-    from .session import ensure_parallelism
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf["id"].values
+        bucket_rows = np.empty((len(pdf), tables), dtype=np.int64)
+        for r, vec in enumerate(pdf["vec"].values):
+            x = np.asarray(vec, dtype=np.float64)
+            bits = (planes @ x >= 0).astype(np.int64)
+            bucket_rows[r] = (
+                bits.reshape(tables, n_planes) * powers
+            ).sum(axis=1)
+        return pd.DataFrame(
+            {
+                "id": np.repeat(ids, tables),
+                "table": np.tile(
+                    np.arange(tables, dtype=np.int32), len(pdf)
+                ),
+                "bucket": bucket_rows.reshape(-1).astype(np.int32),
+            }
+        )
 
     out = df.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     )
-    return ensure_parallelism(out).mapInPandas(run, schema)
+    return map_batches(out, run, schema)
 
 
 def probe_masks(n_planes: int, probe_hamming: int) -> list[int]:
@@ -510,23 +505,18 @@ def ivf_assignments(
     # higher-order functions for the per-corpus-row path). Fixed-shape GEMV
     # per row -> deterministic scores; ties resolve to the LOWEST centroid
     # id (numpy argmax), replicated by the python oracle.
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            assigned = np.empty(len(pdf), dtype=np.int32)
-            for r, vec in enumerate(pdf["vec"].values):
-                x = np.asarray(vec, dtype=np.float64)
-                assigned[r] = int((cents @ x).argmax())
-            yield pd.DataFrame({"id": pdf["id"].values, "centroid_id": assigned})
-
-    from .session import ensure_parallelism
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        assigned = np.empty(len(pdf), dtype=np.int32)
+        for r, vec in enumerate(pdf["vec"].values):
+            x = np.asarray(vec, dtype=np.float64)
+            assigned[r] = int((cents @ x).argmax())
+        return pd.DataFrame({"id": pdf["id"].values, "centroid_id": assigned})
 
     out = embeddings.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     )
-    return ensure_parallelism(out).mapInPandas(run, schema)
+    return map_batches(out, run, schema)
 
 
 def semantic_dedup(
@@ -722,24 +712,19 @@ def pq_encode(
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = np.empty((len(pdf), n_blocks), dtype=np.int32)
-            for r, vec in enumerate(pdf["vec"].values):
-                out[r] = _pq_encode_np(
-                    np.asarray(vec, dtype=np.float64), books, biases
-                )
-            yield pd.DataFrame({"id": pdf["id"].values, "codes": list(out)})
-
-    from .session import ensure_parallelism
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = np.empty((len(pdf), n_blocks), dtype=np.int32)
+        for r, vec in enumerate(pdf["vec"].values):
+            out[r] = _pq_encode_np(
+                np.asarray(vec, dtype=np.float64), books, biases
+            )
+        return pd.DataFrame({"id": pdf["id"].values, "codes": list(out)})
 
     vecs = embeddings.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     )
-    return ensure_parallelism(vecs).mapInPandas(run, schema)
+    return map_batches(vecs, run, schema)
 
 
 def pq_topk(
@@ -808,38 +793,31 @@ def pq_topk(
     )
     b_idx = np.arange(n_blocks)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            nq = len(q_ids)
-            n = len(pdf)
-            scores = np.empty((n, nq), dtype=np.float64)
-            for r, vec in enumerate(pdf["vec"].values):
-                codes = _pq_encode_np(
-                    np.asarray(vec, dtype=np.float64), books, biases
-                )
-                n2 = norm2[b_idx, codes].sum()
-                ip = luts[:, b_idx, codes].sum(axis=1)  # (nq,)
-                scores[r] = ip / np.sqrt(n2) if n2 > 0.0 else 0.0
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(q_ids, n),
-                    "neighbor_id": np.repeat(pdf["id"].values, nq),
-                    "score": scores.reshape(-1),
-                }
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        nq = len(q_ids)
+        n = len(pdf)
+        scores = np.empty((n, nq), dtype=np.float64)
+        for r, vec in enumerate(pdf["vec"].values):
+            codes = _pq_encode_np(
+                np.asarray(vec, dtype=np.float64), books, biases
             )
-
-    from .session import ensure_parallelism
+            n2 = norm2[b_idx, codes].sum()
+            ip = luts[:, b_idx, codes].sum(axis=1)  # (nq,)
+            scores[r] = ip / np.sqrt(n2) if n2 > 0.0 else 0.0
+        return pd.DataFrame(
+            {
+                "query_id": np.tile(q_ids, n),
+                "neighbor_id": np.repeat(pdf["id"].values, nq),
+                "score": scores.reshape(-1),
+            }
+        )
 
     vecs = embeddings.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     )
-    scored = (
-        ensure_parallelism(vecs)
-        .mapInPandas(run, schema)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+    scored = map_batches(vecs, run, schema).filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
     w1 = Window.partitionBy(
         "query_id", F.pmod(F.hash("neighbor_id"), F.lit(topk_buckets))

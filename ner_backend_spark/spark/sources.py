@@ -144,6 +144,7 @@ def parse_objects(
                 }
             )
 
+    # not session.map_batches: its fan-out took q_source_chunks (sf0.01) from 1 job to 3
     pdf_rows = pdfs.mapInPandas(run_pdf, CHUNK_SCHEMA)
     return plain.unionByName(unsupported).unionByName(pdf_rows)
 

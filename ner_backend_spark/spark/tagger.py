@@ -1,4 +1,4 @@
-"""The text -> entities transform as an Arrow-batched mapInPandas kernel.
+"""The text -> entities transform as an Arrow-batched kernel.
 
 This is the engine's hot path: one pass over (url, text) producing, per
 document, everything ``runInferenceOnObject`` produces
@@ -9,7 +9,8 @@ Scale design:
 * ONE model pass per document — groups/counts/preview derive from it without
   a second scan; downstream tables (entities, object_groups, report_tags,
   previews) are relational projections/explosions of this output.
-* mapInPandas with Arrow batches (``spark.sql.execution.arrow.
+* ``session.map_batches``, which fans a small input out to every core and
+  hands the kernel Arrow batches (``spark.sql.execution.arrow.
   maxRecordsPerBatch``) — no per-row Python UDF calls; the per-batch Python
   loop iterates short span lists per document, mirroring the reference's
   16-text gRPC batches (internal/core/python/model.go:176-215).
@@ -24,7 +25,6 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 from functools import lru_cache
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -40,6 +40,7 @@ from pyspark.sql.types import (
 from ..core.inference import compile_custom_tags, run_inference_on_object
 from ..core.models import load_model
 from ..core.query import parse_query
+from .session import map_batches
 
 ENTITY_STRUCT = StructType(
     [
@@ -179,18 +180,13 @@ def tag_documents(
         fields.append(pages.schema[c])
     schema = StructType(fields)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                out = _run_batch(pdf, config)
-                for c in passthrough:
-                    out[c] = pdf[c].values
-                yield out
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = _run_batch(pdf, config)
+        for c in passthrough:
+            out[c] = pdf[c].values
+        return out
 
-    from .session import ensure_parallelism
-
-    narrow = ensure_parallelism(pages.select("url", "text", *passthrough))
-    return narrow.mapInPandas(run, schema)
+    return map_batches(pages.select("url", "text", *passthrough), run, schema)
 
 
 def explode_entities(report_rows: DataFrame) -> DataFrame:

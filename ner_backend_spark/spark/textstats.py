@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .session import map_batches
+
 # Whitespace class pinned explicitly: Java's \s (Spark) is
 # [ \t\n\x0B\f\r] while RE2's \s (DuckDB oracles) is [ \t\n\f\r] — a
 # document containing \x0B would tokenize differently on the two sides
@@ -165,7 +167,6 @@ def bpe_encode(
     approximation; this is the exact-count + sequence path.
     """
     import hashlib
-    from typing import Iterator
 
     import numpy as np
     import pandas as pd
@@ -176,21 +177,17 @@ def bpe_encode(
     id_type = df.schema[id_col].dataType.simpleString()
     schema = f"{id_col} {id_type}, n_bpe_tokens long, ids_hash string"
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            ns, hs = [], []
-            for text in pdf[text_col].values:
-                ids = np.asarray(vocab.encode(text or ""), dtype=np.int64)
-                ns.append(len(ids))
-                hs.append(hashlib.md5(ids.tobytes()).hexdigest())
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].values, "n_bpe_tokens": ns, "ids_hash": hs}
-            )
+    def run(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        ns, hs = [], []
+        for text in pdf[text_col].values:
+            ids = np.asarray(vocab.encode(text or ""), dtype=np.int64)
+            ns.append(len(ids))
+            hs.append(hashlib.md5(ids.tobytes()).hexdigest())
+        return pd.DataFrame(
+            {id_col: pdf[id_col].values, "n_bpe_tokens": ns, "ids_hash": hs}
+        )
 
-    from .session import ensure_parallelism
-
-    narrow = ensure_parallelism(df.select(id_col, text_col))
-    return narrow.mapInPandas(run, schema)
+    return map_batches(df.select(id_col, text_col), run, schema)
 
 
 # Gopher rule-set stopwords (Rae et al. 2021, "Scaling Language Models",
@@ -528,7 +525,6 @@ def compression_ratio(
     when comparing across environments. Empty text reports ratio 0.0.
     """
     import zlib
-    from typing import Iterator
 
     import pandas as pd
 
@@ -538,28 +534,24 @@ def compression_ratio(
         " compression_ratio double"
     )
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            nb, nc, ratio = [], [], []
-            for text in pdf[text_col].values:
-                raw = (text or "").encode("utf-8")
-                comp = len(zlib.compress(raw, level)) if raw else 0
-                nb.append(len(raw))
-                nc.append(comp)
-                ratio.append(comp / len(raw) if raw else 0.0)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "n_bytes": nb,
-                    "n_compressed": nc,
-                    "compression_ratio": ratio,
-                }
-            )
+    def run(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        nb, nc, ratio = [], [], []
+        for text in pdf[text_col].values:
+            raw = (text or "").encode("utf-8")
+            comp = len(zlib.compress(raw, level)) if raw else 0
+            nb.append(len(raw))
+            nc.append(comp)
+            ratio.append(comp / len(raw) if raw else 0.0)
+        return pd.DataFrame(
+            {
+                id_col: pdf[id_col].values,
+                "n_bytes": nb,
+                "n_compressed": nc,
+                "compression_ratio": ratio,
+            }
+        )
 
-    from .session import ensure_parallelism
-
-    narrow = ensure_parallelism(df.select(id_col, text_col))
-    return narrow.mapInPandas(run, schema)
+    return map_batches(df.select(id_col, text_col), run, schema)
 
 
 def add_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:

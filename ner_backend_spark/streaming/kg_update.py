@@ -55,6 +55,7 @@ from ..spark.kg import (
     incremental_components,
     link_edges,
     with_components,
+    with_trigrams,
 )
 
 # the state tables' columns in the order they are written: every read
@@ -198,7 +199,7 @@ class IncrementalKg:
         )
         edges = link_edges(
             pairs,
-            self.mentions(),
+            with_trigrams(self.mentions()),
             alias_candidates(new_m, self.alias_df),
             self.threshold,
         )

@@ -201,8 +201,9 @@ def test_lsh_blocking_proposes_similar_pairs(spark, entities, monkeypatch):
     monkeypatch.setattr(kg, "_NUM_HASHES", 12)
     monkeypatch.setattr(kg, "_BANDS", 6)
     mentions = kg.extract_mentions(entities)
-    pairs = kg.lsh_candidate_pairs(mentions)
-    scored = kg.score_links(pairs, mentions, threshold=0.35)
+    banded = kg._banded(mentions)
+    pairs = kg.lsh_candidate_pairs(banded)
+    scored = kg.score_links(pairs, banded, threshold=0.35)
     # map ids back to surfaces
     m = {r["mention_id"]: r["text"] for r in mentions.collect()}
     found = {
@@ -288,14 +289,15 @@ def test_lsh_bucket_cap_counts_per_label(spark):
     mentions = spark.createDataFrame(
         rows, ["label", "text", "norm"]
     ).withColumn("mention_id", F.xxhash64("label", "text"))
+    banded = kg._banded(mentions)
 
-    uncapped = kg.lsh_candidate_pairs(mentions).count()
+    uncapped = kg.lsh_candidate_pairs(banded).count()
     # cap=8: per-label occupancy is 6 <= 8, so nothing may be dropped even
     # though the mixed-label bucket holds 12
-    capped = kg.lsh_candidate_pairs(mentions, max_bucket_size=8).count()
+    capped = kg.lsh_candidate_pairs(banded, max_bucket_size=8).count()
     assert capped == uncapped
     # cap=3 drops the oversized per-label groups entirely
-    assert kg.lsh_candidate_pairs(mentions, max_bucket_size=3).count() == 0
+    assert kg.lsh_candidate_pairs(banded, max_bucket_size=3).count() == 0
 
 
 def test_chunked_pair_generation_equals_plain(spark, monkeypatch):
@@ -308,14 +310,14 @@ def test_chunked_pair_generation_equals_plain(spark, monkeypatch):
            ("c", "ORG", "initech")]
     )
     ents = spark.createDataFrame(rows, "url string, label string, text string")
-    mentions = kg.extract_mentions(ents)
+    banded = kg._banded(kg.extract_mentions(ents))
 
     def pairset(threshold, groups=kg._CHUNK_GROUPS):
         monkeypatch.setattr(kg, "_CHUNK_THRESHOLD", threshold)
         monkeypatch.setattr(kg, "_CHUNK_GROUPS", groups)
         return {
             (r["id_a"], r["id_b"])
-            for r in kg.lsh_candidate_pairs(mentions).collect()
+            for r in kg.lsh_candidate_pairs(banded).collect()
         }
 
     plain = pairset(10**9)
@@ -425,10 +427,11 @@ def _seeded_entities(spark):
 def _tie_threshold(mentions):
     """A threshold some candidate pair scores exactly, so a path that
     drops ties differs from one that keeps them."""
+    banded = kg._banded(mentions)
     scores = sorted(
         r["score"]
         for r in kg.score_links(
-            kg.lsh_candidate_pairs(mentions), mentions, 0.0
+            kg.lsh_candidate_pairs(banded), banded, 0.0
         ).collect()
     )
     assert 0 < scores[len(scores) // 2] < 1
@@ -521,3 +524,28 @@ def test_mention_edges_pair_bound_takes_spark_path(spark):
         F.count_distinct("src", "dst").alias("distinct"),
     ).first()
     assert agg["n"] == agg["distinct"] == 710 * 709 // 2
+
+
+def test_mention_edges_signs_mentions_once(spark, monkeypatch):
+    """Above the size gate the Spark path blocks and scores the
+    ``_banded`` cut itself, so one SQL execution of a ``mention_edges``
+    call computes the MinHash signatures, and the trigrams come from the
+    same cut."""
+    monkeypatch.setattr(kg, "_LOCAL_ROWS", 0)
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        spark._jsc.sc().listenerBus().waitUntilEmpty()
+        listed = store.executionsList()
+        return [listed.apply(i) for i in range(listed.size())]
+
+    seen = max((x.executionId() for x in executions()), default=-1)
+    mentions = kg.extract_mentions(_seeded_entities(spark))
+    assert kg.mention_edges(mentions).count() > 0
+    plans = [
+        x.physicalPlanDescription()
+        for x in executions()
+        if x.executionId() > seen
+    ]
+    assert sum("array_min(transform(" in p for p in plans) == 1, plans
+    assert sum("array_distinct(transform(sequence(" in p for p in plans) == 1, plans

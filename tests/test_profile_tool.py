@@ -26,8 +26,10 @@ def test_profile_tool_reconciles_walls():
     assert out.returncode == 0, out.stderr[-3000:]
     res = json.loads(out.stdout.splitlines()[-1])
     assert sorted(res["queries"]) == sorted(names)
+    assert 0 <= res["stamp"]["steal"] <= 1, res["stamp"]
     for name, q in res["queries"].items():
         assert len(q["walls"]) == 2, name
+        assert len(q["steal"]) == 2 and all(0 <= x <= 1 for x in q["steal"]), q
         assert q["min"] <= q["median"], name
         assert q["jobs"] >= 1, name
         wall = q["median"]

@@ -137,7 +137,7 @@ def test_kg_alias_join_is_broadcast(spark, pages_path):
 
 
 def test_ensure_parallelism_fans_out_small_input(spark, pages_path):
-    from ner_backend_spark.spark.session import ensure_parallelism
+    from ner_backend_spark.spark.session import ensure_parallelism, map_batches
 
     one = spark.read.parquet(pages_path).coalesce(1)
     assert one.rdd.getNumPartitions() == 1
@@ -146,6 +146,16 @@ def test_ensure_parallelism_fans_out_small_input(spark, pages_path):
         fanned.rdd.getNumPartitions()
         == spark.sparkContext.defaultParallelism
     )
+    # every Arrow kernel's entry point fans the same frame out first
+    mapped = map_batches(
+        one.select("url"), lambda pdf: pdf.assign(n=len(pdf)), "url string, n long"
+    )
+    assert mapped.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    rows = mapped.collect()
+    assert sorted(r["url"] for r in rows) == sorted(
+        r["url"] for r in one.select("url").collect()
+    )
+    assert all(r["n"] >= 1 for r in rows)
     # already-wide inputs are untouched (no extra shuffle at scale)
     wide = spark.range(0, 1000, 1, 64)
     assert ensure_parallelism(wide).rdd.getNumPartitions() == 64
@@ -224,9 +234,11 @@ def test_capped_pair_generators_log_no_errors(spark, log_errors):
         dedup.winnow_near_duplicates(
             docs, "doc_id", "text", **WINNOW, **WINNOW_NEARDUP
         ).count()
-        # the mentions cut lazily, as canonicalize cuts them
+        # the mentions cut lazily, as canonicalize cuts them, and banded
+        # into the eager cut mention_edges blocks
         mentions = kg._materialize(kg.extract_mentions(ents), eager=False)
-        kg.lsh_candidate_pairs(mentions, KG_MAX_BUCKET).count()
+        banded = kg._materialize(kg._banded(mentions))
+        kg.lsh_candidate_pairs(banded, KG_MAX_BUCKET).count()
     assert writer.toString() == ""
 
 

@@ -12,12 +12,15 @@ measures. The stopped session's event log is then charged to the spans.
 
 The last stdout line is one JSON object, ``{"stamp", "queries"}``. The
 stamp has cores, ``nproc``, loadavg before and after, the git commit, the
-SF dir and the run's ERROR lines. Per query: ``walls``, ``min``,
-``median`` (the lower median, so one rep's wall) and ``error_lines`` per
-rep; for the median rep, its jobs' event-log totals, ``driver_gap_s``
-(wall with no job running), ``busy_s`` (the union of its job intervals,
-unclipped, so ``wall - driver_gap_s - busy_s`` is job time outside the
-span) and ``job_intervals`` (from the span start); from the profiled
+SF dir, the run's ERROR lines and ``steal``, the host's CPU steal share
+over the session (the ``steal`` jiffies of ``/proc/stat``'s ``cpu`` line
+over all its jiffies, 0 to 1), which a loadavg inside a VM does not see.
+Per query: ``walls``, ``min``, ``median`` (the lower median, so one
+rep's wall), and ``error_lines`` and ``steal`` per rep; for the median
+rep, its jobs' event-log totals, ``driver_gap_s`` (wall with no job
+running), ``busy_s`` (the union of its job intervals, unclipped, so
+``wall - driver_gap_s - busy_s`` is job time outside the span) and
+``job_intervals`` (from the span start); from the profiled
 pass, ``udf_pass_s`` and ``udf_self_s``, the pstats ``total_tt`` sum.
 
 ``driver_gap_s`` is split three ways from the SQL execution events of
@@ -49,6 +52,18 @@ import bench  # noqa: E402
 from spans import (  # noqa: E402
     StderrCapture, Tracer, attribute_event_log, driver_gap_seconds, read_event_log,
 )
+
+
+def _cpu_jiffies() -> tuple[int, int]:
+    """(steal, total) jiffies of the host CPU so far, from ``/proc/stat``."""
+    with open("/proc/stat") as f:
+        fields = [int(v) for v in f.readline().split()[1:9]]
+    return fields[7], sum(fields)
+
+
+def _steal_share(start: tuple[int, int], end: tuple[int, int]) -> float:
+    total = end[1] - start[1]
+    return round((end[0] - start[0]) / total, 4) if total else 0.0
 
 
 def _busy_seconds(intervals) -> float:
@@ -130,6 +145,7 @@ def profile(names: list[str], reps: int, work: str, capture: StderrCapture) -> d
     import __spark_entry__ as entry
     from ner_backend_spark.spark.session import get_spark
 
+    session_cpu = _cpu_jiffies()
     stamp = {
         "sf_dir": bench.SF_DIR, "reps": reps, "nproc": os.cpu_count(),
         "loadavg_before": os.getloadavg(),
@@ -152,10 +168,13 @@ def profile(names: list[str], reps: int, work: str, capture: StderrCapture) -> d
         bench.warm_python_workers(spark)
         capture.new_error_lines()  # startup noise is charged to no query
         timed = {name: [] for name in names}
+        steal = {name: [] for name in names}
         for _ in range(reps):
             for name in names:
+                cpu = _cpu_jiffies()
                 with tracer.span(name) as sp:
                     bench.force(qs[name](spark, bench.SF_DIR))
+                steal[name].append(_steal_share(cpu, _cpu_jiffies()))
                 timed[name].append(sp)
         udf = {}
         spark.conf.set("spark.sql.pyspark.udf.profiler", "perf")
@@ -167,6 +186,7 @@ def profile(names: list[str], reps: int, work: str, capture: StderrCapture) -> d
     finally:
         spark.stop()
     stamp["loadavg_after"] = os.getloadavg()
+    stamp["steal"] = _steal_share(session_cpu, _cpu_jiffies())
     capture.new_error_lines()
     stamp["error_lines"] = capture.total
     attribute_event_log(tracer, read_event_log(f"{work}/events"))
@@ -182,6 +202,7 @@ def profile(names: list[str], reps: int, work: str, capture: StderrCapture) -> d
             "min": min(walls),
             "median": round(med.seconds, 3),
             "error_lines": [s.error_lines for s in sps],
+            "steal": steal[name],
             **{k: round(v, 3) for k, v in med.engine.items() if k != "job_intervals"},
             "busy_s": round(_busy_seconds(ivs), 3),
             "driver_gap_s": round(driver_gap_seconds(tracer, med), 3),
