@@ -1180,6 +1180,14 @@ def _q_kg_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cooccurring_pairs(_q_kg_triples(spark, sf_dir), max_per_subj=20)
 
 
+def _cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst): the q_kg_cooccurrence pairs as the edges of the entity
+    co-occurrence graph its graph queries read."""
+    return _q_kg_cooccurrence(spark, sf_dir).select(
+        F.col("obj_a").alias("src"), F.col("obj_b").alias("dst")
+    )
+
+
 def _q_kg_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PMI/NPMI association scores over co-occurring entity pairs — the
     distant-supervision signal layered on q_kg_cooccurrence; marginals
@@ -1346,11 +1354,7 @@ def _q_kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB over the compositional co-occurrence CTE."""
     from ner_backend_spark.spark.graph import triangle_count
 
-    pairs = _q_kg_cooccurrence(spark, sf_dir)
-    edges = pairs.select(
-        F.col("obj_a").alias("src"), F.col("obj_b").alias("dst")
-    )
-    return triangle_count(edges)
+    return triangle_count(_cooc_edges(spark, sf_dir))
 
 
 def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1376,25 +1380,29 @@ def _q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The level frames v and c are each consumed twice (next level's
     probe + the final emit join), so they carry lineage cuts
-    (lazy localCheckpoint): without them the plan tree duplicates the
+    (lazy :func:`kg._materialize`): without them the plan tree duplicates the
     v subplan three times and c twice — six aggregates and up to six
     events scans, only partially deduplicated by runtime exchange reuse
     (the same unmaterialized-shared-subplan disease as VERDICT r6 #1).
     Cut, each user-sized level computes exactly once and the events
     table is scanned exactly three times (once per step filter)."""
+    from ner_backend_spark.spark.kg import _materialize
+
     ev = _t(spark, sf_dir, "events")
-    v = (
+    v = _materialize(
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
-        .agg(F.min("ts").alias("t_view"))
-    ).localCheckpoint(eager=False)
-    c = (
+        .agg(F.min("ts").alias("t_view")),
+        eager=False,
+    )
+    c = _materialize(
         ev.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter(F.col("ts") > F.col("t_view"))
         .groupBy("user_id")
-        .agg(F.min("ts").alias("t_click"))
-    ).localCheckpoint(eager=False)
+        .agg(F.min("ts").alias("t_click")),
+        eager=False,
+    )
     p = (
         ev.filter(F.col("event_type") == "purchase")
         .join(c, "user_id")
@@ -1435,11 +1443,7 @@ def _q_kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized triples table."""
     from ner_backend_spark.spark.graph import kcore
 
-    pairs = _q_kg_cooccurrence(spark, sf_dir)
-    edges = pairs.select(
-        F.col("obj_a").alias("src"), F.col("obj_b").alias("dst")
-    )
-    return kcore(edges, k=2)
+    return kcore(_cooc_edges(spark, sf_dir), k=2)
 
 
 def _q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1461,11 +1465,7 @@ def _q_kg_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compositional co-occurrence CTE."""
     from ner_backend_spark.spark.graph import clustering_coefficient
 
-    pairs = _q_kg_cooccurrence(spark, sf_dir)
-    edges = pairs.select(
-        F.col("obj_a").alias("src"), F.col("obj_b").alias("dst")
-    )
-    return clustering_coefficient(edges)
+    return clustering_coefficient(_cooc_edges(spark, sf_dir))
 
 
 def _q_kg_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1477,11 +1477,7 @@ def _q_kg_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-occurrence CTE."""
     from ner_backend_spark.spark.graph import neighbor_jaccard
 
-    pairs = _q_kg_cooccurrence(spark, sf_dir)
-    edges = pairs.select(
-        F.col("obj_a").alias("src"), F.col("obj_b").alias("dst")
-    )
-    return neighbor_jaccard(edges, max_per_node=20)
+    return neighbor_jaccard(_cooc_edges(spark, sf_dir), max_per_node=20)
 
 
 def _q_kg_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1492,11 +1488,7 @@ def _q_kg_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds as DuckDB CTEs over the compositional co-occurrence CTE."""
     from ner_backend_spark.spark.graph import label_propagation
 
-    pairs = _q_kg_cooccurrence(spark, sf_dir)
-    edges = pairs.select(
-        F.col("obj_a").alias("src"), F.col("obj_b").alias("dst")
-    )
-    return label_propagation(edges, iters=3)
+    return label_propagation(_cooc_edges(spark, sf_dir), iters=3)
 
 
 def _q_kg_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1511,11 +1503,7 @@ def _q_kg_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     peel in pure Python over the materialized triples table."""
     from ner_backend_spark.spark.graph import truss
 
-    pairs = _q_kg_cooccurrence(spark, sf_dir)
-    edges = pairs.select(
-        F.col("obj_a").alias("src"), F.col("obj_b").alias("dst")
-    )
-    out = truss(edges, k=3)
+    out = truss(_cooc_edges(spark, sf_dir), k=3)
     return out.select(
         "node_a", "node_b", F.col("support").cast("long").alias("support")
     )
@@ -1576,11 +1564,7 @@ def _q_kg_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL over the triples oracle table."""
     from ner_backend_spark.spark.graph import graph_summary
 
-    pairs = _q_kg_cooccurrence(spark, sf_dir)
-    edges = pairs.select(
-        F.col("obj_a").alias("src"), F.col("obj_b").alias("dst")
-    )
-    return graph_summary(edges)
+    return graph_summary(_cooc_edges(spark, sf_dir))
 
 
 def _q_heavy_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -253,10 +253,9 @@ def load_artifact(path: str = WEIGHTS_FILE) -> dict[str, np.ndarray]:
     but on a cluster that means EVERY executor Python worker retrains
     (~30s each, per process), a hard-to-diagnose fleet-wide slowdown that
     masks the real bug (a packaging omission), and the retrained result
-    skipped the ARTIFACT_VERSION check (round-4 advice). Now the fallback
-    is gated behind NER_SPARK_ALLOW_CRF_RETRAIN=1 (an explicit opt-in for
-    dev loops) and logs loudly when taken; otherwise a missing artifact
-    raises with the fix spelled out.
+    skipped the ARTIFACT_VERSION check (round-4 advice). A missing
+    artifact raises with the fix spelled out; ``tools/train_crf.py``
+    regenerates it.
     """
     import io
 
@@ -275,25 +274,12 @@ def load_artifact(path: str = WEIGHTS_FILE) -> dict[str, np.ndarray]:
         except Exception:
             data = None
     if data is None:
-        if os.environ.get("NER_SPARK_ALLOW_CRF_RETRAIN") == "1":
-            import logging
-
-            logging.getLogger(__name__).error(
-                "crf_weights.npz not found at %s or in package resources; "
-                "retraining in-process because NER_SPARK_ALLOW_CRF_RETRAIN=1 "
-                "— this costs ~30s PER EXECUTOR PYTHON WORKER and should "
-                "never happen in a deployed job",
-                path,
-            )
-            return train_emissions()
         raise FileNotFoundError(
             f"crf_weights.npz not found at {path} or via "
             "importlib.resources('ner_backend_spark.core') — the artifact "
             "was omitted from the deployment package. Ship it with the "
             "--py-files zip (tools/submit_pipeline.py includes it) or run "
-            "tools/train_crf.py to regenerate. Set "
-            "NER_SPARK_ALLOW_CRF_RETRAIN=1 to opt into a slow in-process "
-            "retrain for local development only."
+            "tools/train_crf.py to regenerate."
         )
     with np.load(io.BytesIO(data)) as z:
         if str(z["version"]) != ARTIFACT_VERSION:

@@ -412,6 +412,7 @@ class CheckpointedReportRunner:
         # one pass over the group: cache report_rows for the three sinks,
         # released in the finally so a failed write leaves no CacheManager
         # entry for the rest of the session
+        # persist, not kg._materialize: the finally frees it, not a later GC
         rows = with_partition_id(out.report_rows, self.n_buckets).persist()
         try:
             tables = {

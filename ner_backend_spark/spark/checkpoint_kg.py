@@ -167,6 +167,7 @@ class CheckpointedKgRunner:
         done = {r["stage"] for r in prior}
         # entities feeds the fingerprint, the mentions stage and the triples
         # stage — persist so a lazy upstream (the NER tagger) runs once
+        # persist, not kg._materialize: the finally frees it, not a later GC
         entities = entities.persist()
         ran: list[str] = []
         try:

@@ -512,6 +512,24 @@ def _jaccard(a: str, b: str) -> Column:
     return inter / (F.size(a) + F.size(b) - inter)
 
 
+def pair_columns(
+    pairs: DataFrame, rows: DataFrame, id_col: str, cols: Sequence[str]
+) -> DataFrame:
+    """``pairs`` (id_a, id_b, ...) inner-joined on ``id_a`` and then on
+    ``id_b`` with ``rows``' ``cols``, named ``<col>_a`` and ``<col>_b``:
+    the one join-back of the verify step after :func:`bucket_pairs`
+    proposes pairs. A pair whose id is not in ``rows`` is dropped."""
+    for side in ("a", "b"):
+        pairs = pairs.join(
+            rows.select(
+                F.col(id_col).alias(f"id_{side}"),
+                *[F.col(c).alias(f"{c}_{side}") for c in cols],
+            ),
+            f"id_{side}",
+        )
+    return pairs
+
+
 def score_links(
     pairs: DataFrame, rows: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
@@ -522,20 +540,12 @@ def score_links(
     Trigram arrays are distinct (:func:`_trigrams`), so the union size is
     ``|A| + |B| − |A ∩ B|``: the same double without building the union
     array."""
-    tri = rows.select("mention_id", "trigrams")
-    a = tri.select(
-        F.col("mention_id").alias("id_a"), F.col("trigrams").alias("tri_a")
-    )
-    b = tri.select(
-        F.col("mention_id").alias("id_b"), F.col("trigrams").alias("tri_b")
-    )
     return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
+        pair_columns(pairs, rows, "mention_id", ["trigrams"])
         .select(
             "id_a",
             "id_b",
-            _jaccard("tri_a", "tri_b").alias("score"),
+            _jaccard("trigrams_a", "trigrams_b").alias("score"),
         )
         .filter(F.col("score") >= threshold)
     )

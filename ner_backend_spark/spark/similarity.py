@@ -9,6 +9,11 @@
 * ivf_topk        — IVF-style coarse quantization: k-means-ish centroids
   sampled deterministically, vectors assigned to nearest centroid
   (partition pruning analogue); queries probe `nprobe` nearest centroids.
+
+Every cosine operator scores pairs the same way: each side is one
+_normed (id, vec, norm) projection, the pair's cosine is _cosine over
+the two norms, and the rankers keep each query's neighbors by _top_k.
+The near-duplicate pairs join their sides back through kg.pair_columns.
 """
 
 from __future__ import annotations
@@ -27,19 +32,19 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .kg import bucket_pairs, drop_oversized
+from .kg import bucket_pairs, drop_oversized, pair_columns
 from .session import map_batches
 
 
 def _norm(col):
     """sqrt of the sequential self-fold sum(v*v) of one vector. Computed
     ONCE PER ROW (below a join boundary, so CollapseProject cannot inline
-    it back into the per-pair expression), so the per-pair cosine
-    _dot(a, b) / (_norm(a) * _norm(b)) costs one array fold instead of
-    three, bit-identical to folding all three per pair: same fold, same
-    sqrt, same operand order (round 8 — the pair-join sites were paying
-    2/3 of their lambda evaluations recomputing row-constant norms per
-    pair)."""
+    it back into the per-pair expression), so the per-pair
+    :func:`_cosine` costs one array fold instead of three, bit-identical
+    to folding all three per pair: same fold, same sqrt, same operand
+    order (round 8 — the pair-join sites were paying 2/3 of their lambda
+    evaluations recomputing row-constant norms per pair). Every site gets
+    it from :func:`_normed`, the per-row projection."""
     return F.sqrt(F.aggregate(col, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
@@ -48,6 +53,35 @@ def _dot(col_a, col_b):
         F.zip_with(col_a, col_b, lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, v: acc + v,
+    )
+
+
+def _normed(df: DataFrame, vec_col: str, *cols, side: str = "") -> DataFrame:
+    """``df``'s ``cols``, then ``vec_col`` as array<double> and its
+    :func:`_norm`, named ``vec_<side>`` and ``norm_<side>`` (``vec`` and
+    ``norm`` without a side): the one projection below every pair join."""
+    vec, norm = (f"{c}_{side}" if side else c for c in ("vec", "norm"))
+    return df.select(
+        *cols, F.col(vec_col).cast("array<double>").alias(vec)
+    ).withColumn(norm, _norm(F.col(vec)))
+
+
+def _cosine(a: str, b: str):
+    """The cosine of sides ``a`` and ``b`` of a pair join of two
+    :func:`_normed` projections, from their norm columns."""
+    return _dot(F.col(f"vec_{a}"), F.col(f"vec_{b}")) / (
+        F.col(f"norm_{a}") * F.col(f"norm_{b}")
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """``scored``'s (query_id, neighbor_id, cosine) rows ranked per query
+    by cosine descending, ties to the lower neighbor_id; the first ``k``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id")
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
     )
 
 
@@ -63,33 +97,12 @@ def brute_force_topk(
     ``queries`` must be small (it is broadcast); candidates scan stays fully
     JVM-side — no Python in the hot path.
     """
-    # norms precomputed once per row below the join (_norm's docstring)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("q_vec"),
-    ).withColumn("q_norm", _norm(F.col("q_vec")))
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
-    ).withColumn("c_norm", _norm(F.col("c_vec")))
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    q = _normed(queries, vec_col, F.col(id_col).alias("query_id"), side="q")
+    c = _normed(embeddings, vec_col, F.col(id_col).alias("neighbor_id"), side="c")
+    scored = c.join(
+        F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
+    ).select("query_id", "neighbor_id", _cosine("q", "c").alias("cosine"))
+    return _top_k(scored, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
@@ -215,34 +228,14 @@ def lsh_topk(
         .distinct()
     )
 
-    # norms precomputed once per row below the join boundary (_norm's
-    # docstring) — the per-candidate cosine then costs one fold, not three
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("q_vec"),
-    ).withColumn("q_norm", _norm(F.col("q_vec")))
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
-    ).withColumn("c_norm", _norm(F.col("c_vec")))
+    q = _normed(queries, vec_col, F.col(id_col).alias("query_id"), side="q")
+    c = _normed(embeddings, vec_col, F.col(id_col).alias("neighbor_id"), side="c")
     scored = (
         cand_pairs.join(F.broadcast(q), "query_id")
         .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cosine"),
-        )
+        .select("query_id", "neighbor_id", _cosine("q", "c").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _top_k(scored, k)
 
 
 
@@ -347,21 +340,11 @@ def embedding_near_duplicates(
     no cross-join ever materializes and a hot bucket's pairs spread over
     many tasks.
     """
-    # norm precomputed once per row below the pair join (_norm docstring)
-    vecs = embeddings.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    ).withColumn("nrm", _norm(F.col("vec")))
+    vecs = _normed(embeddings, vec_col, F.col(id_col).cast("long").alias("id"))
     if method == "exact":
-        a = vecs.select(
-            F.col("id").alias("id_a"),
-            F.col("vec").alias("vec_a"),
-            F.col("nrm").alias("nrm_a"),
-        )
-        b = vecs.select(
-            F.col("id").alias("id_b"),
-            F.col("vec").alias("vec_b"),
-            F.col("nrm").alias("nrm_b"),
+        a, b = (
+            vecs.select(*[F.col(c).alias(f"{c}_{s}") for c in vecs.columns])
+            for s in "ab"
         )
         pairs = a.join(b, F.col("id_a") < F.col("id_b"))
     elif method == "lsh":
@@ -371,26 +354,11 @@ def embedding_near_duplicates(
             vecs, dim, "id", "vec", n_planes, tables, seed
         )
         cand = bucket_pairs(buckets, ["table", "bucket"], "id").distinct()
-        a = vecs.select(
-            F.col("id").alias("id_a"),
-            F.col("vec").alias("vec_a"),
-            F.col("nrm").alias("nrm_a"),
-        )
-        b = vecs.select(
-            F.col("id").alias("id_b"),
-            F.col("vec").alias("vec_b"),
-            F.col("nrm").alias("nrm_b"),
-        )
-        pairs = cand.join(a, "id_a").join(b, "id_b")
+        pairs = pair_columns(cand, vecs, "id", ["vec", "norm"])
     else:
         raise ValueError(f"unknown method {method!r}")
     return pairs.select(
-        "id_a",
-        "id_b",
-        (
-            _dot(F.col("vec_a"), F.col("vec_b"))
-            / (F.col("nrm_a") * F.col("nrm_b"))
-        ).alias("cosine"),
+        "id_a", "id_b", _cosine("a", "b").alias("cosine")
     ).filter(F.col("cosine") >= threshold)
 
 
@@ -433,47 +401,28 @@ def ivf_topk(
         embeddings, dim, n_centroids, id_col, vec_col, seed, centroids=cents
     ).withColumnRenamed("id", "neighbor_id")
 
-    # norms precomputed once per row below the join (_norm's docstring)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("q_vec"),
-    ).withColumn("q_norm", _norm(F.col("q_vec")))
+    q = _normed(queries, vec_col, F.col(id_col).alias("query_id"), side="q")
     # per-query centroid scores -> sort desc -> keep nprobe -> explode
-    scores = _centroid_scores("q_vec", cents)
+    scores = _centroid_scores("vec_q", cents)
     probes = q.select(
         "query_id",
-        "q_vec",
-        "q_norm",
+        "vec_q",
+        "norm_q",
         F.explode(
             F.slice(F.sort_array(scores, asc=False), 1, nprobe)
         ).alias("probe"),
     ).select(
-        "query_id", "q_vec", "q_norm", F.col("probe.cid").alias("centroid_id")
+        "query_id", "vec_q", "norm_q", F.col("probe.cid").alias("centroid_id")
     )
 
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("c_vec"),
-    ).withColumn("c_norm", _norm(F.col("c_vec")))
+    c = _normed(embeddings, vec_col, F.col(id_col).alias("neighbor_id"), side="c")
     scored = (
         assigned.join(F.broadcast(probes), "centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cosine"),
-        )
+        .select("query_id", "neighbor_id", _cosine("q", "c").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _top_k(scored, k)
 
 
 def ivf_assignments(
@@ -579,15 +528,10 @@ def semantic_dedup(
 
     prunable = drop_oversized(vecs, ["cid"], max_cluster_size)
 
-    # norms precomputed once per row below the join (_norm's docstring):
-    # the within-cluster pair predicate then folds each pair once (dot),
-    # not three times — bit-identical cosine by operand order
-    a = prunable.select(
-        "cid", F.col("id").alias("id_a"), F.col("vec").alias("vec_a")
-    ).withColumn("norm_a", _norm(F.col("vec_a")))
-    b = prunable.select(
-        "cid", F.col("id").alias("id_b"), F.col("vec").alias("vec_b")
-    ).withColumn("norm_b", _norm(F.col("vec_b")))
+    a, b = (
+        _normed(prunable, "vec", "cid", F.col("id").alias(f"id_{s}"), side=s)
+        for s in "ab"
+    )
     # duplicate side only: for each b, does any smaller-id a in the same
     # cluster sit above the threshold? LEFT SEMI keeps the probe one-sided
     # (no pair rows survive the join).
@@ -597,11 +541,7 @@ def semantic_dedup(
             a.alias("a"),
             (F.col("a.cid") == F.col("b.cid"))
             & (F.col("a.id_a") < F.col("b.id_b"))
-            & (
-                _dot(F.col("a.vec_a"), F.col("b.vec_b"))
-                / (F.col("a.norm_a") * F.col("b.norm_b"))
-                >= F.lit(float(threshold))
-            ),
+            & (_cosine("a", "b") >= F.lit(float(threshold))),
             "left_semi",
         )
         .select(F.col("id_b").alias("id"))

@@ -119,8 +119,7 @@ def test_predict_offsets_point_into_original_text(model):
 
 def test_load_artifact_missing_fails_fast(monkeypatch, tmp_path):
     """Round-4 advice: a packaging omission must raise with the fix named,
-    not silently retrain in every executor Python worker (~30s each). The
-    retrain fallback is opt-in via NER_SPARK_ALLOW_CRF_RETRAIN=1."""
+    not silently retrain in every executor Python worker (~30s each)."""
     import importlib.resources
 
     import pytest
@@ -131,7 +130,6 @@ def test_load_artifact_missing_fails_fast(monkeypatch, tmp_path):
         raise FileNotFoundError("package resources unavailable")
 
     monkeypatch.setattr(importlib.resources, "files", no_resources)
-    monkeypatch.delenv("NER_SPARK_ALLOW_CRF_RETRAIN", raising=False)
     crf_train.load_artifact.cache_clear()
     try:
         with pytest.raises(FileNotFoundError, match="py-files"):

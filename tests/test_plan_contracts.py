@@ -465,3 +465,35 @@ def test_heavy_hitters_probe_broadcast_only(spark):
     # groupBy on the value column
     n_plain_ex = len(re.findall(r"(?<!Broadcast)Exchange hashpartitioning", plan))
     assert n_plain_ex == 1, plan
+
+
+def test_cosine_norms_stay_below_pair_join(spark):
+    """similarity._norm's contract: the norms are per-row columns
+    computed below the pair join, so each pair folds one array (the dot)
+    and not three. On the optimized plans of lsh_topk and the LSH
+    embedding near-duplicates, no node from the root down to the topmost
+    Join (the Join's condition included, which the cosine filter is
+    pushed into) holds a sqrt of an array fold; the norm projections
+    below it do."""
+    from ner_backend_spark.spark import similarity
+
+    emb = spark.range(40).select(
+        F.col("id").alias("vec_id"),
+        F.array(
+            *[F.sin(F.col("id") * (j + 1)).cast("float") for j in range(4)]
+        ).alias("embedding"),
+    )
+    for df in (
+        similarity.lsh_topk(emb, emb.filter("vec_id < 5"), 4, k=3),
+        similarity.embedding_near_duplicates(emb, 0.5, method="lsh", dim=4),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.toString().count("SQRT(aggregate(") >= 2
+        node = plan
+        while True:
+            own = node.simpleString(1000)
+            assert "SQRT(aggregate(" not in own, own
+            if node.nodeName() == "Join":
+                break
+            assert node.children().size() == 1, node.nodeName()
+            node = node.children().apply(0)

@@ -77,17 +77,17 @@ def main() -> None:
 
     if args.volatile:
         from ner_backend_spark.flagship import KG_MAX_BUCKET
-        from ner_backend_spark.spark.kg import build_triples
+        from ner_backend_spark.spark.kg import _materialize, build_triples
         from ner_backend_spark.spark.pipeline import run_report
 
         n_pages = pages.count()
         rep_t0 = time.monotonic()
         out = run_report(pages, config)
-        # materialize ONCE (localCheckpoint + the count forces it) so the
+        # materialize ONCE (a lazy cut + the count forces it) so the
         # --triples block below reuses these rows instead of re-running
         # the whole NER pass inside the kg-timed window, which made
         # kg_seconds measure NER+KG (round-7 ADVICE)
-        entities_df = out.entities.localCheckpoint(eager=False)
+        entities_df = _materialize(out.entities, eager=False)
         n_entities = entities_df.count()
         ner_seconds = round(time.monotonic() - rep_t0, 1)
         summary = {
