@@ -1027,11 +1027,10 @@ def _q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents and shuffled a corpus-wide join back). Dedup is a window-min
     over the content hash — at 100 TB each signal would be a precomputed
     column and this query a pure filter+aggregate."""
+    from ner_backend_spark.spark.dedup import capped_ngrams
     from ner_backend_spark.spark.textstats import (
         add_gopher_quality,
         add_repetition_stats,
-        word_ngrams,
-        words_expr,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
@@ -1040,29 +1039,20 @@ def _q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = base.withColumn("_canon", F.min("doc_id").over(w))
     # benchmark grams: tiny by contract (eval sets, not the web) — one
     # collect_set row, broadcast. Same grams as dedup.decontaminate
-    # (words_expr + 8-grams, 2000-gram cap), so the oracle composes the
+    # (capped_ngrams: 8-grams, 2000-gram cap), so the oracle composes the
     # q_decontaminate SQL verbatim and still matches.
-    # words BOUND before word_ngrams captures them (word_ngrams docstring:
-    # an inline words_expr re-evaluates its regexp split per reference)
-    bench_set = (
-        docs.filter(F.col("doc_id") < 20)
-        .select(words_expr(F.col("text")).alias("_w"))
-        .select(
-            F.explode(
-                F.slice(word_ngrams(F.col("_w"), 8), 1, 2000)
-            ).alias("_g")
-        )
-        .agg(F.collect_set("_g").alias("_bg"))
+    bench, bench_grams = capped_ngrams(
+        docs.filter(F.col("doc_id") < 20), "text", 8, 2000
+    )
+    bench_set = bench.select(F.explode(bench_grams).alias("_g")).agg(
+        F.collect_set("_g").alias("_bg")
+    )
+    corpus, grams = capped_ngrams(
+        base.crossJoin(F.broadcast(bench_set)), "text", 8, 2000
     )
     sel = (
-        base.crossJoin(F.broadcast(bench_set))
-        .withColumn("_cw", words_expr(F.col("text")))
-        .withColumn(
-            "_contaminated",
-            F.arrays_overlap(
-                F.slice(word_ngrams(F.col("_cw"), 8), 1, 2000),
-                F.col("_bg"),
-            ),
+        corpus.withColumn(
+            "_contaminated", F.arrays_overlap(grams, F.col("_bg"))
         )
         .filter(
             (F.col("doc_id") == F.col("_canon"))
@@ -2673,7 +2663,9 @@ def oracle_sql() -> dict[str, str]:
         """,
         # bloom_decontaminate: identical gram CTEs as q_decontaminate, then
         # the Bloom bit math (k=4 md5 streams mod m_bits=65536) mirrored
-        # 1:1 from spark/sketches.py bloom_bits/bloom_contains
+        # 1:1 from spark/sketches.py _md5_slot; Spark tests each document's
+        # grams row-locally (bloom_contains), this SQL through a distinct
+        # probe and a join back, with the same counts
         "q_bloom_decontaminate": r"""
             WITH wt AS (
                 SELECT doc_id,

@@ -66,8 +66,10 @@ PQ_ANN = dict(
     k=10, n_queries=10,
 )
 # Bloom-filter decontamination (dedup.bloom_decontaminate): the membership-
-# sketch variant of q_decontaminate. The inline DuckDB oracle mirrors the
-# md5 bit math 1:1, so false positives are deterministic and identical.
+# sketch variant of q_decontaminate, tested row-locally against the m_bits
+# table packed into one m_bits/8-byte literal. The inline DuckDB oracle
+# mirrors the md5 bit math 1:1, so false positives are deterministic and
+# identical.
 BLOOM_DECON = dict(n=8, k=4, m_bits=65536, max_grams_per_doc=2000)
 # BM25 retrieval scoring (textstats.bm25_scores): fixed query-term set,
 # Lucene idf, k1/b at the standard operating point; fixed-order float

@@ -6,10 +6,11 @@ report (this module, per url-hash bucket), the KG stages
 (checkpoint_kg.py, per stage) and the incremental KG (streaming/
 kg_update.py, per micro-batch). This module decides for all three how
 
-- prior state is found: :func:`path_exists` probes the Hadoop FileSystem
-  instead of catching a failed read, which Spark's ObservationManager
-  listener re-plans and logs as an ERROR stack once any ``Observation``
-  has run in the session;
+- prior state is found: the report and KG stage runners probe the Hadoop
+  FileSystem with :func:`path_exists` instead of catching a failed read,
+  which Spark's ObservationManager listener re-plans and logs as an ERROR
+  stack once any ``Observation`` has run in the session; the incremental
+  KG is local-only and probes its directory with ``os`` calls;
 - a resume is refused: :func:`check_lineage` compares every recorded
   lineage with the current parameters;
 - counters are taken: :func:`write_observed` counts the rows a write

@@ -15,6 +15,12 @@ Four families, each designed for the 100 TB regime:
                    size taken as |A|+|B|-|A∩B| (kg._jaccard), for verifying
                    candidate pairs (bounded pair lists only).
 
+Benchmark decontamination flags corpus documents that share word n-grams
+with an eval set, every side's grams built by capped_ngrams: exactly,
+through a broadcast join on the distinct benchmark grams, or through a
+Bloom filter tested row-locally on each document's gram array (one
+projection; no gram explode, shuffle or join back).
+
 Every verifier joins its per-id columns back onto the candidate pairs
 through kg.pair_columns, as every blocker pairs its buckets through
 kg.bucket_pairs.
@@ -29,7 +35,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
@@ -57,6 +63,30 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def capped_ngrams(
+    df: DataFrame, text_col: str, n: int, max_grams: int
+) -> tuple[DataFrame, Column]:
+    """(``df`` plus its bound words ``_w``, the Column of each row's first
+    ``max_grams`` word n-grams): the one capped-gram builder of the n-gram
+    miner and both decontamination operators. ``[]`` for a null, blank or
+    shorter-than-n text (:func:`textstats.words_expr` tokens).
+
+    The words are BOUND in a prior projection before ``word_ngrams``
+    captures them, as its docstring requires: an inline words_expr
+    re-evaluates the regexp split per reference — the bound form cut the
+    corpus 8-gram pass 2.4 s -> 0.89 s at sf0.1 (round 8). The grams stay
+    an expression, not a bound column: explode over a bound array column
+    makes the optimizer infer ``size(grams) > 0`` and push it, inlined, to
+    the scan, which re-splits every row's text once per reference.
+    """
+    from .textstats import word_ngrams, words_expr
+
+    return (
+        df.withColumn("_w", words_expr(F.col(text_col))),
+        F.slice(word_ngrams(F.col("_w"), n), 1, max_grams),
+    )
+
+
 def common_ngrams(
     df: DataFrame,
     id_col: str,
@@ -81,14 +111,9 @@ def common_ngrams(
     pre-filter grams by a cheap frequency sketch, or salt with
     skew.two_phase_count; at sandbox SF the partial aggregation suffices.
     """
-    from .textstats import word_ngrams, words_expr
-
-    docs = df.select(
-        F.col(id_col).alias("_id"), words_expr(F.col(text_col)).alias("_w")
-    )
-    grams = word_ngrams(F.col("_w"), n)
+    docs, grams = capped_ngrams(df, text_col, n, max_grams_per_doc)
     exploded = docs.select(
-        "_id", F.explode(F.slice(grams, 1, max_grams_per_doc)).alias("ngram")
+        F.col(id_col).alias("_id"), F.explode(grams).alias("ngram")
     )
     return (
         exploded.groupBy("ngram")
@@ -115,40 +140,25 @@ def decontaminate(
 
     Scale shape: benchmark n-grams are DISTINCT and usually tiny relative
     to the corpus (eval sets, not the web), so the overlap join broadcasts
-    them; corpus grams build row-locally (zip_with over offset slices, the
-    same no-per-element-re-eval pattern as :func:`common_ngrams`) and are
+    them; corpus grams build row-locally (:func:`capped_ngrams`) and are
     counted per document with a map-side-combined aggregation after the
     broadcast hash join — the corpus never shuffles on the gram. A LEFT
     join keeps gram-less/clean documents in the output with a zero count.
     """
-    from .textstats import word_ngrams, words_expr
-
-    bench_text_col = bench_text_col or text_col
-
-    # words are BOUND in a prior select before word_ngrams captures them:
-    # an inline words_expr re-evaluates the regexp split per reference /
-    # per element (see word_ngrams' docstring) — the bound form cut the
-    # corpus gram pass 2.4 s -> 0.54 s at sf0.1 (round 8)
-    bench_grams = (
-        benchmark.select(words_expr(F.col(bench_text_col)).alias("_w"))
-        .select(
-            F.explode(
-                F.slice(word_ngrams(F.col("_w"), n), 1, max_grams_per_doc)
-            ).alias("gram")
-        )
+    bench, bench_grams = capped_ngrams(
+        benchmark, bench_text_col or text_col, n, max_grams_per_doc
+    )
+    docs, doc_grams = capped_ngrams(df, text_col, n, max_grams_per_doc)
+    hits = (
+        bench.select(F.explode(bench_grams).alias("gram"))
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
-    doc_grams = df.select(
-        F.col(id_col).alias("_id"), words_expr(F.col(text_col)).alias("_w")
-    ).select(
-        "_id",
-        F.explode_outer(
-            F.slice(word_ngrams(F.col("_w"), n), 1, max_grams_per_doc)
-        ).alias("gram"),
-    )
     counts = (
-        doc_grams.join(F.broadcast(bench_grams), "gram", "left")
+        docs.select(
+            F.col(id_col).alias("_id"), F.explode_outer(doc_grams).alias("gram")
+        )
+        .join(F.broadcast(hits), "gram", "left")
         .groupBy("_id")
         .agg(F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_hits"))
     )
@@ -171,70 +181,40 @@ def bloom_decontaminate(
     m_bits: int = 65536,
 ) -> DataFrame:
     """(id, n_flagged_grams, flagged): Bloom-filter decontamination — the
-    membership-sketch variant of :func:`decontaminate`.
+    membership-sketch variant of :func:`decontaminate`, ONE output row per
+    input row (no grouping by id: rows sharing an id stay apart).
 
     Scale story: :func:`decontaminate` broadcasts the benchmark's EXACT
     distinct gram set, which is fine for eval sets but stops working when
     the "benchmark" is itself huge (a whole held-out suite, a blocklist
-    corpus). A Bloom filter caps the broadcast state at ``m_bits`` bits
-    regardless of benchmark size — here represented relationally as the
-    distinct set-bit table (:func:`~ner_backend_spark.spark.sketches.
-    bloom_bits`), built with ONE map-side-combined groupBy whose shuffle
-    carries at most ``m_bits`` rows. The corpus probes the filter through
-    its DISTINCT gram vocabulary (map-side-combined, so the shuffle
-    carries per-partition-distinct grams, not occurrences); per-document
-    occurrence counts then come from a broadcast join of the flagged
-    vocabulary back onto the corpus — occurrences never shuffle. No
-    false negatives (every
-    truly contaminated gram is flagged); false positives are bounded and
-    — because the hash math is integer md5 mirrored 1:1 in the oracle —
-    deterministic and identical across engines.
+    corpus). A Bloom filter caps the state at ``m_bits`` bits regardless
+    of benchmark size — built as the distinct set-bit table
+    (:func:`~ner_backend_spark.spark.sketches.bloom_bits`, ONE
+    map-side-combined groupBy whose shuffle carries at most ``m_bits``
+    rows), then packed by :func:`~ner_backend_spark.spark.sketches.
+    bloom_contains` into one binary literal. The corpus side is one
+    projection: each document keeps its capped gram array and counts the
+    grams the filter holds, ``size(filter(grams, g -> bloom_contains))``
+    — no gram explode, no shuffle, no join back. A null, blank or
+    gram-less text counts 0. No false negatives (every truly contaminated
+    gram is flagged); false positives are bounded and — because the hash
+    math is integer md5 mirrored 1:1 in the oracle — deterministic and
+    identical across engines.
     """
     from .sketches import bloom_bits, bloom_contains
-    from .textstats import word_ngrams, words_expr
 
-    bench_text_col = bench_text_col or text_col
-
-    # bound-words discipline: see decontaminate above / word_ngrams
-    bench_grams = benchmark.select(
-        words_expr(F.col(bench_text_col)).alias("_w")
-    ).select(
-        F.explode(
-            F.slice(word_ngrams(F.col("_w"), n), 1, max_grams_per_doc)
-        ).alias("gram")
+    bench, bench_grams = capped_ngrams(
+        benchmark, bench_text_col or text_col, n, max_grams_per_doc
     )
-    bits = bloom_bits(bench_grams, "gram", k=k, m_bits=m_bits)
-    doc_grams = df.select(
-        F.col(id_col).alias("_id"), words_expr(F.col(text_col)).alias("_w")
-    ).select(
-        "_id",
-        F.explode_outer(
-            F.slice(word_ngrams(F.col("_w"), n), 1, max_grams_per_doc)
-        ).alias("gram"),
+    bits = bloom_bits(
+        bench.select(F.explode(bench_grams).alias("gram")), "gram", k, m_bits
     )
-    # distinct grams probe the filter once; per-doc occurrences of a gram
-    # are counted doc-side so the probe fan-in stays O(distinct grams)
-    probed = bloom_contains(
-        bits,
-        doc_grams.select("gram").where(F.col("gram").isNotNull()).distinct(),
-        "gram",
-        k=k,
-        m_bits=m_bits,
-    ).where(F.col("maybe_present"))
-    counts = (
-        doc_grams.join(
-            F.broadcast(probed.select("gram", F.lit(1).alias("_hit"))),
-            "gram",
-            "left",
-        )
-        .groupBy("_id")
-        .agg(F.sum(F.coalesce(F.col("_hit"), F.lit(0))).alias("n_hits"))
-    )
-    return counts.select(
-        F.col("_id").alias(id_col),
-        F.col("n_hits").cast("long").alias("n_flagged_grams"),
-        (F.col("n_hits") > 0).alias("flagged"),
-    )
+    docs, grams = capped_ngrams(df, text_col, n, max_grams_per_doc)
+    hits = F.filter(grams, lambda g: bloom_contains(bits, g, k, m_bits))
+    # flagged reads the bound count: inlined, the filter would run twice
+    return docs.select(
+        F.col(id_col), F.size(hits).cast("long").alias("n_flagged_grams")
+    ).withColumn("flagged", F.col("n_flagged_grams") > 0)
 
 
 def exact_substring_dedup(

@@ -32,7 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .kg import bucket_pairs, drop_oversized, pair_columns
+from .kg import _materialize, bucket_pairs, drop_oversized, pair_columns
 from .session import map_batches
 
 
@@ -521,10 +521,12 @@ def semantic_dedup(
     assign = ivf_assignments(
         embeddings, dim, n_centroids, id_col, vec_col, seed, centroids=cents
     ).select(F.col("id"), F.col("centroid_id").alias("cid"))
+    # the assignments are cut once: vecs fans out to the cap, both pair
+    # sides and the emit, and each branch would re-run the kernel
     vecs = embeddings.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
-    ).join(assign, "id")
+    ).join(_materialize(assign), "id")
 
     prunable = drop_oversized(vecs, ["cid"], max_cluster_size)
 

@@ -42,13 +42,28 @@ is a full shuffle of the data).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # rho counts leading zeros in a 52-bit window (13 md5 hex chars), so
 # registers lie in [1, 53] and 2^(53 - M) always fits in an int64.
 _W_BITS = 52
 _RHO_MAX = _W_BITS + 1
+
+
+def _md5_slot(value: Column, salt: Column, m: int) -> Column:
+    """Slot of ``value`` in the ``m``-slot table of hash stream ``salt``:
+    pmod(conv(substring(md5(value#salt), 1, 13), 16, 10), m) as an int.
+
+    The one slot expression of the count-min and Bloom sketches. It is
+    integer-exact, so the DuckDB oracles mirror it 1:1 and the sketches'
+    collisions are identical in both engines.
+    """
+    h = F.md5(F.concat_ws("#", value.cast("string"), salt))
+    return F.pmod(
+        F.conv(F.substring(h, 1, 13), 16, 10).cast("bigint"), F.lit(m)
+    ).cast("int")
 
 
 def _alpha(m: int) -> float:
@@ -183,12 +198,7 @@ def cms_table(
     rows = F.explode(
         F.array(*[F.lit(i) for i in range(depth)])
     ).alias("row")
-    h = F.md5(
-        F.concat_ws("#", F.col(value_col).cast("string"), F.col("row"))
-    )
-    col = F.pmod(
-        F.conv(F.substring(h, 1, 13), 16, 10).cast("bigint"), F.lit(width)
-    ).cast("int")
+    col = _md5_slot(F.col(value_col), F.col("row"), width)
     return (
         df.select(F.col(value_col), rows)
         .select("row", col.alias("col"))
@@ -214,10 +224,7 @@ def cms_lookup(
     rows = F.explode(
         F.array(*[F.lit(i) for i in range(depth)])
     ).alias("row")
-    h = F.md5(F.concat_ws("#", F.col(key_col).cast("string"), F.col("row")))
-    col = F.pmod(
-        F.conv(F.substring(h, 1, 13), 16, 10).cast("bigint"), F.lit(width)
-    ).cast("int")
+    col = _md5_slot(F.col(key_col), F.col("row"), width)
     addressed = keys.select(F.col(key_col), rows).select(
         key_col, "row", col.alias("col")
     )
@@ -363,12 +370,13 @@ def bloom_bits(
     Completes the mergeable-sketch family (distinct ≅ HLL, frequency ≅
     CMS, membership ≅ Bloom). Each value sets k bit positions derived
     from independent md5 streams (value salted with the hash index, the
-    same construction as :func:`cms_table`); the filter IS the distinct
+    :func:`_md5_slot` of :func:`cms_table`); the filter IS the distinct
     (bit) table, at most ``m_bits`` rows no matter how many input rows —
     the groupBy is map-side combinable, so the shuffle carries O(m_bits)
     rows regardless of input size. Mergeability: the union of two
     corpora's filters is the distinct union of their bit tables
-    (elementwise OR ≅ set union of set positions).
+    (elementwise OR ≅ set union of set positions). :func:`bloom_contains`
+    tests membership against this table.
 
     Integer-exact and engine-portable: bit = first-13-hex-chars of
     md5(value#i) mod m_bits — the DuckDB oracle mirrors it 1:1, so the
@@ -376,51 +384,43 @@ def bloom_bits(
     engines (what the parity gate hashes).
     """
     idx = F.explode(F.array(*[F.lit(i) for i in range(k)])).alias("i")
-    h = F.md5(
-        F.concat_ws("#", F.col(value_col).cast("string"), F.col("i"))
-    )
-    bit = F.pmod(
-        F.conv(F.substring(h, 1, 13), 16, 10).cast("bigint"), F.lit(m_bits)
-    ).cast("int")
     return (
         df.select(F.col(value_col), idx)
-        .select(bit.alias("bit"))
+        .select(_md5_slot(F.col(value_col), F.col("i"), m_bits).alias("bit"))
         .distinct()
     )
 
 
 def bloom_contains(
     bits: DataFrame,
-    keys: DataFrame,
-    key_col: str,
+    key: Column,
     k: int = 4,
     m_bits: int = 65536,
-) -> DataFrame:
-    """keys + (hits, maybe_present): membership test against the filter.
+) -> Column:
+    """Boolean Column: are all k bits that ``key`` addresses set in the
+    filter ``bits`` (a :func:`bloom_bits` table of the same k and m_bits)?
 
-    maybe_present = all k addressed bits are set (standard Bloom
-    semantics: no false negatives, bounded false positives at
-    (1-e^{-kn/m})^k). The bit table is at most ``m_bits`` rows, so it
-    BROADCASTS; the keys side never shuffles on the probe — the scale
-    shape for decontaminating a 100 TB corpus against a benchmark-suite
-    filter without shipping the corpus grams anywhere.
+    Standard Bloom semantics: no false negatives, false positives bounded
+    at (1-e^{-kn/m})^k, addressed by the same :func:`_md5_slot` as
+    :func:`bloom_bits`, so the oracle's false positives are this test's.
+    The driver collects the bit table (at most ``m_bits`` rows) once and
+    packs it 8 bits per byte into ONE binary literal (m_bits/8 bytes),
+    tested by a ``forall`` over the k salts, so the literal appears once
+    in the plan. The test is row-local: the probe side never joins,
+    shuffles or explodes — the filter is a data-induced predicate applied
+    where the keys are scanned, the scale shape for decontaminating a
+    100 TB corpus against a benchmark-suite filter.
     """
-    idx = F.explode(F.array(*[F.lit(i) for i in range(k)])).alias("i")
-    h = F.md5(F.concat_ws("#", F.col(key_col).cast("string"), F.col("i")))
-    bit = F.pmod(
-        F.conv(F.substring(h, 1, 13), 16, 10).cast("bigint"), F.lit(m_bits)
-    ).cast("int")
-    addressed = keys.select(F.col(key_col), idx).select(
-        key_col, bit.alias("bit")
-    )
-    marked = bits.withColumn("_set", F.lit(1))
-    joined = addressed.join(F.broadcast(marked), "bit", "left")
-    return joined.groupBy(key_col).agg(
-        F.sum(F.coalesce("_set", F.lit(0))).cast("int").alias("hits"),
-        (
-            F.sum(F.coalesce("_set", F.lit(0))) == F.lit(k)
-        ).alias("maybe_present"),
-    )
+    flags = np.zeros(m_bits, dtype=bool)
+    flags[bits.toArrow().column("bit").to_numpy()] = True
+    table = F.lit(np.packbits(flags, bitorder="little").tobytes())
+
+    def is_set(i: Column) -> Column:
+        slot = _md5_slot(key, i, m_bits)
+        byte = F.substring(table, F.shiftright(slot, 3) + 1, F.lit(1))
+        return F.getbit(F.conv(F.hex(byte), 16, 10).cast("int"), slot % 8) == 1
+
+    return F.forall(F.array(*[F.lit(i) for i in range(k)]), is_set)
 
 
 def hll_oracle_sql(

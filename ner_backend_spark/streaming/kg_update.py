@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import json
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,7 +68,13 @@ _BAND_SCHEMA = "mention_id long, label string, band int, band_hash int"
 
 
 class IncrementalKg:
-    """Stateful canonicalizer: feed entity micro-batches, read clusters."""
+    """Stateful canonicalizer: feed entity micro-batches, read clusters.
+
+    ``base_dir`` must be local (a plain path or a ``file:`` URI): the state
+    probes and the assignment commit are local file operations
+    (``os.listdir``, ``open``, ``os.rename``), so any other scheme is
+    refused before anything is created or written.
+    """
 
     def __init__(
         self,
@@ -77,8 +84,14 @@ class IncrementalKg:
         threshold: float = 0.5,
         max_bucket_size: int | None = None,
     ):
+        url = urlparse(base_dir)
+        if url.scheme not in ("", "file"):
+            raise ValueError(
+                f"IncrementalKg keeps its state in a local directory; "
+                f"base_dir {base_dir!r} has scheme {url.scheme!r}"
+            )
         self.spark = spark
-        self.base = base_dir.rstrip("/")
+        self.base = (url.path if url.scheme else base_dir).rstrip("/")
         self.alias_df = alias_df
         self.threshold = threshold
         self.max_bucket_size = max_bucket_size

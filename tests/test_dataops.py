@@ -658,6 +658,20 @@ def test_bloom_decontaminate_matches_exact(spark, docs):
     assert not bloom[3][1]
 
 
+def test_bloom_decontaminate_gramless_texts(spark, docs):
+    """A null, whitespace-only or shorter-than-n text has no grams: it
+    counts 0 and is not flagged, one output row per input row."""
+    bench = docs.filter(F.col("doc_id") == 0).select("text")
+    df = spark.createDataFrame(
+        [(10, None), (11, " \t\n "), (12, "the quick brown")],
+        "doc_id long, text string",
+    )
+    out = dedup.bloom_decontaminate(df, bench, "doc_id", "text", n=4)
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (10, 0, False), (11, 0, False), (12, 0, False)
+    ]
+
+
 def test_semantic_dedup_matches_bruteforce(spark, vectors):
     """semantic_dedup marks exactly the rows for which a SMALLER id in
     the SAME cluster has cosine >= threshold (keep-first-by-id)."""

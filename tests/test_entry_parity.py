@@ -54,6 +54,22 @@ def _rows_to_multiset(rows, cols):
 
 ORACLES = entry_mod.oracle_sql()
 QUERIES = entry_mod.queries()
+_KERNELS = ("MapInPandas", "MapInArrow", "ArrowEvalPython")
+
+
+def _kernel_nodes(node) -> list:
+    """The Python-kernel nodes of an executed plan: AQE's final plan and
+    its query stages. A ReusedExchange is a leaf, so a kernel under a
+    reused exchange counts once, as it runs once."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    if node.nodeName().endswith("QueryStage"):
+        node = node.plan()
+    found = [node] if any(k in node.nodeName() for k in _KERNELS) else []
+    kids = node.children()
+    for i in range(kids.size()):
+        found += _kernel_nodes(kids.apply(i))
+    return found
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
@@ -61,6 +77,17 @@ def test_query_matches_oracle(spark, duck, name):
     sdf = QUERIES[name](spark, SF_DIR)
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
+    # each Python kernel runs once per input row: no two kernel nodes of
+    # the final plan compute the same result (sameResult compares the
+    # canonical subtrees, expression ids masked, reused exchanges resolved)
+    kernels = _kernel_nodes(sdf._jdf.queryExecution().executedPlan())
+    twice = [
+        a.nodeName()
+        for i, a in enumerate(kernels)
+        for b in kernels[i + 1:]
+        if a.sameResult(b)
+    ]
+    assert not twice, f"{name}: a Python kernel runs twice: {twice}"
 
     res = duck.execute(ORACLES[name])
     duck_cols = [d[0] for d in res.description]

@@ -11,6 +11,8 @@ The core claims of streaming/kg_update.py:
 3. Redelivered batches (foreachBatch crash/retry semantics) are no-ops.
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -137,6 +139,18 @@ def test_param_lineage_refuses_mismatch(spark, tmp_path, alias_df):
         IncrementalKg(spark, base, alias_df=alias_df, threshold=0.6)
     with pytest.raises(ValueError, match="different"):
         IncrementalKg(spark, base, alias_df=None, threshold=0.4)
+
+
+def test_non_local_base_dir_refused_up_front(spark, tmp_path, monkeypatch):
+    """State probes and commits are local file operations: a non-file
+    scheme is refused before any directory is created."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="s3a"):
+        IncrementalKg(spark, "s3a://b/kg")
+    assert os.listdir(tmp_path) == []
+    inc = IncrementalKg(spark, f"file://{tmp_path}/kg")
+    assert inc.base == f"{tmp_path}/kg"
+    assert os.listdir(tmp_path) == ["kg"]
 
 
 def test_batch_metrics_written(spark, tmp_path, alias_df):

@@ -326,10 +326,11 @@ def test_bloom_contains_no_false_negatives(spark):
         spark.createDataFrame([(v,) for v in members], ["v"]), "v"
     )
     probes = members[:50] + [f"absent{i}" for i in range(50)]
+    keys = spark.createDataFrame([(p,) for p in probes], ["key"])
     out = {
         r["key"]: r["maybe_present"]
-        for r in bloom_contains(
-            bits, spark.createDataFrame([(p,) for p in probes], ["key"]), "key"
+        for r in keys.select(
+            "key", bloom_contains(bits, F.col("key")).alias("maybe_present")
         ).collect()
     }
     assert all(out[m] for m in members[:50])  # Bloom guarantee
